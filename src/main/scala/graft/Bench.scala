@@ -282,20 +282,21 @@ object Bench {
     }
     // Capture micro-batch: one tick of the streaming pipeline at this SF
     // (fresh lake each iteration, same median/stddev protocol; the
-    // temp lake is deleted after the timed region — r18, disk hygiene).
+    // temp lake is deleted after the timed region, also when the tick
+    // throws — disk hygiene).
     def microBatch(): Double = {
       val tmp = java.nio.file.Files.createTempDirectory("bench_lake").toString
-      val lake = new graft.lake.Lake(spark, tmp)
-      val log = new graft.lake.CaptureLog(spark, lake)
-      val cap = new graft.streaming.Capture(spark, lake, log,
-        graft.streaming.CaptureConfig("bench", "events",
-          pk = Seq("event_id"), tsCol = "ts"))
-      val raw = Tables.load(spark, sfDir, "events")
-      val t0 = System.nanoTime()
-      cap.processBatch(raw, Timestamp.valueOf("2024-02-01 00:00:00"))
-      val s = (System.nanoTime() - t0) / 1e9
-      deleteRecursively(new java.io.File(tmp))
-      s
+      try {
+        val lake = new graft.lake.Lake(spark, tmp)
+        val log = new graft.lake.CaptureLog(spark, lake)
+        val cap = new graft.streaming.Capture(spark, lake, log,
+          graft.streaming.CaptureConfig("bench", "events",
+            pk = Seq("event_id"), tsCol = "ts"))
+        val raw = Tables.load(spark, sfDir, "events")
+        val t0 = System.nanoTime()
+        cap.processBatch(raw, Timestamp.valueOf("2024-02-01 00:00:00"))
+        (System.nanoTime() - t0) / 1e9
+      } finally deleteRecursively(new java.io.File(tmp))
     }
     // One calibration sample per iteration, interleaved with the real
     // runs so it sees the same ambient-load window they do. A throwaway

@@ -24,16 +24,23 @@ class CaptureLog(spark: SparkSession, lake: Lake) {
     * audits can tell first-try from recovered minutes. */
   def append(dataset: String, table: String, capturedAt: Timestamp,
              success: Boolean, error: Option[String] = None,
-             recaptured: Boolean = false): Unit = {
+             recaptured: Boolean = false): Unit =
+    appendAll(dataset, table, Seq(capturedAt), success, error, recaptured)
+
+  /** One log row per tick in `capturedAt`, all with the same outcome,
+    * landed in one write (a backfill's recovered minutes). */
+  def appendAll(dataset: String, table: String, capturedAt: Seq[Timestamp],
+                success: Boolean, error: Option[String] = None,
+                recaptured: Boolean = false): Unit = {
     val err = (error, recaptured) match {
       case (Some(e), true) => Some(s"[recapturado] $e")
       case (None, true) => Some("[recapturado]")
       case (other, false) => other
     }
-    val row = Seq((capturedAt, success, err.orNull))
+    val rows = capturedAt.map(ts => (ts, success, err.orNull))
       .toDF("timestamp_captura", "sucesso", "erro")
       .withColumn("data", date_format($"timestamp_captura", "yyyy-MM-dd"))
-    lake.append(row, ref(dataset, table), partitionBy = Seq("data"))
+    lake.append(rows, ref(dataset, table), partitionBy = Seq("data"))
   }
 
   def read(dataset: String, table: String): DataFrame =

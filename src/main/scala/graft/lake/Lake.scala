@@ -1,6 +1,9 @@
 package graft.lake
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LocalTableScanExec
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
 /** The three-zone lake and its writers (SURVEY §1.1, §2.2 K1–K7).
@@ -17,8 +20,11 @@ import org.apache.spark.sql.functions._
   *  - `createOrAppend`: K5 — register the external table in the session
   *    catalog on first write, append afterwards.
   *
-  * At cluster scale every write is partition-parallel; nothing funnels
-  * through the driver.
+  * At cluster scale every write of a distributed frame is
+  * partition-parallel; nothing funnels through the driver. The one
+  * exception is a frame whose rows already sit in driver memory (a
+  * fetched capture payload, a log row): it is written by a single task,
+  * with the same one-file-per-partition-dir layout (see `aligned`).
   */
 final case class TableRef(zone: String, dataset: String, table: String)
 
@@ -32,10 +38,30 @@ class Lake(spark: SparkSession, root: String) {
   /** Cluster the frame by its partition columns before a partitioned
     * write: without this every task holds a writer per touched partition
     * dir (tasks × dirs small files — the classic 100 TB lake killer);
-    * with it each dir is written by exactly one task. */
-  private def aligned(df: DataFrame, partitionBy: Seq[String]): DataFrame =
+    * with it each dir is written by exactly one task.
+    *
+    * A driver-held frame (see [[driverHeld]]) is coalesced to ONE task
+    * instead. The file writer sorts that task's rows by partition values
+    * and opens each dir once, so the layout is the same one file per dir,
+    * but the write is one job with no exchange rather than a shuffle-map
+    * job plus a write job. The rows are already on the driver, so no
+    * shuffle can spread them more cheaply than that. Every other frame
+    * (file scans, streaming micro-batches) keeps the hash shuffle. */
+  private[graft] def aligned(df: DataFrame, partitionBy: Seq[String]): DataFrame =
     if (partitionBy.isEmpty) df
+    else if (driverHeld(df)) df.coalesce(1)
     else df.repartition(partitionBy.map(col): _*)
+
+  /** Every leaf of the frame's plan (cached fragments substituted) is a
+    * `LocalRelation`, or a cache whose physical plan reads only local
+    * table scans: all its rows are in driver memory. */
+  private def driverHeld(df: DataFrame): Boolean =
+    df.queryExecution.withCachedData.collectLeaves().forall {
+      case _: LocalRelation => true
+      case m: InMemoryRelation => m.cacheBuilder.cachedPlan.collectLeaves()
+        .forall(_.isInstanceOf[LocalTableScanExec])
+      case _ => false
+    }
 
   /** K1/K2/K3: partitioned append (CSV kept for raw-zone parity, parquet
     * default). */

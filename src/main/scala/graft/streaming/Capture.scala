@@ -49,8 +49,6 @@ class Capture(spark: SparkSession, lake: Lake, log: CaptureLog,
           date_format(col("timestamp_captura"), "yyyyMMddHHmmss")),
       TableRef("raw", cfg.dataset, cfg.table), partitionBy = Seq("data", "tick"))
 
-  /** The per-micro-batch body — usable directly for batch captures and
-    * from foreachBatch for streaming ones. */
   /** Staging land, idempotent per tick: the hour partition is shared
     * by ~60 ticks, so an APPEND there cannot be replay-safe — the tick
     * sub-partition (derived from timestamp_captura, stable across
@@ -63,6 +61,17 @@ class Capture(spark: SparkSession, lake: Lake, log: CaptureLog,
       TableRef("staging", cfg.dataset, cfg.table),
       partitionBy = Seq("data", "hora", "tick"))
 
+  /** Records a failed tick's log rows without masking `e`: a log write
+    * that throws too is attached to `e` as suppressed, and `e` is what
+    * the caller sees. */
+  private def logFailure(e: Exception)(record: => Unit): Nothing = {
+    try record
+    catch { case logErr: Exception => e.addSuppressed(logErr) }
+    throw e
+  }
+
+  /** The per-micro-batch body — usable directly for batch captures and
+    * from foreachBatch for streaming ones. */
   def processBatch(raw: DataFrame, captureTs: Timestamp): Unit = {
     // The batch feeds TWO writes (raw + staging); cache it so the source
     // is scanned once per tick, not once per sink.
@@ -79,10 +88,10 @@ class Capture(spark: SparkSession, lake: Lake, log: CaptureLog,
 
       log.append(cfg.dataset, cfg.table, captureTs, success = true)
     } catch {
-      case e: Exception =>
+      case e: Exception => logFailure(e) {
         log.append(cfg.dataset, cfg.table, captureTs, success = false,
           error = Some(e.getMessage))
-        throw e
+      }
     } finally stamped.unpersist(blocking = false)
   }
 
@@ -92,7 +101,8 @@ class Capture(spark: SparkSession, lake: Lake, log: CaptureLog,
     * append each run once over all windows (the partitioned writers land
     * every (data, hora) dir in that single pass — the
     * Trigger.AvailableNow shape of a batch backfill). Each recovered
-    * minute still gets its own `[recapturado]` log row. */
+    * minute still gets its own `[recapturado]` log row, and all of them
+    * land in one log write. */
   def processBackfill(windows: Seq[(Timestamp, DataFrame)]): Unit = {
     if (windows.isEmpty) return
     val union = windows.map { case (ts, df) =>
@@ -111,17 +121,13 @@ class Capture(spark: SparkSession, lake: Lake, log: CaptureLog,
         .withColumn("hora", date_format(col("timestamp_captura"), "HH"))
       writeStaging(treated)
 
-      windows.foreach { case (ts, _) =>
-        log.append(cfg.dataset, cfg.table, ts, success = true,
-          recaptured = true)
-      }
+      log.appendAll(cfg.dataset, cfg.table, windows.map(_._1), success = true,
+        recaptured = true)
     } catch {
-      case e: Exception =>
-        windows.foreach { case (ts, _) =>
-          log.append(cfg.dataset, cfg.table, ts, success = false,
-            error = Some(e.getMessage), recaptured = true)
-        }
-        throw e
+      case e: Exception => logFailure(e) {
+        log.appendAll(cfg.dataset, cfg.table, windows.map(_._1),
+          success = false, error = Some(e.getMessage), recaptured = true)
+      }
     } finally union.unpersist(blocking = false)
   }
 

@@ -56,6 +56,58 @@ class LakeSpec extends SparkSpec {
     assert(lake.read(ref).count() === 2)
   }
 
+  test("aligned: driver-held frames write shuffle-free, scans keep the hash exchange") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val lake = new Lake(spark, tmpDir("lake"))
+    def nodes(df: DataFrame): Seq[SparkPlan] = {
+      def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => walk(a.inputPlan)
+        case other => other +: other.children.flatMap(walk)
+      }
+      walk(lake.aligned(df, Seq("data")).queryExecution.executedPlan)
+    }
+    def shuffles(df: DataFrame) = nodes(df).collect { case s: ShuffleExchangeExec => s }
+    // a fetched payload: 40 rows over 4 day partitions, built fresh per
+    // use so the persisted copy re-plans against the cache
+    def local = (1 to 40).map(i => (i, s"2024-01-0${i % 4 + 1}")).toDF("id", "data")
+    assert(shuffles(local).isEmpty)
+    val cached = local.persist()
+    val scanned = Partitions.dateHour(Tables.load(spark, sf001, "events"), "ts")
+      .repartition(4)
+    try {
+      assert(nodes(cached).exists(_.isInstanceOf[InMemoryTableScanExec]))
+      assert(shuffles(cached).isEmpty)
+      // a file scan still plans exactly the hash exchange on the
+      // partition columns (the round-robin repartition(4) collapses into it)
+      val ex = shuffles(scanned)
+      assert(ex.size === 1, ex)
+      assert(ex.head.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.map(_.sql) == Seq("data")
+        case _ => false
+      }, ex.head.outputPartitioning)
+
+      // and both write exactly one parquet file per partition dir
+      Seq("local" -> cached, "scan" -> scanned).foreach { case (name, df) =>
+        val ref = TableRef("staging", "ds", name)
+        lake.overwritePartitions(df, ref, partitionBy = Seq("data"))
+        val dirs = new java.io.File(lake.path(ref)).listFiles()
+          .filter(_.getName.startsWith("data="))
+        assert(dirs.length === df.select("data").distinct().count(), name)
+        dirs.foreach { d =>
+          val files = d.listFiles().map(_.getName)
+            .filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
+          assert(files.length === 1, s"$name ${d.getName}: ${files.toSeq}")
+        }
+        assert(lake.read(ref).count() === df.count(), name)
+      }
+    } finally cached.unpersist()
+  }
+
   test("createOrAppend registers a queryable catalog table (K5)") {
     val lake = new Lake(spark, tmpDir("lake"))
     val ref = TableRef("staging", "cat", "t1")

@@ -7,6 +7,8 @@ import graft.streaming.{Capture, CaptureConfig, Recapture}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import scala.jdk.CollectionConverters._
+
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -529,6 +531,14 @@ class StreamingSpec extends SparkSpec {
       .withColumn("data", date_format($"timestamp_captura", "yyyy-MM-dd"))
     lake.append(pre, log.ref("ds", "gps"), partitionBy = Seq("data"))
 
+    def logFiles(): Set[String] = {
+      val walk = java.nio.file.Files.walk(
+        java.nio.file.Paths.get(lake.path(log.ref("ds", "gps"))))
+      try walk.iterator().asScala.map(_.toString)
+        .filter(f => f.endsWith(".parquet")).toSet
+      finally walk.close()
+    }
+    val logFilesBefore = logFiles()
     var fetched = List[Int]()
     val plan = Recapture.backfill(spark, cap, log.read("ds", "gps"), now,
       fetch = { ts =>
@@ -543,15 +553,50 @@ class StreamingSpec extends SparkSpec {
     // the staging table now has every captured minute exactly once
     val staged = lake.read(graft.lake.TableRef("staging", "ds", "gps"))
     assert(staged.filter($"id" === 3 || $"id" === 7).count() === 2)
-    // recovered minutes are [recapturado]-marked successes in the log
+    // recovered minutes are [recapturado]-marked successes in the log,
+    // landed by ONE log write (one new file), not one write per minute
     val marked = log.read("ds", "gps")
       .filter($"sucesso" === true && $"erro".startsWith("[recapturado]"))
-    assert(marked.count() >= 2)
+    assert(marked.count() === 2)
+    val newLogFiles = logFiles() -- logFilesBefore
+    assert(newLogFiles.size === 1, newLogFiles)
     // and a re-plan over the same window finds nothing left in 0-9
     val replan = Recapture.plan(spark, log.read("ds", "gps"), now,
       maxRecaptures = 2000)
     assert(replan.timestamps.map(_.toString)
       .intersect((0 to 9).map(minute(_).toString)).isEmpty)
+  }
+
+  test("a throwing failure-log append does not mask the capture error") {
+    val lake = new Lake(spark, tmpDir("lake"))
+    val logDown = new java.io.IOException("log store down")
+    val log = new CaptureLog(spark, lake) {
+      override def appendAll(dataset: String, table: String,
+                             capturedAt: Seq[Timestamp], success: Boolean,
+                             error: Option[String],
+                             recaptured: Boolean): Unit =
+        if (success) super.appendAll(dataset, table, capturedAt, success,
+          error, recaptured)
+        else throw logDown
+    }
+    // the pk column is missing from the batch, so Nest.toContent fails
+    // after the raw land
+    val cap = new Capture(spark, lake, log,
+      CaptureConfig("ds", "gps", pk = Seq("no_such_pk"), tsCol = "ts"))
+    val tick = Timestamp.valueOf("2024-01-05 00:03:00")
+    val batch = Seq((1L, Timestamp.valueOf("2024-01-05 00:02:10"), "a"))
+      .toDF("id", "ts", "v")
+    val live = intercept[org.apache.spark.sql.AnalysisException] {
+      cap.processBatch(batch, tick)
+    }
+    assert(live.getMessage.contains("no_such_pk"), live.getMessage)
+    // (Spark may attach its own caller-stacktrace marker as well)
+    assert(live.getSuppressed.contains(logDown), live.getSuppressed.toSeq)
+    val backfill = intercept[org.apache.spark.sql.AnalysisException] {
+      cap.processBackfill(Seq(tick -> batch,
+        Timestamp.valueOf("2024-01-05 00:04:00") -> batch))
+    }
+    assert(backfill.getSuppressed.contains(logDown), backfill.getSuppressed.toSeq)
   }
 
   test("streaming camera clips: binaryFile stream → frames → scores (S22/T1)") {
