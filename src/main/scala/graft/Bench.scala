@@ -160,10 +160,19 @@ object Bench {
       df.write.mode("overwrite").format("noop").save()
 
     val qs = SparkEntry.queries
+    // A failing query ends the bench with a non-zero exit naming it:
+    // timing it would record its time-to-failure as the sample, so a
+    // query broken only at this SF would read as fast.
     def runHeadline(): Seq[(String, Double)] = headline.filter(qs.contains).map { name =>
       val t0 = System.nanoTime()
       try materialize(qs(name)(spark, sfDir))
-      catch { case e: Throwable => System.err.println(s"[bench] $name: $e") }
+      catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] FAILED: headline query $name: $e")
+          e.printStackTrace()
+          spark.stop()
+          sys.exit(1)
+      }
       name -> (System.nanoTime() - t0) / 1e9
     }
 

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Cross-run state (SURVEY §2.9 T6–T8) — the Redis replacement.
   *
@@ -138,7 +139,21 @@ class StateStore(spark: SparkSession, root: String) {
     }
   }
 
-  private def readOrEmpty(path: String, schemaDdl: String): DataFrame = {
+  private def readOrEmpty(path: String, schemaDdl: String): DataFrame =
+    readIfPresent(path, schemaDdl)(spark.read.parquet(path))
+
+  /** [[readOrEmpty]] for the kinds only this store writes (`last_run`
+    * and the sketches), whose column types it fixes itself: reading with
+    * the declared schema skips parquet schema inference, which costs a
+    * footer-reading Spark job on every read. Kinds whose column types
+    * come from caller frames (generic tables, entity watermarks,
+    * processed files) keep inference. */
+  private def readOwned(path: String, schemaDdl: String): DataFrame =
+    readIfPresent(path, schemaDdl)(
+      spark.read.schema(StructType.fromDDL(schemaDdl)).parquet(path))
+
+  private def readIfPresent(path: String, schemaDdl: String)(
+      read: => DataFrame): DataFrame = {
     heal(path)
     // first-run is decided by PATH ABSENCE, never by swallowing read
     // errors (review-found regression class: a transient storage
@@ -151,8 +166,8 @@ class StateStore(spark: SparkSession, root: String) {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p))
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
-    else spark.read.parquet(path)
+        StructType.fromDDL(schemaDdl))
+    else read
   }
 
   /** Distributed read-modify-write: the merged frame (which lazily READS
@@ -221,7 +236,7 @@ class StateStore(spark: SparkSession, root: String) {
   // per key makes setLastRun a plain overwrite — no merge, no race.
 
   def lastRun(key: String): Option[Timestamp] =
-    readOrEmpty(runPath(key), "key STRING, last_run TIMESTAMP")
+    readOwned(runPath(key), "key STRING, last_run TIMESTAMP")
       .filter($"key" === key).select($"last_run")
       .collect().headOption.map(_.getTimestamp(0))
       .orElse(legacyLastRun(key))
@@ -303,7 +318,7 @@ class StateStore(spark: SparkSession, root: String) {
   // atomicity/locking story lands in ONE place.
 
   private def readSketch(path: String): Option[Array[Byte]] =
-    readOrEmpty(path, "sketch BINARY")
+    readOwned(path, "sketch BINARY")
       .collect().headOption.map(_.getAs[Array[Byte]](0))
 
   private def mergeSketchFile(path: String, sk: Array[Byte],

@@ -16,7 +16,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * (rj_smtr/flows.py:46-194, rj_smtr/tasks.py:1403-1505).
   *
   * Spark shape: one Structured Streaming query per source with
-  * `foreachBatch` doing raw land → treat → staging land → log append.
+  * `foreachBatch` doing (raw land ‖ treat → staging land) → log append.
   * The checkpoint gives exactly-once batch tracking; BOTH zone writes
   * are per-tick dynamic partition OVERWRITES (raw on (data, tick),
   * staging on (data, hora, tick) — hour partitions are shared by ~60
@@ -29,6 +29,16 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * in Apache Spark" (SIGMOD 2018). (The first cut stamped wall-clock
   * time per attempt and APPENDED staging — a crash between the staging
   * land and the checkpoint commit duplicated rows; review-found.)
+  *
+  * Commit order per tick: the raw and staging zone writes run
+  * CONCURRENTLY (neither reads the other, and each is an idempotent
+  * per-tick overwrite), and the `_logs` row is written LAST, only after
+  * both have returned — so a success row always means both zones
+  * landed, and a failure row is never written while a zone write is
+  * still running. Each write is one task that mostly waits on file
+  * creates and renames, so running them side by side (the multi-sink
+  * `foreachBatch` pattern of the same paper) uses cores that would
+  * otherwise sit idle.
   */
 final case class CaptureConfig(dataset: String, table: String,
                                pk: Seq[String], tsCol: String)
@@ -61,6 +71,61 @@ class Capture(spark: SparkSession, lake: Lake, log: CaptureLog,
       TableRef("staging", cfg.dataset, cfg.table),
       partitionBy = Seq("data", "hora", "tick"))
 
+  /** The reference's treat step: strip strings, nest every non-pk
+    * column into the `content` JSON and add the (data, hora) staging
+    * partitions. */
+  private def treat(stamped: DataFrame): DataFrame =
+    Nest.toContent(Clean.trimStrings(stamped),
+        pk = cfg.pk :+ "timestamp_captura")
+      .withColumn("data", date_format(col("timestamp_captura"), "yyyy-MM-dd"))
+      .withColumn("hora", date_format(col("timestamp_captura"), "HH"))
+
+  /** Lands `stamped` in both zones: [[writeRaw]] on a thread started for
+    * this call, treat + [[writeStaging]] on the calling thread, and the
+    * raw thread joined before this returns or throws — also when the
+    * treat step fails, so raw lands verbatim even for a payload that
+    * cannot be treated (the reference keeps the raw file when its
+    * transform task fails).
+    *
+    * A fresh `Thread` per call, not a pool: a new thread copies the
+    * SparkContext's inheritable local properties (job group, scheduler
+    * pool, and inside `foreachBatch` the streaming and SQL execution
+    * ids) when it is created, so `cancelJobGroup` and
+    * `StreamingQuery.stop` cancel the raw write too and its jobs are
+    * attributed to the caller's. A pooled thread would carry whatever
+    * its first caller set.
+    *
+    * Errors: the failing write's error is rethrown; when both fail, the
+    * calling thread's (treat or staging) error is rethrown with the raw
+    * error attached via `addSuppressed`. */
+  private def landZones(stamped: DataFrame): Unit = {
+    var rawErr: Throwable = null
+    val raw = new Thread(() =>
+      try writeRaw(stamped) catch { case t: Throwable => rawErr = t },
+      s"capture-raw-${cfg.dataset}.${cfg.table}")
+    raw.start()
+    try writeStaging(treat(stamped))
+    catch {
+      case e: Throwable =>
+        joinUninterruptibly(raw)
+        if (rawErr != null) e.addSuppressed(rawErr)
+        throw e
+    }
+    joinUninterruptibly(raw)
+    if (rawErr != null) throw rawErr
+  }
+
+  /** An interrupt (e.g. `StreamingQuery.stop`) must not let the caller
+    * go on to its log write while the raw write still runs; the raw
+    * write's jobs are cancelled with the caller's job group, so the
+    * wait is short. The interrupt is re-asserted afterwards. */
+  private def joinUninterruptibly(t: Thread): Unit = {
+    var interrupted = false
+    while (t.isAlive)
+      try t.join() catch { case _: InterruptedException => interrupted = true }
+    if (interrupted) Thread.currentThread().interrupt()
+  }
+
   /** Records a failed tick's log rows without masking `e`: a log write
     * that throws too is attached to `e` as suppressed, and `e` is what
     * the caller sees. */
@@ -71,21 +136,18 @@ class Capture(spark: SparkSession, lake: Lake, log: CaptureLog,
   }
 
   /** The per-micro-batch body — usable directly for batch captures and
-    * from foreachBatch for streaming ones. */
+    * from foreachBatch for streaming ones. The raw and staging writes
+    * run concurrently ([[landZones]]; cancelling the caller's job group
+    * or stopping the stream stops both), and the log row is written
+    * only after both have returned: a success row once both zones
+    * landed, else a failure row carrying the error. */
   def processBatch(raw: DataFrame, captureTs: Timestamp): Unit = {
     // The batch feeds TWO writes (raw + staging); cache it so the source
     // is scanned once per tick, not once per sink.
     val stamped = raw.withColumn("timestamp_captura", lit(captureTs))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      writeRaw(stamped)
-
-      val treated = Nest.toContent(
-        Clean.trimStrings(stamped), pk = cfg.pk :+ "timestamp_captura")
-        .withColumn("data", date_format(col("timestamp_captura"), "yyyy-MM-dd"))
-        .withColumn("hora", date_format(col("timestamp_captura"), "HH"))
-      writeStaging(treated)
-
+      landZones(stamped)
       log.append(cfg.dataset, cfg.table, captureTs, success = true)
     } catch {
       case e: Exception => logFailure(e) {
@@ -102,7 +164,8 @@ class Capture(spark: SparkSession, lake: Lake, log: CaptureLog,
     * every (data, hora) dir in that single pass — the
     * Trigger.AvailableNow shape of a batch backfill). Each recovered
     * minute still gets its own `[recapturado]` log row, and all of them
-    * land in one log write. */
+    * land in one log write — after both zone writes, which run
+    * concurrently as in [[processBatch]]. */
   def processBackfill(windows: Seq[(Timestamp, DataFrame)]): Unit = {
     if (windows.isEmpty) return
     val union = windows.map { case (ts, df) =>
@@ -113,13 +176,7 @@ class Capture(spark: SparkSession, lake: Lake, log: CaptureLog,
       // per-tick overwrite: if this backfill is itself a retry (its
       // predecessor committed raw then failed on staging), the windows
       // replace their previous raw partitions instead of duplicating
-      writeRaw(union)
-
-      val treated = Nest.toContent(
-        Clean.trimStrings(union), pk = cfg.pk :+ "timestamp_captura")
-        .withColumn("data", date_format(col("timestamp_captura"), "yyyy-MM-dd"))
-        .withColumn("hora", date_format(col("timestamp_captura"), "HH"))
-      writeStaging(treated)
+      landZones(union)
 
       log.appendAll(cfg.dataset, cfg.table, windows.map(_._1), success = true,
         recaptured = true)

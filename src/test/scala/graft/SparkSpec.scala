@@ -11,6 +11,36 @@ trait SparkSpec extends AnyFunSuite {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** Local properties of every Spark job started while `body` ran, in
+    * start order. Listener events are asynchronous, so a sentinel job
+    * run after `body` fences the bus: once its start event has arrived,
+    * every earlier job's has too. */
+  def jobsDuring(body: => Unit): Seq[java.util.Properties] = {
+    val key = "graft.test.sentinel"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[java.util.Properties]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).getOrElse(new java.util.Properties))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setLocalProperty(key, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(key, null)
+      val jobs = Seq.newBuilder[java.util.Properties]
+      var p = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+      while (p != null && p.getProperty(key) == null) {
+        jobs += p
+        p = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      assert(p != null, "sentinel job start never reached the listener")
+      jobs.result()
+    } finally sc.removeSparkListener(l)
+  }
+
   /** In-memory PNG fixture: TYPE_INT_RGB grid from an (x, y) → rgb fn. */
   def pngBytes(w: Int, h: Int)(rgb: (Int, Int) => Int): Array[Byte] = {
     val img = new java.awt.image.BufferedImage(

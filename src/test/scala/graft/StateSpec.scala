@@ -34,6 +34,22 @@ class StateSpec extends SparkSpec {
     assert(st.lastRun("ds.t") === Some(now))
   }
 
+  test("lastRun and sketch reads of a stored key run one job (no schema inference)") {
+    val st = new StateStore(spark, tmpDir("state"))
+    val now = Timestamp.valueOf("2024-02-01 00:00:00")
+    st.setLastRun("ds.t", now)
+    st.mergeSketch("ds.t", Array[Byte](1, 2, 3)) // first merge stores as-is
+    // the store fixes these kinds' column types itself, so it reads them
+    // with the declared schema: the collect is the only job, with no
+    // footer-reading inference job before it
+    var got: Option[Timestamp] = None
+    assert(jobsDuring { got = st.lastRun("ds.t") }.size === 1)
+    assert(got === Some(now))
+    var sk: Option[Array[Byte]] = None
+    assert(jobsDuring { sk = st.sketch("ds.t") }.size === 1)
+    assert(sk.map(_.toSeq) === Some(Seq[Byte](1, 2, 3)))
+  }
+
   test("crash between swap renames: next reader heals .old BEFORE its merge reads") {
     val dir = tmpDir("state")
     val st = new StateStore(spark, dir)

@@ -592,11 +592,121 @@ class StreamingSpec extends SparkSpec {
     assert(live.getMessage.contains("no_such_pk"), live.getMessage)
     // (Spark may attach its own caller-stacktrace marker as well)
     assert(live.getSuppressed.contains(logDown), live.getSuppressed.toSeq)
+    // raw lands verbatim even though treat failed: the raw write runs
+    // beside the treat step and is joined before the failure surfaces
+    assert(lake.read(TableRef("raw", "ds", "gps")).count() === 1)
     val backfill = intercept[org.apache.spark.sql.AnalysisException] {
       cap.processBackfill(Seq(tick -> batch,
         Timestamp.valueOf("2024-01-05 00:04:00") -> batch))
     }
     assert(backfill.getSuppressed.contains(logDown), backfill.getSuppressed.toSeq)
+  }
+
+  /** A lake whose partition overwrites throw the error mapped to their zone. */
+  private def failingLake(root: String, failing: Map[String, Exception]): Lake =
+    new Lake(spark, root) {
+      override def overwritePartitions(df: org.apache.spark.sql.DataFrame,
+                                       ref: TableRef,
+                                       partitionBy: Seq[String]): Unit =
+        failing.get(ref.zone) match {
+          case Some(e) => throw e
+          case None => super.overwritePartitions(df, ref, partitionBy)
+        }
+    }
+
+  private val landCfg = CaptureConfig("ds", "gps", pk = Seq("id"), tsCol = "ts")
+  private val landTick = Timestamp.valueOf("2024-01-05 00:03:00")
+  private def landBatch = Seq(
+      (1L, Timestamp.valueOf("2024-01-05 00:02:10"), "a"),
+      (2L, Timestamp.valueOf("2024-01-05 00:02:40"), "b"))
+    .toDF("id", "ts", "v")
+
+  test("concurrent land: a failed staging write logs once, after raw committed") {
+    val root = tmpDir("lake")
+    val stagingDown = new java.io.IOException("staging store down")
+    val lake = failingLake(root, Map("staging" -> stagingDown))
+    val log = new CaptureLog(spark, lake)
+    val err = intercept[java.io.IOException] {
+      new Capture(spark, lake, log, landCfg).processBatch(landBatch, landTick)
+    }
+    assert(err eq stagingDown)
+    // the log row is written only after the raw write returned: one
+    // failure row, no success row
+    val logged = log.read("ds", "gps")
+    assert(logged.filter($"sucesso" === false).count() === 1)
+    assert(logged.filter($"sucesso" === true).count() === 0)
+    // the raw tick partition is fully committed, with no writer debris
+    val rawDir = java.nio.file.Paths.get(lake.path(TableRef("raw", "ds", "gps")))
+    val walk = java.nio.file.Files.walk(rawDir)
+    val files = try walk.iterator().asScala.map(rawDir.relativize(_).toString)
+      .toSeq finally walk.close()
+    assert(!files.exists(f => f.contains("_temporary") ||
+      f.contains(".spark-staging")), files)
+    assert(files.exists(f => f.startsWith("data=") && f.contains("/tick=") &&
+      f.endsWith(".parquet")), files)
+    assert(lake.read(TableRef("raw", "ds", "gps")).count() === 2)
+    // a retry on a healthy lake leaves exactly one copy in each zone
+    val healthy = new Lake(spark, root)
+    new Capture(spark, healthy, new CaptureLog(spark, healthy), landCfg)
+      .processBatch(landBatch, landTick)
+    assert(healthy.read(TableRef("raw", "ds", "gps")).count() === 2)
+    assert(healthy.read(TableRef("staging", "ds", "gps")).count() === 2)
+  }
+
+  test("concurrent land: every capture job carries the caller's job group") {
+    val lake = new Lake(spark, tmpDir("lake"))
+    val cap = new Capture(spark, lake, new CaptureLog(spark, lake), landCfg)
+    val group = "capture-land-group"
+    val sc = spark.sparkContext
+    val jobs = jobsDuring {
+      sc.setJobGroup(group, "concurrent land")
+      try {
+        cap.processBatch(landBatch, landTick)
+        cap.processBackfill(Seq(
+          Timestamp.valueOf("2024-01-05 00:04:00") -> landBatch,
+          Timestamp.valueOf("2024-01-05 00:05:00") -> landBatch))
+      } finally sc.clearJobGroup()
+    }
+    // raw + staging + log write per call at least
+    assert(jobs.size >= 6, jobs.size)
+    assert(jobs.forall(_.getProperty("spark.jobGroup.id") == group),
+      jobs.map(_.getProperty("spark.jobGroup.id")))
+    assert(lake.read(TableRef("raw", "ds", "gps")).count() === 6)
+    assert(lake.read(TableRef("staging", "ds", "gps")).count() === 6)
+  }
+
+  test("concurrent land: both writes failing rethrows staging's, raw suppressed") {
+    val rawDown = new java.io.IOException("raw store down")
+    val stagingDown = new java.io.IOException("staging store down")
+    val lake = failingLake(tmpDir("lake"),
+      Map("raw" -> rawDown, "staging" -> stagingDown))
+    val log = new CaptureLog(spark, lake)
+    val cap = new Capture(spark, lake, log, landCfg)
+    val live = intercept[java.io.IOException] {
+      cap.processBatch(landBatch, landTick)
+    }
+    assert(live eq stagingDown)
+    assert(live.getSuppressed.contains(rawDown), live.getSuppressed.toSeq)
+    val backfillStaging = new java.io.IOException("staging store down")
+    val backfillRaw = new java.io.IOException("raw store down")
+    val lake2 = failingLake(tmpDir("lake"),
+      Map("raw" -> backfillRaw, "staging" -> backfillStaging))
+    val backfill = intercept[java.io.IOException] {
+      new Capture(spark, lake2, new CaptureLog(spark, lake2), landCfg)
+        .processBackfill(Seq(landTick -> landBatch))
+    }
+    assert(backfill eq backfillStaging)
+    assert(backfill.getSuppressed.contains(backfillRaw),
+      backfill.getSuppressed.toSeq)
+    // only the raw write failing: its own error is what the caller sees
+    val rawOnly = new java.io.IOException("raw store down")
+    val lake3 = failingLake(tmpDir("lake"), Map("raw" -> rawOnly))
+    val log3 = new CaptureLog(spark, lake3)
+    val e3 = intercept[java.io.IOException] {
+      new Capture(spark, lake3, log3, landCfg).processBatch(landBatch, landTick)
+    }
+    assert(e3 eq rawOnly)
+    assert(log3.read("ds", "gps").filter($"sucesso" === false).count() === 1)
   }
 
   test("streaming camera clips: binaryFile stream → frames → scores (S22/T1)") {
