@@ -270,7 +270,7 @@ object Bench {
           ann = Some((idx, "emb")), semanticThreshold = Some(0.95),
           qualityGate = Some(model),
           nearDupVerify = Some(0.75), lineScrub = true, decontam = true,
-          unigramVocab = Some(graft.functions.UnigramVocab.default),
+          vocab = graft.functions.UnigramVocab.default,
           repetitionRules = true)
         (System.nanoTime() - t0) / 1e9
       } finally {

@@ -9,7 +9,7 @@ object Mix {
 
   /** 64-bit SplitMix step — the engine's deterministic randomness
     * source (no java.util.Random: cross-JVM stable). Used by the
-    * synthetic fixtures (BpeTrain/MicroBench), the subword samplers
+    * synthetic fixtures (TokenizerTrain/MicroBench), the subword samplers
     * (UnigramSample, BpeDropout) and their per-piece decorrelation. */
   @inline def mix(x0: Long): Long = {
     var x = x0 + 0x9e3779b97f4a7c15L

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The registered test-set shingles as a plan-shippable reference (the
-  * [[MultiPatternCount]]/[[BpeEncode]] pattern): serialized as the flat
+  * [[MultiPatternCount]]/[[TokenEncode]] pattern): serialized as the flat
   * entry array, membership hash rebuilt lazily per executor. Benchmark
   * suites are MBs against a 100 TB corpus — the q91 framing — so the
   * plan-reference footprint is the broadcast a join would have paid

@@ -108,13 +108,13 @@ object GraftExtensions {
       (cs: Seq[Expression]) => Shingles(cs.head,
         if (cs.size > 1) intArg(cs(1), "shingle size") else 3)),
     (FunctionIdentifier("bpe_tokens"),
-      new ExpressionInfo(classOf[BpeEncode].getName, "bpe_tokens"),
+      new ExpressionInfo(classOf[TokenEncode].getName, "bpe_tokens"),
       (cs: Seq[Expression]) =>
-        BpeEncode(cs.head, graft.functions.BpeVocab.default, countOnly = false)),
+        TokenEncode(cs.head, graft.functions.BpeVocab.default, countOnly = false)),
     (FunctionIdentifier("bpe_count"),
-      new ExpressionInfo(classOf[BpeEncode].getName, "bpe_count"),
+      new ExpressionInfo(classOf[TokenEncode].getName, "bpe_count"),
       (cs: Seq[Expression]) =>
-        BpeEncode(cs.head, graft.functions.BpeVocab.default, countOnly = true)),
+        TokenEncode(cs.head, graft.functions.BpeVocab.default, countOnly = true)),
     (FunctionIdentifier("hex_prefix_to_long"),
       new ExpressionInfo(classOf[HexPrefixToLong].getName, "hex_prefix_to_long"),
       (cs: Seq[Expression]) => HexPrefixToLong(cs.head,

@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.{Bpe, UnigramVocab}
 
 /** Subword-regularization sampling as a native expression — the
-  * stochastic sibling of [[UnigramEncode]] ([[UnigramVocab.sampleWord]]
+  * stochastic sibling of [[TokenEncode]] ([[UnigramVocab.sampleWord]]
   * per pretoken, segmentations drawn ∝ P^α). Binary: (text, seed) —
   * the seed column is the caller's (doc id, epoch) derivation, so one
   * text yields a DIFFERENT deterministic token sequence per epoch (the

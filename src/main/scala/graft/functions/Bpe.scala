@@ -2,7 +2,7 @@ package graft.functions
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding subword tokenizer — pure JVM, zero dependencies.
@@ -18,10 +18,11 @@ import org.apache.spark.sql.functions._
   *     reaches the driver, never the corpus;
   *   - a greedy ENCODER (lowest-rank merge first, all leftmost
   *     non-overlapping occurrences per step — the reference BPE encode
-  *     loop) exposed as native expressions [[graft.expressions.BpeEncode]]
-  *     that stay inside whole-stage codegen, with a per-task word cache
-  *     (word→tokens is a pure function, and corpora are Zipfian, so the
-  *     cache absorbs almost every row);
+  *     loop) behind the shared [[Tokenizer]] interface, encoded by the
+  *     native expression [[graft.expressions.TokenEncode]] that stays
+  *     inside whole-stage codegen, with a per-task word cache (word→tokens
+  *     is a pure function, and corpora are Zipfian, so the cache absorbs
+  *     almost every row);
   *   - a merges-file round-trip in the public one-merge-per-line format
   *     ("#version" comment + "left right" lines), so any externally
   *     trained vocabulary in that format drops in.
@@ -32,7 +33,9 @@ import org.apache.spark.sql.functions._
   * parallel over pieces. Reference behavior: prefeitura-rio/pipelines
   * has no tokenizer (beyond-reference LLM-pipeline mandate).
   */
-final case class BpeVocab(merges: Vector[(String, String)]) {
+final case class BpeVocab(merges: Vector[(String, String)]) extends Tokenizer {
+
+  def family: String = "bpe"
 
   /** pair → merge priority (lower = earlier-learned = applied first). */
   val ranks: Map[(String, String), Int] = merges.zipWithIndex.toMap
@@ -132,34 +135,14 @@ final case class BpeVocab(merges: Vector[(String, String)]) {
     toks
   }
 
-  /** Per-task word→tokens cache. Word-level encode is a pure function
-    * and word frequencies are Zipfian, so nearly every piece is a cache
-    * hit. Bounded (no eviction: past the cap new words just re-encode —
-    * the hot head is already resident by then); transient so a
-    * serialized vocab lands on executors with an empty cache. */
-  @transient private lazy val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[String]]()
-
-  def encodeCached(word: String): Array[String] = {
-    val hit = cache.get(word)
-    if (hit != null) hit
-    else {
-      val toks = encodeWord(word)
-      if (cache.size < BpeVocab.CacheCap) cache.put(word, toks)
-      toks
-    }
-  }
-
   /** One-merge-per-line serialization (public merges.txt format). */
-  def toMergesText: String =
+  def toText: String =
     ("#version: 0.2" +: merges.map { case (a, b) => s"$a $b" }).mkString("\n")
 }
 
 object BpeVocab {
 
-  private[functions] val CacheCap = 1 << 16
-
-  def fromMergesText(text: String): BpeVocab = BpeVocab(
+  def fromText(text: String): BpeVocab = BpeVocab(
     text.linesIterator
       .map(_.trim)
       .filter(l => l.nonEmpty && !l.startsWith("#"))
@@ -171,15 +154,10 @@ object BpeVocab {
       .toVector)
 
   /** The engine's committed default vocabulary (trained by
-    * [[graft.tools.BpeTrain]] on the documents fixture, deterministic). */
-  lazy val default: BpeVocab = loadResource("/graft/bpe/merges.txt")
-
-  def loadResource(path: String): BpeVocab = {
-    val in = getClass.getResourceAsStream(path)
-    require(in != null, s"BPE merges resource not found: $path")
-    try fromMergesText(new String(in.readAllBytes(), "UTF-8"))
-    finally in.close()
-  }
+    * [[graft.tools.TokenizerTrain]] `bpe` on the documents fixture,
+    * deterministic). */
+  lazy val default: BpeVocab =
+    fromText(Tokenizer.resourceText("/graft/bpe/merges.txt"))
 
   /** Codepoint-level split (surrogate-pair safe). */
   private[functions] def codepoints(w: String): Array[String] = {
@@ -222,12 +200,11 @@ object Bpe {
 
   /** BPE token array of a text column — native expression, codegen'd. */
   def bpeTokens(c: Column, vocab: BpeVocab = BpeVocab.default): Column =
-    graft.expressions.BpeEncode.tokens(c, vocab)
+    vocab.tokens(c)
 
-  /** BPE token COUNT of a text column — cheaper than size(bpeTokens):
-    * only per-piece counts are cached and summed, no array materializes. */
+  /** BPE token COUNT of a text column — count-only, no array. */
   def bpeTokenCount(c: Column, vocab: BpeVocab = BpeVocab.default): Column =
-    graft.expressions.BpeEncode.count(c, vocab)
+    vocab.count(c)
 
   /** BPE-dropout token array ([[BpeVocab.encodeWordDropout]] per
     * pretoken) — seed from (doc id, epoch), like
@@ -248,7 +225,7 @@ object Bpe {
     * INCREMENTALLY: pair counts live in a sorted structure and each
     * merge recounts only the words that contain the merged pair, so a
     * realistic 32k-merge vocabulary trains in seconds where the
-    * full-rescan loop ([[trainFromWordCountsNaive]], kept as the parity
+    * full-rescan loop (kept in the test sources as the parity
     * reference) is O(numMerges × corpus symbols) and takes minutes.
     * Byte-identical output to the naive loop (property-spec'd): counts
     * after every step are equal by construction and the selection rule
@@ -346,82 +323,5 @@ object Bpe {
       }
     }
     BpeVocab(merges.result())
-  }
-
-  /** The full-rescan reference trainer — O(numMerges × corpus symbols);
-    * kept (test-visible) as the byte-parity oracle for the incremental
-    * [[trainFromWordCounts]]. */
-  private[graft] def trainFromWordCountsNaive(
-      counts: Iterable[(String, Long)], numMerges: Int): BpeVocab = {
-    var words: Array[(Array[String], Long)] =
-      counts.iterator.map { case (w, c) => (BpeVocab.codepoints(w), c) }.toArray
-    val merges = Vector.newBuilder[(String, String)]
-    var step = 0
-    var exhausted = false
-    while (step < numMerges && !exhausted) {
-      val pairCounts = new java.util.HashMap[(String, String), Long]()
-      words.foreach { case (syms, c) =>
-        var i = 0
-        while (i < syms.length - 1) {
-          pairCounts.merge((syms(i), syms(i + 1)), c, _ + _)
-          i += 1
-        }
-      }
-      var best: (String, String) = null
-      var bestCount = 1L // require count >= 2: merging a singleton pair is noise
-      pairCounts.forEach { (p, c) =>
-        if (c > bestCount ||
-          (c == bestCount && best != null &&
-            implicitly[Ordering[(String, String)]].lt(p, best))) {
-          best = p; bestCount = c
-        }
-      }
-      if (best == null) exhausted = true
-      else {
-        merges += best
-        val (a, b) = best
-        val merged = a + b
-        words = words.map { case (syms, c) =>
-          var has = false
-          var i = 0
-          while (i < syms.length - 1 && !has) {
-            has = syms(i) == a && syms(i + 1) == b; i += 1
-          }
-          if (!has) (syms, c)
-          else {
-            val out = new Array[String](syms.length)
-            var n = 0
-            var j = 0
-            while (j < syms.length) {
-              if (j < syms.length - 1 && syms(j) == a && syms(j + 1) == b) {
-                out(n) = merged; n += 1; j += 2
-              } else { out(n) = syms(j); n += 1; j += 1 }
-            }
-            (java.util.Arrays.copyOf(out, n), c)
-          }
-        }
-        step += 1
-      }
-    }
-    BpeVocab(merges.result())
-  }
-
-  /** Distributed trainer: pretokenize + word-count the corpus (one
-    * partial-agg shuffle), keep the top maxWords words by count — the
-    * ONLY driver-side materialization, vocabulary-sized by construction
-    * — then run the merge loop. At 100 TB callers additionally
-    * hash-sample the input ([[TextOps.hashFrac]]); BPE statistics
-    * converge long before corpus scale, so the sample is about cost,
-    * not quality. */
-  def train(df: DataFrame, text: Column, numMerges: Int,
-            maxWords: Int = 1 << 16): BpeVocab = {
-    val top = df
-      .select(explode(pieces(sanitizeAscii(text))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("w").asc)
-      .limit(maxWords)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    trainFromWordCounts(top, numMerges)
   }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Column
 
 /** SentencePiece-style unigram-LM subword tokenizer (Kudo 2018,
   * "Subword Regularization", §3) — the second tokenizer FAMILY beside
@@ -22,10 +21,10 @@ import org.apache.spark.sql.functions._
   *     vocabulary-sized word→count frame (one partial-agg shuffle);
   *     seeding, EM and pruning run driver-side over that bounded
   *     table — the corpus itself never reaches the driver;
-  *   - ENCODE as a native codegen expression
-  *     ([[graft.expressions.UnigramEncode]]) with a per-task word
-  *     cache — Viterbi per word is a pure function and corpora are
-  *     Zipfian;
+  *   - ENCODE through the shared [[Tokenizer]] interface and its
+  *     native codegen expression ([[graft.expressions.TokenEncode]])
+  *     with a per-task word cache — Viterbi per word is a pure
+  *     function and corpora are Zipfian;
   *   - a `piece<TAB>logprob` serialization (the public SentencePiece
   *     .vocab text shape), so an externally trained vocabulary drops
   *     in, and logprobs round-trip EXACTLY (shortest-repr decimal).
@@ -45,8 +44,11 @@ import org.apache.spark.sql.functions._
   * Reference behavior: prefeitura-rio/pipelines has no tokenizer
   * (beyond-reference LLM-pipeline mandate, like [[Bpe]]).
   */
-final case class UnigramVocab(pieces: Vector[(String, Double)]) {
+final case class UnigramVocab(pieces: Vector[(String, Double)])
+    extends Tokenizer {
   require(pieces.nonEmpty, "empty unigram vocabulary")
+
+  def family: String = "unigram"
 
   /** piece → log p(piece). */
   @transient lazy val logProb: java.util.HashMap[String, java.lang.Double] = {
@@ -258,35 +260,20 @@ final case class UnigramVocab(pieces: Vector[(String, Double)]) {
     if (lz(n) == NEG) 0.0 else math.exp(lw(n) - lz(n))
   }
 
-  /** Per-task word→pieces cache — [[BpeVocab.encodeCached]]'s contract:
-    * bounded, no eviction, transient across serialization. */
-  @transient private lazy val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[String]]()
-
-  def encodeCached(word: String): Array[String] = {
-    val hit = cache.get(word)
-    if (hit != null) hit
-    else {
-      val toks = encodeWord(word)
-      if (cache.size < BpeVocab.CacheCap) cache.put(word, toks)
-      toks
-    }
-  }
-
   /** `piece<TAB>logprob` lines — logprobs in shortest-repr decimal, so
     * text → [[UnigramVocab]] → text round-trips byte-identically and
     * two engines parsing the same file get bit-identical doubles. */
-  def toVocabText: String =
+  def toText: String =
     pieces.map { case (p, lp) => s"$p\t$lp" }.mkString("\n")
 }
 
 object UnigramVocab {
 
-  def fromVocabText(text: String): UnigramVocab = UnigramVocab(
+  def fromText(text: String): UnigramVocab = UnigramVocab(
     // No comment syntax: '#' is a legitimate single-codepoint piece
     // (PretokenPattern emits it and the trainer always keeps singles),
     // so a leading-'#' filter would silently drop it on reload and
-    // break toVocabText's byte-identical round-trip. Every non-empty
+    // break toText's byte-identical round-trip. Every non-empty
     // line must be a piece<TAB>logprob pair.
     text.linesIterator
       .filter(_.nonEmpty)
@@ -298,16 +285,10 @@ object UnigramVocab {
       .toVector)
 
   /** The engine's committed default unigram vocabulary (trained by
-    * [[graft.tools.UnigramTrain]] on the documents fixture,
+    * [[graft.tools.TokenizerTrain]] `unigram` on the documents fixture,
     * deterministic — rerunning the tool reproduces it byte-identically). */
-  lazy val default: UnigramVocab = loadResource("/graft/unigram/vocab.tsv")
-
-  def loadResource(path: String): UnigramVocab = {
-    val in = getClass.getResourceAsStream(path)
-    require(in != null, s"unigram vocab resource not found: $path")
-    try fromVocabText(new String(in.readAllBytes(), "UTF-8"))
-    finally in.close()
-  }
+  lazy val default: UnigramVocab =
+    fromText(Tokenizer.resourceText("/graft/unigram/vocab.tsv"))
 }
 
 object Unigram {
@@ -317,11 +298,11 @@ object Unigram {
     * so the two families share a denominator and every q110-style
     * metric is comparable across tokenizers). */
   def unigramTokens(c: Column, vocab: UnigramVocab = UnigramVocab.default): Column =
-    graft.expressions.UnigramEncode.tokens(c, vocab)
+    vocab.tokens(c)
 
   /** Unigram token COUNT — count-only kernel, no array materializes. */
   def unigramTokenCount(c: Column, vocab: UnigramVocab = UnigramVocab.default): Column =
-    graft.expressions.UnigramEncode.count(c, vocab)
+    vocab.count(c)
 
   /** Subword-regularization SAMPLE of a text column — segmentations
     * drawn ∝ P^α ([[UnigramVocab.sampleWord]] per pretoken), seeded by
@@ -496,20 +477,5 @@ object Unigram {
       }
     }
     UnigramVocab(vocab.map(p => (p, probs(p))))
-  }
-
-  /** Distributed trainer — [[Bpe.train]]'s head verbatim: pretokenize +
-    * word-count (one partial-agg shuffle), top `maxWords` to the
-    * driver, then the EM loop over the bounded table. */
-  def train(df: DataFrame, text: Column, vocabSize: Int,
-            maxPieceLen: Int = 8, maxWords: Int = 1 << 16): UnigramVocab = {
-    val top = df
-      .select(explode(Bpe.pieces(Bpe.sanitizeAscii(text))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("w").asc)
-      .limit(maxWords)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    trainFromWordCounts(top, vocabSize, maxPieceLen = maxPieceLen)
   }
 }

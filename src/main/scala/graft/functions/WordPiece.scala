@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Column
 
 /** WordPiece subword tokenizer (Schuster & Nakajima 2012; the BERT /
   * DistilBERT / Electra family) — the THIRD production tokenizer family
@@ -24,19 +23,21 @@ import org.apache.spark.sql.functions._
   * Same engine architecture as the other two families, deliberately:
   * TRAIN as aggregations (corpus → word→count frame, one partial-agg
   * shuffle; the merge loop runs driver-side over that bounded table);
-  * ENCODE as a native codegen expression
-  * ([[graft.expressions.WordPieceEncode]]) with the per-task
-  * Zipf-absorbing word cache; one-piece-per-line serialization (the
-  * public BERT vocab.txt shape) so an externally trained vocabulary
-  * drops in. Pretokenization is [[Bpe.PretokenPattern]] — the SAME
+  * ENCODE through the shared [[Tokenizer]] interface and its native
+  * codegen expression ([[graft.expressions.TokenEncode]]) with the
+  * per-task Zipf-absorbing word cache; one-piece-per-line
+  * serialization (the public BERT vocab.txt shape) so an externally
+  * trained vocabulary drops in. Pretokenization is [[Bpe.PretokenPattern]] — the SAME
   * denominator as the other families, which is what makes fertility
   * comparable across them.
   *
   * Reference behavior: prefeitura-rio/pipelines has no tokenizer
   * (beyond-reference LLM-pipeline mandate, like [[Bpe]]/[[Unigram]]).
   */
-final case class WordPieceVocab(pieces: Vector[String]) {
+final case class WordPieceVocab(pieces: Vector[String]) extends Tokenizer {
   require(pieces.nonEmpty, "empty wordpiece vocabulary")
+
+  def family: String = "wordpiece"
 
   /** Piece membership (head pieces raw, continuations with "##"). */
   @transient lazy val set: java.util.HashSet[String] = {
@@ -87,24 +88,9 @@ final case class WordPieceVocab(pieces: Vector[String]) {
     out.toArray
   }
 
-  /** Per-task word→pieces cache — [[BpeVocab.encodeCached]]'s
-    * contract: bounded, no eviction, transient across serialization. */
-  @transient private lazy val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[String]]()
-
-  def encodeCached(word: String): Array[String] = {
-    val hit = cache.get(word)
-    if (hit != null) hit
-    else {
-      val toks = encodeWord(word)
-      if (cache.size < BpeVocab.CacheCap) cache.put(word, toks)
-      toks
-    }
-  }
-
   /** One piece per line — the public BERT vocab.txt shape; pieces may
     * legitimately start with '#', so there is no comment syntax. */
-  def toVocabText: String = pieces.mkString("\n")
+  def toText: String = pieces.mkString("\n")
 }
 
 object WordPieceVocab {
@@ -113,20 +99,15 @@ object WordPieceVocab {
     * to exactly one of these. */
   val Unk = "[UNK]"
 
-  def fromVocabText(text: String): WordPieceVocab =
+  def fromText(text: String): WordPieceVocab =
     WordPieceVocab(text.linesIterator.filter(_.nonEmpty).toVector)
 
   /** The engine's committed default WordPiece vocabulary (trained by
-    * [[graft.tools.WordPieceTrain]] on the documents fixture,
-    * deterministic — rerunning the tool reproduces it byte-identically). */
-  lazy val default: WordPieceVocab = loadResource("/graft/wordpiece/vocab.txt")
-
-  def loadResource(path: String): WordPieceVocab = {
-    val in = getClass.getResourceAsStream(path)
-    require(in != null, s"wordpiece vocab resource not found: $path")
-    try fromVocabText(new String(in.readAllBytes(), "UTF-8"))
-    finally in.close()
-  }
+    * [[graft.tools.TokenizerTrain]] `wordpiece` on the documents
+    * fixture, deterministic — rerunning the tool reproduces it
+    * byte-identically). */
+  lazy val default: WordPieceVocab =
+    fromText(Tokenizer.resourceText("/graft/wordpiece/vocab.txt"))
 }
 
 object WordPiece {
@@ -135,13 +116,13 @@ object WordPiece {
     * expression over [[Bpe.PretokenPattern]] pieces. */
   def wordpieceTokens(c: Column,
                       vocab: WordPieceVocab = WordPieceVocab.default): Column =
-    graft.expressions.WordPieceEncode.tokens(c, vocab)
+    vocab.tokens(c)
 
   /** WordPiece token COUNT — count-only kernel, no array materializes.
     * An [UNK]'d word counts 1 (it IS one token). */
   def wordpieceTokenCount(c: Column,
                           vocab: WordPieceVocab = WordPieceVocab.default): Column =
-    graft.expressions.WordPieceEncode.count(c, vocab)
+    vocab.count(c)
 
   /** Deterministic WordPiece training from a word→count table
     * (Schuster & Nakajima 2012 §3 over the bounded vocabulary frame —
@@ -180,8 +161,8 @@ object WordPiece {
     * relative error is ~1e-15 for c/(cx·cy), five orders inside the
     * margin, so the exact pass always sees the true argmax). Result is
     * BIT-IDENTICAL to the full-rescan reference — pinned by the
-    * fast-vs-naive property test ([[trainFromWordCountsNaive]] is the
-    * r16 trainer, kept verbatim as the oracle).
+    * fast-vs-naive property test (the r16 trainer, kept verbatim as
+    * the oracle in the test sources).
     *
     * @param vocabSize target TOTAL piece count incl. the alphabet and
     *                  [UNK]; training stops early when no pair repeats. */
@@ -368,113 +349,5 @@ object WordPiece {
       }
     }
     WordPieceVocab((WordPieceVocab.Unk +: alphabet) ++ merges.result())
-  }
-
-  /** The r16 full-rescan trainer, kept VERBATIM as the reference the
-    * incremental [[trainFromWordCounts]] is property-tested against
-    * (the [[Bpe.trainFromWordCountsNaive]] pattern): re-counts every
-    * symbol and adjacent pair from scratch per merge and arg-maxes by
-    * exact BigInt cross-multiplication over all pairs —
-    * O(merges × corpus symbols), unambiguously correct. */
-  def trainFromWordCountsNaive(counts: Iterable[(String, Long)],
-                               vocabSize: Int): WordPieceVocab = {
-    require(vocabSize > 0, s"vocabSize must be positive: $vocabSize")
-    val words = counts.toArray.sortBy(_._1)
-    val wc = words.map(_._2)
-    val segs: Array[Array[String]] = words.map { case (w, _) =>
-      val cps = BpeVocab.codepoints(w)
-      val out = new Array[String](cps.length)
-      var i = 0
-      while (i < cps.length) {
-        out(i) = if (i == 0) cps(i) else "##" + cps(i)
-        i += 1
-      }
-      out
-    }
-    val alphabet: Vector[String] =
-      segs.iterator.flatten.toSet.toVector.sorted
-    val have = scala.collection.mutable.HashSet[String](alphabet: _*)
-    val merges = Vector.newBuilder[String]
-
-    var done = false
-    while (!done && have.size + 1 < vocabSize) {
-      val symCount = new java.util.HashMap[String, Long]()
-      val pairCount = new java.util.HashMap[(String, String), Long]()
-      var wi = 0
-      while (wi < segs.length) {
-        val s = segs(wi)
-        val c = wc(wi)
-        var j = 0
-        while (j < s.length) {
-          symCount.merge(s(j), c, _ + _)
-          if (j < s.length - 1) pairCount.merge((s(j), s(j + 1)), c, _ + _)
-          j += 1
-        }
-        wi += 1
-      }
-      // arg-max of count(xy)/(count(x)·count(y)) by exact BigInt
-      // cross-multiplication; ties lexicographic — order-independent
-      // of the HashMap walk
-      var best: (String, String) = null
-      var bestNum = BigInt(0) // count(xy) of best
-      var bestDen = BigInt(1) // count(x)·count(y) of best
-      pairCount.forEach { (p, c) =>
-        if (c >= 2L) {
-          val num = BigInt(c)
-          val den = BigInt(symCount.get(p._1)) * BigInt(symCount.get(p._2))
-          val cmp = (num * bestDen).compare(bestNum * den)
-          if (best == null || cmp > 0 ||
-            (cmp == 0 && implicitly[Ordering[(String, String)]].lt(p, best))) {
-            best = p; bestNum = num; bestDen = den
-          }
-        }
-      }
-      if (best == null) done = true
-      else {
-        val (a, b) = best
-        val name = a + b.stripPrefix("##")
-        // two different merges can spell the same piece (("a","##bc")
-        // and ("ab","##c") → "abc"); fuse occurrences either way, add
-        // the piece once
-        if (have.add(name)) merges += name
-        var t = 0
-        while (t < segs.length) {
-          val s = segs(t)
-          var has = false
-          var j = 0
-          while (j < s.length - 1 && !has) {
-            has = s(j) == a && s(j + 1) == b; j += 1
-          }
-          if (has) {
-            val out = new Array[String](s.length)
-            var n = 0
-            j = 0
-            while (j < s.length) {
-              if (j < s.length - 1 && s(j) == a && s(j + 1) == b) {
-                out(n) = name; n += 1; j += 2
-              } else { out(n) = s(j); n += 1; j += 1 }
-            }
-            segs(t) = java.util.Arrays.copyOf(out, n)
-          }
-          t += 1
-        }
-      }
-    }
-    WordPieceVocab((WordPieceVocab.Unk +: alphabet) ++ merges.result())
-  }
-
-  /** Distributed trainer — [[Bpe.train]]'s head verbatim: pretokenize
-    * + word-count (one partial-agg shuffle), top `maxWords` to the
-    * driver, then the merge loop over the bounded table. */
-  def train(df: DataFrame, text: Column, vocabSize: Int,
-            maxWords: Int = 1 << 16): WordPieceVocab = {
-    val top = df
-      .select(explode(Bpe.pieces(Bpe.sanitizeAscii(text))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("w").asc)
-      .limit(maxWords)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    trainFromWordCounts(top, vocabSize)
   }
 }

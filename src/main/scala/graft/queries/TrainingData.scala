@@ -952,7 +952,7 @@ object TrainingData {
     // family; functions/WordPiece.scala): q110/q140's shape for the
     // THIRD tokenizer family. Greedy longest-match-first over the
     // committed 128-piece likelihood-trained vocabulary (merges score
-    // count(xy)/(count(x)·count(y)) — WordPieceTrain), one codegen
+    // count(xy)/(count(x)·count(y)) — TokenizerTrain), one codegen
     // scan with the per-task word cache; un-matchable words collapse
     // to ONE [UNK] token (the published whole-word rule). Oracle: an
     // independent greedy walk in DuckDB — matches as a join, the
@@ -967,7 +967,7 @@ object TrainingData {
     // Unigram-LM tokenization (Kudo 2018 — the SentencePiece family;
     // functions/Unigram.scala): q110's shape for the SECOND tokenizer
     // family. Viterbi segmentation over the committed 80-piece
-    // max-len-4 vocabulary (trained by tools/UnigramTrain — EM with
+    // max-len-4 vocabulary (trained by tools/TokenizerTrain — EM with
     // forward-backward expected counts over the word-count aggregate,
     // like every trainer in this engine), one codegen scan with the
     // per-task word cache. Oracle: an independent path-enumeration

@@ -5,15 +5,16 @@ import java.sql.Date
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Bpe, BpeVocab}
+import graft.functions.{BpeVocab, Tokenizer, TokenizerSpec}
 import graft.lake.{AnnIndex, CorpusDedup, CorpusPack, Lake, TableRef}
 import graft.state.{RunLock, StateStore}
 
 /** The rolling training-data ingest, composed end to end as a driver
   * entry point: each day's crawl batch is deduplicated against the TTL
   * recency window (exact hashes AND near-dup LSH bands), token-counted
-  * with the real BPE denomination, packed into context windows
-  * CONTINUING the prior day's cursors, and landed idempotently.
+  * with a real subword denomination (BPE by default), packed into
+  * context windows CONTINUING the prior day's cursors, and landed
+  * idempotently.
   *
   * Crash-idempotence by construction — the step ORDER is the invariant:
   *
@@ -137,14 +138,12 @@ object DailyIngest {
     * dataset's seen-set is first created and keep it — the two tables
     * are separate state.
     *
-    * `unigramVocab = Some(v)` switches the n_tok denomination from BPE
-    * to the unigram-LM family ([[graft.functions.Unigram]]);
-    * `wordpieceVocab = Some(v)` to WordPiece
-    * ([[graft.functions.WordPiece]]) — at most one switch may be set.
-    * The q141/q150 cross-family fertility comparison is the signal
-    * for the switch. Pin the family per dataset — mixing
-    * denominations across days makes pack budgets incomparable (the
-    * BPE vocab-file contract).
+    * `vocab` is the n_tok denomination: any [[Tokenizer]] — BPE by
+    * default, or a [[graft.functions.UnigramVocab]] /
+    * [[graft.functions.WordPieceVocab]] to switch family. The
+    * q141/q150 cross-family fertility comparison is the signal for the
+    * switch. Pin the family per dataset — mixing denominations across
+    * days makes pack budgets incomparable (the vocab-file contract).
     *
     * `decontam = true` adds benchmark DECONTAMINATION as a REWRITE
     * stage after the doc-level gates and before the line scrub: spans
@@ -206,7 +205,7 @@ object DailyIngest {
           day: Date, ttlDays: Int,
           ann: Option[(AnnIndex, String)] = None,
           semanticThreshold: Option[Double] = None,
-          vocab: BpeVocab = BpeVocab.default,
+          vocab: Tokenizer = BpeVocab.default,
           pqRefine: Option[Int] = None,
           lineScrub: Boolean = false,
           qualityGate: Option[graft.functions.QualityClassifier.Model] = None,
@@ -214,11 +213,9 @@ object DailyIngest {
           gopherRules: Option[(Long, Long)] = None,
           decontam: Boolean = false,
           lock: LockRef = None,
-          unigramVocab: Option[graft.functions.UnigramVocab] = None,
           repetitionRules: Boolean = false,
           qualityThreshold: Double = 0.0,
           codeRules: Boolean = false,
-          wordpieceVocab: Option[graft.functions.WordPieceVocab] = None,
           permissiveOnly: Boolean = false,
           repoLicense: Option[(String, String)] = None,
           checkpointDir: Option[String] = None)
@@ -235,8 +232,6 @@ object DailyIngest {
       sc.setJobDescription(s"ingest $day: $stage")
       try f finally sc.setJobDescription(prev)
     }
-    require(unigramVocab.isEmpty || wordpieceVocab.isEmpty,
-      "pick ONE n_tok denomination: unigramVocab or wordpieceVocab")
     val minDate = Date.valueOf(day.toLocalDate.minusDays(ttlDays.toLong))
     // Every stats-struct gate goes through TextOps.gateOnce (r17): a
     // direct filter(keep(stats(text))) carries one kernel COPY per
@@ -404,20 +399,10 @@ object DailyIngest {
     // the whole gate chain. Persistence is an execution hint, not a
     // semantic change, so the replay invariant is untouched (a crash
     // replay recomputes the identical frame from unchanged state).
-    // the n_tok DENOMINATION: BPE by default; `unigramVocab = Some(v)`
-    // switches the ingest to the unigram-LM family (the q141 fertility
-    // comparison is the signal for doing so) — every downstream
-    // consumer (pack budgets, cards, health ticks) is
-    // denomination-agnostic, it just sums n_tok. Pin the family per
-    // dataset: mixing denominations across days makes pack budgets
-    // incomparable (same contract as the BPE vocab file itself).
-    val tokenCount = (unigramVocab, wordpieceVocab) match {
-      case (Some(u), _) =>
-        graft.functions.Unigram.unigramTokenCount(col(textCol), u)
-      case (_, Some(w)) =>
-        graft.functions.WordPiece.wordpieceTokenCount(col(textCol), w)
-      case _ => Bpe.bpeTokenCount(col(textCol), vocab)
-    }
+    // the n_tok DENOMINATION: whichever tokenizer family `vocab` is —
+    // every downstream consumer (pack budgets, cards, health ticks) is
+    // denomination-agnostic, it just sums n_tok
+    val tokenCount = vocab.count(col(textCol))
     // Checkpoint, NOT persist (r17, probe-measured): with the
     // steady-state semantic gate, novel's plan READS the ANN lists
     // table, and the ann-append step below refreshes that table —
@@ -765,104 +750,45 @@ object DailyIngest {
     * trainer: 32,768 merges from 64k words in ~5 s). */
   val DefaultVocabMerges: Int = 32768
 
-  /** Load the ingest's BPE vocabulary from `vocabFile`, TRAINING it
-    * from `docs` and persisting it there first if absent — so day one
-    * pays one training pass and every later day (and every crash
-    * replay) reads the identical merges file. Crash safety: the file
+  /** Load the ingest's tokenizer from `vocabFile`, TRAINING it from
+    * `docs` with `spec` and persisting it there first if absent — so
+    * day one pays one training pass and every later day (and every
+    * crash replay) reads the identical file. Crash safety: the file
     * appears via write-to-temp + rename, and a crash before the rename
-    * just retrains — deterministically, from the same word counts —
-    * on the retry. The merges format is the public one-merge-per-line
-    * text, so an externally trained vocabulary dropped at the same
-    * path wins over training. */
-  def ensureVocab(spark: SparkSession, docs: DataFrame, textCol: String,
-                  vocabFile: String,
-                  numMerges: Int = DefaultVocabMerges): BpeVocab = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(vocabFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      try BpeVocab.fromMergesText(
-        new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
-      finally in.close()
-    } else {
-      val vocab = Bpe.train(docs, col(textCol), numMerges)
-      val tmp = new Path(p.getParent, p.getName + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write((vocab.toMergesText + "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      if (!fs.rename(tmp, p) && !fs.exists(p))
-        throw new java.io.IOException(s"could not persist BPE vocab at $p")
-      vocab
-    }
-  }
-
-  /** [[ensureVocab]]'s twin for the unigram-LM family: load the
-    * vocabulary from `vocabFile`, TRAINING from `docs` and persisting
-    * (write-to-temp + rename) if absent — same crash story: a death
-    * before the rename retrains deterministically on the retry. The
-    * file format is the public piece<TAB>logprob text, so an
-    * externally trained SentencePiece-style vocab dropped at the path
-    * wins over training. */
-  def ensureUnigramVocab(spark: SparkSession, docs: DataFrame,
-                         textCol: String, vocabFile: String,
-                         vocabSize: Int = 8192, maxPieceLen: Int = 8)
-      : graft.functions.UnigramVocab = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(vocabFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      try graft.functions.UnigramVocab.fromVocabText(
-        new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
-      finally in.close()
-    } else {
-      val vocab = graft.functions.Unigram.train(docs, col(textCol),
-        vocabSize, maxPieceLen = maxPieceLen)
-      val tmp = new Path(p.getParent, p.getName + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write((vocab.toVocabText + "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      if (!fs.rename(tmp, p) && !fs.exists(p))
-        throw new java.io.IOException(s"could not persist unigram vocab at $p")
-      vocab
-    }
-  }
-
-  /** [[ensureVocab]]'s twin for the WordPiece family: load the
-    * vocabulary from `vocabFile`, TRAINING from `docs` and persisting
-    * (write-to-temp + rename) if absent — same crash story: a death
-    * before the rename retrains deterministically on the retry. The
-    * file format is the public one-piece-per-line BERT vocab.txt, so
-    * an externally trained vocabulary dropped at the path wins over
+    * just retrains — deterministically, from the same word counts — on
+    * the retry. The file is the family's public text format, so an
+    * externally trained vocabulary dropped at the same path wins over
     * training. */
-  def ensureWordPieceVocab(spark: SparkSession, docs: DataFrame,
-                           textCol: String, vocabFile: String,
-                           vocabSize: Int = 8192)
-      : graft.functions.WordPieceVocab = {
+  def ensureVocab(spark: SparkSession, docs: DataFrame, textCol: String,
+                  vocabFile: String, spec: TokenizerSpec): Tokenizer = {
     import org.apache.hadoop.fs.Path
     val p = new Path(vocabFile)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) {
       val in = fs.open(p)
-      try graft.functions.WordPieceVocab.fromVocabText(
+      try spec.parse(
         new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
       finally in.close()
     } else {
-      val vocab = graft.functions.WordPiece.train(docs, col(textCol),
-        vocabSize)
+      val vocab = spec.train(docs, col(textCol))
       val tmp = new Path(p.getParent, p.getName + ".tmp")
       val out = fs.create(tmp, true)
-      try out.write((vocab.toVocabText + "\n")
+      try out.write((vocab.toText + "\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
       if (!fs.rename(tmp, p) && !fs.exists(p))
-        throw new java.io.IOException(s"could not persist wordpiece vocab at $p")
+        throw new java.io.IOException(
+          s"could not persist ${vocab.family} vocab at $p")
       vocab
     }
   }
+
+  /** Production training spec and managed file name per family — what
+    * the CLI's `vocab` argument resolves through [[ensureVocab]]. */
+  private val Managed: Map[String, (TokenizerSpec, String)] = Map(
+    "bpe" -> ((TokenizerSpec.Bpe(DefaultVocabMerges), "merges.txt")),
+    "unigram" -> ((TokenizerSpec.Unigram(8192, maxPieceLen = 8), "vocab.tsv")),
+    "wordpiece" -> ((TokenizerSpec.WordPiece(8192), "vocab.txt")))
 
   /** CLI: DailyIngest <lakeRoot> <stateRoot> <inputParquet> <yyyy-mm-dd>
     * [ttlDays=30] [budgetTokens=2048] [embedCol] [semanticThreshold]
@@ -875,8 +801,8 @@ object DailyIngest {
     * index and its maintenance tick; adding `semanticThreshold` also
     * gates the batch semantically against it.
     *
-    * `vocab` selects the BPE denomination behind every `n_tok` the
-    * ingest writes (pack budgets, card counts):
+    * `vocab` selects the tokenizer behind every `n_tok` the ingest
+    * writes (pack budgets, card counts):
     *   - omitted (the DEFAULT): a REALISTIC vocabulary managed under
     *     `<stateRoot>/bpe/merges.txt` — trained once from the first
     *     day's corpus ([[DefaultVocabMerges]] merges) and reused by
@@ -931,50 +857,26 @@ object DailyIngest {
     val done = runLock.withLock("crawl_daily_ingest") {
       val docs = spark.read.parquet(input)
       // vocab resolution runs INSIDE the lock: day-one training and the
-      // merges-file write are state mutations like any other
-      // `unigram` / `unigram:<path>` switch the n_tok denomination to
-      // the unigram-LM family (managed under <stateRoot>/unigram, or an
-      // external piece<TAB>logprob file); anything else is the BPE
-      // family as before
-      val unigramVocab = vocabArg match {
-        case Some("unigram") => Some(ensureUnigramVocab(spark, docs, "text",
-          s"$stateRoot/unigram/vocab.tsv"))
-        case Some(v) if v.startsWith("unigram:") =>
-          Some(ensureUnigramVocab(spark, docs, "text",
-            v.stripPrefix("unigram:")))
-        case _ => None
+      // vocab-file write are state mutations like any other
+      def managed(family: String, path: Option[String]): Tokenizer = {
+        val (spec, file) = Managed(family)
+        ensureVocab(spark, docs, "text",
+          path.getOrElse(s"$stateRoot/$family/$file"), spec)
       }
-      // `wordpiece` / `wordpiece:<path>` likewise select the WordPiece
-      // family (managed under <stateRoot>/wordpiece, or an external
-      // BERT one-piece-per-line vocab.txt)
-      val wordpieceVocab = vocabArg match {
-        case Some("wordpiece") => Some(ensureWordPieceVocab(spark, docs,
-          "text", s"$stateRoot/wordpiece/vocab.txt"))
-        case Some(v) if v.startsWith("wordpiece:") =>
-          Some(ensureWordPieceVocab(spark, docs, "text",
-            v.stripPrefix("wordpiece:")))
-        case _ => None
+      val vocab = vocabArg match {
+        case Some("builtin") => BpeVocab.default
+        case Some(f @ ("unigram" | "wordpiece")) => managed(f, None)
+        case Some(v) if v.startsWith("unigram:") || v.startsWith("wordpiece:") =>
+          val (f, path) = v.splitAt(v.indexOf(':'))
+          managed(f, Some(path.tail))
+        case path => managed("bpe", path)
       }
-      val vocab = (vocabArg, unigramVocab, wordpieceVocab) match {
-        case (_, Some(u), _) =>
-          println(s"[daily-ingest] unigram vocab: ${u.pieces.length} pieces")
-          BpeVocab.default // unused: n_tok rides the unigram counter
-        case (_, _, Some(w)) =>
-          println(s"[daily-ingest] wordpiece vocab: ${w.pieces.length} pieces")
-          BpeVocab.default // unused: n_tok rides the wordpiece counter
-        case (Some("builtin"), _, _) => BpeVocab.default
-        case (Some(path), _, _) => ensureVocab(spark, docs, "text", path)
-        case (None, _, _) =>
-          ensureVocab(spark, docs, "text", s"$stateRoot/bpe/merges.txt")
-      }
-      if (unigramVocab.isEmpty && wordpieceVocab.isEmpty)
-        println(s"[daily-ingest] bpe vocab: ${vocab.merges.length} merges")
+      println(s"[daily-ingest] n_tok denomination: ${vocab.family}")
       val n = run(lake, dd, cp, TableRef("prod", "crawl", "packed"),
         docs, "doc_id", "text", "lang", day, ttlDays,
         ann = ann, semanticThreshold = semTh, vocab = vocab,
         pqRefine = pqRefine, lineScrub = lineScrub, decontam = decontam,
-        lock = lockRef, unigramVocab = unigramVocab,
-        wordpieceVocab = wordpieceVocab)
+        lock = lockRef)
       // health watch: drift on the RAW feed (pre-dedup, keyed by lang;
       // NaN = a language vanished = maximal drift) plus generic quality
       // checks on the landed partition, routed through the alert sink

@@ -170,15 +170,15 @@ object MicroBench {
     // ---- BPE encoder at REALISTIC vocabulary scale (32k merges) ----
     // The fixture corpus holds 31 distinct pieces, so both the
     // vocabulary and the bench corpus are the deterministic synthetic
-    // Zipf distribution (BpeTrain.zipfWordCounts). Each Spark task
-    // deserializes its own vocab copy, so the word cache is rebuilt per
-    // task — exactly the production regime being measured.
+    // Zipf distribution (TokenizerTrain.zipfWordCounts). Each Spark
+    // task deserializes its own vocab copy, so the word cache is rebuilt
+    // per task — exactly the production regime being measured.
     {
-      import graft.functions.{Bpe, BpeVocab}
+      import graft.core.Mix.mix
+      import graft.functions.{Bpe, BpeVocab, Tokenizer}
       import spark.implicits._
-      def mix(x: Long): Long = BpeTrain.mix(x)
       val tTrain = System.nanoTime()
-      val wc = BpeTrain.zipfWordCounts(1 << 16)
+      val wc = TokenizerTrain.zipfWordCounts(1 << 16)
       val vocab32k = Bpe.trainFromWordCounts(wc, 32768)
       println(f"bpe train(64k words -> ${vocab32k.merges.length} merges): " +
         f"${(System.nanoTime() - tTrain) / 1e9}%.1f s")
@@ -207,11 +207,11 @@ object MicroBench {
         f"~${words.length} distinct words -> cache hit rate ~" +
         f"${1.0 - nW.toDouble / nPieces}%.4f")
       zipfCorpus.count()
-      def rate(name: String, vocab: BpeVocab, df: org.apache.spark.sql.DataFrame,
+      def rate(name: String, tok: Tokenizer, df: org.apache.spark.sql.DataFrame,
                docs: Long): Unit =
         (1 to 3).foreach { i =>
           val t0 = System.nanoTime()
-          noop(df.select(Bpe.bpeTokenCount(col("text"), vocab).as("n")))
+          noop(df.select(tok.count(col("text")).as("n")))
           val s = (System.nanoTime() - t0) / 1e9
           println(f"$name run$i: $s%.3f s, ${docs / s / 1000}%.0f kdocs/s, " +
             f"${docs * wordsPerDoc / s / 1e6}%.1f Mpieces/s")
@@ -257,19 +257,8 @@ object MicroBench {
         maxPieceLen = 6)
       println(f"unigram train(16k words -> ${uni8k.pieces.length} pieces): " +
         f"${(System.nanoTime() - tTrainU) / 1e9}%.1f s")
-      def rateU(name: String, df: org.apache.spark.sql.DataFrame,
-                docs: Long): Unit =
-        (1 to 3).foreach { i =>
-          val t0 = System.nanoTime()
-          noop(df.select(
-            graft.functions.Unigram.unigramTokenCount(col("text"), uni8k)
-              .as("n")))
-          val s = (System.nanoTime() - t0) / 1e9
-          println(f"$name run$i: $s%.3f s, ${docs / s / 1000}%.0f kdocs/s, " +
-            f"${docs * wordsPerDoc / s / 1e6}%.1f Mpieces/s")
-        }
-      rateU("unigram count 8k-piece zipf", zipfCorpus, nDocs)
-      rateU("unigram count 8k-piece unique", uniqueCorpus, nDocs / 10)
+      rate("unigram count 8k-piece zipf", uni8k, zipfCorpus, nDocs)
+      rate("unigram count 8k-piece unique", uni8k, uniqueCorpus, nDocs / 10)
 
       // ---- WordPiece encoder, the third family, same corpora: greedy
       // MaxMatch is O(len × maxPieceLen) per COLD word like Viterbi but
@@ -283,34 +272,13 @@ object MicroBench {
         f"${(System.nanoTime() - tTrainW) / 1e9}%.1f s")
       // r17: the production 64k-word/32k-piece shape — the full-rescan
       // r16 trainer projected to tens of minutes here; the incremental
-      // trainer makes it routine. The naive A/B leg re-times the r16
-      // trainer (94 s at the 16k shape on this host) only on demand —
-      // SPARK_GRAFT_MICRO_NAIVE=1 — so the default tool run stays fast.
+      // trainer makes it routine.
       val tTrainW64 = System.nanoTime()
       val wp32k = graft.functions.WordPiece.trainFromWordCounts(wc, 32768)
       println(f"wordpiece train(64k words -> ${wp32k.pieces.length} pieces): " +
         f"${(System.nanoTime() - tTrainW64) / 1e9}%.1f s")
-      if (sys.env.get("SPARK_GRAFT_MICRO_NAIVE").contains("1")) {
-        val tNaive = System.nanoTime()
-        val wpN = graft.functions.WordPiece.trainFromWordCountsNaive(
-          wpHead16k, 8192)
-        println(f"wordpiece train NAIVE(16k words -> ${wpN.pieces.length} " +
-          f"pieces): ${(System.nanoTime() - tNaive) / 1e9}%.1f s")
-        require(wpN == wp8k, "naive/incremental trainer divergence")
-      }
-      def rateW(name: String, df: org.apache.spark.sql.DataFrame,
-                docs: Long): Unit =
-        (1 to 3).foreach { i =>
-          val t0 = System.nanoTime()
-          noop(df.select(
-            graft.functions.WordPiece.wordpieceTokenCount(col("text"), wp8k)
-              .as("n")))
-          val s = (System.nanoTime() - t0) / 1e9
-          println(f"$name run$i: $s%.3f s, ${docs / s / 1000}%.0f kdocs/s, " +
-            f"${docs * wordsPerDoc / s / 1e6}%.1f Mpieces/s")
-        }
-      rateW("wordpiece count 8k-piece zipf", zipfCorpus, nDocs)
-      rateW("wordpiece count 8k-piece unique", uniqueCorpus, nDocs / 10)
+      rate("wordpiece count 8k-piece zipf", wp8k, zipfCorpus, nDocs)
+      rate("wordpiece count 8k-piece unique", wp8k, uniqueCorpus, nDocs / 10)
 
       // regularization sampling throughput: uncached by design (the
       // sample depends on the seed), so the cache-friendly corpus pays

@@ -36,10 +36,10 @@ class BpeSpec extends SparkSpec {
   }
 
   test("merges text round-trip (public format)") {
-    val rt = BpeVocab.fromMergesText(tiny.toMergesText)
+    val rt = BpeVocab.fromText(tiny.toText)
     assert(rt === tiny)
     // comments and blank lines skipped
-    assert(BpeVocab.fromMergesText("#version: 0.2\n\nl o\n") ===
+    assert(BpeVocab.fromText("#version: 0.2\n\nl o\n") ===
       BpeVocab(Vector(("l", "o"))))
   }
 
@@ -61,7 +61,7 @@ class BpeSpec extends SparkSpec {
     // dense tie-break / overlap / exhaustion coverage: tiny alphabet,
     // short words, many equal counts — every selection edge the
     // incremental bookkeeping could get wrong shows up here
-    def mix(x: Long): Long = graft.tools.BpeTrain.mix(x)
+    import graft.core.Mix.mix
     for (seed <- 1L to 8L) {
       val counts = (0 until 40).map { i =>
         val x = mix(seed * 1000 + i)
@@ -71,13 +71,13 @@ class BpeSpec extends SparkSpec {
         (w, 1L + Math.floorMod(x >>> 13, 9L))
       }.groupBy(_._1).map { case (w, rs) => (w, rs.map(_._2).sum) }.toSeq
       val fast = graft.functions.Bpe.trainFromWordCounts(counts, 60).merges
-      val slow = graft.functions.Bpe.trainFromWordCountsNaive(counts, 60).merges
+      val slow = graft.functions.NaiveTrainers.bpe(counts, 60).merges
       assert(fast === slow, s"seed $seed")
     }
     // and on the realistic synthetic Zipf distribution
-    val z = graft.tools.BpeTrain.zipfWordCounts(400)
+    val z = graft.tools.TokenizerTrain.zipfWordCounts(400)
     assert(graft.functions.Bpe.trainFromWordCounts(z, 300).merges ===
-      graft.functions.Bpe.trainFromWordCountsNaive(z, 300).merges)
+      graft.functions.NaiveTrainers.bpe(z, 300).merges)
   }
 
   test("expression: tokens/count agree, pretokenization splits classes") {
@@ -115,6 +115,8 @@ class BpeSpec extends SparkSpec {
     // the Project carrying bpe_count must sit under a WholeStageCodegen
     // star — a fallback/udf would break the fused scan stage
     assert(plan.contains("*(1)"), s"no codegen stage:\n$plan")
+    assert(plan.linesIterator.exists(l =>
+      l.contains("*(1) Project") && l.contains("bpe_count(")), plan)
     assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"))
     df.collect() // and the generated code actually compiles and runs
   }

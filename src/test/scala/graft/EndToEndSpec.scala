@@ -1785,13 +1785,13 @@ class EndToEndSpec extends SparkSpec {
 
   test("daily ingest denominates n_tok with a realistic 32k-merge vocabulary") {
     import graft.lake.{CorpusDedup, CorpusPack}
-    import graft.tools.{BpeTrain, DailyIngest}
+    import graft.tools.{DailyIngest, TokenizerTrain}
     import graft.functions.{Bpe, BpeVocab}
     // the production-size vocabulary, trained from the synthetic Zipf
     // word counts (the fixture corpus's 31 distinct pieces cannot
     // produce one) — seconds-scale via the incremental trainer
     val vocab32k = Bpe.trainFromWordCounts(
-      BpeTrain.zipfWordCounts(1 << 16), DailyIngest.DefaultVocabMerges)
+      TokenizerTrain.zipfWordCounts(1 << 16), DailyIngest.DefaultVocabMerges)
     assert(vocab32k.merges.length === DailyIngest.DefaultVocabMerges)
     val lake = new Lake(spark, tmpDir("vocab_lake"))
     val dd = new CorpusDedup(spark, lake, "vocab_crawl", numBuckets = 4)
@@ -1803,7 +1803,7 @@ class EndToEndSpec extends SparkSpec {
     // texts drawn from the Zipf vocabulary the merges were trained on:
     // the 32k encoder collapses each word to few tokens where the
     // builtin 90-merge vocab leaves near-codepoint granularity
-    val zipfWords = BpeTrain.zipfWordCounts(1 << 16).map(_._1).toArray
+    val zipfWords = TokenizerTrain.zipfWordCounts(1 << 16).map(_._1).toArray
     val docs = (0L until 6L).map { i =>
       (i, (0 until 12).map(j => zipfWords(((i * 31 + j * 7) % 512).toInt))
         .mkString(" "))
@@ -2004,7 +2004,7 @@ class EndToEndSpec extends SparkSpec {
         day(d), ttlDays = 30,
         gopherRules = Some((5L, 100000L)), qualityGate = Some(model),
         nearDupVerify = Some(0.75), lineScrub = true, decontam = true,
-        lock = Some((lock, "max_key")), unigramVocab = Some(uni),
+        lock = Some((lock, "max_key")), vocab = uni,
         repetitionRules = true)
 
     // day 1: doc 1 clean; doc 2 junk (quality gate); doc 3 too short
@@ -2078,7 +2078,7 @@ class EndToEndSpec extends SparkSpec {
     val v = UnigramVocab.default
     val landed = DailyIngest.run(lake, dd, cp, out, docs,
       "doc_id", "text", "lang", java.sql.Date.valueOf("2024-03-01"),
-      ttlDays = 30, unigramVocab = Some(v))
+      ttlDays = 30, vocab = v)
     assert(landed === 2)
     val want = docs.select($"doc_id",
         Unigram.unigramTokenCount($"text", v).as("n"))
@@ -2092,16 +2092,6 @@ class EndToEndSpec extends SparkSpec {
         graft.functions.Bpe.bpeTokenCount($"text").as("n"))
       .as[(Long, Long)].collect().toMap
     assert(got !== bpe, s"unigram and BPE counts coincide: $got")
-
-    // ensureUnigramVocab: trains+persists once, reloads identically
-    val root = tmpDir("uni_vocab")
-    val path = s"$root/unigram/vocab.tsv"
-    val v1 = DailyIngest.ensureUnigramVocab(spark, docs, "text", path,
-      vocabSize = 40, maxPieceLen = 4)
-    assert(new java.io.File(path).isFile)
-    val poisoned = docs.withColumn("text", lit("zz zz zz"))
-    val v2 = DailyIngest.ensureUnigramVocab(spark, poisoned, "text", path)
-    assert(v2 === v1, "second call must LOAD, not retrain")
   }
 
   test("daily ingest with the WordPiece denomination: landed n_tok rides the family switch") {
@@ -2125,7 +2115,7 @@ class EndToEndSpec extends SparkSpec {
     val v = WordPieceVocab.default
     val landed = DailyIngest.run(lake, dd, cp, out, docs,
       "doc_id", "text", "lang", java.sql.Date.valueOf("2024-03-01"),
-      ttlDays = 30, wordpieceVocab = Some(v))
+      ttlDays = 30, vocab = v)
     assert(landed === 2)
     val want = docs.select($"doc_id",
         WordPiece.wordpieceTokenCount($"text", v).as("n"))
@@ -2138,48 +2128,41 @@ class EndToEndSpec extends SparkSpec {
         graft.functions.Bpe.bpeTokenCount($"text").as("n"))
       .as[(Long, Long)].collect().toMap
     assert(got !== bpe, s"WordPiece and BPE counts coincide: $got")
-
-    // at most one denomination switch may be set
-    intercept[IllegalArgumentException] {
-      DailyIngest.run(lake, dd, cp, out, docs,
-        "doc_id", "text", "lang", java.sql.Date.valueOf("2024-03-02"),
-        ttlDays = 30, wordpieceVocab = Some(v),
-        unigramVocab = Some(graft.functions.UnigramVocab.default))
-    }
-
-    // ensureWordPieceVocab: trains+persists once, reloads identically
-    val root = tmpDir("wp_vocab")
-    val path = s"$root/wordpiece/vocab.txt"
-    val v1 = DailyIngest.ensureWordPieceVocab(spark, docs, "text", path,
-      vocabSize = 40)
-    assert(new java.io.File(path).isFile)
-    val poisoned = docs.withColumn("text", lit("zz zz zz"))
-    val v2 = DailyIngest.ensureWordPieceVocab(spark, poisoned, "text", path)
-    assert(v2 === v1, "second call must LOAD, not retrain")
   }
 
   test("ensureVocab: trains+persists once, reloads identically, external file wins") {
     import graft.tools.DailyIngest
-    import graft.functions.BpeVocab
-    val root = tmpDir("vocab_file")
-    val path = s"$root/bpe/merges.txt"
+    import graft.functions.{BpeVocab, TokenizerSpec, UnigramVocab, WordPieceVocab}
     val docs = Tables.load(spark, sf001, "documents").select($"text")
-    // first call trains from the corpus and persists (merges exhaust
-    // early on the 31-piece fixture — a merge-list prefix is valid BPE)
-    val v1 = DailyIngest.ensureVocab(spark, docs, "text", path)
-    assert(new java.io.File(path).isFile, "vocab file not persisted")
-    assert(v1.merges.nonEmpty)
-    // second call LOADS — byte-identical merges, no retrain drift; the
-    // poisoned frame proves the corpus is not re-read on the load path
     val poisoned = docs.withColumn("text", lit("zz zz zz"))
-    val v2 = DailyIngest.ensureVocab(spark, poisoned, "text", path)
-    assert(v2.merges === v1.merges)
-    // an externally supplied merges file at the path wins over training
-    val external = s"$root/external.txt"
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(external),
-      "#version: 0.2\na b\nab c\n")
-    val v3 = DailyIngest.ensureVocab(spark, docs, "text", external)
-    assert(v3.merges === Vector(("a", "b"), ("ab", "c")))
+    // (spec, an external file in the family's public format, its parse)
+    val families = Seq(
+      (TokenizerSpec.Bpe(DailyIngest.DefaultVocabMerges),
+        "#version: 0.2\na b\nab c\n", BpeVocab(Vector(("a", "b"), ("ab", "c")))),
+      (TokenizerSpec.Unigram(40, maxPieceLen = 4),
+        "a\t-1.5\nab\t-2.0\n", UnigramVocab(Vector(("a", -1.5), ("ab", -2.0)))),
+      (TokenizerSpec.WordPiece(40),
+        "[UNK]\na\n##b\n", WordPieceVocab(Vector("[UNK]", "a", "##b"))))
+    families.foreach { case (spec, externalText, external) =>
+      val root = tmpDir("vocab_file")
+      val path = s"$root/state/vocab.txt"
+      // first call trains from the corpus and persists its text (BPE
+      // merges exhaust early on the 31-piece fixture — a merge-list
+      // prefix is valid BPE)
+      val v1 = DailyIngest.ensureVocab(spark, docs, "text", path, spec)
+      assert(java.nio.file.Files.readString(java.nio.file.Paths.get(path)) ===
+        v1.toText + "\n", s"$spec: vocab file not persisted")
+      // second call LOADS — no retrain drift; the poisoned frame, which
+      // trains a different vocab, proves the corpus is not re-read
+      assert(spec.train(poisoned, $"text") !== v1)
+      assert(DailyIngest.ensureVocab(spark, poisoned, "text", path, spec) === v1,
+        s"$spec: second call must LOAD, not retrain")
+      // an externally supplied file at the path wins over training
+      val ext = s"$root/external.txt"
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(ext), externalText)
+      assert(DailyIngest.ensureVocab(spark, docs, "text", ext, spec) === external,
+        s"$spec: external file must win")
+    }
   }
 
 }

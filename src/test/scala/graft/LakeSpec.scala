@@ -496,7 +496,7 @@ class LakeSpec extends SparkSpec {
     assert(graft.functions.VectorOps.LiteralCentroidMaxK === 128)
     val n = 600
     val emb = (0L until n.toLong).map { i =>
-      val m = graft.tools.BpeTrain.mix(i)
+      val m = graft.core.Mix.mix(i)
       Tuple2(i, Seq((m & 0xff).toDouble, ((m >> 8) & 0xff).toDouble,
         ((m >> 16) & 0xff).toDouble, 1.0))
     }.toDF("vec_id", "vec")
@@ -532,7 +532,7 @@ class LakeSpec extends SparkSpec {
     def day(d: String) = java.sql.Date.valueOf(d)
     val d1 = day("2024-07-01"); val d2 = day("2024-07-02")
     def vec(id: Long): Seq[Double] = {
-      val m = graft.tools.BpeTrain.mix(id)
+      val m = graft.core.Mix.mix(id)
       Seq((m & 0xff).toDouble, ((m >> 8) & 0xff).toDouble,
         ((m >> 16) & 0xff).toDouble, ((m >> 24) & 0xff).toDouble)
     }
@@ -643,7 +643,7 @@ class LakeSpec extends SparkSpec {
     val lake = new Lake(spark, tmpDir("pqres_lake"))
     val idx = new AnnIndex(spark, lake, "pqres_test", numBuckets = 4)
     def vec(id: Long): Seq[Double] = {
-      val m = graft.tools.BpeTrain.mix(id)
+      val m = graft.core.Mix.mix(id)
       Seq((m & 0xff).toDouble, ((m >> 8) & 0xff).toDouble,
         ((m >> 16) & 0xff).toDouble, ((m >> 24) & 0xff).toDouble)
     }
@@ -710,7 +710,7 @@ class LakeSpec extends SparkSpec {
     // the lists row-for-row (count + id→cluster map), and a
     // full-refine compressed search reproduces the exact path
     def vec(id: Long): Seq[Double] = {
-      val m = graft.tools.BpeTrain.mix(id)
+      val m = graft.core.Mix.mix(id)
       Seq((m & 0xff).toDouble, ((m >> 8) & 0xff).toDouble,
         ((m >> 16) & 0xff).toDouble, ((m >> 24) & 0xff).toDouble)
     }

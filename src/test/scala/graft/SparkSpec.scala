@@ -7,6 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf001 = "/root/testdata/sf0.001"
+  /** The larger fixture the committed tokenizer vocabularies train on. */
+  def sf01: String = sf001.stripSuffix("sf0.001") + "sf0.01"
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

@@ -115,15 +115,15 @@ class UnigramSpec extends SparkSpec {
   test("vocab text round-trip is byte-identical (logprob shortest-repr)") {
     val v = Unigram.trainFromWordCounts(
       Seq(("abc", 5L), ("abd", 3L), ("cd", 7L)), vocabSize = 8, maxPieceLen = 2)
-    val txt = v.toVocabText
-    val back = UnigramVocab.fromVocabText(txt)
+    val txt = v.toText
+    val back = UnigramVocab.fromText(txt)
     assert(back === v)
-    assert(back.toVocabText === txt)
+    assert(back.toText === txt)
     // '#' is a legitimate single-codepoint piece (PretokenPattern emits
     // it, singles are never pruned) — the parser must NOT treat a
     // leading '#' as a comment and drop the entry on reload
     val withHash = UnigramVocab(Vector(("#", -2.0), ("a", -1.0), ("#a", -3.0)))
-    assert(UnigramVocab.fromVocabText(withHash.toVocabText) === withHash)
+    assert(UnigramVocab.fromText(withHash.toText) === withHash)
   }
 
   test("subword-regularization sampling: deterministic, lattice-faithful, Viterbi at high alpha") {
@@ -245,6 +245,8 @@ class UnigramSpec extends SparkSpec {
     // a fallback/udf would break the fused scan stage (BpeSpec's check)
     val plan = both.queryExecution.executedPlan.toString
     assert(plan.contains("*(1)"), s"no codegen stage:\n$plan")
+    assert(plan.linesIterator.exists(l => l.contains("*(1) Project") &&
+      l.contains("unigram_tokens(") && l.contains("unigram_count(")), plan)
     assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"))
     // the committed default is non-trivial: multi-char pieces exist and
     // counts sit strictly between piece count and char count

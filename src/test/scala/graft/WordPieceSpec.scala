@@ -125,19 +125,19 @@ class WordPieceSpec extends SparkSpec {
       val counts = words.map(w => w ->
         (if (round % 2 == 0) 7L else 1L + rnd.nextInt(50).toLong))
       val fast = WordPiece.trainFromWordCounts(counts, vocabSize = 90)
-      val slow = WordPiece.trainFromWordCountsNaive(counts, vocabSize = 90)
+      val slow = graft.functions.NaiveTrainers.wordPiece(counts, vocabSize = 90)
       assert(fast === slow, s"round=$round diverged")
     }
-    val zipf = graft.tools.BpeTrain.zipfWordCounts(1 << 10)
+    val zipf = graft.tools.TokenizerTrain.zipfWordCounts(1 << 10)
     assert(WordPiece.trainFromWordCounts(zipf, 700) ===
-      WordPiece.trainFromWordCountsNaive(zipf, 700))
+      graft.functions.NaiveTrainers.wordPiece(zipf, 700))
   }
 
   test("vocab text round-trip; '#'-headed pieces survive (no comment syntax)") {
     val v = WordPieceVocab(Vector(WordPieceVocab.Unk, "#", "a", "##a", "###"))
-    val back = WordPieceVocab.fromVocabText(v.toVocabText)
+    val back = WordPieceVocab.fromText(v.toText)
     assert(back === v)
-    assert(back.toVocabText === v.toVocabText)
+    assert(back.toText === v.toText)
     // "#" is a head piece, "###" is the continuation '#': both resolve
     assert(back.encodeWord("##").toSeq === Seq("#", "###"))
   }
@@ -152,6 +152,8 @@ class WordPieceSpec extends SparkSpec {
     assert(both.filter($"n_arr" =!= $"n_cnt").count() === 0)
     val plan = both.queryExecution.executedPlan.toString
     assert(plan.contains("*(1)"), s"no codegen stage:\n$plan")
+    assert(plan.linesIterator.exists(l => l.contains("*(1) Project") &&
+      l.contains("wordpiece_tokens(") && l.contains("wordpiece_count(")), plan)
     assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"))
     // the committed default is non-trivial: likelihood merges exist and
     // corpus counts sit strictly between piece count and char count
@@ -163,13 +165,5 @@ class WordPieceSpec extends SparkSpec {
         sum(length(regexp_replace($"t", " ", "")))).head()
     val (nPieces, nWp, nChars) = (row.getLong(0), row.getLong(1), row.getLong(2))
     assert(nWp >= nPieces && nWp < nChars, s"pieces=$nPieces wp=$nWp chars=$nChars")
-    // the committed resource reproduces from ITS training fixture
-    // byte-identically (sf0.01, the WordPieceTrain default — sf001
-    // here is the SMALLER sf0.001 and trains a different vocab)
-    val retrained = WordPiece.train(
-      Tables.load(spark, "/root/testdata/sf0.01", "documents"),
-      $"text", vocabSize = 128)
-    assert(retrained.toVocabText === v.toVocabText,
-      "committed vocab.txt must be the deterministic trainer's output")
   }
 }
