@@ -132,18 +132,6 @@ object Bench {
       graft.tools.BenchAb.main(args.dropWhile(_ != "--ab").drop(1))
       return
     }
-    // r18 (VERDICT r17 #2): opt-in env form of the interleaved A/B —
-    // SPARK_GRAFT_BENCH_AB=<gitref>[:q51,q59] runs the controlled
-    // old-vs-new comparison instead of the wall-clock bench. Never set
-    // by the driver (its bench contract is untouched); exists so a
-    // round's no-regression proof is one env var away from being a
-    // recorded artifact instead of a hand-run.
-    sys.env.get("SPARK_GRAFT_BENCH_AB").foreach { spec =>
-      val parts = spec.split(":", 2)
-      graft.tools.BenchAb.main(
-        if (parts.length == 2) Array(parts(0), parts(1)) else Array(parts(0)))
-      return
-    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()

@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
@@ -25,6 +25,21 @@ import org.apache.spark.sql.functions._
   * exception is a frame whose rows already sit in driver memory (a
   * fetched capture payload, a log row): it is written by a single task,
   * with the same one-file-per-partition-dir layout (see `aligned`).
+  *
+  * Local-FS write rule: every path-addressed DataFrame write here goes
+  * through `writer`, which selects [[NioLocalFileSystem]] for `file://`
+  * paths, so a local lake sets file and directory permissions without
+  * forking a `chmod` per file and directory (Hadoop without `libhadoop`
+  * forks one). The state root's snapshot write does the same. The
+  * options are per write, not process-wide, and other schemes ignore
+  * them. Not covered, and on no benchmarked path:
+  *  - `writeBucketed`: `saveAsTable` stores writer options as the
+  *    catalog table's options, so a persistent metastore would hand a
+  *    graft class name to every later reader of the table;
+  *  - `insertInto` appends (CorpusDedup, AnnIndex), which write with
+  *    the catalog table's options;
+  *  - direct `fs.create` call sites (`RunLock`, `tickFor`, sidecars),
+  *    which use the session's cached stock filesystem.
   */
 final case class TableRef(zone: String, dataset: String, table: String)
 
@@ -34,6 +49,9 @@ class Lake(spark: SparkSession, root: String) {
 
   private def qualified(ref: TableRef): String =
     s"${ref.zone}_${ref.dataset}.${ref.table}"
+
+  private def writer(df: DataFrame): DataFrameWriter[Row] =
+    df.write.options(NioLocalFileSystem.writerOptions)
 
   /** Cluster the frame by its partition columns before a partitioned
     * write: without this every task holds a writer per touched partition
@@ -67,7 +85,7 @@ class Lake(spark: SparkSession, root: String) {
     * default). */
   def append(df: DataFrame, ref: TableRef, partitionBy: Seq[String] = Nil,
              format: String = "parquet"): Unit = {
-    val w = aligned(df, partitionBy).write.format(format).mode(SaveMode.Append)
+    val w = writer(aligned(df, partitionBy)).format(format).mode(SaveMode.Append)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .save(path(ref))
   }
@@ -76,7 +94,7 @@ class Lake(spark: SparkSession, root: String) {
     * (dynamic partition overwrite — untouched partitions survive). */
   def overwritePartitions(df: DataFrame, ref: TableRef,
                           partitionBy: Seq[String]): Unit =
-    aligned(df, partitionBy).write.format("parquet")
+    writer(aligned(df, partitionBy)).format("parquet")
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionBy: _*)
@@ -85,7 +103,7 @@ class Lake(spark: SparkSession, root: String) {
   /** K7: full table reset. */
   def overwriteAll(df: DataFrame, ref: TableRef,
                    partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.format("parquet").mode(SaveMode.Overwrite)
+    val w = writer(df).format("parquet").mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "static")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .save(path(ref))
@@ -156,7 +174,7 @@ class Lake(spark: SparkSession, root: String) {
         if (partitionBy.isEmpty) scan.coalesce(nFiles)
         else aligned(scan, partitionBy) // one writer task (= file) per dir
       if (fs.exists(tmp)) fs.delete(tmp, true)
-      val w = compacted.write.format("parquet").mode(SaveMode.Overwrite)
+      val w = writer(compacted).format("parquet").mode(SaveMode.Overwrite)
       (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
         .save(tmp.toString)
     } finally spark.conf.set(inferKey, inferWas)
@@ -180,6 +198,8 @@ class Lake(spark: SparkSession, root: String) {
                     numBuckets: Int, partitionBy: Seq[String] = Nil): Unit = {
     val db = s"${ref.zone}_${ref.dataset}"
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
+    // stock writer: saveAsTable would persist writer options as table
+    // options in the metastore (see the class doc)
     val w = df.write.format("parquet")
       .mode(SaveMode.Overwrite)
     // partition dirs ABOVE the bucket files: scans prune partitions
@@ -314,7 +334,7 @@ class Lake(spark: SparkSession, root: String) {
 
     def freshSnapshot(): Unit = {
       val partCols = catalogPartCols()
-      spark.table(name).write.mode(SaveMode.Overwrite)
+      writer(spark.table(name)).mode(SaveMode.Overwrite)
         .parquet(snapPath.toString)
       writeSidecar(partCols)
       rewriteFrom(spark.read.parquet(snapPath.toString), partCols)

@@ -2,6 +2,7 @@ package graft.state
 
 import java.sql.Timestamp
 
+import graft.lake.NioLocalFileSystem
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -202,7 +203,8 @@ class StateStore(spark: SparkSession, root: String) {
     catch { case _: java.io.IOException => () }
     // State rows are tiny (entity + timestamp); 4 output files keeps the
     // table compact up to ~10^8 entities without a count-then-choose pass.
-    df.coalesce(4).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    df.coalesce(4).write.options(NioLocalFileSystem.writerOptions)
+      .mode(SaveMode.Overwrite).parquet(tmp.toString)
     if (fs.exists(old)) fs.delete(old, true)
     // Swap with bounded retry: a lock-free READER that catches us between
     // the two renames can heal `.old` back into `path` (readOrEmpty's

@@ -38,8 +38,9 @@ object ScaleUp {
     val out = if (args.length > 1) args(1) else "/tmp/sfx1.0"
     val factor = if (args.length > 2) args(2).toInt else 10
     require(factor >= 1, s"factor $factor")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -56,6 +56,92 @@ class LakeSpec extends SparkSpec {
     assert(lake.read(ref).count() === 2)
   }
 
+  /** Command lines of the `chmod` processes forked while `body` ran that
+    * name a path under `root` (forks by other suites stay out). */
+  private def chmodForksUnder(root: String)(body: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val canonical = new java.io.File(root).getCanonicalPath
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try body finally rec.stop()
+    val dump = java.nio.file.Files.createTempFile("forks", ".jfr")
+    try {
+      rec.dump(dump)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(_.getString("command"))
+        .filter(c => c.startsWith("chmod") &&
+          (c.contains(canonical) || c.contains(root)))
+    } finally { rec.close(); java.nio.file.Files.delete(dump) }
+  }
+
+  test("lake and state writes set permissions without forking chmod") {
+    val root = tmpDir("nofork")
+    val lake = new Lake(spark, root)
+    val ref = TableRef("staging", "ds", "t")
+    val batch = Seq((1, "2024-01-01"), (2, "2024-01-02")).toDF("id", "data")
+    val forks = chmodForksUnder(root) {
+      lake.append(batch, ref, Seq("data"))
+      lake.overwritePartitions(batch, ref, Seq("data"))
+      lake.overwriteAll(batch, TableRef("prod", "ds", "t"), Seq("data"))
+      new graft.state.StateStore(spark, s"$root/state")
+        .setLastRun("ds.t", java.sql.Timestamp.valueOf("2024-01-02 00:00:00"))
+    }
+    assert(forks.isEmpty)
+    assert(lake.read(ref).count() === 2)
+  }
+
+  test("lake writes leave the same permissions as a stock write") {
+    import java.nio.file.{Files, Path, Paths}
+    import java.nio.file.attribute.PosixFilePermissions
+    import scala.jdk.CollectionConverters._
+    val root = tmpDir("perms")
+    val lake = new Lake(spark, s"$root/lake")
+    val ref = TableRef("staging", "ds", "t")
+    val df = Seq((1, "2024-01-01", 0), (2, "2024-01-02", 5), (3, "2024-01-02", 6))
+      .toDF("id", "data", "hora")
+    lake.overwritePartitions(df, ref, Seq("data", "hora"))
+    val stock = s"$root/stock"
+    lake.aligned(df, Seq("data", "hora")).write.format("parquet")
+      .mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("data", "hora").save(stock)
+    val uuid = "[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}"
+    def perms(dir: String): Map[String, String] = {
+      val base = Paths.get(dir)
+      Files.walk(base).iterator().asScala.toSeq.map { (p: Path) =>
+        base.relativize(p).toString.replaceAll(uuid, "UUID") ->
+          PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+      }.toMap
+    }
+    val mine = perms(lake.path(ref))
+    assert(mine.keys.exists(_.endsWith(".parquet.crc")), mine.keys)
+    assert(mine === perms(stock))
+  }
+
+  test("NioRawLocalFileSystem.setPermission: rwx modes via java.nio, others fall back") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.fs.permission.FsPermission
+    val root = tmpDir("chmod")
+    val fs = new graft.lake.NioRawLocalFileSystem
+    fs.initialize(java.net.URI.create("file:///"),
+      new org.apache.hadoop.conf.Configuration())
+    val modes = Seq("644", "755", "700", "600", "1777")
+      .map(m => m -> Integer.parseInt(m, 8))
+    val forks = chmodForksUnder(root) {
+      modes.foreach { case (name, mode) =>
+        val dir = java.nio.file.Files.createDirectory(
+          java.nio.file.Paths.get(root, name))
+        fs.setPermission(new Path(dir.toUri), new FsPermission(mode.toShort))
+        val back = java.nio.file.Files.getAttribute(dir, "unix:mode")
+          .asInstanceOf[Int] & 0xfff
+        assert(back === mode, name)
+      }
+    }
+    // only the sticky-bit mode takes the forking fallback
+    assert(forks.size === 1 && forks.head.startsWith("chmod 1777 "), forks)
+  }
+
   test("aligned: driver-held frames write shuffle-free, scans keep the hash exchange") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -974,6 +1060,11 @@ class LakeSpec extends SparkSpec {
     lake.compactBucketed(ref, "k", 4)
     val after = spark.table("state_bkc.t")
     assert(after.as[(Long, Int)].collect().toSet === rowsBefore)
+    // the lake's filesystem writer options stay out of the catalog
+    val opts = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier("t", Some("state_bkc")))
+      .storage.properties
+    assert(!opts.keys.exists(_.startsWith("fs.")), opts)
     // repartition-on-bucket-column aligns tasks with buckets: ~1 file each
     assert(after.inputFiles.length <= 4 && after.inputFiles.length < filesBefore)
     // the table still bucket-prunes — the layout survived the rewrite
