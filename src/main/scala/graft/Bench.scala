@@ -127,22 +127,112 @@ object Bench {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.contains("--ab")) {
-      graft.tools.BenchAb.main(args.dropWhile(_ != "--ab").drop(1))
-      return
+  /** The noise gate's bounds: an attempt whose calibration jitter is
+    * above [[MaxJitter]] re-runs, at most [[MaxAttempts]] times in all. */
+  val MaxJitter = 0.25
+  val MaxAttempts = 3
+
+  /** The maximal LLM-ingest tick behind the `llm_ingest` entry (r16
+    * verdict #3: "the composed LLM-ingest tick is never timed"): one
+    * DailyIngest.run at this SF with every WEB-corpus stage ON —
+    * quality gate (trained NB model), Gopher repetition rules, benchmark
+    * decontamination, exact + verified-near-dup + line + semantic
+    * dedup, unigram token denomination, greedy pack, partitioned land.
+    * Fresh lake/state and a fresh dataset name per tick (the dedup
+    * seen-set catalogs are session-global, so a reused name would let
+    * tick N's state gate tick N+1 and shrink its work). Setup (model
+    * fit, benchmark-shingle registration, frame construction) is
+    * untimed — the tick is the product path being measured, like
+    * micro_batch's processBatch. Deliberately OFF: gopherRules (the
+    * corpus carries <2 Gopher stopwords per doc, so the quality half
+    * would reject 100% and starve every downstream stage — it is
+    * benched standalone as q137) and codeRules/permissiveOnly (a CODE
+    * corpus's gates; on prose they reject ~everything the same way —
+    * benched as q148/q153-shape scans).
+    *
+    * Constructing one loads the corpus and fits the quality model; each
+    * call runs one tick and returns its wall seconds. `IngestProbe`
+    * (test sources) times the same tick job by job. */
+  final class LlmTick(spark: SparkSession, sfDir: String) {
+    import org.apache.spark.sql.functions._
+    private val docsRaw = Tables.load(spark, sfDir, "documents")
+    private val emb = Tables.load(spark, sfDir, "embeddings")
+    // real 64-dim embedding where present (vec_id ⊂ doc_id), a
+    // deterministic synthetic one otherwise — the semantic gate must
+    // see every row
+    private val docs = docsRaw.join(emb, docsRaw("doc_id") === emb("vec_id"), "left")
+      .select(col("doc_id"), col("text"), col("lang"),
+        coalesce(col("embedding"),
+          expr("transform(sequence(0, 63), j -> cos(doc_id * (j + 1)))"))
+          .as("emb"))
+    // quality model: curated = 4 of the 20 sources (the q130 label
+    // recipe), fitted once — deterministic, reused by every tick
+    private val model = graft.functions.QualityClassifier.train(
+      docsRaw, "text",
+      col("source").isin("src0", "src1", "src2", "src3"))
+    // benchmark set for decontam: a fixed 1-in-251 doc slice
+    private val bench = docsRaw.filter(col("doc_id") % 251 === 0).select(col("text"))
+    private var ticks = 0
+
+    /** One tick; `beforeTimed` runs after the untimed per-tick setup,
+      * right before the timed region starts. */
+    def apply(beforeTimed: () => Unit = () => ()): Double = {
+      ticks += 1
+      val tmp = java.nio.file.Files.createTempDirectory("bench_llm").toString
+      val lake = new graft.lake.Lake(spark, s"$tmp/lake")
+      val ds = s"bench_llm_$ticks"
+      val dd = new graft.lake.CorpusDedup(spark, lake, ds, numBuckets = 8)
+      val cp = new graft.lake.CorpusPack(spark,
+        new graft.state.StateStore(spark, s"$tmp/state"), ds,
+        budgetTokens = 8192L)
+      val idx = new graft.lake.AnnIndex(spark, lake, ds, numBuckets = 8)
+      val out = graft.lake.TableRef("bench", ds, "packed")
+      try {
+        dd.commitTestShingles(bench, "text",
+          java.sql.Date.valueOf("2024-02-28"))
+        // steady-state semantic gate: seed the index with a day of
+        // synthetic history strictly before the ingest day (distinct id
+        // space + vectors, so the batch itself is not wiped) — the tick
+        // then exercises the dated IVF probe every day-N ingest runs,
+        // not the day-one pairwise bootstrap
+        idx.buildDated(spark.range(2000).select(
+            (col("id") + 1000000L).as("doc_id"),
+            expr("transform(sequence(0, 63), j -> sin((id + 7) * (j + 1)))")
+              .as("emb")),
+          "doc_id", "emb", k = 8, java.sql.Date.valueOf("2024-02-28"))
+        beforeTimed()
+        val t0 = System.nanoTime()
+        graft.tools.DailyIngest.run(lake, dd, cp, out, docs,
+          "doc_id", "text", "lang",
+          java.sql.Date.valueOf("2024-03-01"), ttlDays = 30,
+          ann = Some((idx, "emb")), semanticThreshold = Some(0.95),
+          qualityGate = Some(model),
+          nearDupVerify = Some(0.75), lineScrub = true, decontam = true,
+          vocab = graft.functions.UnigramVocab.default,
+          repetitionRules = true)
+        (System.nanoTime() - t0) / 1e9
+      } finally {
+        // session hygiene, exception-safe (r18): the index probe pins
+        // autoBucketedScan off for the session (AnnIndex.pinBucketedScan's
+        // documented contract) — restore the default for whatever runs
+        // next in this shared session even if the tick threw; and delete
+        // the tick's temp lake/state dir so iterations+1 ticks don't
+        // accumulate disk that could perturb later samples.
+        idx.unpinBucketedScan()
+        deleteRecursively(new java.io.File(tmp))
+      }
     }
+  }
+
+  private def deleteRecursively(f: java.io.File): Unit = {
+    val kids = f.listFiles()
+    if (kids != null) kids.foreach(deleteRecursively)
+    f.delete(): Unit
+  }
+
+  def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession("graft-bench", SparkEntry.cpus(32))
 
     def materialize(df: DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()
@@ -182,101 +272,6 @@ object Bench {
         s"SPARK_GRAFT_BENCH_ITERS must be an integer, got '$itersStr'")
     }
     require(iterations >= 2, "bench needs >=2 iterations (run2 field)")
-    // The maximal LLM-ingest tick (r16 verdict #3: "the composed
-    // LLM-ingest tick is never timed"): one DailyIngest.run at this SF
-    // with every WEB-corpus stage ON — quality gate (trained NB model),
-    // Gopher repetition rules, benchmark decontamination, exact +
-    // verified-near-dup + line + semantic dedup, unigram token
-    // denomination, greedy pack, partitioned land. Fresh lake/state and
-    // a fresh dataset name per tick (the dedup seen-set catalogs are
-    // session-global, so a reused name would let tick N's state gate
-    // tick N+1 and shrink its work). Setup (model fit, benchmark-
-    // shingle registration, frame construction) is untimed — the tick
-    // is the product path being measured, like micro_batch's
-    // processBatch. Deliberately OFF: gopherRules (the corpus carries
-    // <2 Gopher stopwords per doc, so the quality half would reject
-    // 100% and starve every downstream stage — it is benched standalone
-    // as q137) and codeRules/permissiveOnly (a CODE corpus's gates; on
-    // prose they reject ~everything the same way — benched as
-    // q148/q153-shape scans).
-    // lazy: nothing llm-related (model fit included) runs before the
-    // classic block unless/until the llm measurement itself starts —
-    // and SPARK_GRAFT_BENCH_SKIP_LLM=1 skips the entry entirely (debug
-    // knob for isolating session-state effects; default off)
-    lazy val llmSetup = {
-      val docsRaw = Tables.load(spark, sfDir, "documents")
-      val emb = Tables.load(spark, sfDir, "embeddings")
-      import org.apache.spark.sql.functions._
-      // real 64-dim embedding where present (vec_id ⊂ doc_id), a
-      // deterministic synthetic one otherwise — the semantic gate must
-      // see every row
-      val docs = docsRaw.join(emb, docsRaw("doc_id") === emb("vec_id"), "left")
-        .select(col("doc_id"), col("text"), col("lang"),
-          coalesce(col("embedding"),
-            expr("transform(sequence(0, 63), j -> cos(doc_id * (j + 1)))"))
-            .as("emb"))
-      // quality model: curated = 4 of the 20 sources (the q130 label
-      // recipe), fitted once — deterministic, reused by every tick
-      val model = graft.functions.QualityClassifier.train(
-        docsRaw, "text",
-        col("source").isin("src0", "src1", "src2", "src3"))
-      // benchmark set for decontam: a fixed 1-in-251 doc slice
-      val bench = docsRaw.filter(col("doc_id") % 251 === 0).select(col("text"))
-      (docs, model, bench)
-    }
-    var llmTick = 0
-    def llmIngest(): Double = {
-      val (docs, model, bench) = llmSetup
-      llmTick += 1
-      val tmp = java.nio.file.Files.createTempDirectory("bench_llm").toString
-      val lake = new graft.lake.Lake(spark, s"$tmp/lake")
-      val ds = s"bench_llm_$llmTick"
-      val dd = new graft.lake.CorpusDedup(spark, lake, ds, numBuckets = 8)
-      val cp = new graft.lake.CorpusPack(spark,
-        new graft.state.StateStore(spark, s"$tmp/state"), ds,
-        budgetTokens = 8192L)
-      val idx = new graft.lake.AnnIndex(spark, lake, ds, numBuckets = 8)
-      val out = graft.lake.TableRef("bench", ds, "packed")
-      dd.commitTestShingles(bench, "text",
-        java.sql.Date.valueOf("2024-02-28"))
-      // steady-state semantic gate: seed the index with a day of
-      // synthetic history strictly before the ingest day (distinct id
-      // space + vectors, so the batch itself is not wiped) — the tick
-      // then exercises the dated IVF probe every day-N ingest runs,
-      // not the day-one pairwise bootstrap
-      import org.apache.spark.sql.functions._
-      idx.buildDated(spark.range(2000).select(
-          (col("id") + 1000000L).as("doc_id"),
-          expr("transform(sequence(0, 63), j -> sin((id + 7) * (j + 1)))")
-            .as("emb")),
-        "doc_id", "emb", k = 8, java.sql.Date.valueOf("2024-02-28"))
-      val t0 = System.nanoTime()
-      try {
-        graft.tools.DailyIngest.run(lake, dd, cp, out, docs,
-          "doc_id", "text", "lang",
-          java.sql.Date.valueOf("2024-03-01"), ttlDays = 30,
-          ann = Some((idx, "emb")), semanticThreshold = Some(0.95),
-          qualityGate = Some(model),
-          nearDupVerify = Some(0.75), lineScrub = true, decontam = true,
-          vocab = graft.functions.UnigramVocab.default,
-          repetitionRules = true)
-        (System.nanoTime() - t0) / 1e9
-      } finally {
-        // session hygiene, exception-safe (r18): the index probe pins
-        // autoBucketedScan off for the session (AnnIndex.pinBucketedScan's
-        // documented contract) — restore the default for whatever runs
-        // next in this shared bench session even if the tick threw; and
-        // delete the tick's temp lake/state dir so iterations+1 ticks
-        // don't accumulate disk that could perturb later samples.
-        idx.unpinBucketedScan()
-        deleteRecursively(new java.io.File(tmp))
-      }
-    }
-    def deleteRecursively(f: java.io.File): Unit = {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(deleteRecursively)
-      f.delete(): Unit
-    }
     // Capture micro-batch: one tick of the streaming pipeline at this SF
     // (fresh lake each iteration, same median/stddev protocol; the
     // temp lake is deleted after the timed region, also when the tick
@@ -322,30 +317,23 @@ object Bench {
     // jitter — the harness computed the canary but never acted on it).
     // A noisy attempt re-runs, bounded; the quietest attempt is the
     // one recorded, and `noisy_host` stamps the record either way.
-    val maxJitter =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_JITTER", "0.25").toDouble
-    val maxAttempts =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_ATTEMPTS", "3").toInt
     val (calJitter, (cals, allRuns), attempts) =
-      retryUntilQuiet(maxAttempts, maxJitter) { () =>
+      retryUntilQuiet(MaxAttempts, MaxJitter) { () =>
         val s = sampleOnce()
         (jitterOf(s._1), s)
       }
-    val noisyHost = calJitter > maxJitter
+    val noisyHost = calJitter > MaxJitter
     if (noisyHost)
       System.err.println(f"[bench] WARNING: calibration jitter " +
-        f"$calJitter%.3f still above $maxJitter%.2f after $attempts " +
+        f"$calJitter%.3f still above $MaxJitter%.2f after $attempts " +
         "attempt(s) - recording the quietest attempt with noisy_host=true")
     // llm_ingest runs LAST (see sampleOnce's note): same warm-up +
     // median-of-iterations protocol, isolated so its session footprint
     // cannot inflate the classic entries or a retried attempt
-    val skipLlm = sys.env.get("SPARK_GRAFT_BENCH_SKIP_LLM").contains("1")
-    val llmSamples = if (skipLlm) Nil else {
-      llmIngest()
-      Seq.fill(iterations)(llmIngest())
-    }
-    val names = allRuns.head.map(_._1) ++
-      (if (skipLlm) Nil else Seq("llm_ingest"))
+    val llmTick = new LlmTick(spark, sfDir)
+    llmTick()
+    val llmSamples = Seq.fill(iterations)(llmTick())
+    val names = allRuns.head.map(_._1) :+ "llm_ingest"
     val samples: Map[String, Seq[Double]] =
       names.map(n => n -> (if (n == "llm_ingest") llmSamples
         else allRuns.map(_.toMap.apply(n)))).toMap

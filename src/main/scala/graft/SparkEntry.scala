@@ -31,4 +31,31 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     families.iterator.map(_._2).reduce(_ ++ _)
+
+  /** The one local-mode session every graft main and the test suite
+    * build: `local[cpus]` with as many shuffle partitions, UTC session
+    * time zone, no UI, WARN logging. `DailyIngest.main` alone builds its
+    * own, because its master and Hive metastore are deployment settings. */
+  def localSession(appName: String, cpus: Int): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** Local core count: `SPARK_GRAFT_CPUS` when set, else `default`. A
+    * value that is not a positive integer fails here, naming the
+    * variable, rather than later as a malformed `local[...]` master. */
+  def cpus(default: Int, env: collection.Map[String, String] = sys.env): Int =
+    env.get("SPARK_GRAFT_CPUS") match {
+      case None => default
+      case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
 }

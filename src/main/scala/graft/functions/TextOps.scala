@@ -735,7 +735,7 @@ object TextOps {
     * [[graft.expressions.ChunkRebuild]] — O(chunks + drops) per
     * touched doc, value-identical to the HOF encoding it replaced
     * (spec-pinned; the retired shape is kept as [[lineRebuildHof]] for
-    * the MicroBench A/B and the parity spec). The r11 probe concern:
+    * the parity spec). The r11 probe concern:
     * the HOF's `array_contains` inside `filter` is O(dropped × chunks)
     * per touched doc, which a boilerplate-heavy corpus (majority
     * touched, long drop lists) turns into the scan's hot loop. */
@@ -746,7 +746,7 @@ object TextOps {
       (chunks, drops) =>
         graft.expressions.ChunkRebuild.chunk_rebuild(chunks, drops))
 
-  /** The retired HOF mask (probe/parity twin of [[lineRebuild]]). */
+  /** The retired HOF mask (parity twin of [[lineRebuild]]). */
   private[graft] def lineRebuildHof(df: DataFrame, dropped: DataFrame,
                                     idCol: String, textCol: String,
                                     lineTokens: Int): DataFrame =
@@ -784,9 +784,9 @@ object TextOps {
     * is (id, j) — 12 bytes per collision; clean documents never leave
     * their scan. `testShingles` should be the DISTINCT test-set shingle
     * frame; at benchmark-suite scale it broadcast-joins. */
-  private[graft] def decontamHits(df: DataFrame, idCol: String,
-                                  textCol: String, testShingles: DataFrame,
-                                  n: Int, margin: Int): DataFrame =
+  private def decontamHits(df: DataFrame, idCol: String,
+                           textCol: String, testShingles: DataFrame,
+                           n: Int, margin: Int): DataFrame =
     df
       // the word count rides the pre-join frame only so the removal
       // span can clamp SCAN-SIDE — post-join rows are (id, lo, hi),

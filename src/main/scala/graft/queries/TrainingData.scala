@@ -427,25 +427,20 @@ object TrainingData {
       |    AND CAST(alpha_words AS DOUBLE) / n_words >= 0.8
       |    AND stop_present >= 2 THEN 1 ELSE 0 END""".stripMargin
 
-  /** DuckDB double dot product over 64-dim float lists (widened per
-    * element, like the Spark side). */
-  /** Shared q85/q91 inputs: (train (doc_id, sh) stream, distinct test
-    * shingle set) over q72's hash-bucket split — ONE definition so the
-    * plain and bloom-prefiltered decontamination paths can never drift. */
-  // private[graft]: ScaleProbe's q91 exponent decomposition must count
-  // the SAME inputs the measured query builds — a re-implementation
-  // there would silently drift if this split ever changes (review-found)
   /** The 80/90 train/test DOC split — the single source of the split
     * constants for the whole decontamination family (q85/q91 member-
     * ship, q138's scrub): a drifting copy would semi-join a train side
     * against a test set from a DIFFERENT partition (review-found). */
-  private[graft] def contaminationSplit(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  private def contaminationSplit(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val docs = t(s, dir, "documents")
       .withColumn("pct", TextOps.hashBucket(col("doc_id")))
     (docs.filter(col("pct") < 80), docs.filter(col("pct") >= 90))
   }
 
-  private[graft] def contaminationInputs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  /** Shared q85/q91 inputs: (train (doc_id, sh) stream, distinct test
+    * shingle set) over q72's hash-bucket split — ONE definition so the
+    * plain and bloom-prefiltered decontamination paths can never drift. */
+  private def contaminationInputs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val (train, test) = contaminationSplit(s, dir)
     val trainSh = train
       .select(col("doc_id"), explode(TextOps.shingles(col("text"), 3)).as("sh"))
@@ -725,7 +720,7 @@ object TrainingData {
     // per row however large the lexicon (a regex alternation or a
     // contains-OR pays O(entries x length)). Scan-local, zero
     // exchanges; phrase entries get word-boundary semantics from the
-    // space-padded normalized text. (ScaleProbe reads scan x2.0 here:
+    // space-padded normalized text. (ScaleProbe read scan x2.0 here:
     // that is the trailing ORDER BY's range-partitioning SAMPLE pass —
     // oracle-comparison infrastructure, required on every query. The
     // operator itself, TextOps.dropByLexicon, is a sort-free single
@@ -1599,8 +1594,7 @@ object TrainingData {
     // regression now fails the hash instead of hiding behind a
     // rows-only check (floors sit under both the sf0.01 and sf0.1
     // measurements: 0.30/0.475/0.65/0.86 and 0.25/0.375/0.55/0.79;
-    // the raw numbers stay observable via AnnIndex.measuredRecall and
-    // the ScaleProbe q95@hi line).
+    // the raw numbers stay observable via AnnIndex.measuredRecall).
     "q95_ann_recall" -> ((s, dir) => {
       import s.implicits._
       val e = t(s, dir, "embeddings")

@@ -108,15 +108,7 @@ object TokenizerTrain {
       sys.exit(2)
     }
     val synth = a.source.startsWith("synth:")
-    lazy val spark = {
-      val s = SparkSession.builder()
-        .master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    lazy val spark = graft.SparkEntry.localSession("graft-tokenizer-train", 8)
     val t0 = System.nanoTime()
     val vocab = try train(a.spec, a.source, spark)
       finally if (!synth) spark.stop()

@@ -32,4 +32,14 @@ class BenchLineSpec extends AnyFunSuite {
         "1850 budget; shorten fields or move detail to stderr before " +
         "adding more queries")
   }
+
+  test("SPARK_GRAFT_CPUS: default when unset, a positive integer, else a named error") {
+    assert(SparkEntry.cpus(32, Map.empty) === 32)
+    assert(SparkEntry.cpus(32, Map("SPARK_GRAFT_CPUS" -> " 4 ")) === 4)
+    for (bad <- Seq("abc", "0", "-2", "", "4.5")) {
+      val e = intercept[IllegalArgumentException](
+        SparkEntry.cpus(32, Map("SPARK_GRAFT_CPUS" -> bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), e.getMessage)
+    }
+  }
 }

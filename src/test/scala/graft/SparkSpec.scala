@@ -14,16 +14,26 @@ trait SparkSpec extends AnyFunSuite {
     java.nio.file.Files.createTempDirectory(prefix).toString
 
   /** Local properties of every Spark job started while `body` ran, in
-    * start order. Listener events are asynchronous, so a sentinel job
+    * start order. */
+  def jobsDuring(body: => Unit): Seq[java.util.Properties] =
+    metered(body).jobs
+
+  /** The jobs `body` started, in start order, and the shuffle bytes its
+    * tasks wrote. Listener events are asynchronous, so a sentinel job
     * run after `body` fences the bus: once its start event has arrived,
-    * every earlier job's has too. */
-  def jobsDuring(body: => Unit): Seq[java.util.Properties] = {
+    * every earlier job's has too, and so has every earlier task's end
+    * (the scheduler posts a task's end before its job can finish). */
+  def metered(body: => Unit): SparkSpec.Metered = {
     val key = "graft.test.sentinel"
-    val seen = new java.util.concurrent.LinkedBlockingQueue[java.util.Properties]()
+    val seen = new java.util.concurrent.LinkedBlockingQueue[Either[java.util.Properties, Long]]()
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).getOrElse(new java.util.Properties))
+        seen.add(Left(Option(e.properties).getOrElse(new java.util.Properties)))
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          seen.add(Right(e.taskMetrics.shuffleWriteMetrics.bytesWritten))
     }
     val sc = spark.sparkContext
     sc.addSparkListener(l)
@@ -33,13 +43,15 @@ trait SparkSpec extends AnyFunSuite {
       try sc.parallelize(Seq(1), 1).count()
       finally sc.setLocalProperty(key, null)
       val jobs = Seq.newBuilder[java.util.Properties]
-      var p = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
-      while (p != null && p.getProperty(key) == null) {
-        jobs += p
-        p = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+      var bytes = 0L
+      var fenced = false
+      while (!fenced) seen.poll(30, java.util.concurrent.TimeUnit.SECONDS) match {
+        case null => fail("sentinel job start never reached the listener")
+        case Left(p) if p.getProperty(key) != null => fenced = true
+        case Left(p) => jobs += p
+        case Right(b) => bytes += b
       }
-      assert(p != null, "sentinel job start never reached the listener")
-      jobs.result()
+      SparkSpec.Metered(jobs.result(), bytes)
     } finally sc.removeSparkListener(l)
   }
 
@@ -148,16 +160,12 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** What [[SparkSpec.metered]] saw while its body ran. */
+  final case class Metered(jobs: Seq[java.util.Properties], shuffleWriteBytes: Long)
+
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = SparkEntry.localSession("graft-tests", 4)
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     s
   }
 }

@@ -11,10 +11,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (rounds run hours apart under different ambient host load; r9 and
   * r10 both saw double-digit total swings on untouched queries).
   *
-  * `runMain graft.tools.BenchAb <gitref> [q1,q52,...]` (or
-  * `graft.Bench --ab <gitref> ...`):
-  *   1. checks the ref out into a cached git worktree under
-  *      /tmp/graft_ab/<sha> and `sbt compile`s it once;
+  * `sbt "Test/runMain graft.tools.BenchAb <gitref> [q1,q52,...]"`:
+  *   1. exports the ref (`git archive`) into a cached directory
+  *      `graft_ab/<sha>` under `java.io.tmpdir` and `sbt compile`s it
+  *      once;
   *   2. loads the old tree's `graft.SparkEntry` through a CHILD-FIRST
   *      classloader (graft.* classes from the old tree, Spark/Scala
   *      from the shared parent), so both trees run in ONE Spark
@@ -34,9 +34,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * out of generated source, or an addReferenceObj'd object) resolves
   * to the NEW tree on BOTH legs. A change living purely inside such a
   * static helper therefore A/Bs to ratio ≈ 1.0 — silently. Kernel-
-  * internal changes belong to [[MicroBench]]'s in-tree A/B rows (how
-  * the round4 and VecSub changes were actually measured); this tool is
-  * for plan/query-level regressions. Generated code that is
+  * internal changes need an in-tree A/B of the kernel itself (how the
+  * round4 and VecSub changes were measured); this tool is for
+  * plan/query-level regressions. Generated code that is
   * byte-identical across trees additionally shares one Janino cache
   * entry (the cache keys on source text). micro_batch is out of scope
   * (lake state machinery across loaders).
@@ -65,24 +65,21 @@ object BenchAb {
   private def sh(cmd: Seq[String], cwd: File): Int =
     new ProcessBuilder(cmd: _*).directory(cwd).inheritIO().start().waitFor()
 
-  /** Worktree + compile the ref once; cached by sha with a marker file
+  /** Export + compile the ref once; cached by sha with a marker file
     * written only after a successful compile. */
   private def compiledClassesDir(repo: File, ref: String): File = {
     val shaProc = new ProcessBuilder("git", "rev-parse", ref).directory(repo).start()
     val sha = scala.io.Source.fromInputStream(shaProc.getInputStream).mkString.trim
     require(shaProc.waitFor() == 0 && sha.nonEmpty, s"cannot resolve git ref '$ref'")
-    val wt = new File(s"/tmp/graft_ab/$sha")
+    val wt = new File(System.getProperty("java.io.tmpdir"), s"graft_ab/$sha")
     val marker = new File(wt, ".ab_compiled")
     if (!marker.exists()) {
-      if (wt.exists()) {
-        sh(Seq("git", "worktree", "remove", "--force", wt.getPath), repo)
-        sh(Seq("rm", "-rf", wt.getPath), repo)
-      }
-      // a cleared /tmp can leave a stale registration behind — prune
-      // before adding, or every previously-benched ref fails forever
-      sh(Seq("git", "worktree", "prune"), repo)
-      require(sh(Seq("git", "worktree", "add", "--detach", wt.getPath, sha), repo) == 0,
-        s"git worktree add failed for $sha")
+      if (wt.exists()) sh(Seq("rm", "-rf", wt.getPath), repo)
+      require(wt.mkdirs(), s"cannot create $wt")
+      // a plain export, not a worktree: nothing is registered in the
+      // checkout's .git, so a cleared tmp dir leaves nothing stale
+      require(sh(Seq("sh", "-c", s"git archive $sha | tar -x -C '${wt.getPath}'"),
+        repo) == 0, s"git archive failed for $sha")
       require(sh(Seq("sbt", "-batch", "compile"), wt) == 0,
         s"sbt compile failed in ${wt.getPath}")
       marker.createNewFile()
@@ -113,16 +110,7 @@ object BenchAb {
       .asInstanceOf[Map[String, (SparkSession, String) => DataFrame]]
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-ab")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession("graft-bench-ab", graft.SparkEntry.cpus(32))
 
     val newQueries = graft.SparkEntry.queries
     val names = graft.Bench.headline
@@ -148,8 +136,8 @@ object BenchAb {
     // deserialization — e.g. an Expression the round changed) cannot
     // be cross-tree-measured in one JVM. It fails LOUDLY here; we
     // exclude it from both legs and report it, instead of letting one
-    // crash kill the whole instrument. MicroBench is the A/B for
-    // kernel-internal changes (see the scaladoc SCOPE note).
+    // crash kill the whole instrument. Kernel-internal changes need an
+    // in-tree A/B (see the scaladoc SCOPE note).
     val incompatible = collection.mutable.LinkedHashSet[String]()
     def tryOld(name: String): Option[Double] =
       try Some(runOld(name))

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.Tables
-import org.apache.spark.sql.SparkSession
 
 /** Multi-row-group re-materialization of a fixture dir (dev/probe
   * tool, not part of the driver contract).
@@ -15,8 +14,8 @@ import org.apache.spark.sql.SparkSession
   * rows as `splits`-way parquet so scans parallelize, letting the
   * c8-vs-c32 comparison measure the ENGINE:
   *
-  *   runMain graft.tools.Refit [srcDir outDir splits]
-  *   SPARK_GRAFT_SF_DIR=<outDir> SPARK_GRAFT_CPUS=8|32 runMain graft.Bench
+  *   sbt "Test/runMain graft.tools.Refit [srcDir outDir splits]"
+  *   SPARK_GRAFT_SF_DIR=<outDir> SPARK_GRAFT_CPUS=8|32 sbt "runMain graft.Bench"
   *
   * Row ORDER inside each table changes (round-robin repartition);
   * every declared query is order-insensitive (explicit ORDER BY /
@@ -27,12 +26,7 @@ object Refit {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "/tmp/sf0.1mf"
     val splits = if (args.length > 2) args(2).toInt else 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession("graft-refit", graft.SparkEntry.cpus(32))
     Tables.names.foreach { name =>
       val df = Tables.load(spark, src, name)
       df.repartition(splits).write.mode("overwrite")
