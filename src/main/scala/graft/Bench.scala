@@ -146,7 +146,7 @@ object Bench {
     * micro_batch's processBatch. Deliberately OFF: gopherRules (the
     * corpus carries <2 Gopher stopwords per doc, so the quality half
     * would reject 100% and starve every downstream stage — it is
-    * benched standalone as q137) and codeRules/permissiveOnly (a CODE
+    * benched standalone as q137) and codeRules/license (a CODE
     * corpus's gates; on prose they reject ~everything the same way —
     * benched as q148/q153-shape scans).
     *
@@ -155,6 +155,7 @@ object Bench {
     * (test sources) times the same tick job by job. */
   final class LlmTick(spark: SparkSession, sfDir: String) {
     import org.apache.spark.sql.functions._
+    import graft.tools.DailyIngest.Stages
     private val docsRaw = Tables.load(spark, sfDir, "documents")
     private val emb = Tables.load(spark, sfDir, "embeddings")
     // real 64-dim embedding where present (vec_id ⊂ doc_id), a
@@ -205,11 +206,11 @@ object Bench {
         graft.tools.DailyIngest.run(lake, dd, cp, out, docs,
           "doc_id", "text", "lang",
           java.sql.Date.valueOf("2024-03-01"), ttlDays = 30,
-          ann = Some((idx, "emb")), semanticThreshold = Some(0.95),
-          qualityGate = Some(model),
-          nearDupVerify = Some(0.75), lineScrub = true, decontam = true,
-          vocab = graft.functions.UnigramVocab.default,
-          repetitionRules = true)
+          Stages(repetitionRules = true, quality = Some(Stages.Quality(model)),
+            nearDupVerify = Some(0.75),
+            ann = Some(Stages.Ann(idx, "emb", Some(Stages.Semantic(0.95)))),
+            decontam = true, lineScrub = true,
+            vocab = graft.functions.UnigramVocab.default))
         (System.nanoTime() - t0) / 1e9
       } finally {
         // session hygiene, exception-safe (r18): the index probe pins

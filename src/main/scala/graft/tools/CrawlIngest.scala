@@ -3,7 +3,7 @@ package graft.tools
 import java.sql.Date
 
 import graft.connectors.Warc
-import graft.functions.{LangId, QualityClassifier, UrlOps}
+import graft.functions.{LangId, UrlOps}
 import graft.lake.{CorpusDedup, CorpusPack, Lake, TableRef}
 import graft.state.StateStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -14,7 +14,12 @@ import org.apache.spark.sql.functions._
   * rj_smtr/utils.py:335-366 shape) applied to WARC segments — the
   * `Trigger.AvailableNow` form of a daily crawl tick, wiring the crawl
   * head ([[graft.connectors.Warc.htmlDocuments]] → URL curation →
-  * quality gate) into the replay-exact [[DailyIngest]].
+  * quality gate) into the replay-exact [[DailyIngest]]. The head's
+  * settings are one value, [[Head]]; the ingest's are
+  * [[DailyIngest.Stages]], forwarded whole (`vocab` included). Crawl
+  * docs carry doc_id, text and lang only: a `stages.ann` leg fails at
+  * analysis with a missing-column error, because there is no embedding
+  * column to index.
   *
   * Batch discipline — ONE batch per day, pinned by a MANIFEST:
   * [[DailyIngest]] lands each day as a single dynamic partition
@@ -125,28 +130,29 @@ object CrawlIngest {
     }.sorted
   }
 
+  /** The crawl head: what [[run]] does to the day's WARC records
+    * before [[DailyIngest.run]] sees them, in this order — main-content
+    * extraction ([[Warc.htmlDocuments]] with `minWords` and
+    * `maxLinkDensity`), the `blockedDomains` URL blocklist, C4's
+    * word-`lexicon` gate, first-crawl-wins URL dedup, the
+    * `perDomainCap` per-domain cap, and the `langModel` language stamp
+    * (`und` without a model). */
+  final case class Head(langModel: Option[LangId.LangIdModel] = None,
+                        blockedDomains: Option[DataFrame] = None,
+                        lexicon: Option[Seq[String]] = None,
+                        perDomainCap: Option[Int] = None,
+                        minWords: Int = 3, maxLinkDensity: Double = 0.5)
+
   /** One daily tick. Idempotent: an idle tick (no new segments) and a
     * replay of a completed day both return without touching the lake. */
   def run(spark: SparkSession, lake: Lake, state: StateStore,
           dd: CorpusDedup, cp: CorpusPack, out: TableRef,
           paths: Seq[String], dataset: String, day: Date, ttlDays: Int,
-          qualityGate: Option[QualityClassifier.Model] = None,
-          langModel: Option[LangId.LangIdModel] = None,
-          blockedDomains: Option[DataFrame] = None,
-          lexicon: Option[Seq[String]] = None,
-          perDomainCap: Option[Int] = None,
-          lineScrub: Boolean = false,
-          nearDupVerify: Option[Double] = None,
-          gopherRules: Option[(Long, Long)] = None,
-          decontam: Boolean = false,
-          repetitionRules: Boolean = false,
-          qualityThreshold: Double = 0.0,
-          codeRules: Boolean = false,
-          permissiveOnly: Boolean = false,
-          repoLicense: Option[(String, String)] = None,
-          minWords: Int = 3, maxLinkDensity: Double = 0.5,
+          head: Head = Head(),
+          stages: DailyIngest.Stages = DailyIngest.Stages(),
           lock: Option[graft.state.RunLock] = None): CrawlResult = {
     import spark.implicits._
+    import head._
     val pKey = processedKey(dataset)
     val mKey = manifestKey(dataset, day)
     // re-checked before EVERY state mutation, not once on entry: a
@@ -237,12 +243,7 @@ object CrawlIngest {
         // ...and re-asserts per commit itself (the r15 asymmetry: the
         // runtime check used to stop at this boundary)
         val landed = DailyIngest.run(lake, dd, cp, out, docs,
-          "doc_id", "text", "lang", day, ttlDays,
-          lineScrub = lineScrub, qualityGate = qualityGate,
-          nearDupVerify = nearDupVerify, gopherRules = gopherRules,
-          decontam = decontam, repetitionRules = repetitionRules,
-          qualityThreshold = qualityThreshold, codeRules = codeRules,
-          permissiveOnly = permissiveOnly, repoLicense = repoLicense,
+          "doc_id", "text", "lang", day, ttlDays, stages,
           lock = lock.map(l => (l, lockKey(dataset))))
         guard()
         state.markProcessed(pKey, manifest)
@@ -303,21 +304,8 @@ object CrawlIngest {
                lock: graft.state.RunLock, dataset: String,
                days: Seq[Date], pathsFor: Date => Seq[String],
                ttlDays: Int, ttlMinutes: Int = 60,
-               qualityGate: Option[QualityClassifier.Model] = None,
-               langModel: Option[LangId.LangIdModel] = None,
-               blockedDomains: Option[DataFrame] = None,
-               lexicon: Option[Seq[String]] = None,
-               perDomainCap: Option[Int] = None,
-               lineScrub: Boolean = false,
-               nearDupVerify: Option[Double] = None,
-               gopherRules: Option[(Long, Long)] = None,
-               decontam: Boolean = false,
-               repetitionRules: Boolean = false,
-               qualityThreshold: Double = 0.0,
-               codeRules: Boolean = false,
-               permissiveOnly: Boolean = false,
-               repoLicense: Option[(String, String)] = None,
-               minWords: Int = 3, maxLinkDensity: Double = 0.5)
+               head: Head = Head(),
+               stages: DailyIngest.Stages = DailyIngest.Stages())
       : Option[Seq[(Date, CrawlResult)]] =
     lock.withLock(lockKey(dataset), owner = "crawl-backfill",
         ttlMinutes = ttlMinutes) {
@@ -333,15 +321,7 @@ object CrawlIngest {
               "(TTL takeover or unrefreshable store) — aborting; " +
               "completed days are committed, rerun to resume")
         d -> run(spark, lake, state, dd, cp, out, pathsFor(d), dataset,
-          d, ttlDays, qualityGate = qualityGate, langModel = langModel,
-          blockedDomains = blockedDomains, lexicon = lexicon,
-          perDomainCap = perDomainCap, lineScrub = lineScrub,
-          nearDupVerify = nearDupVerify, gopherRules = gopherRules,
-          decontam = decontam, repetitionRules = repetitionRules,
-          qualityThreshold = qualityThreshold, codeRules = codeRules,
-          permissiveOnly = permissiveOnly, repoLicense = repoLicense,
-          minWords = minWords,
-          maxLinkDensity = maxLinkDensity, lock = Some(lock))
+          d, ttlDays, head, stages, lock = Some(lock))
       }
     }
 

@@ -14,12 +14,14 @@ import graft.state.{RunLock, StateStore}
   * recency window (exact hashes AND near-dup LSH bands), token-counted
   * with a real subword denomination (BPE by default), packed into
   * context windows CONTINUING the prior day's cursors, and landed
-  * idempotently.
+  * idempotently. Which gates, rewrites and commits a tick runs is one
+  * value, [[Stages]]; the order they run in is fixed in [[run]].
   *
   * Crash-idempotence by construction — the step ORDER is the invariant:
   *
   *   land (overwritePartitions by ingest_day) → [ANN dated overwrite] →
-  *   pack-commit → exact-dedup-commit → near-dup-commit
+  *   pack-commit → exact-dedup-commit → near-dup-commit →
+  *   [line-seen-set commit]
   *
   * (the optional semantic gate READS the index strictly before the
   * day — `seen_date < day` — so the ANN overwrite never changes what a
@@ -68,160 +70,175 @@ object DailyIngest {
   private def guard(lock: LockRef): Unit =
     lock.foreach { case (l, k) => l.assertHeld(k) }
 
+  /** Which stages one ingest tick runs, with the defaults of a plain
+    * tick. The ORDER is fixed in [[run]] (it is the crash-idempotence
+    * invariant). A setting that only means something beside another
+    * one is nested inside it, so no combination is ignored or rejected
+    * at run time. */
+  final case class Stages(
+      /** `Some((minWords, maxWords))` applies the Gopher
+        * document-quality rule set (q137,
+        * [[graft.functions.TextOps.gopherKeep]]) as the EARLIEST gate —
+        * before even the trained classifier: it is a single codegen
+        * byte-walk predicate with zero exchanges, and the heuristic
+        * rules are exactly the cheap junk screen the trained gate should
+        * not have to spend its signal on. Deterministic, so it composes
+        * with the replay invariants like any constant filter; like the
+        * trained gate, rejected docs never reach the seen-sets (the
+        * admitted-only commit contract). */
+      gopherRules: Option[(Long, Long)] = None,
+      /** Adds the OTHER half of the Gopher §A1.1 gate (q145,
+        * [[graft.functions.TextOps.repetitionKeep]] — the thirteen
+        * published repetition thresholds) right after the quality rules:
+        * the same zero-exchange scan-local predicate class, and the same
+        * admitted-only seen-set contract. */
+      repetitionRules: Boolean = false,
+      /** Applies The Stack's code-corpus preprocessing filter (q148,
+        * [[graft.functions.TextOps.stackCodeKeep]] — Kocetkov et al.
+        * 2022 §2.2: line-length bounds, alnum fraction, XML-declaration
+        * screen) as the gate a CODE ingest runs where a web ingest runs
+        * the gopher/repetition rules — same scan-local deterministic
+        * predicate class, same admitted-only contract. */
+      codeRules: Boolean = false,
+      license: Option[Stages.License] = None,
+      quality: Option[Stages.Quality] = None,
+      /** `Some(minAgree)` swaps the candidate-level cross-run near-dup
+        * gate for the signature-verified one
+        * ([[graft.lake.CorpusDedup.novelNearDupVerifiedSince]]): a band
+        * collision only drops a doc when MinHash lane agreement reaches
+        * `minAgree`, so single-band flukes are admitted. Gate and commit
+        * pair on the verified state table; choose the policy when the
+        * dataset's seen-set is first created and keep it — the two
+        * tables are separate state. */
+      nearDupVerify: Option[Double] = None,
+      ann: Option[Stages.Ann] = None,
+      /** Adds benchmark DECONTAMINATION as a REWRITE stage after the
+        * doc-level gates and before the line scrub: spans around
+        * collisions with every test set registered strictly before `day`
+        * ([[CorpusDedup.commitTestShingles]] — registration is
+        * out-of-band, a benchmark release) are removed via the q138
+        * operator ([[CorpusDedup.decontamScrubSince]]); docs scrubbed to
+        * nothing (pure benchmark text) drop like the line scrub's
+        * n_kept = 0 rule. Replay-exact by the same strictly-before-day
+        * window as every `beforeDate` in this composition: a crash
+        * replay sees the identical registered set even if a new
+        * benchmark landed since. Ordered BEFORE the line scrub so
+        * benchmark text can never survive as a "novel line" in the day's
+        * line seen-set view. */
+      decontam: Boolean = false,
+      /** Adds the C4 LINE policy ([[CorpusDedup.scrubLinesSince]]) as a
+        * REWRITE stage after the doc-level gates, and its dated line
+        * seen-set commit after the near-dup commit. */
+      lineScrub: Boolean = false,
+      /** The n_tok denomination: any [[Tokenizer]] — BPE by default, or
+        * a [[graft.functions.UnigramVocab]] /
+        * [[graft.functions.WordPieceVocab]] to switch family. The
+        * q141/q150 cross-family fertility comparison is the signal for
+        * the switch. Pin the family per dataset — mixing denominations
+        * across days makes pack budgets incomparable (the vocab-file
+        * contract). */
+      vocab: Tokenizer = BpeVocab.default,
+      /** `Some(dir)` is the CLUSTER-durability posture: the tick's two
+        * lineage-cut frames (`admitted`, `novel`) checkpoint RELIABLY to
+        * `dir` (shared storage) instead of executor-local blocks, so an
+          * executor loss re-reads files rather than failing the run. Each
+        * frame is persisted before its lazy checkpoint, so the
+        * checkpoint write reads the cache instead of recomputing the
+        * gate chain. Default None keeps localCheckpoint — the right
+        * trade in local mode and on preemption-free clusters; lineage
+        * is cut to executor blocks, so an executor loss there aborts
+        * the run and recovery is the day-level replay invariant (the
+        * tick is idempotent). Results identical either way. The dir is
+        * run-scoped: delete it after the day's commits. */
+      checkpointDir: Option[String] = None)
+
+  object Stages {
+
+    /** The retrieval leg: the day's NOVEL embeddings (`embedCol`) land
+      * in the dated IVF `index` via [[AnnIndex.appendDated]] — a
+      * dynamic partition overwrite keyed by the same day, so every
+      * crash window replays to the identical index state (the
+      * pre-commit `novel` frame recomputes identically, and post-commit
+      * replays overwrite nothing because novel is empty). The step sits
+      * BEFORE the state commits for exactly that reason. The first day
+      * bootstraps the index ([[AnnIndex.buildDated]], k sized from the
+      * batch); [[expire]] ages it out on the same TTL as the dedup
+      * seen-sets. */
+    final case class Ann(index: AnnIndex, embedCol: String,
+                         semantic: Option[Semantic] = None)
+
+    /** SEMANTIC dedup as a third gate after exact and near-dup:
+      * [[CorpusDedup.novelSemantic]] drops docs whose embedding is ≥
+      * `threshold` cosine to the index window — gated on
+      * `seen_date < day`, NEVER the day itself, so a crash between the
+      * index append and the pack commit replays to the SAME novel set
+      * (gating on the full index would self-collide on the replay, hand
+      * [[CorpusPack.assign]] an empty frame, and leave the cursors
+      * pointing before the landed rows — the exact hazard the step-order
+      * invariant exists to prevent). When the pre-day window holds NO
+      * vectors ([[AnnIndex.hasEntriesBefore]] — day one, or a fully
+      * aged-out index; the predicate deliberately ignores the day's own
+      * partition so crash replays branch identically), the batch
+      * deduplicates in-batch with
+      * [[graft.functions.DedupOps.semanticDedupBlocked]] (trained on the
+      * batch, deterministic, so replays agree) and the index is built
+      * from those survivors — afterwards the index holds only admitted
+      * vectors, which is what keeps the gate's "≥ θ to anything stored"
+      * reading correct.
+      *
+      * `pqRefine = Some(r)` routes the gate's history probe through the
+      * COMPRESSED index path when the index has PQ sidecars
+      * ([[AnnIndex.topKJoinPq]]; the candidate scan reads m-byte codes,
+      * not vectors — the gate's dominant IO at corpus scale). On an
+      * index without PQ it silently falls back to the exact path: the
+      * fallback is strictly better recall and identical threshold
+      * semantics, and a daily job must not wedge because `enablePq` has
+      * not run yet (notably the bootstrap day, which has no index at
+      * all). Recall cost mirrors nprobe: a PQ-misranked true neighbor
+      * ADMITS a duplicate, never drops a novel doc. */
+    final case class Semantic(threshold: Double, pqRefine: Option[Int] = None)
+
+    /** Drops documents scoring ≤ `threshold` log-odds (default 0 —
+      * P(curated) ≤ 0.5; pass a q142-calibrated per-dataset value to hit
+      * a kept-token budget instead of the fixed cut) under a TRAINED
+      * [[graft.functions.QualityClassifier]] `model` (the q130 gate)
+      * BEFORE any dedup stage — the scale-right order: the gate is one
+      * scan-local codegen'd predicate (zero shuffles), so junk never
+      * reaches the hash/band/index machinery. Replay-exact by
+      * construction: the model is a constant loaded from its weights
+      * file, and the gate composes with the pre-commit recompute
+      * invariant like any deterministic filter. Gating uses the 4-dp
+      * ROUNDED score, the same comparison q130's oracle pins. */
+    final case class Quality(model: graft.functions.QualityClassifier.Model,
+                             threshold: Double = 0.0)
+
+    /** The Stack's §2.3 license gate (q153,
+      * [[graft.functions.TextOps.licenseDetect]]): keep only files whose
+      * detected license is permissive. Pass `repo = Some((repoCol,
+      * pathCol))` to run it at REPO level (q155,
+      * [[graft.functions.TextOps.licenseInherit]]) — licenses detected
+      * from LICENSE/COPYING blobs, files inherit, in-file evidence
+      * overrides; the published pipeline's actual discipline, without
+      * which a real code corpus (where most files carry no header)
+      * mis-rejects nearly everything. */
+    final case class License(repo: Option[(String, String)] = None)
+  }
+
   /** One day's ingest. Returns the number of rows present in the day's
     * partition after the ingest — STABLE under replay (a clean rerun
     * returns the same count it landed the first time, having re-landed
     * nothing). `docs` must carry `idCol` (monotone across days — the
-    * CorpusPack precondition), `textCol` and `langCol`.
-    *
-    * `ann = Some((index, embedCol))` adds the retrieval leg: the day's
-    * NOVEL embeddings land in the dated IVF index via
-    * [[AnnIndex.appendDated]] — a dynamic partition overwrite keyed by
-    * the same day, so every crash window replays to the identical index
-    * state (the pre-commit `novel` frame recomputes identically, and
-    * post-commit replays overwrite nothing because novel is empty). The
-    * step sits BEFORE the state commits for exactly that reason. The
-    * first day bootstraps the index ([[AnnIndex.buildDated]], k sized
-    * from the batch); [[expire]] ages it out on the same TTL as the
-    * dedup seen-sets.
-    *
-    * `semanticThreshold = Some(θ)` (requires `ann`) adds SEMANTIC dedup
-    * as a third gate after exact and near-dup:
-    * [[CorpusDedup.novelSemantic]] drops docs whose embedding is ≥ θ
-    * cosine to the index window — gated on `seen_date < day`, NEVER the
-    * day itself, so a crash between the index append and the pack
-    * commit replays to the SAME novel set (gating on the full index
-    * would self-collide on the replay, hand [[CorpusPack.assign]] an
-    * empty frame, and leave the cursors pointing before the landed
-    * rows — the exact hazard the step-order invariant above exists to
-    * prevent). When the pre-day window holds NO vectors
-    * ([[AnnIndex.hasEntriesBefore]] — day one, or a fully aged-out
-    * index; the predicate deliberately ignores the day's own
-    * partition so crash replays branch identically), the batch
-    * deduplicates in-batch with
-    * [[graft.functions.DedupOps.semanticDedupBlocked]] (trained on
-    * the batch, deterministic, so replays agree) and the index is
-    * built from those survivors — afterwards the index holds only
-    * admitted vectors, which is what keeps the gate's "≥ θ to
-    * anything stored" reading correct.
-    *
-    * `pqRefine = Some(r)` routes the gate's history probe through the
-    * COMPRESSED index path when the index has PQ sidecars
-    * ([[AnnIndex.topKJoinPq]]; the candidate scan reads m-byte codes,
-    * not vectors — the gate's dominant IO at corpus scale). On an
-    * index without PQ it silently falls back to the exact path: the
-    * fallback is strictly better recall and identical threshold
-    * semantics, and a daily job must not wedge because `enablePq` has
-    * not run yet (notably the bootstrap day, which has no index at
-    * all). Recall cost mirrors nprobe: a PQ-misranked true neighbor
-    * ADMITS a duplicate, never drops a novel doc.
-    *
-    * `qualityGate = Some(model)` drops documents scoring ≤
-    * `qualityThreshold` log-odds (default 0 — P(curated) ≤ 0.5; pass
-    * a q142-calibrated per-dataset value to hit a kept-token budget
-    * instead of the fixed cut)
-    * under a TRAINED [[graft.functions.QualityClassifier]] model (the
-    * q130 gate) BEFORE any dedup stage — the scale-right order: the
-    * gate is one scan-local codegen'd predicate (zero shuffles), so
-    * junk never reaches the hash/band/index machinery. Replay-exact by
-    * construction: the model is a constant loaded from its weights
-    * file, and the gate composes with the pre-commit recompute
-    * invariant like any deterministic filter. Gating uses the 4-dp
-    * ROUNDED score, the same comparison q130's oracle pins.
-    *
-    * `nearDupVerify = Some(minAgree)` swaps the candidate-level
-    * cross-run near-dup gate for the signature-verified one
-    * ([[graft.lake.CorpusDedup.novelNearDupVerifiedSince]]): a band
-    * collision only drops a doc when MinHash lane agreement reaches
-    * `minAgree`, so single-band flukes are admitted. Gate and commit
-    * pair on the verified state table; choose the policy when the
-    * dataset's seen-set is first created and keep it — the two tables
-    * are separate state.
-    *
-    * `vocab` is the n_tok denomination: any [[Tokenizer]] — BPE by
-    * default, or a [[graft.functions.UnigramVocab]] /
-    * [[graft.functions.WordPieceVocab]] to switch family. The
-    * q141/q150 cross-family fertility comparison is the signal for the
-    * switch. Pin the family per dataset — mixing denominations across
-    * days makes pack budgets incomparable (the vocab-file contract).
-    *
-    * `decontam = true` adds benchmark DECONTAMINATION as a REWRITE
-    * stage after the doc-level gates and before the line scrub: spans
-    * around collisions with every test set registered strictly before
-    * `day` ([[CorpusDedup.commitTestShingles]] — registration is
-    * out-of-band, a benchmark release) are removed via the q138
-    * operator ([[CorpusDedup.decontamScrubSince]]); docs scrubbed to
-    * nothing (pure benchmark text) drop like the line scrub's
-    * n_kept = 0 rule. Replay-exact by the same strictly-before-day
-    * window as every `beforeDate` in this composition: a crash replay
-    * sees the identical registered set even if a new benchmark landed
-    * since. Ordered BEFORE the line scrub so benchmark text can never
-    * survive as a "novel line" in the day's line seen-set view.
-    *
-    * `repetitionRules = true` adds the OTHER half of the Gopher §A1.1
-    * gate (q145, [[graft.functions.TextOps.repetitionKeep]] — the
-    * thirteen published repetition thresholds) right after the quality
-    * rules: the same zero-exchange scan-local predicate class, and the
-    * same admitted-only seen-set contract.
-    *
-    * `codeRules = true` applies The Stack's code-corpus preprocessing
-    * filter (q148, [[graft.functions.TextOps.stackCodeKeep]] —
-    * Kocetkov et al. 2022 §2.2: line-length bounds, alnum fraction,
-    * XML-declaration screen) as the gate a CODE ingest runs where a
-    * web ingest runs the gopher/repetition rules — same scan-local
-    * deterministic predicate class, same admitted-only contract.
-    * `permissiveOnly = true` adds The Stack's §2.3 license gate
-    * (q153, [[graft.functions.TextOps.licenseDetect]]): keep only
-    * files whose detected license is permissive. Pass `repoLicense =
-    * Some((repoCol, pathCol))` to run it at REPO level (q155,
-    * [[graft.functions.TextOps.licenseInherit]]) — licenses detected
-    * from LICENSE/COPYING blobs, files inherit, in-file evidence
-    * overrides; the published pipeline's actual discipline, without
-    * which a real code corpus (where most files carry no header)
-    * mis-rejects nearly everything.
-    *
-    * `checkpointDir = Some(dir)` is the CLUSTER-durability posture: the
-    * tick's two lineage-cut frames (`admitted`, `novel`) checkpoint
-    * RELIABLY to `dir` (shared storage) instead of executor-local
-    * blocks, so an executor loss re-reads files rather than failing
-    * the run. Default None keeps localCheckpoint — the right trade in
-    * local mode and on preemption-free clusters; an executor loss
-    * there aborts the run and recovery is the day-level replay
-    * invariant (the tick is idempotent). Results identical either
-    * way. The dir is run-scoped: delete it after the day's commits.
-    *
-    * `gopherRules = Some((minWords, maxWords))` applies the Gopher
-    * document-quality rule set (q137,
-    * [[graft.functions.TextOps.gopherKeep]]) as the EARLIEST gate —
-    * before even the trained classifier: it is a single codegen
-    * byte-walk predicate with zero exchanges, and the heuristic rules
-    * are exactly the cheap junk screen the trained gate should not
-    * have to spend its signal on. Deterministic, so it composes with
-    * the replay invariants like any constant filter; like the trained
-    * gate, rejected docs never reach the seen-sets (the admitted-only
-    * commit contract). */
+    * CorpusPack precondition), `textCol` and `langCol`, plus the
+    * embedding column when `stages.ann` is set. `stages` picks which
+    * gates, rewrites and commits the tick runs ([[Stages]]); `lock` is
+    * the runtime single-writer guard (see the object Scaladoc). */
   def run(lake: Lake, dd: CorpusDedup, cp: CorpusPack, out: TableRef,
           docs: DataFrame, idCol: String, textCol: String, langCol: String,
-          day: Date, ttlDays: Int,
-          ann: Option[(AnnIndex, String)] = None,
-          semanticThreshold: Option[Double] = None,
-          vocab: Tokenizer = BpeVocab.default,
-          pqRefine: Option[Int] = None,
-          lineScrub: Boolean = false,
-          qualityGate: Option[graft.functions.QualityClassifier.Model] = None,
-          nearDupVerify: Option[Double] = None,
-          gopherRules: Option[(Long, Long)] = None,
-          decontam: Boolean = false,
-          lock: LockRef = None,
-          repetitionRules: Boolean = false,
-          qualityThreshold: Double = 0.0,
-          codeRules: Boolean = false,
-          permissiveOnly: Boolean = false,
-          repoLicense: Option[(String, String)] = None,
-          checkpointDir: Option[String] = None)
-      : Long = {
-    require(semanticThreshold.isEmpty || ann.nonEmpty,
-      "semanticThreshold needs the ann leg — the index is the seen-set")
+          day: Date, ttlDays: Int, stages: Stages = Stages(),
+          lock: LockRef = None): Long = {
+    import stages._
+    import graft.functions.{DedupOps, TextOps}
+    import org.apache.spark.storage.StorageLevel
     // Label every stage's jobs (guide §1.5): the tick is ~10 sequential
     // state commits plus the gate-chain materialization, and an
     // unlabeled UI/listener view of ~80 jobs is unreadable. Labels are
@@ -233,291 +250,254 @@ object DailyIngest {
       try f finally sc.setJobDescription(prev)
     }
     val minDate = Date.valueOf(day.toLocalDate.minusDays(ttlDays.toLong))
-    // Every stats-struct gate goes through TextOps.gateOnce (r17): a
-    // direct filter(keep(stats(text))) carries one kernel COPY per
-    // referenced field — 13 for the repetition gate — and FilterExec
-    // re-evaluates each (no subexpression elimination in filters;
-    // probe-measured 8.7 s vs 1.8 s at sf0.1). gateOnce binds the
-    // struct as a lambda variable: one kernel pass per row, same value.
-    import graft.functions.TextOps.gateOnce
-    val ruled0 = gopherRules.map { case (minW, maxW) =>
-      docs.filter(gateOnce(graft.functions.TextOps.gopherStats(col(textCol)),
-        graft.functions.TextOps.gopherKeep(_, minW, maxW)) === 1)
-    }.getOrElse(docs)
-    // `repetitionRules = true` completes the Gopher gate: the §A1.1
-    // REPETITION half (q145, TextOps.repetitionKeep) beside the
-    // quality half — another scan-local codegen predicate with zero
-    // exchanges, deterministic, so the replay invariants hold unchanged
-    val ruled1 = if (repetitionRules)
-      ruled0.filter(gateOnce(
-        graft.functions.TextOps.repetitionStats(col(textCol)),
-        graft.functions.TextOps.repetitionKeep) === 1)
-    else ruled0
-    // `codeRules = true` applies The Stack's code-corpus preprocessing
-    // (q148, TextOps.stackCodeKeep): line-length bounds, the alnum
-    // fraction and the XML-declaration screen — the gate a CODE ingest
-    // runs where a web ingest runs gopher/repetition. Same class of
-    // predicate (one codegen byte-walk, zero exchanges, deterministic),
-    // same admitted-only seen-set contract.
-    val ruled2 = if (codeRules)
-      ruled1.filter(gateOnce(graft.functions.TextOps.codeStats(col(textCol)),
-        graft.functions.TextOps.stackCodeKeep) === 1)
-    else ruled1
-    // `permissiveOnly = true` applies The Stack's OTHER gate (§2.3,
-    // q153): keep only files whose detected license is permissive —
-    // copyleft, unknown and unlicensed are all excluded from the
-    // permissive release. With `repoLicense = Some((repoCol, pathCol))`
-    // the gate runs the published pipeline's ACTUAL discipline (q155):
-    // repo licenses detected from LICENSE/COPYING blobs over the
-    // PRE-GATE corpus (a license blob must name the repo's license
-    // even when it would itself be filtered), files inherit via the
-    // broadcast join, in-file evidence overrides. Without repo info
-    // the in-file-only scan-local predicate applies (zero exchanges).
-    val ruled = if (permissiveOnly) repoLicense match {
-      case Some((repoCol, pathCol)) =>
-        val repoLic = graft.functions.TextOps
-          .repoLicenseTable(docs, repoCol, pathCol, textCol)
-        graft.functions.TextOps
-          .licenseInherit(ruled2, repoLic, repoCol, textCol)
-          // gateOnce here too: `license` is an alias (coalesce of the
-          // in-file detect chain and the joined repo license) that
-          // predicate pushdown inlines into the condition — licenseKeep
-          // references it ~6 times
-          .filter(gateOnce(col("license"),
-            graft.functions.TextOps.licenseKeep) === 1)
-          .drop("license", "inherited")
-      case None =>
-        ruled2.filter(gateOnce(
-          graft.functions.TextOps.licenseDetect(col(textCol)),
-          graft.functions.TextOps.licenseKeep) === 1)
-    } else ruled2
-    // the acceptance cut is a PARAMETER, not the hardcoded log-odds 0:
-    // q142's calibration picks the threshold that hits a kept-token
-    // budget, and this is where its number lands (> comparison on the
-    // 4-dp ROUNDED score, the q130 oracle convention)
-    // admitted is consumed FOUR times (the novel chain below plus the
-    // three seen-set commits, each of which re-derived the whole gate
-    // cascade — by design for replay, but the recompute is pure waste).
-    // Checkpoint like `novel`: admitted's plan reads only the
-    // corpus (never the ANN lists table), so the §-novel invalidation
-    // hazard does not apply; lazy, so the first consumer materializes
-    // it. Probe-measured before keeping (see OPTIMIZATION_r17.md).
-    // `checkpointDir` picks the durability mode — see `novel` below.
-    val admitted = graft.functions.DedupOps.materializeFrame(
-      qualityGate.map(m =>
-        ruled.filter(round(m.scoreCol(col(textCol)), 4) > qualityThreshold))
-        .getOrElse(ruled),
+    // every frame this call persists, released in the finally
+    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = {
+      if (df.storageLevel == StorageLevel.NONE)
+        pinned += df.persist(StorageLevel.MEMORY_AND_DISK)
+      df
+    }
+    // A lazy RELIABLE checkpoint writes its files in a second job after
+    // the first action, and that job recomputes the frame's lineage
+    // unless the frame is cached — so reliable mode pins first, and
+    // checkpoints a fresh Dataset over the pinned plan (one that already
+    // ran, like a caller's `docs`, keeps the physical plan it was
+    // planned with, which predates the cache entry). localCheckpoint
+    // caches by itself.
+    def cut(df: DataFrame): DataFrame = DedupOps.materializeFrame(
+      if (checkpointDir.nonEmpty) pin(df).select("*") else df,
       checkpointDir, eager = false)
-    // Gate construction below is PURE PLAN BUILDING — no Spark jobs run
-    // until a downstream action — so it carries no job labels (ADVICE
-    // r17: labels on plan-construction-only calls never attach to any
-    // job and made the IngestProbe breakdown misleading; the gate
-    // chain's actual jobs land under "gate chain checkpoint" /
-    // "gates+dedup+land"). The two constructions that DO run jobs —
-    // the semantic gate's window probe and the decontam kernel-entry
-    // sizing — keep labels of their own.
-    val exactNovel = dd.novelExactSince(admitted, idCol, textCol, minDate)
-    // `nearDupVerify = Some(minAgree)` swaps the candidate-level
-    // cross-run gate for the signature-VERIFIED one (single-band
-    // flukes admitted; drops need >= minAgree lane agreement) — gate
-    // and commit must pair on the same state table, chosen here once
-    val textNovel = nearDupVerify match {
-      case Some(minAgree) => dd.novelNearDupVerifiedSince(
-        exactNovel, idCol, textCol, minDate, minAgree)
-      case None => dd.novelNearDupSince(exactNovel, idCol, textCol, minDate)
-    }
-    val semNovel = (ann, semanticThreshold) match {
-      // branch on "the PRE-day window holds vectors", NOT on
-      // idx.exists: the bootstrap day WRITES the index before the
-      // state commits, so a crash in between would flip exists on the
-      // replay and switch it to the gate's pairwise drop policy — a
-      // different novel set than the attempt being replayed (the same
-      // hazard beforeDate guards, one level up). An index whose
-      // window has fully aged out re-bootstraps the same way.
-      case (Some((idx, embedCol)), Some(th))
-          if labeled("semantic gate window probe")(
-            idx.hasEntriesBefore(day, minDate)) =>
-        dd.novelSemantic(idx, textNovel, idCol, embedCol, th,
-          minDate = Some(minDate), beforeDate = Some(day),
-          pqRefine = pqRefine.filter(_ => idx.pqEnabled))
-      case (Some((_, embedCol)), Some(th)) =>
-        // the in-batch bootstrap DOES run jobs during construction
-        // (quantizer sizing count + Lloyd training) — label them
-        val keepers = labeled("semantic gate bootstrap")(
-          graft.functions.DedupOps.semanticDedupBlocked(
-            textNovel.select(col(idCol), col(embedCol)), idCol, embedCol, th,
-            keepPerCluster = 1))
-          .filter(col("keep") === 1).select(col(idCol))
-        textNovel.join(keepers, Seq(idCol), "left_semi")
-      case _ => textNovel
-    }
-    // `lineScrub` adds the C4 LINE policy as a REWRITE stage after the
-    // three doc-level gates (cheapest order — whole-doc dups drop
-    // before their lines are ever segmented): lines already committed
-    // in [minDate, day) strip out of surviving docs, docs scrubbed to
-    // NOTHING drop entirely (an all-historical doc is a duplicate the
-    // exact gate only catches when byte-identical). beforeDate = day
-    // keeps the stage replay-exact — see scrubLinesSince. The gated
-    // frame persists because the scrub's two segment passes plus the
-    // join-back would otherwise re-derive the 3-gate chain four times.
-    val semPersisted = if (lineScrub || decontam)
-      Some(semNovel.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    else None
-    // benchmark decontamination rewrites FIRST (strictly-before-day
-    // registered sets — see the Scaladoc): a span of benchmark text
-    // must not reach the line segmenter, and a doc scrubbed to nothing
-    // is pure benchmark text and drops (originally-empty docs have
-    // n_removed = 0 and pass)
-    val decontamed = semPersisted.filter(_ => decontam).map { sem =>
-      // this construction runs jobs (kernel-entry sizing count/collect
-      // inside decontamScrubSince) — the label is real
-      labeled("decontam scrub setup")(
-        dd.decontamScrubSince(sem, idCol, textCol, day))
-        .filter(col("n_removed") === 0 || col("text_clean") =!= "")
-        .drop("n_removed")
-        .withColumnRenamed("text_clean", textCol)
-    }.getOrElse(semPersisted.getOrElse(semNovel))
-    // with BOTH rewrite stages on, the intermediate persists too: the
-    // line scrub's two segment passes plus its join-back would re-run
-    // the span scrub three times otherwise
-    val decontamPersisted = if (decontam && lineScrub)
-      Some(decontamed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    else None
-    val lineBase = decontamPersisted.getOrElse(decontamed)
-    val gatedNovel = if (lineScrub) {
-      // pure plan construction — no label (see the gate-chain note)
-      val scrub = dd.scrubLinesSince(lineBase, idCol, textCol, minDate,
-        beforeDate = Some(day))
-      lineBase.drop(textCol).join(
-        scrub.filter(col("n_kept") > 0)
-          .select(col(idCol), col("text_dedup").as(textCol)),
-        Seq(idCol))
-    } else lineBase
-    // persisted: `novel` is the most expensive frame of the composition
-    // (three dedup gates deep) and is consumed by the land, the ANN leg
-    // and the pack commit — without the cache each consumer re-derives
-    // the whole gate chain. Persistence is an execution hint, not a
-    // semantic change, so the replay invariant is untouched (a crash
-    // replay recomputes the identical frame from unchanged state).
-    // the n_tok DENOMINATION: whichever tokenizer family `vocab` is —
-    // every downstream consumer (pack budgets, cards, health ticks) is
-    // denomination-agnostic, it just sums n_tok
-    val tokenCount = vocab.count(col(textCol))
-    // Checkpoint, NOT persist (r17, probe-measured): with the
-    // steady-state semantic gate, novel's plan READS the ANN lists
-    // table, and the ann-append step below refreshes that table —
-    // which invalidates any persisted plan referencing it, so the
-    // pack-commit (and every later consumer) silently re-derived the
-    // ENTIRE gate chain (52 jobs, ~13.5 s of a 12 s tick at sf0.001;
-    // the bootstrap path never hit this because its in-batch gate
-    // reads no table). Checkpointing cuts the lineage to stored
-    // blocks the refresh cannot invalidate. Lazy: the land below is
-    // the first action and materializes it. Same execution-hint
-    // semantics as the persist it replaces (replay invariant
-    // untouched); local-checkpoint blocks are freed by the
-    // ContextCleaner when the checkpointed RDD goes out of scope.
-    //
-    // DURABILITY is `checkpointDir`'s choice (r18, VERDICT r17 #2/#4):
-    //  - None (default, local mode): localCheckpoint — executor block
-    //    storage, fast, but lineage is CUT, so on a real cluster an
-    //    executor loss makes the blocks unrecomputable and the RUN
-    //    FAILS OUTRIGHT (not a task retry — there is no lineage to
-    //    retry from). Recovery is the day-level replay invariant: the
-    //    tick is idempotent, rerun it.
-    //  - Some(dir) (clustered posture): reliable checkpoint to shared
-    //    storage via DedupOps.materializeFrame — same results, an
-    //    executor loss re-reads the files and the run survives. The
-    //    checkpoint-dir ownership discipline (and its lifecycle: the
-    //    caller deletes the run-scoped dir after the tick's results
-    //    are committed) is DedupOps.materialize's documented contract.
-    // (labeled: under AQE, even the lazy checkpoint materializes every
-    // intermediate exchange of the chain at this call — these are the
-    // tick's heaviest jobs)
-    val novel = labeled("gate chain checkpoint")(
-      graft.functions.DedupOps.materializeFrame(
-        gatedNovel.withColumn("n_tok", tokenCount),
-        checkpointDir, eager = false))
     try {
+      // Every stats-struct gate goes through TextOps.gateOnce (r17): a
+      // direct filter(keep(stats(text))) carries one kernel COPY per
+      // referenced field — 13 for the repetition gate — and FilterExec
+      // re-evaluates each (no subexpression elimination in filters;
+      // probe-measured 8.7 s vs 1.8 s at sf0.1). gateOnce binds the
+      // struct as a lambda variable: one kernel pass per row, same value.
+      // The rule gates apply in this order (Catalyst's CombineFilters
+      // merges the adjacent filters into one scan-local predicate).
+      val text = col(textCol)
+      val ruled = Seq(
+        gopherRules.map { case (minW, maxW) =>
+          TextOps.gateOnce(TextOps.gopherStats(text),
+            TextOps.gopherKeep(_, minW, maxW)) },
+        Option.when(repetitionRules)(TextOps.gateOnce(
+          TextOps.repetitionStats(text), TextOps.repetitionKeep)),
+        Option.when(codeRules)(TextOps.gateOnce(
+          TextOps.codeStats(text), TextOps.stackCodeKeep)),
+        license.filter(_.repo.isEmpty).map(_ => TextOps.gateOnce(
+          TextOps.licenseDetect(text), TextOps.licenseKeep))
+      ).flatten.foldLeft(docs)((df, keep) => df.filter(keep === 1))
+      // the repo-level license gate: repo licenses are detected over the
+      // PRE-GATE corpus (a license blob must name the repo's license
+      // even when it would itself be filtered), files inherit via the
+      // broadcast join, in-file evidence overrides
+      val licensed = license.flatMap(_.repo).fold(ruled) {
+        case (repoCol, pathCol) =>
+          TextOps.licenseInherit(ruled,
+              TextOps.repoLicenseTable(docs, repoCol, pathCol, textCol),
+              repoCol, textCol)
+            // gateOnce here too: `license` is an alias (coalesce of the
+            // in-file detect chain and the joined repo license) that
+            // predicate pushdown inlines into the condition —
+            // licenseKeep references it ~6 times
+            .filter(TextOps.gateOnce(col("license"), TextOps.licenseKeep) === 1)
+            .drop("license", "inherited")
+      }
+      // admitted is consumed FOUR times (the novel chain below plus the
+      // three seen-set commits, each of which re-derived the whole gate
+      // cascade — by design for replay, but the recompute is pure
+      // waste). Checkpoint like `novel`: admitted's plan reads only the
+      // corpus (never the ANN lists table), so the §-novel invalidation
+      // hazard does not apply; lazy, so the first consumer materializes
+      // it. Probe-measured before keeping (see OPTIMIZATION_r17.md).
+      // The quality cut is > on the 4-dp ROUNDED score (the q130 oracle
+      // convention). Labeled: under AQE the lazy checkpoint materializes
+      // the exchanges of the caller's `docs` plan at this call.
+      val admitted = labeled("admitted checkpoint")(cut(
+        quality.fold(licensed)(q =>
+          licensed.filter(round(q.model.scoreCol(text), 4) > q.threshold))))
+      // Gate construction below is PURE PLAN BUILDING — no Spark jobs
+      // run until a downstream action — so it carries no job labels
+      // (ADVICE r17: labels on plan-construction-only calls never attach
+      // to any job and made the IngestProbe breakdown misleading; the
+      // gate chain's actual jobs land under "gate chain checkpoint" /
+      // "gates+dedup+land"). The constructions that DO run jobs — the
+      // semantic gate's window probe, its centroid and probe-cluster
+      // collects, and the decontam kernel-entry sizing — keep labels of
+      // their own.
+      val exactNovel = dd.novelExactSince(admitted, idCol, textCol, minDate)
+      // gate and commit must pair on the same state table, chosen here
+      // once
+      val textNovel = nearDupVerify match {
+        case Some(minAgree) => dd.novelNearDupVerifiedSince(
+          exactNovel, idCol, textCol, minDate, minAgree)
+        case None => dd.novelNearDupSince(exactNovel, idCol, textCol, minDate)
+      }
+      val semNovel = ann match {
+        // branch on "the PRE-day window holds vectors", NOT on
+        // idx.exists: the bootstrap day WRITES the index before the
+        // state commits, so a crash in between would flip exists on the
+        // replay and switch it to the gate's pairwise drop policy — a
+        // different novel set than the attempt being replayed (the same
+        // hazard beforeDate guards, one level up). An index whose
+        // window has fully aged out re-bootstraps the same way.
+        case Some(Stages.Ann(idx, embedCol, Some(sem)))
+            if labeled("semantic gate window probe")(
+              idx.hasEntriesBefore(day, minDate)) =>
+          // construction collects the centroids and the probed-cluster
+          // set (the latter runs the gate chain up to here)
+          labeled("semantic gate setup")(
+            dd.novelSemantic(idx, textNovel, idCol, embedCol, sem.threshold,
+              minDate = Some(minDate), beforeDate = Some(day),
+              pqRefine = sem.pqRefine.filter(_ => idx.pqEnabled)))
+        case Some(Stages.Ann(_, embedCol, Some(sem))) =>
+          // the in-batch bootstrap DOES run jobs during construction
+          // (quantizer sizing count + Lloyd training) — label them
+          val keepers = labeled("semantic gate bootstrap")(
+            DedupOps.semanticDedupBlocked(
+              textNovel.select(col(idCol), col(embedCol)), idCol, embedCol,
+              sem.threshold, keepPerCluster = 1))
+            .filter(col("keep") === 1).select(col(idCol))
+          textNovel.join(keepers, Seq(idCol), "left_semi")
+        case _ => textNovel
+      }
+      // The rewrite stages run after the doc-level gates (cheapest
+      // order — whole-doc dups drop before their lines are ever
+      // segmented). The gated frame is pinned because the scrubs' segment
+      // passes plus the join-back would otherwise re-derive the gate
+      // chain several times.
+      val rewriteIn = if (lineScrub || decontam) pin(semNovel) else semNovel
+      // benchmark decontamination rewrites FIRST (strictly-before-day
+      // registered sets): a span of benchmark text must not reach the
+      // line segmenter, and a doc scrubbed to nothing is pure benchmark
+      // text and drops (originally-empty docs have n_removed = 0 and
+      // pass)
+      val decontamed = if (!decontam) rewriteIn else {
+        // this construction runs jobs (kernel-entry sizing count/collect
+        // inside decontamScrubSince) — the label is real
+        val scrubbed = labeled("decontam scrub setup")(
+          dd.decontamScrubSince(rewriteIn, idCol, textCol, day))
+          .filter(col("n_removed") === 0 || col("text_clean") =!= "")
+          .drop("n_removed")
+          .withColumnRenamed("text_clean", textCol)
+        // with BOTH rewrite stages on, the intermediate is pinned too:
+        // the line scrub's two segment passes plus its join-back would
+        // re-run the span scrub three times otherwise
+        if (lineScrub) pin(scrubbed) else scrubbed
+      }
+      // the C4 line scrub: lines already committed in [minDate, day)
+      // strip out of surviving docs, docs scrubbed to NOTHING drop
+      // entirely (an all-historical doc is a duplicate the exact gate
+      // only catches when byte-identical). beforeDate = day keeps the
+      // stage replay-exact — see scrubLinesSince. Pure plan
+      // construction, no label.
+      val gatedNovel = if (!lineScrub) decontamed else {
+        val scrub = dd.scrubLinesSince(decontamed, idCol, textCol, minDate,
+          beforeDate = Some(day))
+        decontamed.drop(textCol).join(
+          scrub.filter(col("n_kept") > 0)
+            .select(col(idCol), col("text_dedup").as(textCol)),
+          Seq(idCol))
+      }
+      // `novel` is the most expensive frame of the composition (three
+      // dedup gates deep) and is consumed by the land, the ANN leg and
+      // the pack commit — without a lineage cut each consumer re-derives
+      // the whole gate chain. The n_tok DENOMINATION is whichever
+      // tokenizer family `vocab` is — every downstream consumer (pack
+      // budgets, cards, health ticks) is denomination-agnostic, it just
+      // sums n_tok.
+      // Checkpoint, NOT persist (r17, probe-measured): with the
+      // steady-state semantic gate, novel's plan READS the ANN lists
+      // table, and the ann-append step below refreshes that table —
+      // which invalidates any persisted plan referencing it, so the
+      // pack-commit (and every later consumer) silently re-derived the
+      // ENTIRE gate chain (52 jobs, ~13.5 s of a 12 s tick at sf0.001;
+      // the bootstrap path never hit this because its in-batch gate
+      // reads no table). Checkpointing cuts the lineage to stored
+      // blocks the refresh cannot invalidate. Lazy: the land below is
+      // the first action and materializes it. An execution hint only:
+      // a crash replay recomputes the identical frame from unchanged
+      // state; local-checkpoint blocks are freed by the ContextCleaner
+      // when the checkpointed RDD goes out of scope. Durability is
+      // `checkpointDir`'s choice ([[Stages]]); the checkpoint-dir
+      // ownership discipline is DedupOps.materialize's contract.
+      // (labeled: under AQE, even the lazy checkpoint materializes every
+      // intermediate exchange of the chain at this call — these are the
+      // tick's heaviest jobs)
+      val novel = labeled("gate chain checkpoint")(
+        cut(gatedNovel.withColumn("n_tok", vocab.count(text))))
       val batchId = day.toString
       val packed = labeled("pack assign")(
         cp.assign(novel, langCol, idCol, "n_tok", batchId))
         .withColumn("ingest_day", lit(day))
-      // the land MATERIALIZES the assigned frame (CorpusPack's
-      // materialize-then-commit contract) and is itself idempotent: the
-      // dynamic overwrite replaces exactly this day's partition, and an
-      // empty frame touches no partition at all
-      guard(lock)
-      labeled("gates+dedup+land")(lake.overwritePartitions(
-        packed.select(col(idCol), col(langCol), col("n_tok"),
-          col("pack_id"), col("ingest_day")),
-        out, partitionBy = Seq("ingest_day")))
-      val landed = labeled("landed count")(lake.read(out)
-        .filter(col("ingest_day") === lit(day)).count())
-      ann.foreach { case (idx, embedCol) =>
-        guard(lock)
-        labeled("ann index") {
-          val vecs = novel.select(col(idCol), col(embedCol))
-          if (!idx.exists) {
+      // The commit sequence. Its step ORDER is the crash-idempotence
+      // invariant (see the object Scaladoc): land → ann index → pack →
+      // exact → near-dup → lines. The loop below re-asserts the lock and
+      // labels every entry.
+      //  - The land MATERIALIZES the assigned frame (CorpusPack's
+      //    materialize-then-commit contract) and is itself idempotent:
+      //    the dynamic overwrite replaces exactly this day's partition,
+      //    and an empty frame touches no partition at all.
+      //  - Seen-set contract: the commits take the ADMITTED frame
+      //    (post-quality-gate), not the raw batch. Committing pre-gate
+      //    docs would mean a later, better gate model finds recurring
+      //    text it now admits already exact-seen against junk history —
+      //    silently starved forever. Gate-dropped docs re-arriving
+      //    re-score the same (the model is a constant), so excluding
+      //    them loses no dedup power; replay recomputes the identical
+      //    admitted frame from unchanged state.
+      //  - The seen-set commits stay SEQUENTIAL. They are mutually
+      //    independent (each writes its own state table; every gate read
+      //    is windowed strictly before `day`, so any committed subset
+      //    replays clean), but overlapping them measured a REGRESSION on
+      //    local[32] both times it was tried: 12.2 s sequential vs
+      //    66.7 s with a 3-thread pool (r17), and at thread-cap 2 a tick
+      //    wall of 9.76 s sequential vs 15.74 s overlapped, job-time sum
+      //    8.96 → 17.69 s at sf0.1 (r18). Concurrent commits double the
+      //    per-core load exactly when each job wants the cores, and the
+      //    bucketed insertIntos contend on the catalog. The three commits
+      //    total ~1.3 s of a ~9.8 s tick, so the overlap's ceiling is
+      //    under 0.7 s. Re-evaluate only on a real cluster where commit
+      //    tails idle hundreds of executors.
+      def step(label: String, on: Boolean = true)(commit: => Any) =
+        Option.when(on)(label -> (() => commit))
+      Seq(
+        step("gates+dedup+land")(lake.overwritePartitions(
+          packed.select(col(idCol), col(langCol), col("n_tok"),
+            col("pack_id"), col("ingest_day")),
+          out, partitionBy = Seq("ingest_day"))),
+        step("ann index", ann.nonEmpty)(ann.foreach { a =>
+          val vecs = novel.select(col(idCol), col(a.embedCol))
+          if (!a.index.exists) {
             val n = vecs.count()
             if (n > 0)
-              idx.buildDated(vecs, idCol, embedCol,
+              a.index.buildDated(vecs, idCol, a.embedCol,
                 k = math.max(4, (n / 500L).toInt), day)
-          } else idx.appendDated(vecs, idCol, embedCol, day)
-        }
-      }
-      guard(lock)
-      labeled("pack commit")(
-        cp.commit(novel, langCol, idCol, "n_tok", batchId))
-      // seen-set contract: the ADMITTED frame (post-quality-gate), not
-      // the raw batch. Committing pre-gate docs would mean a later,
-      // better gate model finds recurring text it now admits already
-      // exact-seen against junk history — silently starved forever.
-      // Gate-dropped docs re-arriving re-score the same (the model is
-      // a constant), so excluding them loses no dedup power; replay
-      // recomputes the identical admitted frame from unchanged state.
-      // The three seen-set commits stay SEQUENTIAL. They are mutually
-      // independent (each writes its own state table; every gate read
-      // is windowed strictly before `day`, so any committed subset
-      // replays clean), and guide §2.6 suggests overlapping them — but
-      // the measured result on local[32] was a 5× REGRESSION (probe:
-      // 12.2 s sequential vs 66.7 s with a 3-thread pool; the three
-      // bucketed insertInto writes contend on the catalog and the
-      // concurrent gate-chain scans triple the per-core load exactly
-      // when each job needs the cores). Re-evaluate on a real cluster
-      // where the anti-join tails leave executors idle; here the
-      // overlap costs more than the tails it fills.
-      // The three seen-set commits stay SEQUENTIAL — re-measured at
-      // thread-cap 2 this round (r18, VERDICT r17 #8): tick wall
-      // 9.76 s sequential vs 15.74 s overlapped, job-time SUM 8.96 →
-      // 17.69 s at sf0.1 — even two concurrent commits double the
-      // per-core load exactly when each job wants the cores, and the
-      // bucketed insertIntos contend on the catalog (same shape as
-      // r17's 3-thread 5× regression). Post-r17-checkpoint the three
-      // commits total ~1.3 s of a ~9.8 s tick anyway — the overlap's
-      // theoretical ceiling is under 0.7 s. Re-evaluate only on a
-      // real cluster where commit tails idle hundreds of executors.
-      guard(lock)
-      labeled("exact commit")(
-        dd.commitExactDated(admitted, textCol, day, minDate))
-      guard(lock)
-      labeled("neardup commit")(nearDupVerify match {
-        case Some(_) =>
-          dd.commitNearDupVerifiedDated(admitted, idCol, textCol, day, minDate)
-        case None =>
-          dd.commitNearDupDated(admitted, idCol, textCol, day, minDate)
-      })
-      if (lineScrub) {
-        guard(lock)
-        labeled("lines commit")(
+          } else a.index.appendDated(vecs, idCol, a.embedCol, day)
+        }),
+        step("pack commit")(
+          cp.commit(novel, langCol, idCol, "n_tok", batchId)),
+        step("exact commit")(
+          dd.commitExactDated(admitted, textCol, day, minDate)),
+        step("neardup commit")(
+          if (nearDupVerify.nonEmpty)
+            dd.commitNearDupVerifiedDated(admitted, idCol, textCol, day, minDate)
+          else dd.commitNearDupDated(admitted, idCol, textCol, day, minDate)),
+        step("lines commit", lineScrub)(
           dd.commitLinesDated(admitted, textCol, day, minDate))
+      ).flatten.foreach { case (label, commit) =>
+        guard(lock)
+        labeled(label)(commit())
       }
-      landed
+      // reads only `out`, which no commit after the land writes
+      labeled("landed count")(lake.read(out)
+        .filter(col("ingest_day") === lit(day)).count())
     } finally {
-      // novel is checkpointed (not persisted): its blocks are
-      // released by the ContextCleaner once the checkpointed RDD is
-      // unreachable — there is no cache entry to unpersist
-      decontamPersisted.foreach(_.unpersist(blocking = false))
-      semPersisted.foreach(_.unpersist(blocking = false))
+      // local-checkpoint blocks are released by the ContextCleaner once
+      // the checkpointed RDD is unreachable; what this call pinned is
+      // released here
+      pinned.foreach(_.unpersist(blocking = false))
     }
   }
 
@@ -790,16 +770,20 @@ object DailyIngest {
     "unigram" -> ((TokenizerSpec.Unigram(8192, maxPieceLen = 8), "vocab.tsv")),
     "wordpiece" -> ((TokenizerSpec.WordPiece(8192), "vocab.txt")))
 
-  /** CLI: DailyIngest <lakeRoot> <stateRoot> <inputParquet> <yyyy-mm-dd>
-    * [ttlDays=30] [budgetTokens=2048] [embedCol] [semanticThreshold]
-    * [vocab] [pqRefine] [scrub-lines].
-    * The literal `scrub-lines` in position 7 adds the C4 line-level
-    * rewrite stage after the doc gates ([[CorpusDedup.scrubLinesSince]],
-    * TTL-dated, replay-exact via beforeDate = day).
+  val Usage: String = "usage: graft.tools.DailyIngest <lakeRoot> <stateRoot> " +
+    "<inputParquet> <yyyy-mm-dd> [ttlDays=30] [budgetTokens=2048] [embedCol] " +
+    "[semanticThreshold] [vocab] [pqRefine] [scrub-lines] [decontam]"
+
+  /** [[main]]'s command line ([[Usage]]), positional.
     * Input schema: doc_id, text, lang (+ the embedding column when the
     * ANN leg is enabled). Passing `embedCol` turns on the retrieval
-    * index and its maintenance tick; adding `semanticThreshold` also
-    * gates the batch semantically against it.
+    * index and its maintenance tick; adding `semanticThreshold` (and
+    * `pqRefine`) also gates the batch semantically against it. The
+    * literal `scrub-lines` in position 7 adds the C4 line-level rewrite
+    * stage after the doc gates ([[CorpusDedup.scrubLinesSince]],
+    * TTL-dated, replay-exact via beforeDate = day); the literal
+    * `decontam` in position 8 scrubs registered-benchmark spans
+    * ([[CorpusDedup.commitTestShingles]] registers sets out-of-band).
     *
     * `vocab` selects the tokenizer behind every `n_tok` the ingest
     * writes (pack budgets, card counts):
@@ -816,19 +800,51 @@ object DailyIngest {
     *     file);
     *   - `wordpiece` / `wordpiece:<path>`: the WordPiece family
     *     (managed under `<stateRoot>/wordpiece`, or an external BERT
-    *     one-piece-per-line vocab.txt). */
+    *     one-piece-per-line vocab.txt).
+    *
+    * The index and the tokenizer need the session (and the tokenizer
+    * the run lock), so [[stages]] takes them once they exist. */
+  final case class Cli(lakeRoot: String, stateRoot: String, input: String,
+                       day: Date, ttlDays: Int = 30, budget: Long = 2048L,
+                       embedCol: Option[String] = None,
+                       semantic: Option[Stages.Semantic] = None,
+                       vocab: Option[String] = None,
+                       lineScrub: Boolean = false, decontam: Boolean = false) {
+    def stages(index: => AnnIndex, tokenizer: Tokenizer): Stages =
+      Stages(ann = embedCol.map(Stages.Ann(index, _, semantic)),
+        vocab = tokenizer, lineScrub = lineScrub, decontam = decontam)
+  }
+
+  /** The command line as [[Cli]]; None when it is malformed: fewer than
+    * four or more than twelve arguments, a day that is not yyyy-mm-dd,
+    * or a number that does not parse. */
+  def parse(args: Seq[String]): Option[Cli] = args match {
+    case Seq(lakeRoot, stateRoot, input, dayStr, rest @ _*)
+        if rest.length <= 8 =>
+      // an absent position reads None; a malformed one fails the parse
+      def num[A](i: Int, read: String => Option[A]): Option[Option[A]] =
+        rest.lift(i).fold[Option[Option[A]]](Some(None))(read(_).map(Some(_)))
+      for {
+        day <- scala.util.Try(Date.valueOf(dayStr)).toOption
+        ttlDays <- num(0, _.toIntOption)
+        budget <- num(1, _.toLongOption)
+        threshold <- num(3, _.toDoubleOption)
+        pqRefine <- num(5, _.toIntOption)
+      } yield Cli(lakeRoot, stateRoot, input, day, ttlDays.getOrElse(30),
+        budget.getOrElse(2048L), embedCol = rest.lift(2),
+        semantic = threshold.map(Stages.Semantic(_, pqRefine)),
+        vocab = rest.lift(4),
+        lineScrub = rest.lift(6).contains("scrub-lines"),
+        decontam = rest.lift(7).contains("decontam"))
+    case _ => None
+  }
+
   def main(args: Array[String]): Unit = {
-    val Array(lakeRoot, stateRoot, input, dayStr, rest @ _*) = args
-    val ttlDays = rest.headOption.map(_.toInt).getOrElse(30)
-    val budget = rest.lift(1).map(_.toLong).getOrElse(2048L)
-    val embedCol = rest.lift(2)
-    val semTh = rest.lift(3).map(_.toDouble)
-    val vocabArg = rest.lift(4)
-    val pqRefine = rest.lift(5).map(_.toInt)
-    val lineScrub = rest.lift(6).contains("scrub-lines")
-    // literal `decontam` in position 8: scrub registered-benchmark
-    // spans (CorpusDedup.commitTestShingles registers sets out-of-band)
-    val decontam = rest.lift(7).contains("decontam")
+    val cli = parse(args.toSeq).getOrElse {
+      System.err.println(Usage)
+      sys.exit(2)
+    }
+    import cli.{day, stateRoot, ttlDays}
     // The dedup seen-sets and ANN lists are CATALOG tables (bucket specs
     // live in the metastore); with Spark's default in-memory catalog a
     // new JVM forgets them and every day-2 run re-admits the whole
@@ -845,17 +861,14 @@ object DailyIngest {
         s"jdbc:derby:;databaseName=$stateRoot/metastore_db;create=true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val lake = new Lake(spark, lakeRoot)
+    val lake = new Lake(spark, cli.lakeRoot)
     val state = new StateStore(spark, stateRoot)
     val dd = new CorpusDedup(spark, lake, "crawl")
-    val cp = new CorpusPack(spark, state, "crawl", budgetTokens = budget)
-    val day = Date.valueOf(dayStr)
-    val ann = embedCol.map(c =>
-      (new AnnIndex(spark, lake, "crawl_ann"), c))
+    val cp = new CorpusPack(spark, state, "crawl", budgetTokens = cli.budget)
     val runLock = new RunLock(spark, stateRoot)
     val lockRef: LockRef = Some((runLock, "crawl_daily_ingest"))
     val done = runLock.withLock("crawl_daily_ingest") {
-      val docs = spark.read.parquet(input)
+      val docs = spark.read.parquet(cli.input)
       // vocab resolution runs INSIDE the lock: day-one training and the
       // vocab-file write are state mutations like any other
       def managed(family: String, path: Option[String]): Tokenizer = {
@@ -863,7 +876,7 @@ object DailyIngest {
         ensureVocab(spark, docs, "text",
           path.getOrElse(s"$stateRoot/$family/$file"), spec)
       }
-      val vocab = vocabArg match {
+      val vocab = cli.vocab match {
         case Some("builtin") => BpeVocab.default
         case Some(f @ ("unigram" | "wordpiece")) => managed(f, None)
         case Some(v) if v.startsWith("unigram:") || v.startsWith("wordpiece:") =>
@@ -872,11 +885,10 @@ object DailyIngest {
         case path => managed("bpe", path)
       }
       println(s"[daily-ingest] n_tok denomination: ${vocab.family}")
+      val stages = cli.stages(new AnnIndex(spark, lake, "crawl_ann"), vocab)
+      val idx = stages.ann.map(_.index)
       val n = run(lake, dd, cp, TableRef("prod", "crawl", "packed"),
-        docs, "doc_id", "text", "lang", day, ttlDays,
-        ann = ann, semanticThreshold = semTh, vocab = vocab,
-        pqRefine = pqRefine, lineScrub = lineScrub, decontam = decontam,
-        lock = lockRef)
+        docs, "doc_id", "text", "lang", day, ttlDays, stages, lock = lockRef)
       // health watch: drift on the RAW feed (pre-dedup, keyed by lang;
       // NaN = a language vanished = maximal drift) plus generic quality
       // checks on the landed partition, routed through the alert sink
@@ -886,9 +898,9 @@ object DailyIngest {
         "doc_id", "lang", day, new graft.ops.ConsoleAlerter)
       if (nAlerts == 0)
         println(s"[daily-ingest] health: drift + quality clean vs previous day")
-      expire(dd, day, ttlDays, ann = ann.map(_._1), lock = lockRef)
-      ann.foreach { case (idx, _) =>
-        val m = maintain(idx, day, lock = lockRef)
+      expire(dd, day, ttlDays, ann = idx, lock = lockRef)
+      idx.foreach { i =>
+        val m = maintain(i, day, lock = lockRef)
         println(s"[daily-ingest] ann maintenance: $m")
       }
       println(s"[daily-ingest] day=$day landed=$n")

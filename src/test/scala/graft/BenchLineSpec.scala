@@ -33,6 +33,16 @@ class BenchLineSpec extends AnyFunSuite {
         "adding more queries")
   }
 
+  test("BenchAb's query filter keeps exact names only") {
+    import graft.tools.BenchAb.queryFilter
+    def kept(arg: Option[String]) = Bench.headline.filter(queryFilter(arg))
+    assert(kept(Some("q1_pricing_summary")) === Seq("q1_pricing_summary"))
+    assert(kept(Some("q1")).isEmpty, "a name prefix must not match")
+    assert(kept(Some("q10_state_join, q1_pricing_summary")) ===
+      Seq("q1_pricing_summary", "q10_state_join"))
+    assert(kept(None) === Bench.headline)
+  }
+
   test("SPARK_GRAFT_CPUS: default when unset, a positive integer, else a named error") {
     assert(SparkEntry.cpus(32, Map.empty) === 32)
     assert(SparkEntry.cpus(32, Map("SPARK_GRAFT_CPUS" -> " 4 ")) === 4)

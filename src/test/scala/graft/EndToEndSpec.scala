@@ -7,6 +7,7 @@ import graft.lake.{CaptureLog, Lake, TableRef}
 import graft.materialize.{Model, ModelRunner}
 import graft.quality.{Check, Quality}
 import graft.state.StateStore
+import graft.tools.DailyIngest.Stages
 import graft.streaming.{Capture, CaptureConfig, Recapture}
 import org.apache.spark.sql.functions._
 
@@ -549,7 +550,7 @@ class EndToEndSpec extends SparkSpec {
     def ingest(docs: org.apache.spark.sql.DataFrame, d: String): Long =
       DailyIngest.run(lake, dd, cp, out, withCols(docs),
         "doc_id", "text", "lang", day(d), ttlDays = 30,
-        ann = Some((idx, "emb")))
+        Stages(ann = Some(Stages.Ann(idx, "emb"))))
 
     // every fixture doc is 8 BPE tokens (4 letter pieces × 2 unmerged
     // chars — the committed vocab has no doubled-letter merges), so
@@ -654,7 +655,21 @@ class EndToEndSpec extends SparkSpec {
     val day2 = Seq(
       (4L, "ee ff gg hh"), (5L, "ii jj kk ll"), (6L, "mm nn oo pp")
     ).toDF("doc_id", "text").withColumn("lang", lit("en"))
-    def runBoth(ckpt: Option[String], tag: String): Map[Long, Long] = {
+    // a pass-through UDF on the input counts how often the tick
+    // evaluates it: a lazy reliable checkpoint of an uncached frame
+    // recomputes the lineage in its file-writing job. The input is
+    // RDD-backed so the optimizer cannot fold the UDF into a local
+    // relation on the driver, and it has run once before the tick, as a
+    // caller's frame often has (its plan then predates any cache entry).
+    val evals = spark.sparkContext.longAccumulator("rck_evals")
+    val pass = udf { (t: String) => evals.add(1L); t }
+    def fed(docs: org.apache.spark.sql.DataFrame) = {
+      val f = spark.createDataFrame(docs.rdd, docs.schema)
+        .withColumn("text", pass($"text"))
+      f.collect()
+      f
+    }
+    def runBoth(ckpt: Option[String], tag: String): (Map[Long, Long], Long) = {
       val lake = new Lake(spark, tmpDir(s"rck_lake_$tag"))
       val dd = new CorpusDedup(spark, lake, s"rck_$tag", numBuckets = 4)
       val cp = new CorpusPack(spark,
@@ -662,17 +677,24 @@ class EndToEndSpec extends SparkSpec {
         budgetTokens = 16L)
       val out = TableRef("prod", s"rck_$tag", "packed")
       def ingest(docs: org.apache.spark.sql.DataFrame, d: String): Long =
-        DailyIngest.run(lake, dd, cp, out, docs, "doc_id", "text", "lang",
-          day(d), ttlDays = 30, checkpointDir = ckpt)
+        DailyIngest.run(lake, dd, cp, out, fed(docs),
+          "doc_id", "text", "lang", day(d), ttlDays = 30,
+          Stages(checkpointDir = ckpt))
+      val before = evals.value
       assert(ingest(day1, "2024-03-01") === 2)
       assert(ingest(day2, "2024-03-02") === 2)
-      lake.read(out).select($"doc_id", $"pack_id")
-        .as[(Long, Long)].collect().toMap
+      val n = evals.value - before
+      (lake.read(out).select($"doc_id", $"pack_id")
+        .as[(Long, Long)].collect().toMap, n)
     }
     val ckptDir = tmpDir("rck_ckpt")
-    val reliable = runBoth(Some(ckptDir), "rel")
-    val local = runBoth(None, "loc")
+    val (reliable, reliableEvals) = runBoth(Some(ckptDir), "rel")
+    val (local, localEvals) = runBoth(None, "loc")
     assert(reliable === local)
+    assert(localEvals > 0)
+    assert(reliableEvals <= localEvals,
+      s"reliable mode evaluated the input $reliableEvals times vs " +
+        s"$localEvals under localCheckpoint: its checkpoint recomputed the gates")
     assert(reliable === Map(1L -> 0L, 2L -> 0L, 5L -> 1L, 6L -> 1L))
     // the reliable path actually WROTE checkpoint files to the dir
     def anyFiles(f: java.io.File): Boolean = {
@@ -681,6 +703,55 @@ class EndToEndSpec extends SparkSpec {
     }
     assert(anyFiles(new java.io.File(ckptDir)),
       "reliable mode left no checkpoint files under the configured dir")
+  }
+
+  test("every job of a steady-state ingest tick carries the tick's stage label") {
+    import graft.lake.{AnnIndex, CorpusDedup, CorpusPack}
+    import graft.tools.DailyIngest
+    // a tick with the steady-state semantic gate (the index already
+    // holds a day of history), decontam and the line scrub: the stages
+    // whose construction runs jobs of its own
+    val lake = new Lake(spark, tmpDir("lbl_lake"))
+    val dd = new CorpusDedup(spark, lake, "lbl_crawl", numBuckets = 4)
+    val cp = new CorpusPack(spark, new StateStore(spark, tmpDir("lbl_state")),
+      "lbl_crawl", budgetTokens = 1024L)
+    val idx = new AnnIndex(spark, lake, "lbl_ann", numBuckets = 4)
+    val out = TableRef("prod", "lbl_crawl", "packed")
+    // history and batch vectors point into opposite half-spaces, so the
+    // gate probes the history without wiping the batch
+    def vec(id: org.apache.spark.sql.Column, z: Double) =
+      array(cos(id), sin(id), lit(z))
+    idx.buildDated(spark.range(40).select(($"id" + 1000L).as("doc_id"),
+      vec($"id" * 7, -1.0).as("emb")), "doc_id", "emb", k = 4,
+      java.sql.Date.valueOf("2024-03-01"))
+    dd.commitTestShingles(Seq("the benchmark question names three rivers")
+      .toDF("text"), "text", java.sql.Date.valueOf("2024-03-01"))
+    // the input carries a join of its own (as Bench.LlmTick's does), so
+    // the tick's first checkpoint materializes an exchange
+    val texts = spark.range(1, 13).select($"id".as("doc_id"),
+      concat(lit("document "), $"id", lit(" is about topic "), $"id" % 3,
+        lit(" and the benchmark question names three rivers")).as("text"),
+      lit("en").as("lang"))
+    val docs = texts.join(spark.range(1, 13)
+      .select($"id".as("doc_id"), vec($"id", 1.0).as("emb")), "doc_id")
+    val d = java.sql.Date.valueOf("2024-03-02")
+    try {
+      var landed = 0L
+      val jobs = jobsDuring {
+        landed = DailyIngest.run(lake, dd, cp, out, docs,
+          "doc_id", "text", "lang", d, ttlDays = 30,
+          Stages(ann = Some(Stages.Ann(idx, "emb", Some(Stages.Semantic(0.95)))),
+            decontam = true, lineScrub = true))
+      }
+      assert(landed > 0)
+      val labels = jobs.map(p =>
+        Option(p.getProperty("spark.job.description")).getOrElse("<none>"))
+      assert(labels.nonEmpty)
+      val unlabeled = labels.filterNot(_.startsWith(s"ingest $d: "))
+      assert(unlabeled.isEmpty,
+        s"${unlabeled.size} of ${labels.size} jobs ran without the tick's " +
+          s"stage label: ${unlabeled.mkString(", ")}")
+    } finally idx.unpinBucketedScan()
   }
 
   test("daily ingest with line scrub: historical lines strip, crash replay exact") {
@@ -697,7 +768,7 @@ class EndToEndSpec extends SparkSpec {
     def ingest(docs: org.apache.spark.sql.DataFrame, d: String): Long =
       DailyIngest.run(lake, dd, cp, out,
         docs.withColumn("lang", lit("en")), "doc_id", "text", "lang",
-        day(d), ttlDays = 30, lineScrub = true)
+        day(d), ttlDays = 30, Stages(lineScrub = true))
 
     // day 1: two docs, four distinct 10-token lines
     val day1 = Seq(
@@ -791,7 +862,7 @@ class EndToEndSpec extends SparkSpec {
     def ingest(docs: org.apache.spark.sql.DataFrame, d: String): Long =
       DailyIngest.run(lake, dd, cp, out,
         docs.withColumn("lang", lit("en")), "doc_id", "text", "lang",
-        day(d), ttlDays = 30, decontam = true)
+        day(d), ttlDays = 30, Stages(decontam = true))
     def nTok(t: String): Long = Seq(t).toDF("t")
       .select(graft.functions.Bpe.bpeTokenCount($"t")).as[Long].head()
 
@@ -952,7 +1023,7 @@ class EndToEndSpec extends SparkSpec {
     def ingest(docs: org.apache.spark.sql.DataFrame, d: String): Long =
       DailyIngest.run(lake, dd, cp, out,
         docs.withColumn("lang", lit("en")), "doc_id", "text", "lang",
-        day(d), ttlDays = 30, qualityGate = Some(model))
+        day(d), ttlDays = 30, Stages(quality = Some(Stages.Quality(model))))
 
     // day 1: two curated-like docs, two junk docs — only quality lands
     val day1 = Seq(
@@ -989,7 +1060,7 @@ class EndToEndSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     assert(DailyIngest.run(lake, dd, cp, out,
       day3.withColumn("lang", lit("en")), "doc_id", "text", "lang",
-      day("2024-03-03"), ttlDays = 30, qualityGate = None) === 1,
+      day("2024-03-03"), ttlDays = 30, Stages(quality = None)) === 1,
       "text rejected by an old gate model must not be starved by junk seen-history")
   }
 
@@ -1006,7 +1077,7 @@ class EndToEndSpec extends SparkSpec {
       DailyIngest.run(lake, dd, cp, out,
         docs.withColumn("lang", lit("en")), "doc_id", "text", "lang",
         java.sql.Date.valueOf(d), ttlDays = 30,
-        nearDupVerify = Some(0.75))
+        Stages(nearDupVerify = Some(0.75)))
     val text = "the quick brown fox jumps over the lazy dog and runs away fast"
     assert(ingest(Seq((1L, text)).toDF("doc_id", "text"), "2024-03-01") === 1)
     // if the commit wrote the CANDIDATE table (a gate/commit mismatch),
@@ -1081,7 +1152,7 @@ class EndToEndSpec extends SparkSpec {
     val out = TableRef("prod", "crawl_e2e", "packed")
     val landed = DailyIngest.run(lake, dd, cp, out, docs,
       "doc_id", "text", "lang", java.sql.Date.valueOf("2024-03-01"),
-      ttlDays = 30, qualityGate = Some(model))
+      ttlDays = 30, Stages(quality = Some(Stages.Quality(model))))
     // 4 crawled pages -> 3 after URL dedup -> 2 after the quality gate
     assert(landed === 2, "junk page must fall to the trained gate")
     assert(lake.read(out).count() === 2)
@@ -1090,7 +1161,8 @@ class EndToEndSpec extends SparkSpec {
     // all-rejected day is a clean no-op land, not a failure
     val landedStrict = DailyIngest.run(lake, dd, cp, out, docs,
       "doc_id", "text", "lang", java.sql.Date.valueOf("2024-03-02"),
-      ttlDays = 30, qualityGate = Some(model), qualityThreshold = 1e9)
+      ttlDays = 30,
+      Stages(quality = Some(Stages.Quality(model, threshold = 1e9))))
     assert(landedStrict === 0, "a prohibitive calibrated cut admits nothing")
     assert(lake.read(out).count() === 2)
   }
@@ -1136,10 +1208,10 @@ class EndToEndSpec extends SparkSpec {
     def day(d: String) = java.sql.Date.valueOf(d)
     def tick(d: String) = CrawlIngest.run(spark, lake, state, dd, cp, out,
       Seq(crawl), "inc_crawl", day(d), ttlDays = 30,
-      qualityGate = Some(model),
       // the word-lexicon gate rides the same tick (the spam page dies
       // here before the trained gate even scores it)
-      lexicon = Some(Seq("casino")))
+      CrawlIngest.Head(lexicon = Some(Seq("casino"))),
+      Stages(quality = Some(Stages.Quality(model))))
 
     // day 1: both segments pinned and ingested; junk falls to the gate
     val r1 = tick("2024-03-01")
@@ -1294,7 +1366,7 @@ class EndToEndSpec extends SparkSpec {
     // dies scan-side, the 40-distinct-word page lands
     val r1 = CrawlIngest.run(spark, lake, state, dd, cp, out,
       Seq(crawl), "gate_crawl", day("2024-03-01"), ttlDays = 30,
-      repetitionRules = true)
+      stages = Stages(repetitionRules = true))
     assert(r1.landed === 1, "the duplicated-half page must fall to the gate")
     assert(lake.read(out).count() === 1)
 
@@ -1308,7 +1380,7 @@ class EndToEndSpec extends SparkSpec {
       rec("http://good.org/3", s"<p>${words("h", 40)}</p>"))
     val r2 = CrawlIngest.run(spark, lake, state, dd, cp, out,
       Seq(crawl), "gate_crawl", day("2024-03-02"), ttlDays = 30,
-      qualityGate = Some(model), qualityThreshold = 1e9)
+      stages = Stages(quality = Some(Stages.Quality(model, threshold = 1e9))))
     assert(r2.ingested.nonEmpty && r2.landed === 0,
       "a prohibitive calibrated cut must admit nothing through the tick")
     assert(lake.read(out).count() === 1)
@@ -1335,7 +1407,7 @@ class EndToEndSpec extends SparkSpec {
       .withColumn("lang", lit("en"))
     val landed = DailyIngest.run(lake, dd, cp, out, docs,
       "doc_id", "text", "lang", day("2024-05-01"), ttlDays = 30,
-      gopherRules = Some((10L, 100000L)))
+      Stages(gopherRules = Some((10L, 100000L))))
     assert(landed === 1, "the rule gate must drop exactly the junk doc")
     // admitted-only commit contract: the rejected text never entered
     // the seen-sets, so the SAME text lands later when the policy
@@ -1369,7 +1441,7 @@ class EndToEndSpec extends SparkSpec {
       .toDF("doc_id", "text").withColumn("lang", lit("code"))
     val landed = DailyIngest.run(lake, dd, cp, out, docs,
       "doc_id", "text", "lang", java.sql.Date.valueOf("2024-06-01"),
-      ttlDays = 30, codeRules = true)
+      ttlDays = 30, Stages(codeRules = true))
     assert(landed === 1, "the code gate must drop the minified and art docs")
     assert(lake.read(out).select($"doc_id").as[Long].collect().toSeq
       === Seq(1L))
@@ -1401,7 +1473,7 @@ class EndToEndSpec extends SparkSpec {
       .toDF("doc_id", "text").withColumn("lang", lit("code"))
     val landed = DailyIngest.run(lake, dd, cp, out, docs,
       "doc_id", "text", "lang", java.sql.Date.valueOf("2024-06-01"),
-      ttlDays = 30, permissiveOnly = true)
+      ttlDays = 30, Stages(license = Some(Stages.License())))
     assert(landed === 1, "only the MIT-tagged file may land")
     assert(lake.read(out).select($"doc_id").as[Long].collect().toSeq
       === Seq(1L))
@@ -1444,8 +1516,8 @@ class EndToEndSpec extends SparkSpec {
       .withColumn("lang", lit("code"))
     val landed = DailyIngest.run(lake, dd, cp, out, docs,
       "doc_id", "text", "lang", java.sql.Date.valueOf("2024-06-03"),
-      ttlDays = 30, permissiveOnly = true,
-      repoLicense = Some(("repo", "path")))
+      ttlDays = 30,
+      Stages(license = Some(Stages.License(repo = Some(("repo", "path"))))))
     assert(landed === 3, "MIT blob + inheriting file + override file")
     assert(lake.read(out).select($"doc_id").as[Long].collect().sorted.toSeq
       === Seq(1L, 2L, 5L))
@@ -1581,8 +1653,8 @@ class EndToEndSpec extends SparkSpec {
     def ingest(docs: org.apache.spark.sql.DataFrame, d: String): Long =
       DailyIngest.run(lake, dd, cp, out, docs.withColumn("lang", lit("en")),
         "doc_id", "text", "lang", day(d), ttlDays = 30,
-        ann = Some((idx, "emb")), semanticThreshold = Some(0.95),
-        pqRefine = Some(50))
+        Stages(ann = Some(Stages.Ann(idx, "emb",
+          Some(Stages.Semantic(0.95, pqRefine = Some(50)))))))
 
     // all texts distinct (the semantic gate must do the dropping, not
     // the exact/near-dup gates); docs 1/2 are embedding twins
@@ -1686,7 +1758,7 @@ class EndToEndSpec extends SparkSpec {
     // ...crash here: index EXISTS but nothing is committed. Full rerun:
     val landed = DailyIngest.run(lake, dd, cp, out, day1,
       "doc_id", "text", "lang", d1, ttlDays = 30,
-      ann = Some((idx, "emb")), semanticThreshold = Some(0.9))
+      Stages(ann = Some(Stages.Ann(idx, "emb", Some(Stages.Semantic(0.9))))))
     assert(landed === 1)
     val rows = lake.read(out).select($"doc_id", $"pack_id")
       .as[(Long, Long)].collect().toMap
@@ -1718,7 +1790,7 @@ class EndToEndSpec extends SparkSpec {
     def ingest(docs: org.apache.spark.sql.DataFrame, d: String): Long =
       DailyIngest.run(lake, dd, cp, out, docs.withColumn("lang", lit("en")),
         "doc_id", "text", "lang", day(d), ttlDays = 30,
-        ann = Some((idx, "emb")))
+        Stages(ann = Some(Stages.Ann(idx, "emb"))))
 
     // day 1: two stable regions — the quantizer trains on this shape
     val day1 = ((0 until 30).map(i => (i.toLong, s"stable alpha doc $i", pt(i, 10.0, 0.0))) ++
@@ -1809,7 +1881,7 @@ class EndToEndSpec extends SparkSpec {
         .mkString(" "))
     }.toDF("doc_id", "text").withColumn("lang", lit("en"))
     val landed = DailyIngest.run(lake, dd, cp, out, docs,
-      "doc_id", "text", "lang", d1, ttlDays = 30, vocab = vocab32k)
+      "doc_id", "text", "lang", d1, ttlDays = 30, Stages(vocab = vocab32k))
     assert(landed === 6)
     // n_tok in the landed table is the 32k denomination — equal to the
     // 32k encoder run directly, and strictly below the builtin count
@@ -1824,7 +1896,7 @@ class EndToEndSpec extends SparkSpec {
       "32k vocab did not compress below the builtin denomination")
     // replay stability holds under the realistic vocab too
     assert(DailyIngest.run(lake, dd, cp, out, docs,
-      "doc_id", "text", "lang", d1, ttlDays = 30, vocab = vocab32k) === 6)
+      "doc_id", "text", "lang", d1, ttlDays = 30, Stages(vocab = vocab32k)) === 6)
     assert(lake.read(out).count() === 6)
   }
 
@@ -2002,10 +2074,10 @@ class EndToEndSpec extends SparkSpec {
       DailyIngest.run(lake, dd, cp, out,
         docs.withColumn("lang", lit("en")), "doc_id", "text", "lang",
         day(d), ttlDays = 30,
-        gopherRules = Some((5L, 100000L)), qualityGate = Some(model),
-        nearDupVerify = Some(0.75), lineScrub = true, decontam = true,
-        lock = Some((lock, "max_key")), vocab = uni,
-        repetitionRules = true)
+        Stages(gopherRules = Some((5L, 100000L)), repetitionRules = true,
+          quality = Some(Stages.Quality(model)), nearDupVerify = Some(0.75),
+          decontam = true, lineScrub = true, vocab = uni),
+        lock = Some((lock, "max_key")))
 
     // day 1: doc 1 clean; doc 2 junk (quality gate); doc 3 too short
     // (gopher quality); doc 4 carries a benchmark trigram — its span
@@ -2078,7 +2150,7 @@ class EndToEndSpec extends SparkSpec {
     val v = UnigramVocab.default
     val landed = DailyIngest.run(lake, dd, cp, out, docs,
       "doc_id", "text", "lang", java.sql.Date.valueOf("2024-03-01"),
-      ttlDays = 30, vocab = v)
+      ttlDays = 30, Stages(vocab = v))
     assert(landed === 2)
     val want = docs.select($"doc_id",
         Unigram.unigramTokenCount($"text", v).as("n"))
@@ -2115,7 +2187,7 @@ class EndToEndSpec extends SparkSpec {
     val v = WordPieceVocab.default
     val landed = DailyIngest.run(lake, dd, cp, out, docs,
       "doc_id", "text", "lang", java.sql.Date.valueOf("2024-03-01"),
-      ttlDays = 30, vocab = v)
+      ttlDays = 30, Stages(vocab = v))
     assert(landed === 2)
     val want = docs.select($"doc_id",
         WordPiece.wordpieceTokenCount($"text", v).as("n"))

@@ -89,13 +89,16 @@ object BenchAb {
     classes
   }
 
+  /** The query filter of the optional second argument: comma-separated
+    * exact names (`q1_pricing_summary` keeps that query alone; a bare
+    * `q1` names none); no argument keeps every query. */
+  def queryFilter(arg: Option[String]): String => Boolean =
+    arg.fold((_: String) => true)(_.split(",").map(_.trim).toSet)
+
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: BenchAb <gitref> [comma,separated,query,filter]")
+    require(args.nonEmpty, "usage: BenchAb <gitref> [comma,separated,query,names]")
     val ref = args(0)
-    val filter: String => Boolean =
-      if (args.length > 1) { val want = args(1).split(",").map(_.trim).toSet
-        n => want.exists(n.contains)
-      } else _ => true
+    val filter = queryFilter(args.lift(1))
 
     // the repo root is wherever the JVM was launched from (sbt runs in
     // the project dir) — walk up to the .git marker rather than
