@@ -1,9 +1,6 @@
 package graft.lake
 
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.LocalTableScanExec
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
 /** The three-zone lake and its writers (SURVEY §1.1, §2.2 K1–K7).
@@ -22,17 +19,25 @@ import org.apache.spark.sql.functions._
   *
   * At cluster scale every write of a distributed frame is
   * partition-parallel; nothing funnels through the driver. The one
-  * exception is a frame whose rows already sit in driver memory (a
-  * fetched capture payload, a log row): it is written by a single task,
-  * with the same one-file-per-partition-dir layout (see `aligned`).
+  * exception is a driver-held frame, whose rows already sit in driver
+  * memory (a fetched capture payload, a log row): its analyzed plan,
+  * optimized with no cache substitution, is a `LocalRelation` or a
+  * `Union` of them. A partitioned parquet `append` or
+  * `overwritePartitions` of a non-empty driver-held frame writes its
+  * files on the driver with Spark's own parquet writer and no Spark job
+  * ([[DriverWrite]]), in the layout and commit order of a Spark write:
+  * files staged under a hidden dir in the table root, then renamed in
+  * (an overwrite deletes each touched partition dir first; an append
+  * ends with `_SUCCESS`). Every other frame is a Spark write.
   *
   * Local-FS write rule: every path-addressed DataFrame write here goes
   * through `writer`, which selects [[NioLocalFileSystem]] for `file://`
   * paths, so a local lake sets file and directory permissions without
   * forking a `chmod` per file and directory (Hadoop without `libhadoop`
-  * forks one). The state root's snapshot write does the same. The
-  * options are per write, not process-wide, and other schemes ignore
-  * them. Not covered, and on no benchmarked path:
+  * forks one). Driver writes and the state root's snapshot write
+  * select it through the same options. The options are per write, not
+  * process-wide, and other schemes ignore them. Not covered, and on no
+  * benchmarked path:
   *  - `writeBucketed`: `saveAsTable` stores writer options as the
   *    catalog table's options, so a persistent metastore would hand a
   *    graft class name to every later reader of the table;
@@ -54,51 +59,37 @@ class Lake(spark: SparkSession, root: String) {
     df.write.options(NioLocalFileSystem.writerOptions)
 
   /** Cluster the frame by its partition columns before a partitioned
-    * write: without this every task holds a writer per touched partition
-    * dir (tasks × dirs small files — the classic 100 TB lake killer);
-    * with it each dir is written by exactly one task.
-    *
-    * A driver-held frame (see [[driverHeld]]) is coalesced to ONE task
-    * instead. The file writer sorts that task's rows by partition values
-    * and opens each dir once, so the layout is the same one file per dir,
-    * but the write is one job with no exchange rather than a shuffle-map
-    * job plus a write job. The rows are already on the driver, so no
-    * shuffle can spread them more cheaply than that. Every other frame
-    * (file scans, streaming micro-batches) keeps the hash shuffle. */
+    * Spark write: without this every task holds a writer per touched
+    * partition dir (tasks × dirs small files — the classic 100 TB lake
+    * killer); with it each dir is written by exactly one task. */
   private[graft] def aligned(df: DataFrame, partitionBy: Seq[String]): DataFrame =
-    if (partitionBy.isEmpty) df
-    else if (driverHeld(df)) df.coalesce(1)
-    else df.repartition(partitionBy.map(col): _*)
-
-  /** Every leaf of the frame's plan (cached fragments substituted) is a
-    * `LocalRelation`, or a cache whose physical plan reads only local
-    * table scans: all its rows are in driver memory. */
-  private def driverHeld(df: DataFrame): Boolean =
-    df.queryExecution.withCachedData.collectLeaves().forall {
-      case _: LocalRelation => true
-      case m: InMemoryRelation => m.cacheBuilder.cachedPlan.collectLeaves()
-        .forall(_.isInstanceOf[LocalTableScanExec])
-      case _ => false
-    }
+    if (partitionBy.isEmpty) df else df.repartition(partitionBy.map(col): _*)
 
   /** K1/K2/K3: partitioned append (CSV kept for raw-zone parity, parquet
-    * default). */
+    * default). A partitioned parquet append of a non-empty driver-held
+    * frame runs on the driver: each partition's file is renamed from the
+    * hidden staging dir into its dir, then `_SUCCESS` is written. */
   def append(df: DataFrame, ref: TableRef, partitionBy: Seq[String] = Nil,
-             format: String = "parquet"): Unit = {
-    val w = writer(aligned(df, partitionBy)).format(format).mode(SaveMode.Append)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .save(path(ref))
-  }
+             format: String = "parquet"): Unit =
+    if (format != "parquet" ||
+      !DriverWrite(spark, df, path(ref), partitionBy, dynamicOverwrite = false)) {
+      val w = writer(aligned(df, partitionBy)).format(format).mode(SaveMode.Append)
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+        .save(path(ref))
+    }
 
   /** K6: idempotent re-write of exactly the partitions present in `df`
-    * (dynamic partition overwrite — untouched partitions survive). */
+    * (dynamic partition overwrite — untouched partitions survive). A
+    * non-empty driver-held frame is written on the driver: per touched
+    * partition, the old dir is deleted and the staged dir renamed in. */
   def overwritePartitions(df: DataFrame, ref: TableRef,
                           partitionBy: Seq[String]): Unit =
-    writer(aligned(df, partitionBy)).format("parquet")
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionBy: _*)
-      .save(path(ref))
+    if (!DriverWrite(spark, df, path(ref), partitionBy, dynamicOverwrite = true))
+      writer(aligned(df, partitionBy)).format("parquet")
+        .mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partitionBy: _*)
+        .save(path(ref))
 
   /** K7: full table reset. */
   def overwriteAll(df: DataFrame, ref: TableRef,

@@ -35,10 +35,16 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * per-tick overwrite), and the `_logs` row is written LAST, only after
   * both have returned — so a success row always means both zones
   * landed, and a failure row is never written while a zone write is
-  * still running. Each write is one task that mostly waits on file
-  * creates and renames, so running them side by side (the multi-sink
-  * `foreachBatch` pattern of the same paper) uses cores that would
-  * otherwise sit idle.
+  * still running. Each write mostly waits on file creates and renames,
+  * so running them side by side (the multi-sink `foreachBatch` pattern
+  * of the same paper) uses cores that would otherwise sit idle.
+  *
+  * A driver-held batch (a fetched payload built from local rows, see
+  * [[graft.lake.Lake]]) stays driver-held through the stamp and treat
+  * projections, so both zone writes and the log row are written on the
+  * driver with no Spark job, each committed as Spark's own writer would
+  * (staged files, then renames). A scan-backed batch (a `foreachBatch`
+  * micro-batch over a file source) is a Spark write per zone.
   */
 final case class CaptureConfig(dataset: String, table: String,
                                pk: Seq[String], tsCol: String)
@@ -93,7 +99,8 @@ class Capture(spark: SparkSession, lake: Lake, log: CaptureLog,
     * ids) when it is created, so `cancelJobGroup` and
     * `StreamingQuery.stop` cancel the raw write too and its jobs are
     * attributed to the caller's. A pooled thread would carry whatever
-    * its first caller set.
+    * its first caller set. This job-group reason holds for Spark-path
+    * batches only: a driver-held batch's writes run no job.
     *
     * Errors: the failing write's error is rethrown; when both fail, the
     * calling thread's (treat or staging) error is rethrown with the raw

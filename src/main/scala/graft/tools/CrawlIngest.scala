@@ -182,20 +182,8 @@ object CrawlIngest {
     // report the landed count without re-reading a byte of WARC
     val todo = state.unprocessed(pKey, manifest.toDF("file"), "file")
       .as[String].collect()
-    if (todo.isEmpty) {
-      // only "output table not there yet" reads as landed=0 (a pinned
-      // day whose ingest admitted zero docs never created the path) —
-      // checked as PATH EXISTENCE, not a broad catch: an
-      // AnalysisException catch would also swallow schema drift
-      // (renamed/dropped ingest_day) and report 0 for a day that
-      // landed rows (review-found); any read failure on an existing
-      // path propagates
-      val outPath = new org.apache.hadoop.fs.Path(lake.path(out))
-      val ofs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      return CrawlResult(Nil,
-        if (!ofs.exists(outPath)) 0L
-        else lake.read(out).filter(col("ingest_day") === lit(day)).count())
-    }
+    if (todo.isEmpty)
+      return CrawlResult(Nil, DailyIngest.landedRows(spark, lake, out, day))
 
     try {
       val extracted =

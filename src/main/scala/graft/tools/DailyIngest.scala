@@ -224,6 +224,22 @@ object DailyIngest {
     final case class License(repo: Option[(String, String)] = None)
   }
 
+  /** Rows `out` holds for `day`. Until some day lands rows, `out` holds
+    * no partition dir (an empty overwrite may still create `out` itself)
+    * and a parquet read of it cannot infer a schema: that reads as 0.
+    * Checked on the listing, not by a catch, which would also swallow
+    * schema drift (a renamed or dropped `ingest_day`) and report 0 for a
+    * day that landed rows. */
+  private[tools] def landedRows(spark: SparkSession, lake: Lake, out: TableRef,
+                                day: Date): Long = {
+    val dir = new org.apache.hadoop.fs.Path(lake.path(out))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val noData = !fs.exists(dir) || fs.listStatus(dir).forall { st =>
+      st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith(".")
+    }
+    if (noData) 0L else lake.read(out).filter(col("ingest_day") === lit(day)).count()
+  }
+
   /** One day's ingest. Returns the number of rows present in the day's
     * partition after the ingest — STABLE under replay (a clean rerun
     * returns the same count it landed the first time, having re-landed
@@ -491,8 +507,7 @@ object DailyIngest {
         labeled(label)(commit())
       }
       // reads only `out`, which no commit after the land writes
-      labeled("landed count")(lake.read(out)
-        .filter(col("ingest_day") === lit(day)).count())
+      labeled("landed count")(landedRows(docs.sparkSession, lake, out, day))
     } finally {
       // local-checkpoint blocks are released by the ContextCleaner once
       // the checkpointed RDD is unreachable; what this call pinned is

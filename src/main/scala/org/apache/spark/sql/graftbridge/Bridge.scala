@@ -28,4 +28,9 @@ object Bridge {
 
   def logicalPlan(df: DataFrame): LogicalPlan =
     df.queryExecution.analyzed
+
+  /** The duplicate-column check a file write makes (`SchemaUtils` is
+    * private[spark]). */
+  def checkColumnNameDuplication(names: Seq[String], caseSensitive: Boolean): Unit =
+    org.apache.spark.sql.util.SchemaUtils.checkColumnNameDuplication(names, caseSensitive)
 }

@@ -1421,6 +1421,32 @@ class EndToEndSpec extends SparkSpec {
     assert(lake.read(out).count() === 2)
   }
 
+  test("daily ingest: a first day that gates out every doc lands 0") {
+    import graft.lake.{CorpusDedup, CorpusPack}
+    import graft.tools.DailyIngest
+    val lake = new Lake(spark, tmpDir("empty_lake"))
+    val dd = new CorpusDedup(spark, lake, "empty_ds", numBuckets = 4)
+    val cp = new CorpusPack(spark,
+      new StateStore(spark, tmpDir("empty_state")), "empty_ds",
+      budgetTokens = 1024L)
+    val out = TableRef("prod", "empty_ds", "packed")
+    def day(d: String) = java.sql.Date.valueOf(d)
+    def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+      .withColumn("lang", lit("en"))
+    // both docs fail the Gopher alpha-word and stopword rules
+    val junk = docs(1L -> "11 22 33 44 55 66 77 88 99 00 11 22",
+      2L -> "aa1 bb2 cc3 dd4 ee5 ff6 gg7 hh8 ii9 jj0")
+    val gopher = Stages(gopherRules = Some((10L, 100000L)))
+    assert(DailyIngest.run(lake, dd, cp, out, junk, "doc_id", "text", "lang",
+      day("2024-05-01"), ttlDays = 30, gopher) === 0)
+    // the next day lands into the same, so far unwritten, table
+    val good = docs(3L -> ("the growth of the region and the culture of " +
+      "the nation have been with it"))
+    assert(DailyIngest.run(lake, dd, cp, out, good, "doc_id", "text", "lang",
+      day("2024-05-02"), ttlDays = 30, gopher) === 1)
+    assert(lake.read(out).count() === 1)
+  }
+
   test("daily ingest with the Stack code rules: the q148 gate rides " +
     "a code-corpus ingest") {
     import graft.lake.{CorpusDedup, CorpusPack}

@@ -147,7 +147,6 @@ class LakeSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val lake = new Lake(spark, tmpDir("lake"))
     def nodes(df: DataFrame): Seq[SparkPlan] = {
@@ -161,15 +160,12 @@ class LakeSpec extends SparkSpec {
     // a fetched payload: 40 rows over 4 day partitions, built fresh per
     // use so the persisted copy re-plans against the cache
     def local = (1 to 40).map(i => (i, s"2024-01-0${i % 4 + 1}")).toDF("id", "data")
-    assert(shuffles(local).isEmpty)
     val cached = local.persist()
     val scanned = Partitions.dateHour(Tables.load(spark, sf001, "events"), "ts")
       .repartition(4)
     try {
-      assert(nodes(cached).exists(_.isInstanceOf[InMemoryTableScanExec]))
-      assert(shuffles(cached).isEmpty)
-      // a file scan still plans exactly the hash exchange on the
-      // partition columns (the round-robin repartition(4) collapses into it)
+      // a file scan plans exactly the hash exchange on the partition
+      // columns (the round-robin repartition(4) collapses into it)
       val ex = shuffles(scanned)
       assert(ex.size === 1, ex)
       assert(ex.head.outputPartitioning match {
@@ -177,10 +173,13 @@ class LakeSpec extends SparkSpec {
         case _ => false
       }, ex.head.outputPartitioning)
 
-      // and both write exactly one parquet file per partition dir
-      Seq("local" -> cached, "scan" -> scanned).foreach { case (name, df) =>
+      // driver-held frames, fresh or persisted, are written on the
+      // driver: no job, so no shuffle; all three write exactly one
+      // parquet file per partition dir
+      Seq("local" -> local, "cached" -> cached, "scan" -> scanned).foreach { case (name, df) =>
         val ref = TableRef("staging", "ds", name)
-        lake.overwritePartitions(df, ref, partitionBy = Seq("data"))
+        val m = metered(lake.overwritePartitions(df, ref, partitionBy = Seq("data")))
+        if (name != "scan") assert(m.jobs.isEmpty && m.shuffleWriteBytes === 0, name)
         val dirs = new java.io.File(lake.path(ref)).listFiles()
           .filter(_.getName.startsWith("data="))
         assert(dirs.length === df.select("data").distinct().count(), name)
@@ -192,6 +191,84 @@ class LakeSpec extends SparkSpec {
         assert(lake.read(ref).count() === df.count(), name)
       }
     } finally cached.unpersist()
+  }
+
+  test("driver-held writes match a stock Spark write: rows, footers, layout") {
+    import java.sql.{Date, Timestamp}
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.DataFrame
+    import scala.jdk.CollectionConverters._
+    val root = tmpDir("driverwrite")
+    val lake = new Lake(spark, s"$root/lake")
+    val ts = Timestamp.valueOf("2024-01-05 10:00:01.123456")
+    // string, int and date partition values, each with a null
+    val base = Seq(
+      (1L, ts, BigDecimal("1.25"), "a ", "x", Some(3), Date.valueOf("2024-01-05")),
+      (2L, ts, BigDecimal("-7.10"), null, "x/y=z", Some(3), null),
+      (3L, null, null, "c", null, None, Date.valueOf("2024-01-06")),
+      (4L, ts, BigDecimal("0.00"), "d", "", Some(7), Date.valueOf("2024-01-05"))
+    ).toDF("id", "ts", "amount", "v", "p_str", "p_int", "p_date")
+      .withColumn("amount", $"amount".cast("decimal(10,2)"))
+    val more = Seq((5L, ts, BigDecimal("9.99"), "e", "x", Some(7), Date.valueOf("2024-01-07")))
+      .toDF(base.columns: _*).withColumn("amount", $"amount".cast("decimal(10,2)"))
+    val persisted = base.withColumn("w", $"id" * 2).persist()
+    val frames: Seq[(String, DataFrame, Seq[String])] = Seq(
+      ("plain", base, Seq("p_str", "p_int")),
+      ("nested", graft.transforms.Nest.toContent(base, pk = Seq("id", "p_date")),
+        Seq("p_date")),
+      ("union", base.unionByName(more), Seq("p_date", "p_int")),
+      ("persisted", persisted, Seq("p_int")),
+      ("empty", base.filter($"id" < 0), Seq("p_str")))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val uuid = "[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}"
+    // relative listing, UUIDs normalised (two appends give two entries)
+    def files(dir: String): Seq[(String, java.io.File)] = {
+      val base = java.nio.file.Paths.get(dir)
+      val walk = java.nio.file.Files.walk(base)
+      try walk.iterator().asScala.toSeq.filter(_ != base).map { p =>
+        base.relativize(p).toString.replaceAll(uuid, "UUID") -> p.toFile
+      }.sortBy(_._1) finally walk.close()
+    }
+    def footers(listing: Seq[(String, java.io.File)]) = listing.collect {
+      case (rel, f) if rel.endsWith(".parquet") => rel -> footer(f)
+    }.sortBy(_.toString)
+    def footer(f: java.io.File) = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.toURI), conf))
+      try {
+        val m = r.getFooter.getFileMetaData
+        (m.getKeyValueMetaData.asScala.toMap, m.getSchema.toString, m.getCreatedBy)
+      } finally r.close()
+    }
+    def rows(dir: String) = {
+      val back = spark.read.parquet(dir)
+      (back.schema, back.collect().map(_.toString).sorted.toSeq)
+    }
+    try for ((name, df, parts) <- frames; overwrite <- Seq(false, true)) {
+      val label = s"$name ${if (overwrite) "overwrite" else "append"}"
+      val ref = TableRef("staging", "ds", s"${name}_$overwrite")
+      val stock = s"$root/stock/${name}_$overwrite"
+      // twice: the second write appends to, or overwrites, the first
+      val jobs = jobsDuring((1 to 2).foreach { _ =>
+        if (overwrite) lake.overwritePartitions(df, ref, parts)
+        else lake.append(df, ref, parts)
+        val w = df.coalesce(1).write.format("parquet").partitionBy(parts: _*)
+        if (overwrite) w.mode("overwrite").option("partitionOverwriteMode", "dynamic").save(stock)
+        else w.mode("append").save(stock)
+      })
+      // only the stock writes ran jobs, except for the empty frame
+      if (name != "empty") assert(jobs.size === 2, label)
+      val (mine, theirs) = (files(lake.path(ref)), files(stock))
+      assert(mine.map(_._1) === theirs.map(_._1), label)
+      // an empty frame leaves no parquet file to read back
+      if (name != "empty") {
+        assert(rows(lake.path(ref)) === rows(stock), label)
+        assert(footers(mine) === footers(theirs), label)
+        assert(mine.count(_._1.endsWith(".parquet")) === (if (overwrite) 1 else 2) *
+          df.select(parts.map(col): _*).distinct().count(), label)
+      }
+    } finally persisted.unpersist()
   }
 
   test("createOrAppend registers a queryable catalog table (K5)") {

@@ -641,7 +641,7 @@ class StreamingSpec extends SparkSpec {
     val files = try walk.iterator().asScala.map(rawDir.relativize(_).toString)
       .toSeq finally walk.close()
     assert(!files.exists(f => f.contains("_temporary") ||
-      f.contains(".spark-staging")), files)
+      f.contains(".spark-staging") || f.contains(".graft-staging")), files)
     assert(files.exists(f => f.startsWith("data=") && f.contains("/tick=") &&
       f.endsWith(".parquet")), files)
     assert(lake.read(TableRef("raw", "ds", "gps")).count() === 2)
@@ -656,23 +656,105 @@ class StreamingSpec extends SparkSpec {
   test("concurrent land: every capture job carries the caller's job group") {
     val lake = new Lake(spark, tmpDir("lake"))
     val cap = new Capture(spark, lake, new CaptureLog(spark, lake), landCfg)
+    // a scan-backed batch, the shape of a foreachBatch micro-batch: its
+    // zone writes are Spark jobs
+    val src = s"${tmpDir("src")}/batch"
+    landBatch.write.parquet(src)
+    val scanned = spark.read.parquet(src)
     val group = "capture-land-group"
     val sc = spark.sparkContext
     val jobs = jobsDuring {
       sc.setJobGroup(group, "concurrent land")
       try {
-        cap.processBatch(landBatch, landTick)
+        cap.processBatch(scanned, landTick)
         cap.processBackfill(Seq(
-          Timestamp.valueOf("2024-01-05 00:04:00") -> landBatch,
-          Timestamp.valueOf("2024-01-05 00:05:00") -> landBatch))
+          Timestamp.valueOf("2024-01-05 00:04:00") -> scanned,
+          Timestamp.valueOf("2024-01-05 00:05:00") -> scanned))
       } finally sc.clearJobGroup()
     }
-    // raw + staging + log write per call at least
+    // raw + staging write per call at least
     assert(jobs.size >= 6, jobs.size)
     assert(jobs.forall(_.getProperty("spark.jobGroup.id") == group),
       jobs.map(_.getProperty("spark.jobGroup.id")))
     assert(lake.read(TableRef("raw", "ds", "gps")).count() === 6)
     assert(lake.read(TableRef("staging", "ds", "gps")).count() === 6)
+    // a driver-held batch lands both zones and its log rows on the
+    // driver: no Spark job at all
+    val held = new Lake(spark, tmpDir("lake"))
+    val heldCap = new Capture(spark, held, new CaptureLog(spark, held), landCfg)
+    assert(jobsDuring {
+      heldCap.processBatch(landBatch, landTick)
+      heldCap.processBackfill(Seq(
+        Timestamp.valueOf("2024-01-05 00:04:00") -> landBatch,
+        Timestamp.valueOf("2024-01-05 00:05:00") -> landBatch))
+    }.isEmpty)
+    assert(held.read(TableRef("raw", "ds", "gps")).count() === 6)
+    assert(held.read(TableRef("staging", "ds", "gps")).count() === 6)
+    assert(new CaptureLog(spark, held).read("ds", "gps").count() === 3)
+  }
+
+  test("driver-written land: a crashed commit reads as before and replays once") {
+    import java.nio.file.{Files, Path, Paths}
+    val zones = Seq(TableRef("raw", "ds", "gps"), TableRef("staging", "ds", "gps"))
+    val priorTick = Timestamp.valueOf("2024-01-05 00:02:00")
+    def priorBatch = landBatch.withColumn("id", $"id" + 10)
+    def capture(lake: Lake, log: CaptureLog = null) =
+      new Capture(spark, lake, Option(log).getOrElse(new CaptureLog(spark, lake)), landCfg)
+    def reads(lake: Lake): Seq[Seq[String]] =
+      (zones.map(lake.read(_)) :+ new CaptureLog(spark, lake).read("ds", "gps"))
+        .map(_.collect().map(_.toString).sorted.toSeq)
+    def tree(dir: Path): Seq[Path] = {
+      val walk = Files.walk(dir)
+      try walk.iterator().asScala.toSeq finally walk.close()
+    }
+    // the landTick partition dirs of a zone, relative to its table root
+    def tickDirs(lake: Lake, ref: TableRef): Seq[String] = {
+      val table = Paths.get(lake.path(ref))
+      tree(table).filter(_.getFileName.toString == "tick=20240105000300")
+        .map(table.relativize(_).toString)
+    }
+    // the uninterrupted run: the prior tick, then landTick
+    val done = new Lake(spark, tmpDir("lake"))
+    capture(done).processBatch(priorBatch, priorTick)
+    capture(done).processBatch(landBatch, landTick)
+    val expected = reads(done)
+
+    // a first attempt at landTick that landed both zones but died before
+    // its log row
+    val noLog = (lake: Lake) => new CaptureLog(spark, lake) {
+      override def appendAll(dataset: String, table: String,
+                             capturedAt: Seq[Timestamp], success: Boolean,
+                             error: Option[String], recaptured: Boolean): Unit =
+        throw new java.io.IOException("died before the log row")
+    }
+    for (oldDirDeleted <- Seq(false, true)) {
+      val lake = new Lake(spark, tmpDir("lake"))
+      capture(lake).processBatch(priorBatch, priorTick)
+      val prior = reads(lake)
+      if (oldDirDeleted) intercept[java.io.IOException] {
+        capture(lake, noLog(lake)).processBatch(landBatch, landTick)
+      }
+      // the crash: landTick's files staged in each zone; in state (b)
+      // the old landTick dir is already deleted, in state (a) there is none
+      zones.foreach { z =>
+        val table = Paths.get(lake.path(z))
+        assert(tickDirs(lake, z).nonEmpty === oldDirDeleted, z)
+        assert(tickDirs(done, z).size === 1, z)
+        tickDirs(lake, z).foreach { d =>
+          tree(table.resolve(d)).reverse.foreach(Files.delete)
+        }
+        tickDirs(done, z).foreach { d =>
+          val from = Paths.get(done.path(z)).resolve(d)
+          val to = table.resolve(".graft-staging-crashed").resolve(d)
+          Files.createDirectories(to.getParent)
+          tree(from).foreach(p => Files.copy(p, to.resolve(from.relativize(p).toString)))
+        }
+      }
+      val state = if (oldDirDeleted) "(b)" else "(a)"
+      assert(reads(lake) === prior, state)
+      capture(lake).processBatch(landBatch, landTick)
+      assert(reads(lake) === expected, state)
+    }
   }
 
   test("concurrent land: both writes failing rethrows staging's, raw suppressed") {
