@@ -31,9 +31,10 @@ import org.apache.spark.sql.types.StringType
   * `part-00000-<uuid>.c000<ext>` file per partition dir, staged under a
   * hidden dir in the table root that readers skip, then renamed in as
   * [[Lake.append]] and [[Lake.overwritePartitions]] describe. A crash
-  * before the renames leaves only the hidden dir; one between an
-  * overwrite's delete and rename leaves that partition absent until the
-  * write is replayed. */
+  * before the renames leaves only the hidden dir, which readers skip and
+  * the table's next [[Lake.compact]] removes; one between an overwrite's
+  * delete and rename leaves that partition absent until the write is
+  * replayed. */
 private[lake] object DriverWrite {
   /** Writes `df` under `root` on the driver when it is driver-held,
     * non-empty, deterministic and partitioned, and the session caps no

@@ -30,6 +30,11 @@ import org.apache.spark.sql.functions._
   * (an overwrite deletes each touched partition dir first; an append
   * ends with `_SUCCESS`). Every other frame is a Spark write.
   *
+  * A write that dies before its cleanup leaves its hidden staging dir
+  * (`.graft-staging-<uuid>` of a driver write, `.spark-staging-<uuid>`
+  * of a Spark dynamic overwrite) in the table root. Reads skip it; the
+  * table's next [[compact]] removes it with the old root.
+  *
   * Local-FS write rule: every path-addressed DataFrame write here goes
   * through `writer`, which selects [[NioLocalFileSystem]] for `file://`
   * paths, so a local lake sets file and directory permissions without
@@ -114,13 +119,16 @@ class Lake(spark: SparkSession, root: String) {
   }
 
   /** Schema-on-read scan of a lake table (partition discovery included).
-    * `mergeSchema = true` unions the schemas of all files, so a capture
-    * that started emitting a new column mid-history reads as one table
-    * with nulls for the older files; when false the option is NOT set,
-    * so a session-wide spark.sql.parquet.mergeSchema still applies. */
+    * The schema comes from one footer read on the driver
+    * ([[FooterParquet]]), so resolving the read runs no Spark job.
+    * `mergeSchema = true` unions the schemas of all files (in a Spark
+    * job), so a capture that started emitting a new column mid-history
+    * reads as one table with nulls for the older files; when false the
+    * option is NOT set, so a session-wide spark.sql.parquet.mergeSchema
+    * still applies. */
   def read(ref: TableRef, mergeSchema: Boolean = false): DataFrame = {
-    val r = spark.read
-    (if (mergeSchema) r.option("mergeSchema", true) else r).parquet(path(ref))
+    val r = FooterParquet.reader(spark)
+    (if (mergeSchema) r.option("mergeSchema", true) else r).load(path(ref))
   }
 
   /** Small-file compaction: rewrite the table into ~`targetFileBytes`
@@ -132,7 +140,8 @@ class Lake(spark: SparkSession, root: String) {
     * compacted copy lands in a sibling dir and is swapped in with
     * checked renames; a writer that crashed between the renames is
     * healed on the next call (the intact `.old` copy is restored before
-    * anything else happens).
+    * anything else happens). The old root is deleted whole, so hidden
+    * dirs that crashed writes left in it (staging dirs) go with it.
     *
     * MUST run under the table's [[graft.state.RunLock]]: the scan
     * snapshots the file listing, so a concurrent append between listing

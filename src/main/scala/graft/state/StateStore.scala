@@ -2,7 +2,7 @@ package graft.state
 
 import java.sql.Timestamp
 
-import graft.lake.NioLocalFileSystem
+import graft.lake.{FooterParquet, NioLocalFileSystem}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -141,14 +141,14 @@ class StateStore(spark: SparkSession, root: String) {
   }
 
   private def readOrEmpty(path: String, schemaDdl: String): DataFrame =
-    readIfPresent(path, schemaDdl)(spark.read.parquet(path))
+    readIfPresent(path, schemaDdl)(FooterParquet.reader(spark).load(path))
 
   /** [[readOrEmpty]] for the kinds only this store writes (`last_run`
     * and the sketches), whose column types it fixes itself: reading with
-    * the declared schema skips parquet schema inference, which costs a
-    * footer-reading Spark job on every read. Kinds whose column types
-    * come from caller frames (generic tables, entity watermarks,
-    * processed files) keep inference. */
+    * the declared schema skips parquet schema inference altogether. Kinds
+    * whose column types come from caller frames (generic tables, entity
+    * watermarks, processed files) infer theirs from one footer read on
+    * the driver ([[FooterParquet]]), which runs no Spark job either. */
   private def readOwned(path: String, schemaDdl: String): DataFrame =
     readIfPresent(path, schemaDdl)(
       spark.read.schema(StructType.fromDDL(schemaDdl)).parquet(path))

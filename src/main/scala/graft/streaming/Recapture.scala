@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
 /** Late-data recovery planner (SURVEY §2.9 T4 — `query_logs`,
   * rj_smtr/tasks.py:437-558).
   *
-  * Builds the minute spine over the lookback window, left-anti joins the
-  * successful capture log minutes, and returns the missed minutes capped
+  * Builds the minute spine over the lookback window on the driver,
+  * collects the minutes of the window's successful capture log rows in
+  * one Spark job, and returns the spine minutes missing from them capped
   * at `maxRecaptures` (90 in the reference; overflow is the caller's
   * alert). The result feeds Trigger.AvailableNow backfill runs.
   */
@@ -17,23 +18,27 @@ object Recapture {
 
   final case class Plan(timestamps: Seq[Timestamp], overflowed: Boolean)
 
-  /** Missed capture minutes in (now − lookbackDays, now], oldest first. */
+  /** Missed capture minutes in (now − lookbackDays, now], oldest first.
+    * The spine runs from the lookback start in `intervalMinutes` steps up
+    * to `now`. A spine minute counts as captured when a `sucesso` row's
+    * `timestamp_captura`, truncated to its minute in the session time
+    * zone, equals it; only rows in [spine start, last spine minute + 1
+    * minute) can, so the one job collects at most the window's log rows
+    * (~1.4k per source-day at a 1-minute cadence). */
   def plan(spark: SparkSession, logs: DataFrame, now: Timestamp,
            intervalMinutes: Int = 1, lookbackDays: Int = 1,
            maxRecaptures: Int = 90): Plan = {
     val step = intervalMinutes * 60
     val startSec = (now.getTime / 1000 - lookbackDays * 86400L) / step * step
-    val spine = spark.range(1).select(explode(sequence(
-      timestamp_seconds(lit(startSec)),
-      lit(now),
-      expr(s"INTERVAL $intervalMinutes MINUTES"))).as("minute"))
-    val ok = logs.filter(col("sucesso") === true)
-      .select(date_trunc("minute", col("timestamp_captura")).as("minute"))
-      .distinct()
-    val missed = spine.join(ok, Seq("minute"), "left_anti")
-      .orderBy(col("minute"))
-      .limit(maxRecaptures + 1)
-      .collect().map(_.getTimestamp(0)).toIndexedSeq
+    val spine = startSec * 1000 to now.getTime by step * 1000L // epoch ms
+    val ok = logs
+      .filter(col("sucesso") === true &&
+        col("timestamp_captura") >= new Timestamp(spine.head) &&
+        col("timestamp_captura") < new Timestamp(spine.last + 60000L))
+      .select(unix_micros(date_trunc("minute", col("timestamp_captura"))))
+      .collect().map(_.getLong(0) / 1000).toSet
+    val missed = spine.iterator.filterNot(ok).take(maxRecaptures + 1)
+      .map(new Timestamp(_)).toIndexedSeq
     Plan(missed.take(maxRecaptures), overflowed = missed.size > maxRecaptures)
   }
 
@@ -41,9 +46,9 @@ object Recapture {
     * missing from the logs — the materialization gate's input
     * (rj_smtr/flows.py:225-236: `query_logs` over each source table →
     * `check_mapped_query_logs_output` → materialize only when False).
-    * Existence check only: the spine anti-join stops at the first hole
-    * (limit 1 under the hood), so gating a 1-minute tick costs one
-    * small job, not a full plan.
+    * Existence check only: a plan capped at one minute, so gating a
+    * 1-minute tick costs the plan's one small job (the collect of the
+    * window's successful log minutes) and no schema inference job.
     *
     * ORDERING CONTRACT (correctness, not convenience): within a tick the
     * scheduler must run capture for minute `now` BEFORE this gate, as the

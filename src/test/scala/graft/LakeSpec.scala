@@ -1345,6 +1345,27 @@ class LakeSpec extends SparkSpec {
     assert(lake.read(pref).select($"part").distinct().count() === 2)
   }
 
+  test("compaction removes the staging dirs crashed writes left behind") {
+    val lake = new Lake(spark, tmpDir("lake"))
+    val ref = TableRef("staging", "ds", "ticks")
+    (1 to 3).foreach(i => lake.append(Seq((i, s"d$i")).toDF("id", "data"), ref,
+      partitionBy = Seq("data")))
+    // the crash state of a driver write and of a Spark dynamic overwrite:
+    // a staged partition dir, never renamed in or deleted
+    val root = java.nio.file.Paths.get(lake.path(ref))
+    val staged = Seq(".graft-staging-crashed", ".spark-staging-crashed").map { d =>
+      val dir = root.resolve(d).resolve("data=d9")
+      java.nio.file.Files.createDirectories(dir)
+      java.nio.file.Files.write(dir.resolve("part-00000.parquet"), Array[Byte](1, 2, 3))
+      root.resolve(d)
+    }
+    val before = lake.read(ref).orderBy("id").collect().toSeq
+    lake.compact(ref, partitionBy = Seq("data"))
+    staged.foreach(d => assert(!java.nio.file.Files.exists(d), d))
+    assert(lake.read(ref).orderBy("id").collect().toSeq === before)
+    assert(before.map(_.getInt(0)) === Seq(1, 2, 3))
+  }
+
   test("capture log append + read with [recapturado] marking (K10/T4)") {
     val lake = new Lake(spark, tmpDir("lake"))
     val log = new CaptureLog(spark, lake)

@@ -398,6 +398,59 @@ class StreamingSpec extends SparkSpec {
     assert(capped.timestamps === capped.timestamps.sorted)
   }
 
+  test("recapture planner edge cases: what counts as a captured minute (T4)") {
+    // now is mid-minute: the spine runs 2024-01-04 01:00 .. 2024-01-05 01:00
+    val now = Timestamp.valueOf("2024-01-05 01:00:20")
+    val first = Timestamp.valueOf("2024-01-04 01:00:00").getTime
+    def minute(m: Int) = new Timestamp(first + m * 60000L)
+    def at(m: Int, sec: Int) = new Timestamp(first + m * 60000L + sec * 1000L)
+    val last = 1440
+    // every spine minute captured once at :00, except the minutes given
+    def okExcept(ms: Int*) = (0 to last).filterNot(ms.contains)
+      .map(m => (minute(m), true, null: String))
+    val cases = Seq[(String, Seq[(Timestamp, Boolean, String)], Seq[Int])](
+      ("success stamped mid-minute", okExcept(700) :+ ((at(700, 37), true, null)),
+        Nil),
+      ("success after now inside the last spine minute",
+        okExcept(last) :+ ((at(last, 45), true, null)), Nil),
+      ("success before the window",
+        okExcept(0) :+ ((new Timestamp(first - 1000L), true, null)), Seq(0)),
+      ("duplicate successes for one minute",
+        okExcept() ++ Seq((at(5, 0), true, null), (at(5, 12), true, null)), Nil),
+      ("failure, then a [recapturado] success; failure alone",
+        okExcept(30, 31) ++ Seq((at(30, 0), false, "err"),
+          (at(30, 50), true, "[recapturado]"), (at(31, 0), false, "err")),
+        Seq(31)))
+    cases.foreach { case (name, rows, missed) =>
+      val p = Recapture.plan(spark, rows.toDF("timestamp_captura", "sucesso", "erro"),
+        now, maxRecaptures = 2000)
+      assert(p.timestamps === missed.map(minute) && !p.overflowed, name)
+    }
+    // empty log: every minute is missing, the oldest 90 are planned
+    val empty = Recapture.plan(spark,
+      Seq.empty[(Timestamp, Boolean, String)].toDF("timestamp_captura", "sucesso", "erro"),
+      now)
+    assert(empty.overflowed && empty.timestamps === (0 until 90).map(minute))
+  }
+
+  test("recapture plan of a lake-backed log is one Spark job (T4)") {
+    val lake = new Lake(spark, tmpDir("lake"))
+    val log = new CaptureLog(spark, lake)
+    val now = Timestamp.valueOf("2024-01-05 00:10:00")
+    log.appendAll("ds", "gps", (0 to 9).filter(_ != 4)
+      .map(m => new Timestamp(now.getTime - m * 60000L)), success = true)
+    log.append("ds", "gps", Timestamp.valueOf("2024-01-04 23:59:00"), success = true)
+    var p: Recapture.Plan = null
+    val jobs = jobsDuring {
+      p = Recapture.plan(spark, log.read("ds", "gps"), now, maxRecaptures = 2000)
+    }
+    assert(jobs.size === 1)
+    // 1441 spine minutes, 10 captured across the two date partitions
+    assert(p.timestamps.size === 1431 && !p.overflowed)
+    assert(p.timestamps.contains(new Timestamp(now.getTime - 4 * 60000L)))
+    assert(!p.timestamps.contains(Timestamp.valueOf("2024-01-04 23:59:00")))
+  }
+
   test("raw zone is replay-idempotent per tick (same-name replace semantics)") {
     val lake = new graft.lake.Lake(spark, tmpDir("lake"))
     val log = new graft.lake.CaptureLog(spark, lake)
