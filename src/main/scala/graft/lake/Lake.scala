@@ -28,7 +28,13 @@ import org.apache.spark.sql.functions._
   * ([[DriverWrite]]), in the layout and commit order of a Spark write:
   * files staged under a hidden dir in the table root, then renamed in
   * (an overwrite deletes each touched partition dir first; an append
-  * ends with `_SUCCESS`). Every other frame is a Spark write.
+  * ends with `_SUCCESS`). Every other frame is a Spark write. The state
+  * store's unpartitioned writes of driver-held frames (a last-run row, a
+  * merged sketch) go through the same writer into a fresh dir.
+  *
+  * Reads are Spark's. A collect of a small parquet read can run on the
+  * driver instead ([[DriverRead]]); the capture-cycle collect sites
+  * (the recapture plan, the state store's one-row reads) do.
   *
   * A write that dies before its cleanup leaves its hidden staging dir
   * (`.graft-staging-<uuid>` of a driver write, `.spark-staging-<uuid>`

@@ -2,7 +2,7 @@ package graft.state
 
 import java.sql.Timestamp
 
-import graft.lake.{FooterParquet, NioLocalFileSystem}
+import graft.lake.{DriverRead, DriverWrite, FooterParquet, NioLocalFileSystem}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -166,21 +166,27 @@ class StateStore(spark: SparkSession, root: String) {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
         StructType.fromDDL(schemaDdl))
     else read
   }
 
-  /** Distributed read-modify-write: the merged frame (which lazily READS
-    * `path`) is executed into `path.tmp`, then swapped in with filesystem
-    * renames. Never collects to the driver — millions of entities/files
-    * stay distributed end-to-end — and never overwrites a path while a
-    * job is still reading it. Safe under the single-writer-per-pipeline
-    * discipline (the reference's skip_if_running guard,
-    * utils/utils.py:197-231); a reader racing the two renames is a
-    * first-run-style miss, not corruption, and a writer that crashes
-    * between them is healed on the next call — the intact `.old` copy is
-    * restored before the merge plans its read. */
+  /** Read-modify-write by swap: `df` (which may lazily READ `path`) is
+    * written into a fresh `path.tmp-<uuid>`, then swapped in with
+    * filesystem renames, so a path is never overwritten while a job is
+    * still reading it. A merged frame (entity watermarks, processed
+    * files) is written by Spark and never collects to the driver:
+    * millions of entities/files stay distributed end-to-end. A
+    * driver-held frame (a last-run row, a merged sketch, a local table)
+    * is written on the driver with no Spark job ([[DriverWrite]]), in the
+    * file layout of a Spark write, `_SUCCESS` last. Safe under the
+    * single-writer-per-pipeline discipline (the reference's
+    * skip_if_running guard, utils/utils.py:197-231); a reader racing the
+    * two renames is a first-run-style miss, not corruption, and a writer
+    * that crashes between them is healed on the next call — the intact
+    * `.old` copy is restored before the merge plans its read. A writer
+    * that dies before the swap leaves only its tmp dir, which no reader
+    * sees and the next write to the path sweeps. */
   private def writeAtomic(df: DataFrame, path: String): Unit = {
     import org.apache.hadoop.fs.Path
     val p = new Path(path)
@@ -201,10 +207,12 @@ class StateStore(spark: SparkSession, root: String) {
     try Option(fs.globStatus(new Path(globSafe + ".tmp-*"))) // null when parent absent
       .getOrElse(Array.empty).foreach(st => fs.delete(st.getPath, true))
     catch { case _: java.io.IOException => () }
-    // State rows are tiny (entity + timestamp); 4 output files keeps the
-    // table compact up to ~10^8 entities without a count-then-choose pass.
-    df.coalesce(4).write.options(NioLocalFileSystem.writerOptions)
-      .mode(SaveMode.Overwrite).parquet(tmp.toString)
+    // A distributed frame's state rows are tiny (entity + timestamp): 4
+    // output files keep the table compact up to ~10^8 entities without a
+    // count-then-choose pass. A driver-held frame is one file.
+    if (!DriverWrite.intoNewDir(spark, df, tmp.toString))
+      df.coalesce(4).write.options(NioLocalFileSystem.writerOptions)
+        .mode(SaveMode.Overwrite).parquet(tmp.toString)
     if (fs.exists(old)) fs.delete(old, true)
     // Swap with bounded retry: a lock-free READER that catches us between
     // the two renames can heal `.old` back into `path` (readOrEmpty's
@@ -237,10 +245,12 @@ class StateStore(spark: SparkSession, root: String) {
   // pipelines race a read-modify-write and lose one's update. One path
   // per key makes setLastRun a plain overwrite — no merge, no race.
 
+  /** Reads the key's one-row table on the driver ([[DriverRead]]): no
+    * Spark job. */
   def lastRun(key: String): Option[Timestamp] =
-    readOwned(runPath(key), "key STRING, last_run TIMESTAMP")
-      .filter($"key" === key).select($"last_run")
-      .collect().headOption.map(_.getTimestamp(0))
+    DriverRead.collect(readOwned(runPath(key), "key STRING, last_run TIMESTAMP")
+      .filter($"key" === key).select($"last_run"))
+      .headOption.map(_.getTimestamp(0))
       .orElse(legacyLastRun(key))
 
   /** Migration read: the pre-per-key layout kept ALL keys in one parquet
@@ -320,8 +330,8 @@ class StateStore(spark: SparkSession, root: String) {
   // atomicity/locking story lands in ONE place.
 
   private def readSketch(path: String): Option[Array[Byte]] =
-    readOwned(path, "sketch BINARY")
-      .collect().headOption.map(_.getAs[Array[Byte]](0))
+    DriverRead.collect(readOwned(path, "sketch BINARY"))
+      .headOption.map(_.getAs[Array[Byte]](0))
 
   private def mergeSketchFile(path: String, sk: Array[Byte],
                               merge: (Array[Byte], Array[Byte]) => Array[Byte]): Unit = {

@@ -271,6 +271,163 @@ class LakeSpec extends SparkSpec {
     } finally persisted.unpersist()
   }
 
+  test("unpartitioned driver writes match a stock coalesce(4) write: rows, footers, listing") {
+    import java.sql.{Date, Timestamp}
+    import graft.lake.{DriverWrite, NioLocalFileSystem}
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.DataFrame
+    import scala.jdk.CollectionConverters._
+    val root = tmpDir("driverwrite1")
+    val ts = Timestamp.valueOf("2024-01-05 10:00:01.123456")
+    val frames: Seq[(String, DataFrame)] = Seq(
+      ("last run", Seq(("ds.t", ts)).toDF("key", "last_run")),
+      ("sketch", Seq(Array[Byte](1, 2, 3)).toDF("sketch")),
+      ("table", Seq(
+        (1L, ts, BigDecimal("1.25"), "a", Date.valueOf("2024-01-05")),
+        (2L, null, null, null, null),
+        (3L, ts, BigDecimal("-7.10"), "c", Date.valueOf("2024-01-06"))
+      ).toDF("id", "ts", "amount", "v", "d").withColumn("amount", $"amount".cast("decimal(10,2)"))))
+    val conf = spark.sparkContext.hadoopConfiguration
+    // relative names, UUIDs and part numbers normalised: a stock write of
+    // n rows writes up to min(n, 4) part files, the driver one
+    def files(dir: String): Seq[(String, java.io.File)] =
+      new java.io.File(dir).listFiles().toSeq.map { f =>
+        f.getName.replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "UUID")
+          .replaceAll("part-[0-9]{5}", "part-N") -> f
+      }.sortBy(_._1)
+    def footer(f: java.io.File) = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.toURI), conf))
+      try {
+        val m = r.getFooter.getFileMetaData
+        (m.getKeyValueMetaData.asScala.toMap, m.getSchema.toString, m.getCreatedBy)
+      } finally r.close()
+    }
+    def rows(dir: String) = {
+      val back = spark.read.parquet(dir)
+      (back.schema, back.collect().map(_.toSeq.map {
+        case b: Array[Byte] => b.toSeq
+        case v => v
+      }.toString).sorted.toSeq)
+    }
+    for ((name, df) <- frames) {
+      val (mine, stock) = (s"$root/mine/$name", s"$root/stock/$name")
+      var wrote = false
+      assert(jobsDuring { wrote = DriverWrite.intoNewDir(spark, df, mine) }.isEmpty, name)
+      assert(wrote, name)
+      df.coalesce(4).write.options(NioLocalFileSystem.writerOptions).mode("overwrite")
+        .parquet(stock)
+      val (m, s) = (files(mine), files(stock))
+      assert(m.map(_._1).distinct === s.map(_._1).distinct, name)
+      assert(m.map(_._1).filter(_.endsWith(".parquet")) ===
+        Seq("part-N-UUID-c000.snappy.parquet"), name)
+      assert(m.map(_._1).contains("_SUCCESS"), name)
+      def footers(l: Seq[(String, java.io.File)]) =
+        l.filter(_._1.endsWith(".parquet")).map(f => footer(f._2)).distinct
+      assert(footers(m) === footers(s), name)
+      assert(rows(mine) === rows(stock), name)
+    }
+    // a frame that is not driver-held is left to Spark, nothing written
+    val dir = s"$root/mine/range"
+    assert(!DriverWrite.intoNewDir(spark, spark.range(3).toDF(), dir))
+    assert(!new java.io.File(dir).exists())
+  }
+
+  test("driver reads match a stock collect: partitions, zones, nulls, drift, empty, corrupt") {
+    import java.sql.Timestamp
+    import graft.lake.DriverRead
+    import org.apache.spark.sql.DataFrame
+    val zoneKey = "spark.sql.session.timeZone"
+    val zoneWas = spark.conf.get(zoneKey)
+    val root = tmpDir("driverread")
+    val lake = new Lake(spark, s"$root/lake")
+    val log = new CaptureLog(spark, lake)
+    // the capture log: DATE `data` partitions either side of midnight,
+    // null `erro`s
+    val t0 = Timestamp.valueOf("2024-01-04 23:58:00").getTime
+    log.appendAll("ds", "gps", (0 until 5).map(m => new Timestamp(t0 + m * 60000L)),
+      success = true)
+    log.append("ds", "gps", new Timestamp(t0 + 5 * 60000L), success = false,
+      error = Some("err"))
+    // schema drift: the older file lacks `c`; a row of nulls
+    val schema = "a BIGINT, b STRING, c DOUBLE"
+    val drift = s"$root/drift"
+    Seq((1L, "x")).toDF("a", "b").write.parquet(drift)
+    Seq[(Long, String, Option[Double])]((2L, null, None), (3L, "z", Some(0.5)))
+      .toDF("a", "b", "c").write.mode("append").parquet(drift)
+    val empty = s"$root/empty"
+    Seq.empty[(Long, String, Double)].toDF("a", "b", "c").write.parquet(empty)
+    def frames(): Seq[(String, DataFrame)] = Seq(
+      "log" -> log.read("ds", "gps"),
+      "log minutes" -> log.read("ds", "gps")
+        .filter($"sucesso" && $"data" === "2024-01-05" && $"erro".isNull)
+        .select(date_format($"timestamp_captura", "yyyy-MM-dd HH:mm").as("m"), $"data"),
+      "drift" -> spark.read.schema(schema).parquet(drift),
+      "drift nulls" -> spark.read.schema(schema).parquet(drift).filter($"c".isNull),
+      "empty" -> spark.read.schema(schema).parquet(empty))
+    def sorted(rows: Array[org.apache.spark.sql.Row]) = rows.map(_.toString).sorted.toSeq
+    try for (zone <- Seq("UTC", "America/Sao_Paulo", "Asia/Kolkata")) {
+      spark.conf.set(zoneKey, zone)
+      for ((name, df) <- frames()) {
+        val label = s"$name in $zone"
+        assert(DriverRead.listing(df).isDefined, label)
+        var rows: Array[org.apache.spark.sql.Row] = null
+        assert(jobsDuring { rows = DriverRead.collect(df) }.isEmpty, label)
+        assert(sorted(rows) === sorted(df.collect()), label)
+        if (name == "empty") assert(rows.isEmpty)
+      }
+    } finally spark.conf.set(zoneKey, zoneWas)
+
+    // a corrupt file fails as Spark's read does, or is skipped by both
+    val corrupt = s"$root/corrupt"
+    Seq((1L, "x", 1.0)).toDF("a", "b", "c").write.parquet(corrupt)
+    java.nio.file.Files.write(java.nio.file.Paths.get(corrupt, "part-99999-bad.parquet"),
+      "not parquet".getBytes)
+    val bad = spark.read.schema(schema).parquet(corrupt)
+    val (theirs, mine) = (intercept[Exception](bad.collect()),
+      intercept[Exception](DriverRead.collect(bad)))
+    assert(mine.getClass === theirs.getClass)
+    def causes(e: Throwable): Seq[String] =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getClass.getName).toSeq
+    assert(causes(mine) === causes(theirs))
+    val skipping = spark.read.option("ignoreCorruptFiles", "true").schema(schema).parquet(corrupt)
+    assert(DriverRead.listing(skipping).isEmpty)
+    assert(sorted(DriverRead.collect(skipping)) === Seq("[1,x,1.0]"))
+  }
+
+  test("a listing over the driver-read bound takes Spark's path with the same rows") {
+    import java.nio.file.{Files, Paths}
+    import graft.lake.DriverRead
+    val dir = tmpDir("bound")
+    // MaxFiles + 1 one-row files, one per partition dir p=<i>
+    val one = s"$dir/one"
+    Seq(7L).toDF("id").coalesce(1).write.parquet(one)
+    val file = Files.list(Paths.get(one)).filter(_.toString.endsWith(".parquet"))
+      .findFirst().get
+    val n = DriverRead.MaxFiles + 1
+    val table = Paths.get(dir, "table")
+    (0 until n).foreach { i =>
+      val part = Files.createDirectories(table.resolve(s"p=$i"))
+      Files.copy(file, part.resolve("part-00000.parquet"))
+    }
+    def rows(df: org.apache.spark.sql.DataFrame, driver: Boolean) = {
+      var got: Array[org.apache.spark.sql.Row] = null
+      val jobs = jobsDuring { got = DriverRead.collect(df) }
+      assert(jobs.isEmpty === driver)
+      got.map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted
+    }
+    val over = spark.read.parquet(table.toString)
+    assert(DriverRead.listing(over).isEmpty)
+    assert(rows(over, driver = false) === (0 until n).map(7L -> _))
+    // at the bound the driver reads it
+    Files.delete(table.resolve("p=0/part-00000.parquet"))
+    Files.delete(table.resolve("p=0"))
+    val at = spark.read.parquet(table.toString)
+    assert(DriverRead.listing(at).map(_.flatMap(_.files).size) === Some(n - 1))
+    assert(rows(at, driver = true) === (1 until n).map(7L -> _))
+  }
+
   test("createOrAppend registers a queryable catalog table (K5)") {
     val lake = new Lake(spark, tmpDir("lake"))
     val ref = TableRef("staging", "cat", "t1")

@@ -126,6 +126,68 @@ class MaterializeSpec extends SparkSpec {
     assert(prod.map(_._1) === Set(0L, 1L, 2L, 3L, 4L, 5L))
   }
 
+  test("gated model minute runs only the model SQL's jobs; backfill minute none") {
+    import graft.lake.CaptureLog
+    import graft.materialize.GateSource
+    import graft.streaming.{Capture, CaptureConfig, Recapture}
+    val lake = new Lake(spark, tmpDir("lake"))
+    val log = new CaptureLog(spark, lake)
+    val cap = new Capture(spark, lake, log,
+      CaptureConfig("ds", "gps", pk = Seq("id"), tsCol = "ts"))
+    val state = new StateStore(spark, tmpDir("state"))
+    val runner = new ModelRunner(spark, lake, state, "ds")
+    val base = Timestamp.valueOf("2024-01-05 00:00:00")
+    def minute(m: Int) = new Timestamp(base.getTime + m * 60000L)
+    def fmt(ts: Timestamp) = ts.toString.takeWhile(_ != '.')
+    // a successful lookback day, then a capture loop whose minute 4 failed
+    val startSec = (base.getTime / 1000 - 86400) / 60 * 60
+    lake.append(spark.range(1).select(explode(sequence(
+        timestamp_seconds(lit(startSec)), lit(minute(-1)),
+        expr("INTERVAL 1 MINUTES"))).as("timestamp_captura"))
+      .withColumn("sucesso", lit(true)).withColumn("erro", lit(null).cast("string"))
+      .withColumn("data", date_format($"timestamp_captura", "yyyy-MM-dd")),
+      log.ref("ds", "gps"), partitionBy = Seq("data"))
+    def batch(m: Int) = Seq((m.toLong, minute(m), s"v$m")).toDF("id", "ts", "v")
+    def capture(m: Int): Unit =
+      if (m == 4) log.append("ds", "gps", minute(m), success = false, error = Some("down"))
+      else cap.processBatch(batch(m), minute(m))
+    val model = Model("per_minute",
+      """SELECT date_trunc('minute', timestamp_captura) AS ts, count(*) AS n,
+        |  date_format(timestamp_captura, 'yyyy-MM-dd') AS data,
+        |  date_format(timestamp_captura, 'HH-mm') AS hm
+        |FROM src_gps
+        |WHERE timestamp_captura > to_timestamp('{{date_range_start}}')
+        |  AND timestamp_captura <= to_timestamp('{{date_range_end}}')
+        |GROUP BY 1, 3, 4""".stripMargin, partitionBy = Seq("data", "hm"))
+    def view(): Unit =
+      lake.read(TableRef("staging", "ds", "gps")).createOrReplaceTempView("src_gps")
+
+    (0 to 6).foreach(capture)
+    var plan: Recapture.Plan = null
+    assert(jobsDuring {
+      plan = Recapture.backfill(spark, cap, log.read("ds", "gps"), minute(6),
+        fetch = ts => batch(((ts.getTime - base.getTime) / 60000L).toInt))
+    }.isEmpty)
+    assert(plan.timestamps === Seq(minute(4)))
+    (7 to 9).foreach(capture)
+    view()
+    assert(runner.runGated(model, minute(9), log, Seq(GateSource("ds", "gps"))).isDefined)
+    // the next cycle's model minute: the gate, the watermark read and
+    // write run no job, so it runs exactly the jobs of the model's own
+    // SQL written over the same window
+    (10 to 19).foreach(capture)
+    view()
+    val gated = jobsDuring {
+      assert(runner.runGated(model, minute(19), log, Seq(GateSource("ds", "gps"))).isDefined)
+    }
+    assert(state.lastRun("ds.per_minute") === Some(minute(19)))
+    val sqlOnly = jobsDuring(lake.overwritePartitions(spark.sql(runner.render(model.sql,
+      Map("date_range_start" -> fmt(minute(9)), "date_range_end" -> fmt(minute(19))))),
+      TableRef("prod", "ds", "per_minute"), model.partitionBy))
+    assert(sqlOnly.nonEmpty && gated.size === sqlOnly.size, (gated.size, sqlOnly.size))
+    assert(lake.read(TableRef("prod", "ds", "per_minute")).count() === 20)
+  }
+
   test("recapture gate treats a missing log table as pending, not a crash") {
     import graft.lake.CaptureLog
     import graft.materialize.GateSource

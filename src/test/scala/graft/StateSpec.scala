@@ -34,20 +34,24 @@ class StateSpec extends SparkSpec {
     assert(st.lastRun("ds.t") === Some(now))
   }
 
-  test("lastRun and sketch reads of a stored key run one job (no schema inference)") {
+  test("lastRun and sketch reads and writes of a stored key run no Spark job") {
     val st = new StateStore(spark, tmpDir("state"))
     val now = Timestamp.valueOf("2024-02-01 00:00:00")
-    st.setLastRun("ds.t", now)
-    st.mergeSketch("ds.t", Array[Byte](1, 2, 3)) // first merge stores as-is
-    // the store fixes these kinds' column types itself, so it reads them
-    // with the declared schema: the collect is the only job, with no
-    // footer-reading inference job before it
+    // one-row frames write on the driver; the store reads its one-row
+    // tables on the driver, with the declared schema (no inference)
+    assert(jobsDuring {
+      st.setLastRun("ds.t", now)
+      st.mergeSketch("ds.t", Array[Byte](1, 2, 3)) // first merge stores as-is
+    }.isEmpty)
     var got: Option[Timestamp] = None
-    assert(jobsDuring { got = st.lastRun("ds.t") }.size === 1)
+    assert(jobsDuring { got = st.lastRun("ds.t") }.isEmpty)
     assert(got === Some(now))
     var sk: Option[Array[Byte]] = None
-    assert(jobsDuring { sk = st.sketch("ds.t") }.size === 1)
+    assert(jobsDuring { sk = st.sketch("ds.t") }.isEmpty)
     assert(sk.map(_.toSeq) === Some(Seq[Byte](1, 2, 3)))
+    // an absent key reads as first-run without a job either
+    assert(jobsDuring { got = st.lastRun("ds.absent") }.isEmpty)
+    assert(got.isEmpty)
   }
 
   test("crash between swap renames: next reader heals .old BEFORE its merge reads") {
@@ -76,6 +80,61 @@ class StateSpec extends SparkSpec {
     val wm = st.entityWatermarks("k").as[(String, Timestamp)].collect().toMap
     assert(wm("s2") === Timestamp.valueOf("2024-01-02 11:00:00")) // not wiped
     assert(wm("s1") === Timestamp.valueOf("2024-02-01 00:00:00"))
+  }
+
+  test("driver-written state swaps: crash states read as before and replay once") {
+    import org.apache.hadoop.fs.Path
+    val dir = tmpDir("state")
+    val st = new StateStore(spark, dir)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (t1, t2) = (Timestamp.valueOf("2024-01-01 00:00:00"),
+      Timestamp.valueOf("2024-02-01 00:00:00"))
+    val hll = graft.expressions.Hll
+    def sk(xs: Long*): Array[Byte] = {
+      val s = hll.empty(); xs.foreach(x => hll.update(s, x * 0x9E3779B97F4A7C15L)); s
+    }
+    val (a, b) = (sk(1, 2, 3), sk(3, 4))
+    assert(jobsDuring { st.setLastRun("k", t1); st.mergeSketch("k", a) }.isEmpty)
+    val live = Seq(new Path(s"$dir/last_run/k"), new Path(s"$dir/sketches/k"))
+    // what a driver write leaves: one part file and _SUCCESS
+    live.foreach { p =>
+      val names = fs.listStatus(p).map(_.getPath.getName).filterNot(_.startsWith("."))
+      assert(names.count(_.matches("part-00000-.*-c000\\.snappy\\.parquet")) === 1 &&
+        names.contains("_SUCCESS") && names.length === 2, names.toSeq)
+    }
+    def crashBetweenRenames(): Unit =
+      live.foreach(p => assert(fs.rename(p, new Path(p.toString + ".old"))))
+
+    // (1) a writer died between `path -> path.old` and `tmp -> path`:
+    // a read heals the prior state, and so does the merge read of the
+    // next update, which then lands exactly once
+    crashBetweenRenames()
+    assert(st.lastRun("k") === Some(t1))
+    assert(st.sketch("k").map(_.toSeq) === Some(a.toSeq))
+    crashBetweenRenames()
+    st.setLastRun("k", t2)
+    st.mergeSketch("k", b)
+    assert(st.lastRun("k") === Some(t2))
+    assert(st.sketch("k").map(_.toSeq) === Some(hll.merge(a.clone(), b).toSeq))
+    assert(live.forall(p => !fs.exists(new Path(p.toString + ".old"))))
+
+    // (2) a writer died after staging its tmp dir, before _SUCCESS and
+    // before any swap: the tmp dir is invisible, the next write sweeps it
+    val merged = st.sketch("k").get
+    live.zip(Seq[org.apache.spark.sql.DataFrame](
+      Seq(("k", t1)).toDF("key", "last_run"), Seq(sk(9)).toDF("sketch"))).foreach {
+      case (p, df) =>
+        val tmp = new Path(p.toString + ".tmp-crashed")
+        df.write.parquet(tmp.toString)
+        assert(fs.delete(new Path(tmp, "_SUCCESS"), false))
+    }
+    assert(st.lastRun("k") === Some(t2))
+    assert(st.sketch("k").map(_.toSeq) === Some(merged.toSeq))
+    st.setLastRun("k", t1)
+    st.mergeSketch("k", b)
+    assert(st.lastRun("k") === Some(t1))
+    assert(st.sketch("k").map(_.toSeq) === Some(hll.merge(merged.clone(), b).toSeq))
+    assert(live.forall(p => fs.globStatus(new Path(p.toString + ".tmp-*")).isEmpty))
   }
 
   test("state keys with glob metacharacters round-trip (orphan sweep escapes)") {

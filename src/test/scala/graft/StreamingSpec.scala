@@ -433,7 +433,7 @@ class StreamingSpec extends SparkSpec {
     assert(empty.overflowed && empty.timestamps === (0 until 90).map(minute))
   }
 
-  test("recapture plan of a lake-backed log is one Spark job (T4)") {
+  test("recapture plan of a lake-backed log runs no Spark job (T4)") {
     val lake = new Lake(spark, tmpDir("lake"))
     val log = new CaptureLog(spark, lake)
     val now = Timestamp.valueOf("2024-01-05 00:10:00")
@@ -444,11 +444,61 @@ class StreamingSpec extends SparkSpec {
     val jobs = jobsDuring {
       p = Recapture.plan(spark, log.read("ds", "gps"), now, maxRecaptures = 2000)
     }
-    assert(jobs.size === 1)
+    assert(jobs.isEmpty)
     // 1441 spine minutes, 10 captured across the two date partitions
     assert(p.timestamps.size === 1431 && !p.overflowed)
     assert(p.timestamps.contains(new Timestamp(now.getTime - 4 * 60000L)))
     assert(!p.timestamps.contains(Timestamp.valueOf("2024-01-04 23:59:00")))
+  }
+
+  test("recapture plan lists only the lookback window's log partitions (T4)") {
+    import graft.lake.DriverRead
+    val zoneKey = "spark.sql.session.timeZone"
+    val zoneWas = spark.conf.get(zoneKey)
+    def inZone[T](zone: String)(body: => T): T = {
+      spark.conf.set(zoneKey, zone)
+      try body finally spark.conf.set(zoneKey, zoneWas)
+    }
+    val now = Timestamp.valueOf("2024-01-05 01:00:20")
+    val first = Timestamp.valueOf("2024-01-03 20:00:00").getTime
+    // 1.5 days of minutes around the window, with holes and failures,
+    // plus days far outside it; written under zones on both sides of UTC
+    // so the `data` partitions do not follow UTC dates
+    val rows = (0 until 2040).filterNot(m => m % 97 == 5).map { m =>
+      (new Timestamp(first + m * 60000L + (m % 7) * 1000L), m % 89 != 3,
+        if (m % 89 == 3) "err" else null: String)
+    } ++ Seq("2024-01-01 12:00:00", "2024-01-09 12:00:00").map(t =>
+      (Timestamp.valueOf(t), true, null: String))
+    val zones = Seq("UTC", "America/Sao_Paulo", "Asia/Kolkata")
+    val lake = new Lake(spark, tmpDir("lake"))
+    val log = new CaptureLog(spark, lake)
+    rows.grouped(700).zip(Iterator.continually(zones.tail).flatten).foreach {
+      case (part, zone) => inZone(zone)(lake.append(
+        part.toDF("timestamp_captura", "sucesso", "erro")
+          .withColumn("data", date_format($"timestamp_captura", "yyyy-MM-dd")),
+        log.ref("ds", "gps"), partitionBy = Seq("data")))
+    }
+    val inMemory = rows.toDF("timestamp_captura", "sucesso", "erro")
+    for (zone <- zones; interval <- Seq(1, 5); cap <- Seq(2000, 90, 1)) inZone(zone) {
+      val label = s"$zone, $interval-minute, cap $cap"
+      val logs = log.read("ds", "gps")
+      // same plan as the unpruned in-memory log, and no job
+      var p: Recapture.Plan = null
+      assert(jobsDuring {
+        p = Recapture.plan(spark, logs, now, interval, maxRecaptures = cap)
+      }.isEmpty, label)
+      assert(p === Recapture.plan(spark, inMemory, now, interval, maxRecaptures = cap), label)
+      // the window's UTC dates, one day of margin each side
+      val step = interval * 60
+      val from = (now.getTime / 1000 - 86400L) / step * step * 1000
+      val until = from + (now.getTime - from) / (step * 1000L) * step * 1000 + 60000L
+      val listed = DriverRead.listing(Recapture.window(logs, from, until)).get
+        .map(_.values.getInt(0)).map(d => java.time.LocalDate.ofEpochDay(d).toString)
+      val all = DriverRead.listing(logs).get
+        .map(_.values.getInt(0)).map(d => java.time.LocalDate.ofEpochDay(d).toString)
+      assert(all.toSet.contains("2024-01-01") && all.toSet.contains("2024-01-09"), label)
+      assert(listed.toSet === all.toSet.filter(d => d >= "2024-01-03" && d <= "2024-01-06"), label)
+    }
   }
 
   test("raw zone is replay-idempotent per tick (same-name replace semantics)") {
