@@ -318,11 +318,6 @@ class Lake(spark: SparkSession, root: String) {
               .filter(n => lines.length == n + 2 && lines.last == "end" &&
                 lines.slice(1, n + 1).forall(_.nonEmpty))
               .map(n => lines.slice(1, n + 1))
-          // legacy uncounted format (pre-r16 writer crashed mid-rewrite,
-          // healed after upgrade): ambiguous only for a column literally
-          // named "end" — accepted as before for heal compatibility
-          case Some("v1") if lines.lastOption.contains("end") =>
-            Some(lines.slice(1, lines.length - 1).filter(_.nonEmpty))
           case _ => None // torn — table untouched, catalog still answers
         }
       } catch { case _: java.io.FileNotFoundException => None }
@@ -357,18 +352,16 @@ class Lake(spark: SparkSession, root: String) {
       // would truncate the table to whichever tasks committed.
       if (fs.exists(new Path(snapPath, "_SUCCESS"))) {
         val partCols = readSidecar().getOrElse {
-          // legacy snapshot (pre-sidecar): the sidecar is written before
-          // the table is ever touched, so sidecar-absent ⇒ table intact
-          // for snapshots taken by this code; an old-format snapshot
-          // with a missing table has no layout record anywhere — fail
-          // with the story rather than NoSuchTableException.
+          // the sidecar commits before the table is touched, so a snapshot
+          // without a readable one left the table intact: its catalog
+          // entry still answers, unless something dropped the table since
           if (spark.catalog.tableExists(name)) catalogPartCols()
           else throw new IllegalStateException(
             s"compactBucketed($name): committed snapshot $snapPath has no " +
-              "partition-layout sidecar and the catalog table is gone — " +
-              "a pre-sidecar writer crashed mid-rewrite; recreate the " +
-              "table from the snapshot manually (its partition columns " +
-              "are not recorded)")
+              "readable partition-layout sidecar, so compaction never " +
+              "touched the table, yet the catalog table is gone: it was " +
+              "dropped outside compaction; recreate it from the snapshot " +
+              "manually (its partition columns are not recorded)")
         }
         rewriteFrom(spark.read.parquet(snapPath.toString), partCols)
       } else { fs.delete(snapPath, true); freshSnapshot() }

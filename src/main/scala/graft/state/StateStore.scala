@@ -17,11 +17,37 @@ import org.apache.spark.sql.types.StructType
   * under `root`; update semantics are read-modify-overwrite, which is
   * safe under the one-writer-per-pipeline discipline the reference also
   * assumes (its skip_if_running guard, utils/utils.py:197-231).
+  *
+  * One on-disk layout: a root this layout owns holds the empty marker
+  * file `_graft_state_v1`, created on first open. A root that holds any
+  * state kind dir but no marker was written by an older or unknown
+  * layout, and opening it throws rather than reading as first-run.
   */
 class StateStore(spark: SparkSession, root: String) {
   import spark.implicits._
 
   val SeedWatermark: Timestamp = Timestamp.valueOf("1900-01-01 00:00:00")
+
+  // Presence, not content, is the marker, so a torn create cannot wedge
+  // a root; filesystem calls only, once per instance.
+  locally {
+    import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+    val fs = new Path(root).getFileSystem(
+      spark.sessionState.newHadoopConfWithOptions(NioLocalFileSystem.writerOptions))
+    val marker = new Path(root, "_graft_state_v1")
+    val kinds = Set("last_run", "entity_watermarks", "processed_files", "tables",
+      "sketches", "quantile_sketches", "topk_sketches")
+    if (!fs.exists(marker)) {
+      val found = try fs.listStatus(new Path(root)).map(_.getPath.getName).filter(kinds).sorted
+      catch { case _: java.io.FileNotFoundException => Array.empty[String] }
+      // re-checked: a concurrent first open creates it before any write
+      if (found.nonEmpty && !fs.exists(marker))
+        throw new IllegalStateException(s"state root $root holds ${found.mkString(", ")} " +
+          s"but no ${marker.getName}: it was written by an older or unknown layout")
+      try fs.create(marker, false).close()
+      catch { case _: FileAlreadyExistsException => () }
+    }
+  }
 
   /** Keys are LOGICAL names; nothing on the path side may interpret
     * them. Both Hadoop's globStatus (the orphan-tmp sweep) and Spark's
@@ -30,11 +56,7 @@ class StateStore(spark: SparkSession, root: String) {
     * wrong siblings — or match nothing and silently report first-run.
     * Characters outside a conservative safe set are percent-encoded
     * ('%' itself included, so the mapping is injective and two distinct
-    * keys can never collide on one path). Safe-charset keys encode to
-    * themselves; keys that DID work un-encoded before this scheme
-    * existed (spaces, '/', …: legal paths, just glob-unsafe) are
-    * migrated on first touch — without that, their watermarks would
-    * silently read as first-run and re-ingest entire sources. */
+    * keys can never collide on one path). */
   private def safeKey(key: String): String =
     key.flatMap { c =>
       if (c.isLetterOrDigit || c == '.' || c == '_' || c == '-' || c == '=') c.toString
@@ -45,63 +67,8 @@ class StateStore(spark: SparkSession, root: String) {
         .map(b => f"%%${b & 0xff}%02X").mkString
     }
 
-  /** One-time-per-key legacy-layout migration: state written before
-    * percent-encoding lived at the RAW key name; rename it to the
-    * encoded path the first time the key is touched this session —
-    * without this, such keys silently read as first-run and re-ingest
-    * their sources. The probe only runs when the raw key could not
-    * itself BE another key's current encoding (no %XX hex sequence in
-    * it): a raw key like "a%20b" is also safeKey("a b"), and probing
-    * it would rename the LIVE state of " "-keyed pipelines — the same
-    * cross-key-theft class as the interim scheme below. Ambiguous raw
-    * keys (any with literal %-hex) follow the same manual-rename
-    * contract; unambiguous ones (spaces, '/', …) migrate automatically.
-    *
-    * Deliberately NOT probed: the interim code-point %XX encoding
-    * (one %XX per code point, pre-UTF-8-byte). Its output alphabet
-    * sits INSIDE the current scheme's — codePoint("‹"=U+2039) =
-    * "%2039" = safeKey(" 39") — so an automatic probe could rename a
-    * DIFFERENT live key's state (silently resetting its watermark),
-    * and every non-ASCII case is ambiguous this way (the extra hex
-    * digits fold into safe characters). Non-ASCII keys written under
-    * that one-version scheme require a manual rename to the
-    * [[safeKey]] path; the failure mode of NOT renaming is a loud
-    * re-ingest, the failure mode of auto-probing would be silent
-    * cross-key state theft. */
-  private val migrationChecked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def keyedPath(dir: String, key: String): String = {
-    val enc = safeKey(key)
-    val path = s"$root/$dir/$enc"
-    // add(path) first: ambiguous paths get marked checked too (their
-    // probe is skipped forever), so the regex runs once per path, not
-    // on every state read/write
-    if (enc != key && migrationChecked.add(path) && !ambiguousRawKey(key)) {
-      import org.apache.hadoop.fs.Path
-      // keys whose raw form is not even a constructible Path (':' etc.)
-      // can have no legacy state — they never worked un-encoded
-      val legacyOpt =
-        try Some(new Path(s"$root/$dir/$key"))
-        catch { case _: IllegalArgumentException => None }
-      legacyOpt.foreach { legacy =>
-        val p = new Path(path)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(p) && fs.exists(legacy) && !fs.rename(legacy, p) &&
-            !fs.exists(p))
-          throw new java.io.IOException(
-            s"legacy state migration $legacy -> $p failed")
-      }
-    }
-    path
-  }
-
-  /** A raw key containing a literal %-hex sequence is indistinguishable
-    * from another key's [[safeKey]] encoding — its raw path may be live
-    * foreign state, so the migration probe must not touch it. */
-  private val PercentHex = java.util.regex.Pattern.compile("%[0-9A-F]{2}")
-  private def ambiguousRawKey(key: String): Boolean =
-    PercentHex.matcher(key).find()
+  private def keyedPath(dir: String, key: String): String =
+    s"$root/$dir/${safeKey(key)}"
 
   private def runPath(key: String) = keyedPath("last_run", key)
   private def entityPath(key: String) = keyedPath("entity_watermarks", key)
@@ -251,35 +218,6 @@ class StateStore(spark: SparkSession, root: String) {
     DriverRead.collect(readOwned(runPath(key), "key STRING, last_run TIMESTAMP")
       .filter($"key" === key).select($"last_run"))
       .headOption.map(_.getTimestamp(0))
-      .orElse(legacyLastRun(key))
-
-  /** Migration read: the pre-per-key layout kept ALL keys in one parquet
-    * table at `$root/last_run` — the same path that now holds the
-    * per-key subdirs, so surviving legacy part-files sit directly in it.
-    * A key missing from the new layout falls back here (and moves to a
-    * per-key path on its next setLastRun), so an upgrade never silently
-    * re-processes history from the seed.
-    *
-    * Loaded ONCE per StateStore instance (the legacy table is one row
-    * per key — driver-safe): without memoization every miss would launch
-    * a Spark read, including every genuinely new key forever. Note the
-    * fallback also means deleting a per-key dir alone does NOT reset a
-    * key that predates the migration — remove the legacy part-files once
-    * all pipelines have written the new layout. */
-  private lazy val legacyRuns: Map[String, Timestamp] = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(s"$root/last_run")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = try fs.listStatus(dir)
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-    catch { case _: java.io.IOException => Array.empty[org.apache.hadoop.fs.FileStatus] }
-    if (parts.isEmpty) Map.empty
-    else spark.read.parquet(parts.map(_.getPath.toString).toIndexedSeq: _*)
-      .select($"key", $"last_run").collect()
-      .map(r => r.getString(0) -> r.getTimestamp(1)).toMap
-  }
-
-  private def legacyLastRun(key: String): Option[Timestamp] = legacyRuns.get(key)
 
   def setLastRun(key: String, ts: Timestamp): Unit =
     writeAtomic(Seq((key, ts)).toDF("key", "last_run"), runPath(key))
@@ -339,8 +277,6 @@ class StateStore(spark: SparkSession, root: String) {
     writeAtomic(Seq(merged).toDF("sketch"), path)
   }
 
-  // keyedPath, not bare safeKey: sketch state predates both encoding
-  // schemes too, so it gets the same legacy-layout migration probe
   private def sketchPath(key: String) = keyedPath("sketches", key)
   private def qsketchPath(key: String) = keyedPath("quantile_sketches", key)
   private def topkPath(key: String) = keyedPath("topk_sketches", key)

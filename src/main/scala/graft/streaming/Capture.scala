@@ -216,18 +216,19 @@ class Capture(spark: SparkSession, lake: Lake, log: CaptureLog,
     * batchId with different ticks; review-found). The rename loser
     * deletes its temp and reads the winner.
     *
-    * Defense in depth on the READ side: a ZERO-LENGTH tick (the one
-    * state a legacy direct-create writer crash leaves at the final
-    * path — this protocol's temps commit by rename, so a partial
-    * never lands here) is treated as ABSENT — healed and re-created,
-    * with a RE-READ before the delete (narrowing the heal/commit race
-    * to two adjacent reads; a racer's commit between them survives).
-    * A torn NON-EMPTY tick has no innocent producer, so it surfaces
-    * LOUDLY instead of being silently re-minted — re-minting could
-    * replace a tick another attempt already landed partitions under
-    * (the r13/r14 residual TOCTOU, now closed for data-carrying
-    * files: only empty files are ever deleted, and no committed tick
-    * is empty). Reads
+    * Heal on the READ side: a ZERO-LENGTH tick is treated as ABSENT —
+    * healed and re-created, with a RE-READ before the delete (narrowing
+    * the heal/commit race to two adjacent reads; a racer's commit
+    * between them survives). This writer produces that state: the temp
+    * is written and closed without `hsync` before its rename, so a host
+    * crash after the rename can persist the rename but not the bytes,
+    * leaving the committed name empty. A torn NON-EMPTY tick has no
+    * innocent producer (a tick's 13-14 bytes sit in one block, which a
+    * crash keeps or loses whole), so it surfaces LOUDLY instead of
+    * being silently re-minted — re-minting could replace a tick another
+    * attempt already landed partitions under (the r13/r14 residual
+    * TOCTOU, now closed for data-carrying files: only empty files are
+    * ever deleted). Reads
     * carry no exists() pre-check — a concurrent heal deleting the
     * file between exists and open would turn FileNotFoundException
     * into a micro-batch failure, so open's FileNotFoundException IS
@@ -266,24 +267,23 @@ class Capture(spark: SparkSession, lake: Lake, log: CaptureLog,
       } catch { case _: java.io.FileNotFoundException => None }
     // Plausibility-bounded: ticks are minted from currentTimeMillis, so
     // a committed tick is a 13-14 digit epoch (2001..5138). A PARTIAL
-    // NUMERIC PREFIX left by a legacy direct-create crash ("1694" of
-    // "1694012345678") would otherwise parse as a bogus ~1970 tick and
-    // silently be accepted — the bound routes it to the same loud path
-    // as non-numeric corruption (review-found).
+    // NUMERIC PREFIX ("1694" of "1694012345678": external truncation,
+    // no writer here leaves one) would otherwise parse as a bogus ~1970
+    // tick and silently be accepted — the bound routes it to the same
+    // loud path as non-numeric corruption (review-found).
     def parse(s: String): Option[Timestamp] =
       s.trim.toLongOption.filter(ms => ms >= 1000000000000L &&
         ms < 100000000000000L).map(ms => new Timestamp(ms))
     // Some(ts) = committed tick; None = absent (after healing an empty
     // file). Healing is restricted to ZERO-LENGTH files — the one state
-    // a crashed writer actually leaves at the final path on a supported
-    // store (a legacy direct-create that died before its write; this
-    // protocol's own temps commit by rename, so a partial NEVER lands
-    // here). A torn NON-EMPTY tick therefore has no innocent
+    // a crashed writer leaves at the final path on a supported store (an
+    // unsynced temp renamed in, then a host crash before its bytes
+    // reached disk). A torn NON-EMPTY tick therefore has no innocent
     // explanation — silently re-minting it could replace a tick another
     // attempt already landed partitions under, so it surfaces LOUDLY
     // and an operator decides. This closes the r13/r14 heal-race
     // window for data-carrying files: only empty files are ever
-    // deleted, and no committed tick is empty.
+    // deleted.
     def tryRead(): Option[Timestamp] = readOnce() match {
       case None => None
       case Some(s) => parse(s).orElse {

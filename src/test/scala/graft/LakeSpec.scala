@@ -1356,7 +1356,7 @@ class LakeSpec extends SparkSpec {
     spark.table("state_bkh.t").write
       .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(snap.toString)
     val sc = fs.create(new org.apache.hadoop.fs.Path(snap, "_graft_partcols"), true)
-    sc.write("v1\nseen_date\nend".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    sc.write("v1 1\nseen_date\nend".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     sc.close()
     spark.sql("DROP TABLE state_bkh.t")
     fs.delete(new org.apache.hadoop.fs.Path(lake.path(ref)), true)
@@ -1409,21 +1409,36 @@ class LakeSpec extends SparkSpec {
     assert(spark.catalog.listColumns("state_bkh.t").collect()
       .filter(_.isPartition).map(_.name).toSeq === Seq("seen_date"))
 
-    // the COUNTED format (r16 writer): a mid-rewrite crash heals from
-    // "v1 <n>" with no catalog table at all
-    spark.table("state_bkh.t").write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(snap.toString)
-    val cnt = fs.create(new org.apache.hadoop.fs.Path(snap, "_graft_partcols"), true)
-    cnt.write("v1 1\nseen_date\nend".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    cnt.close()
-    spark.sql("DROP TABLE state_bkh.t")
-    fs.delete(new org.apache.hadoop.fs.Path(lake.path(ref)), true)
+    // the UNCOUNTED "v1" format is not a sidecar this writer emits: it
+    // reads as no sidecar. With the table present the catalog answers...
+    def uncountedSnapshot(): Unit = {
+      spark.table("state_bkh.t").write
+        .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(snap.toString)
+      val unc = fs.create(new org.apache.hadoop.fs.Path(snap, "_graft_partcols"), true)
+      unc.write("v1\nseen_date\nend".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      unc.close()
+    }
+    uncountedSnapshot()
     lake.compactBucketed(ref, "k", 4)
     assert(!fs.exists(snap))
     assert(spark.table("state_bkh.t")
       .as[(Long, Int, java.sql.Date)].collect().toSet === rows)
     assert(spark.catalog.listColumns("state_bkh.t").collect()
       .filter(_.isPartition).map(_.name).toSeq === Seq("seen_date"))
+    // ...and with the table dropped outside compaction, the heal fails
+    // loudly and keeps the snapshot for a manual restore
+    uncountedSnapshot()
+    spark.sql("DROP TABLE state_bkh.t")
+    fs.delete(new org.apache.hadoop.fs.Path(lake.path(ref)), true)
+    val gone = intercept[IllegalStateException](lake.compactBucketed(ref, "k", 4))
+    assert(gone.getMessage.contains(snap.toString) &&
+      gone.getMessage.contains("dropped outside compaction"), gone.getMessage)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(snap, "_SUCCESS")))
+    lake.writeBucketed(spark.read.parquet(snap.toString), ref, "k", 4,
+      partitionBy = Seq("seen_date"))
+    fs.delete(snap, true)
+    assert(spark.table("state_bkh.t")
+      .as[(Long, Int, java.sql.Date)].collect().toSet === rows)
 
     // advisor-found (r15) ambiguity: a torn prefix of a list whose
     // MIDDLE column is literally named "end" — "v1 3\na\nend" from

@@ -35,7 +35,10 @@ class StateSpec extends SparkSpec {
   }
 
   test("lastRun and sketch reads and writes of a stored key run no Spark job") {
-    val st = new StateStore(spark, tmpDir("state"))
+    val root = tmpDir("state")
+    // the layout check on open (first and repeat) is filesystem calls only
+    var st: StateStore = null
+    assert(jobsDuring { st = new StateStore(spark, root) }.isEmpty)
     val now = Timestamp.valueOf("2024-02-01 00:00:00")
     // one-row frames write on the driver; the store reads its one-row
     // tables on the driver, with the declared schema (no inference)
@@ -52,6 +55,7 @@ class StateSpec extends SparkSpec {
     // an absent key reads as first-run without a job either
     assert(jobsDuring { got = st.lastRun("ds.absent") }.isEmpty)
     assert(got.isEmpty)
+    assert(jobsDuring { st = new StateStore(spark, root) }.isEmpty)
   }
 
   test("crash between swap renames: next reader heals .old BEFORE its merge reads") {
@@ -138,7 +142,8 @@ class StateSpec extends SparkSpec {
   }
 
   test("state keys with glob metacharacters round-trip (orphan sweep escapes)") {
-    val st = new StateStore(spark, tmpDir("state"))
+    val root = tmpDir("state")
+    val st = new StateStore(spark, root)
     // a key like a dbt selector or bracketed tag must not turn the
     // orphan-tmp glob into a pattern that matches (and deletes) siblings
     val odd = "ds.sel[*].t{1}"
@@ -154,69 +159,136 @@ class StateSpec extends SparkSpec {
     st.setLastRun("ds. 39", Timestamp.valueOf("2024-07-01 00:00:00"))
     assert(st.lastRun("ds.‹") === Some(Timestamp.valueOf("2024-06-01 00:00:00")))
     assert(st.lastRun("ds. 39") === Some(Timestamp.valueOf("2024-07-01 00:00:00")))
-  }
-
-  test("legacy un-encoded state paths migrate on first touch") {
-    // a key with a space worked fine BEFORE percent-encoding existed
-    // (legal path, no glob chars) — its watermark must not silently
-    // reset to first-run after the layout change
-    val root = tmpDir("state")
-    // simulate the pre-encoding layout: the key's state written at its
-    // RAW path name, exactly as versions before percent-encoding did
-    Seq(("my pipeline", Timestamp.valueOf("2024-03-01 00:00:00")))
-      .toDF("key", "last_run")
-      .write.parquet(s"$root/last_run/my pipeline")
-    val st = new StateStore(spark, root)
-    assert(st.lastRun("my pipeline") ===
-      Some(Timestamp.valueOf("2024-03-01 00:00:00")))
-    // and the state now lives at the encoded path
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$root/last_run/my%20pipeline")))
-    // advancing writes through the encoded path; the value survives
-    st.setLastRun("my pipeline", Timestamp.valueOf("2024-03-02 00:00:00"))
-    assert(st.lastRun("my pipeline") ===
-      Some(Timestamp.valueOf("2024-03-02 00:00:00")))
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/last_run"))
+      .map(_.getPath.getName).filterNot(_.startsWith(".")).toSet ===
+      Set("ds.sel%5B%2A%5D.t%7B1%7D", "ds.sel1.t1", "ds.%E2%80%B9", "ds.%2039"))
   }
 
   test("migration probe never steals a colliding key's live state") {
-    // the interim code-point scheme encodes '‹' (U+2039) as "%2039" —
-    // EXACTLY the current encoding of the distinct key " 39". A naive
-    // auto-probe of the interim layout would rename " 39"'s live state
-    // onto '‹' on first touch (silent watermark theft + reset). The
-    // probe is therefore raw-layout-only; interim-era non-ASCII keys
-    // migrate by documented manual rename, and their absence reads as
-    // a LOUD first-run instead.
+    // No probe renames state between paths any more, and the encoding is
+    // injective, so keys whose encodings an older scheme could confuse
+    // each keep their own live state.
     val root = tmpDir("state")
     val st = new StateStore(spark, root)
-    st.setLastRun(" 39", Timestamp.valueOf("2024-03-01 00:00:00")) // → %2039
-    assert(st.lastRun("‹").isEmpty) // does NOT read/steal %2039
-    assert(st.lastRun(" 39") ===
-      Some(Timestamp.valueOf("2024-03-01 00:00:00"))) // untouched
-    // and writing '‹' lands on its own UTF-8 path, colliding with no one
+    // a code-point-wide %X encoding maps both '‹' (U+2039) and " 39" to "%2039"
+    st.setLastRun(" 39", Timestamp.valueOf("2024-03-01 00:00:00"))
+    assert(st.lastRun("‹").isEmpty)
     st.setLastRun("‹", Timestamp.valueOf("2024-04-01 00:00:00"))
     assert(st.lastRun("‹") === Some(Timestamp.valueOf("2024-04-01 00:00:00")))
     assert(st.lastRun(" 39") === Some(Timestamp.valueOf("2024-03-01 00:00:00")))
+    // '%' is encoded too: raw "a%20b" is not safeKey("a b")
+    st.setLastRun("a b", Timestamp.valueOf("2024-05-01 00:00:00"))
+    assert(st.lastRun("a%20b").isEmpty)
+    st.setLastRun("a%20b", Timestamp.valueOf("2024-06-01 00:00:00"))
+    assert(st.lastRun("a b") === Some(Timestamp.valueOf("2024-05-01 00:00:00")))
+    assert(st.lastRun("a%20b") === Some(Timestamp.valueOf("2024-06-01 00:00:00")))
 
-    // sketch paths share keyedPath's raw-layout migration (they predate
-    // the encoding schemes too)
-    val sk = graft.expressions.Hll.empty()
-    Seq(sk).toDF("sketch").write.parquet(s"$root/sketches/tok count")
+    // a raw-named dir inside a root of this layout is neither read nor
+    // renamed onto the key's encoded path
+    import org.apache.hadoop.fs.Path
+    Seq(graft.expressions.Hll.empty()).toDF("sketch").write.parquet(s"$root/sketches/tok count")
     val st2 = new StateStore(spark, root)
-    assert(st2.sketch("tok count").isDefined) // raw-era path migrated
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(
-      s"$root/sketches/tok%20count")))
+    assert(st2.sketch("tok count").isEmpty)
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(new Path(s"$root/sketches/tok count")))
+    assert(!fs.exists(new Path(s"$root/sketches/tok%20count")))
+  }
 
-    // the RAW probe has the same collision class: raw key "a%20b" IS
-    // safeKey("a b"), so first-touching key "a%20b" must not rename
-    // "a b"'s live state — ambiguous (%-hex) raw keys are never probed
-    val st3 = new StateStore(spark, tmpDir("state"))
-    st3.setLastRun("a b", Timestamp.valueOf("2024-05-01 00:00:00"))
-    assert(st3.lastRun("a%20b").isEmpty) // no theft, loud first-run
-    assert(st3.lastRun("a b") ===
-      Some(Timestamp.valueOf("2024-05-01 00:00:00"))) // untouched
+  /** `body` must refuse to open `root`, naming it and what it found. */
+  private def assertOldLayout(root: String, found: String)(body: => Unit): Unit = {
+    val e = intercept[IllegalStateException](body)
+    assert(e.getMessage.contains(root) && e.getMessage.contains(found) &&
+      e.getMessage.contains("older or unknown layout"), e.getMessage)
+  }
+
+  test("old layout: a raw-key state dir fails loudly at open") {
+    // before percent-encoding, a key's state lived at its raw name
+    val root = tmpDir("state")
+    Seq(("my pipeline", Timestamp.valueOf("2024-03-01 00:00:00")))
+      .toDF("key", "last_run").write.parquet(s"$root/last_run/my pipeline")
+    assertOldLayout(root, "last_run")(new StateStore(spark, root))
+  }
+
+  test("old layout: a single-table last_run fails loudly at open") {
+    // before per-key storage, every key's row sat in one table at last_run
+    val root = tmpDir("state")
+    Seq(("old.pipeline", Timestamp.valueOf("2024-05-01 00:00:00")))
+      .toDF("key", "last_run").coalesce(1).write.parquet(s"$root/last_run")
+    assertOldLayout(root, "last_run")(new StateStore(spark, root))
+  }
+
+  test("old layout: kind dirs without the marker fail loudly; other entries do not count") {
+    import org.apache.hadoop.fs.Path
+    val root = tmpDir("state")
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a DailyIngest state root's own entries are not state kinds
+    Seq("_locks", "warehouse", "metastore_db", "bpe").foreach(d => fs.mkdirs(new Path(root, d)))
+    new StateStore(spark, root).setLastRun("k", Timestamp.valueOf("2024-01-01 00:00:00"))
+    assert(fs.exists(new Path(root, "_graft_state_v1")))
+    // the same encoded layout, marker gone: never read as first-run
+    Seq(("k", Array[Byte](1))).toDF("key", "sketch").write.parquet(s"$root/sketches/k")
+    assert(fs.delete(new Path(root, "_graft_state_v1"), false))
+    assertOldLayout(root, "last_run, sketches")(new StateStore(spark, root))
+  }
+
+  test("state layout is pinned: the marker and one encoded key dir per kind") {
+    import org.apache.hadoop.fs.Path
+    val root = tmpDir("state")
+    val st = new StateStore(spark, root)
+    val key = "my pipeline"
+    val t = Timestamp.valueOf("2024-01-01 00:00:00")
+    st.setLastRun(key, t)
+    st.advanceEntityWatermarks(key, Seq(("e", t)).toDF("entity", "ts"), "entity", "ts")
+    st.markProcessed(key, Seq("f"))
+    st.writeTable(key, Seq(1).toDF("x"))
+    st.mergeSketch(key, Array[Byte](1))
+    st.mergeQuantiles(key, Array[Byte](1))
+    st.mergeTopK(key, Array[Byte](1))
+    // a path change must update this tree and bump the marker together
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def names(p: Path) = fs.listStatus(p).map(_.getPath.getName).filterNot(_.startsWith("."))
+    val tree = names(new Path(root)).flatMap { n =>
+      val p = new Path(root, n)
+      if (fs.getFileStatus(p).isDirectory) names(p).map(c => s"$n/$c").toSeq else Seq(n)
+    }.sorted.toSeq
+    assert(tree === Seq(
+      "_graft_state_v1",
+      "entity_watermarks/my%20pipeline",
+      "last_run/my%20pipeline",
+      "processed_files/my%20pipeline",
+      "quantile_sketches/my%20pipeline",
+      "sketches/my%20pipeline",
+      "tables/my%20pipeline",
+      "topk_sketches/my%20pipeline"))
+  }
+
+  test("concurrent first open of one fresh root: all succeed, one marker") {
+    import org.apache.hadoop.fs.Path
+    import java.util.concurrent.{CyclicBarrier, Executors}
+    val pool = Executors.newFixedThreadPool(4)
+    try (1 to 5).foreach { round =>
+      val root = s"${tmpDir("state")}/fresh"
+      val start = new CyclicBarrier(4)
+      // each opener writes at once, so a slower opener may list a kind
+      // dir another one wrote after creating the marker
+      val futs = (1 to 4).map { i =>
+        pool.submit(new Runnable {
+          def run(): Unit = {
+            start.await()
+            new StateStore(spark, root)
+              .setLastRun(s"k$i", Timestamp.valueOf("2024-01-01 00:00:00"))
+          }
+        })
+      }
+      futs.foreach(_.get())
+      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(fs.listStatus(new Path(root)).map(_.getPath.getName)
+        .filterNot(_.startsWith(".")).sorted.toSeq === Seq("_graft_state_v1", "last_run"),
+        s"round $round")
+      assert((1 to 4).forall(i => new StateStore(spark, root).lastRun(s"k$i").isDefined))
+    } finally pool.shutdown()
   }
 
   test("concurrent setLastRun on different keys: no lost update (per-key storage)") {
@@ -534,22 +606,6 @@ class StateSpec extends SparkSpec {
     st.mergeQuantiles("tok400", k400sk.serialize())
     st.mergeQuantiles("tok400", Qsk.empty(200).serialize()) // empty-batch run
     assert(Qsk.deserialize(st.quantileSketch("tok400").get).quantile(0.5) === 50.0)
-  }
-
-  test("legacy single-file last_run layout is still readable (migration)") {
-    val dir = tmpDir("state")
-    // simulate the pre-per-key layout: one parquet table AT $root/last_run
-    Seq(("old.pipeline", Timestamp.valueOf("2024-05-01 00:00:00")))
-      .toDF("key", "last_run").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/last_run")
-    val st = new StateStore(spark, dir)
-    assert(st.lastRun("old.pipeline") ===
-      Some(Timestamp.valueOf("2024-05-01 00:00:00")))
-    assert(st.lastRun("never.seen").isEmpty)
-    // the per-key layout wins once written
-    st.setLastRun("old.pipeline", Timestamp.valueOf("2024-06-01 00:00:00"))
-    assert(st.lastRun("old.pipeline") ===
-      Some(Timestamp.valueOf("2024-06-01 00:00:00")))
   }
 
   test("state upserts stay distributed at 1e5 entities (no driver collect)") {

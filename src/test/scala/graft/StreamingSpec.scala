@@ -535,10 +535,11 @@ class StreamingSpec extends SparkSpec {
     // the commit is rename-based: no temp debris survives a completed call
     assert(!fs.listStatus(dir).exists(_.getPath.getName.endsWith(".tmp")))
 
-    // crash window of the pre-rename writer: an EMPTY file at the final
-    // path (create succeeded, write/close never ran). Must be treated as
-    // ABSENT — healed and re-created — not thrown on (the old read path
-    // threw NumberFormatException on ''.toLong forever, wedging replays).
+    // host crash after an unsynced commit: the rename persisted but the
+    // temp's bytes did not, leaving an EMPTY file at the final path. Must
+    // be treated as ABSENT — healed and re-created — not thrown on (a
+    // read that threw NumberFormatException on ''.toLong would wedge
+    // replays forever).
     fs.create(new org.apache.hadoop.fs.Path(dir, "8"), true).close()
     val t2 = cap.tickFor(8L)
     assert(cap.tickFor(8L) === t2) // healed file is now the committed tick
