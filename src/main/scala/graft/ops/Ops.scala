@@ -87,37 +87,6 @@ object Alerts {
     message.grouped(chunk).foreach(alerter.send)
 }
 
-/** K13: per-query stage metrics via a Spark listener (the reference ships
-  * per-stage timings to Elasticsearch; we expose them as rows). */
-final class StageMetricsListener extends org.apache.spark.scheduler.SparkListener {
-  import StageMetricsListener.StageMetric
-  val metrics = scala.collection.mutable.ArrayBuffer[StageMetric]()
-
-  override def onStageCompleted(
-      sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-    val m = sc.stageInfo.taskMetrics
-    metrics += StageMetric(sc.stageInfo.stageId, sc.stageInfo.name,
-      sc.stageInfo.numTasks, m.executorRunTime, m.inputMetrics.bytesRead,
-      m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten)
-  }
-
-  def report(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    metrics.toSeq.map(m => (m.stageId, m.name.take(60), m.numTasks,
-      m.runTimeMs, m.inputBytes, m.shuffleReadBytes, m.shuffleWriteBytes))
-      .toDF("stage_id", "name", "n_tasks", "run_ms", "input_bytes",
-        "shuffle_read", "shuffle_write")
-  }
-}
-
-object StageMetricsListener {
-  // companion-level so the case class carries no outer reference (the
-  // nested form drew an unchecked-type-test warning on every build)
-  final case class StageMetric(stageId: Int, name: String, numTasks: Int,
-                               runTimeMs: Long, inputBytes: Long,
-                               shuffleReadBytes: Long, shuffleWriteBytes: Long)
-}
-
 /** Governance report: the IAM policy-matrix flatten
   * (utils/policy_matrix/tasks.py:56-136). The reference fetches per-
   * project IAM bindings from the Cloud Resource Manager API and

@@ -99,8 +99,13 @@ class Capture(spark: SparkSession, lake: Lake, log: CaptureLog,
     * ids) when it is created, so `cancelJobGroup` and
     * `StreamingQuery.stop` cancel the raw write too and its jobs are
     * attributed to the caller's. A pooled thread would carry whatever
-    * its first caller set. This job-group reason holds for Spark-path
-    * batches only: a driver-held batch's writes run no job.
+    * its first caller set.
+    *
+    * The thread pays off for driver-held batches too, whose writes run
+    * no job: their two driver writes still overlap. Landing raw, then
+    * treat + staging, on one thread made a `capture_ticks` minute
+    * ~31 ms slower (`op_p50_s` 0.0946 → 0.1256 s in 10 alternating
+    * 5-s pairs on 4 cores, slower in 9 of 10).
     *
     * Errors: the failing write's error is rethrown; when both fail, the
     * calling thread's (treat or staging) error is rethrown with the raw
@@ -143,56 +148,40 @@ class Capture(spark: SparkSession, lake: Lake, log: CaptureLog,
   }
 
   /** The per-micro-batch body — usable directly for batch captures and
-    * from foreachBatch for streaming ones. The raw and staging writes
-    * run concurrently ([[landZones]]; cancelling the caller's job group
-    * or stopping the stream stops both), and the log row is written
-    * only after both have returned: a success row once both zones
-    * landed, else a failure row carrying the error. */
-  def processBatch(raw: DataFrame, captureTs: Timestamp): Unit = {
-    // The batch feeds TWO writes (raw + staging); cache it so the source
-    // is scanned once per tick, not once per sink.
-    val stamped = raw.withColumn("timestamp_captura", lit(captureTs))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      landZones(stamped)
-      log.append(cfg.dataset, cfg.table, captureTs, success = true)
-    } catch {
-      case e: Exception => logFailure(e) {
-        log.append(cfg.dataset, cfg.table, captureTs, success = false,
-          error = Some(e.getMessage))
-      }
-    } finally stamped.unpersist(blocking = false)
-  }
+    * from foreachBatch for streaming ones. */
+  def processBatch(raw: DataFrame, captureTs: Timestamp): Unit =
+    land(Seq(captureTs -> raw), recaptured = false)
 
   /** T4: execute a recapture backfill as ONE job, not one job per missed
-    * minute: every window's rows are stamped with their own
-    * timestamp_captura and unioned, so the raw append and the staging
-    * append each run once over all windows (the partitioned writers land
-    * every (data, hora) dir in that single pass — the
-    * Trigger.AvailableNow shape of a batch backfill). Each recovered
-    * minute still gets its own `[recapturado]` log row, and all of them
-    * land in one log write — after both zone writes, which run
-    * concurrently as in [[processBatch]]. */
-  def processBackfill(windows: Seq[(Timestamp, DataFrame)]): Unit = {
-    if (windows.isEmpty) return
-    val union = windows.map { case (ts, df) =>
+    * minute (the Trigger.AvailableNow shape of a batch backfill); each
+    * recovered minute still gets its own `[recapturado]` log row. */
+  def processBackfill(windows: Seq[(Timestamp, DataFrame)]): Unit =
+    if (windows.nonEmpty) land(windows, recaptured = true)
+
+  /** Stamps every window's rows with its own timestamp_captura and lands
+    * the union once in both zones, concurrently ([[landZones]]; cancelling
+    * the caller's job group or stopping the stream stops both). Only then
+    * are the windows' log rows written, in one write: success rows once
+    * both zones landed, else failure rows carrying the error. Both zone
+    * writes are per-tick overwrites, so a retried tick or backfill
+    * replaces its partitions instead of duplicating them. */
+  private def land(windows: Seq[(Timestamp, DataFrame)], recaptured: Boolean): Unit = {
+    // The batch feeds TWO writes (raw + staging); cache it so the source
+    // is scanned once per tick, not once per sink.
+    val stamped = windows.map { case (ts, df) =>
       df.withColumn("timestamp_captura", lit(ts))
     }.reduce(_ unionByName _)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ticks = windows.map(_._1)
     try {
-      // per-tick overwrite: if this backfill is itself a retry (its
-      // predecessor committed raw then failed on staging), the windows
-      // replace their previous raw partitions instead of duplicating
-      landZones(union)
-
-      log.appendAll(cfg.dataset, cfg.table, windows.map(_._1), success = true,
-        recaptured = true)
+      landZones(stamped)
+      log.appendAll(cfg.dataset, cfg.table, ticks, success = true, recaptured = recaptured)
     } catch {
       case e: Exception => logFailure(e) {
-        log.appendAll(cfg.dataset, cfg.table, windows.map(_._1),
-          success = false, error = Some(e.getMessage), recaptured = true)
+        log.appendAll(cfg.dataset, cfg.table, ticks, success = false,
+          error = Some(e.getMessage), recaptured = recaptured)
       }
-    } finally union.unpersist(blocking = false)
+    } finally stamped.unpersist(blocking = false)
   }
 
   /** Deterministic capture timestamp for a streaming batch: the FIRST

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -33,4 +34,8 @@ object Bridge {
     * private[spark]). */
   def checkColumnNameDuplication(names: Seq[String], caseSensitive: Boolean): Unit =
     org.apache.spark.sql.util.SchemaUtils.checkColumnNameDuplication(names, caseSensitive)
+
+  /** Delivers every listener-bus event posted so far (private[spark]);
+    * throws `TimeoutException` after a minute. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
 }

@@ -922,16 +922,42 @@ class ConnectorsSpec extends SparkSpec {
   }
 
   test("stage metrics listener captures query stages (K13)") {
-    val l = new StageMetricsListener
-    spark.sparkContext.addSparkListener(l)
-    Tables.load(spark, sf001, "orders").groupBy($"o_orderstatus").count().collect()
-    // listener events are async; give the bus a moment to drain
-    val deadline = System.currentTimeMillis() + 10000
-    while (l.metrics.isEmpty && System.currentTimeMillis() < deadline)
-      Thread.sleep(50)
-    spark.sparkContext.removeSparkListener(l)
-    assert(l.metrics.nonEmpty)
-    assert(l.report(spark).columns.contains("shuffle_write"))
+    val m = JobMeter.measure(spark) {
+      Tables.load(spark, sf001, "orders").groupBy($"o_orderstatus").count().collect()
+    }
+    val rows = m.report(spark).collect()
+    assert(rows.head.schema.fieldNames.toSeq === Seq("stage_id", "name",
+      "n_tasks", "run_ms", "input_bytes", "shuffle_read", "shuffle_write"))
+    // one row per completed stage: the map side writes the shuffle the
+    // result side reads, and the rows add up to the task-end total
+    assert(rows.map(_.getInt(0)).toSeq === m.stages.map(_.id).distinct)
+    assert(rows.exists(_.getLong(6) > 0) && rows.exists(_.getLong(5) > 0))
+    assert(rows.map(_.getLong(6)).sum === m.shuffleWriteBytes)
+  }
+
+  test("job meter: each job of the body's threads counted once, none of its own") {
+    val sc = spark.sparkContext
+    def job(tag: String): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(1 to 8, 2).count() finally sc.setJobDescription(null)
+    }
+    val m = JobMeter.measure(spark) { // a second thread, as Capture.landZones starts
+      val side = new Thread(() => job("side"))
+      side.start(); job("main"); side.join()
+    }
+    assert(m.jobs.map(_.properties.getProperty("spark.job.description"))
+      .sorted === Seq("main", "side"))
+    assert(m.jobs.forall(j => j.endMs >= j.startMs && j.startMs > 0))
+    assert(m.stages.map(_.numTasks) === Seq(2, 2) && jobsDuring {}.isEmpty)
+  }
+
+  test("JobMeter is the only Spark listener in src/main and src/test") {
+    val add = "addSpark" + "Listener" // split, or this line would match
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src"))
+    val sites = try walk.iterator().asScala.toSeq.filter(_.toString.endsWith(".scala"))
+      .flatMap(p => Seq.fill(java.nio.file.Files.readString(p).split(add, -1).length - 1)(p.toString))
+    finally walk.close()
+    assert(sites === Seq("src/main/scala/graft/ops/JobMeter.scala"))
   }
 }
 

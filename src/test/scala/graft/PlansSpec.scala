@@ -210,26 +210,13 @@ class PlansSpec extends SparkSpec {
     // matches the join's inferred filter make BOTH consumers of the
     // frame canonicalize to the same Exchange — AQE materializes the
     // corpus stage once. Measured, not asserted from the plan string:
-    // a task-metrics listener counts parquet records actually read.
+    // the job meter counts parquet records actually read, exact once
+    // the listener bus is drained.
     val docRows = spark.read.parquet(s"$sf001/documents.parquet").count()
-    val read = new java.util.concurrent.atomic.LongAdder
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        read.add(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val df = graft.queries.TrainingData.defs("q92_doc_logprob")(spark, sf001)
-      df.collect()
-      // listener events are async; poll until the count settles
-      val deadline = System.currentTimeMillis() + 10000
-      while (read.sum() < docRows && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      Thread.sleep(500) // catch any straggler events that would OVERshoot
-      assert(read.sum() === docRows,
-        s"corpus scanned ${read.sum().toDouble / docRows}x")
-    } finally spark.sparkContext.removeSparkListener(l)
+    val read = graft.ops.JobMeter.measure(spark) {
+      graft.queries.TrainingData.defs("q92_doc_logprob")(spark, sf001).collect()
+    }.inputRecords
+    assert(read === docRows, s"corpus scanned ${read.toDouble / docRows}x")
   }
 
   test("q103 semdedup: at most 2 kept per cluster, all singletons kept") {

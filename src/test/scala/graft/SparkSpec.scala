@@ -16,44 +16,10 @@ trait SparkSpec extends AnyFunSuite {
   /** Local properties of every Spark job started while `body` ran, in
     * start order. */
   def jobsDuring(body: => Unit): Seq[java.util.Properties] =
-    metered(body).jobs
+    metered(body).jobs.map(_.properties)
 
-  /** The jobs `body` started, in start order, and the shuffle bytes its
-    * tasks wrote. Listener events are asynchronous, so a sentinel job
-    * run after `body` fences the bus: once its start event has arrived,
-    * every earlier job's has too, and so has every earlier task's end
-    * (the scheduler posts a task's end before its job can finish). */
-  def metered(body: => Unit): SparkSpec.Metered = {
-    val key = "graft.test.sentinel"
-    val seen = new java.util.concurrent.LinkedBlockingQueue[Either[java.util.Properties, Long]]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add(Left(Option(e.properties).getOrElse(new java.util.Properties)))
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null)
-          seen.add(Right(e.taskMetrics.shuffleWriteMetrics.bytesWritten))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    try {
-      body
-      sc.setLocalProperty(key, "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(key, null)
-      val jobs = Seq.newBuilder[java.util.Properties]
-      var bytes = 0L
-      var fenced = false
-      while (!fenced) seen.poll(30, java.util.concurrent.TimeUnit.SECONDS) match {
-        case null => fail("sentinel job start never reached the listener")
-        case Left(p) if p.getProperty(key) != null => fenced = true
-        case Left(p) => jobs += p
-        case Right(b) => bytes += b
-      }
-      SparkSpec.Metered(jobs.result(), bytes)
-    } finally sc.removeSparkListener(l)
-  }
+  /** What the jobs `body` started did ([[graft.ops.JobMeter]]). */
+  def metered(body: => Unit): SparkSpec.Metered = graft.ops.JobMeter.measure(spark)(body)
 
   /** In-memory PNG fixture: TYPE_INT_RGB grid from an (x, y) → rgb fn. */
   def pngBytes(w: Int, h: Int)(rgb: (Int, Int) => Int): Array[Byte] = {
@@ -160,8 +126,7 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  /** What [[SparkSpec.metered]] saw while its body ran. */
-  final case class Metered(jobs: Seq[java.util.Properties], shuffleWriteBytes: Long)
+  type Metered = graft.ops.JobMeter.Metered
 
   lazy val session: SparkSession = {
     val s = SparkEntry.localSession("graft-tests", 4)

@@ -1,14 +1,14 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-
 import graft.{Bench, SparkEntry}
+import graft.ops.JobMeter
 
 /** Dev probe for the composed LLM-ingest tick (the `llm_ingest` bench
-  * entry): runs [[graft.Bench.LlmTick]] once to warm up, then once with
-  * a job listener attached, and prints every Spark job's wall time and
-  * description, plus the tick total — the per-stage breakdown the
-  * opaque bench number cannot give. Not part of the driver contract.
+  * entry): runs [[graft.Bench.LlmTick]] once to warm up, then once under
+  * a [[graft.ops.JobMeter]], and prints the wall time and description of
+  * every Spark job the timed region started, plus the tick total — the
+  * per-stage breakdown the opaque bench number cannot give. A listener-bus
+  * drain that times out fails the probe. Not part of the driver contract.
   *
   * Usage: sbt "Test/runMain graft.tools.IngestProbe [sfDir]"
   * (cores from SPARK_GRAFT_CPUS, default 32)
@@ -18,31 +18,20 @@ object IngestProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = SparkEntry.localSession("graft-ingest-probe", SparkEntry.cpus(32))
 
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    val doneJobs =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.put(j.jobId, (j.time,
-          Option(j.properties.getProperty("spark.job.description"))
-            .orElse(Option(j.properties.getProperty("callSite.short")))
-            .getOrElse("?")))
-      override def onJobEnd(j: SparkListenerJobEnd): Unit = {
-        val st = jobs.remove(j.jobId)
-        if (st != null)
-          doneJobs.add((j.jobId, (j.time - st._1) / 1e3, st._2))
-      }
-    })
-
     val tick = new Bench.LlmTick(spark, sfDir)
     tick() // warm-up: codegen + catalog DDL first-run costs
-    val wall = tick(() => doneJobs.clear())
-    Thread.sleep(500) // let listener events drain
-    val rows = doneJobs.toArray(Array.empty[(Int, Double, String)]).sortBy(_._1)
-    println(f"[ingest-probe] tick wall: $wall%.2f s over ${rows.length} jobs, " +
-      f"job-time sum ${rows.map(_._2).sum}%.2f s (sf=$sfDir)")
-    rows.foreach { case (id, s, d) =>
-      println(f"[ingest-probe] job $id%4d $s%7.3f s  $d")
+    var (wall, timedFrom) = (0.0, 0L)
+    val jobs = JobMeter.measure(spark) {
+      wall = tick(() => timedFrom = System.currentTimeMillis())
+    }.jobs.filter(_.startMs >= timedFrom)
+    def secs(j: JobMeter.Job) = (j.endMs - j.startMs) / 1e3
+    println(f"[ingest-probe] tick wall: $wall%.2f s over ${jobs.length} jobs, " +
+      f"job-time sum ${jobs.map(secs).sum}%.2f s (sf=$sfDir)")
+    jobs.foreach { j =>
+      val p = j.properties
+      val d = Option(p.getProperty("spark.job.description"))
+        .orElse(Option(p.getProperty("callSite.short"))).getOrElse("?")
+      println(f"[ingest-probe] job ${j.id}%4d ${secs(j)}%7.3f s  $d")
     }
     spark.stop()
   }
