@@ -318,17 +318,23 @@ class AnnIndex(spark: SparkSession, lake: Lake, dataset: String,
       else
         VectorOps.pqTrainCodebooks(train.select(col("vec")), "vec",
           m, ksub, iters)
-    writeCodebooks(cbs, residual)
-    lake.writeBucketed(codesOf(lists, cbs, residual, cents), pqCodesRef,
-      "cluster", numBuckets,
-      partitionBy = if (isDated) Seq("seen_date") else Nil)
+    val codebooks = codebookFrame(cbs, residual)
+    val codes = codesOf(lists, cbs, residual, cents)
+    if (pqEnabled) { // a re-run rewrites both tables in their own layout
+      lake.rewriteBucketed(codebooks, pqCodebooksRef)
+      lake.rewriteBucketed(codes, pqCodesRef)
+    } else {
+      lake.writeBucketed(codebooks, pqCodebooksRef, "block", 1)
+      lake.writeBucketed(codes, pqCodesRef, "cluster", numBuckets,
+        partitionBy = if (isDated) Seq("seen_date") else Nil)
+    }
   }
 
-  /** Persist the PQ codebooks (one row per (block, code, dim) plus the
-    * constant `residual` mode flag every consumer reads back). */
-  /** The codebooks table's row shape — ONE definition feeding both the
-    * live table writer and retrain's snapshot writer, so a schema
-    * change cannot silently diverge between them. */
+  /** The codebooks table's row shape (one row per (block, code, dim)
+    * plus the constant `residual` mode flag every consumer reads back)
+    * — ONE definition feeding both the live table writer and retrain's
+    * snapshot writer, so a schema change cannot silently diverge
+    * between them. */
   private def codebookFrame(cbs: Seq[Seq[Seq[Double]]],
                             residual: Boolean): DataFrame = {
     val cbRows = for {
@@ -339,11 +345,6 @@ class AnnIndex(spark: SparkSession, lake: Lake, dataset: String,
     spark.createDataFrame(cbRows)
       .toDF("block", "code", "dim", "centroid", "residual")
   }
-
-  private def writeCodebooks(cbs: Seq[Seq[Seq[Double]]],
-                             residual: Boolean): Unit =
-    lake.writeBucketed(codebookFrame(cbs, residual), pqCodebooksRef,
-      "block", 1)
 
   /** Whether the PQ sidecar encodes residuals ([[enablePq]]'s
     * `residual = true` — IVFADC) rather than raw vectors. */
@@ -572,8 +573,8 @@ class AnnIndex(spark: SparkSession, lake: Lake, dataset: String,
     * sidecar accumulates files at the same per-append rate and folds
     * on the same tick. */
   def compact(): Unit = {
-    lake.compactBucketed(listsRef, "cluster", numBuckets)
-    if (pqEnabled) lake.compactBucketed(pqCodesRef, "cluster", numBuckets)
+    lake.compactBucketed(listsRef)
+    if (pqEnabled) lake.compactBucketed(pqCodesRef)
   }
 
   /** Rows currently stored in the lists (maintenance k-sizing). */
@@ -625,13 +626,15 @@ class AnnIndex(spark: SparkSession, lake: Lake, dataset: String,
     * for a quantizer swap, and strictly cheaper than build-from-raw
     * because the vectors are already in list form.
     *
-    * Crash safety mirrors [[Lake.compactBucketed]]: new centroids AND
-    * reassigned lists land in a side snapshot first, committed by a
-    * marker written only after both parquet dirs complete; the live
-    * tables are rewritten only from a committed snapshot (heal-on-entry
-    * finishes a predecessor that died mid-rewrite, uncommitted debris
-    * is discarded), so the centroid and list tables can never disagree
-    * about which quantizer generation they belong to. */
+    * Crash safety: new centroids AND reassigned lists (and PQ codes)
+    * land in a side snapshot first, committed by a marker written only
+    * after every parquet dir completes; the live tables are rewritten
+    * only from a committed snapshot, each by [[Lake.rewriteBucketed]]'s
+    * write-aside-and-swap, which never drops a table's catalog entry
+    * (heal-on-entry replays the whole snapshot after a crash between
+    * rewrites, uncommitted debris is discarded), so the centroid and
+    * list tables can never disagree about which quantizer generation
+    * they belong to. */
   def retrain(k: Int, iters: Int = 5, samplePct: Int = 10,
               salt: Long = 0L): Unit = {
     import org.apache.hadoop.fs.Path
@@ -644,38 +647,19 @@ class AnnIndex(spark: SparkSession, lake: Lake, dataset: String,
     val codesSnap = new Path(snapRoot, "codes").toString
     val cbSnap = new Path(snapRoot, "codebooks").toString
 
+    // PQ sidecars: the reassignment moved cluster ids, so the codes
+    // rewrite from their own snapshot under the same marker — lists and
+    // codes can never disagree about the quantizer generation (pq_code
+    // bytes themselves are cluster-independent); residual mode also
+    // snapshots RETRAINED codebooks (residuals are defined against the
+    // new centroids, so the old codebooks would model a stale
+    // distribution)
     def rewriteFromSnapshot(): Unit = {
-      lake.writeBucketed(spark.read.parquet(centsSnap), centroidsRef,
-        "cluster", 1)
-      val snap = spark.read.parquet(listsSnap)
-      // a dated index keeps its seen_date partition layer (the snapshot
-      // carried the column through the reassignment)
-      val partBy =
-        if (snap.columns.contains("seen_date")) Seq("seen_date") else Nil
-      lake.writeBucketed(snap.repartition(numBuckets, col("cluster")),
-        listsRef, "cluster", numBuckets, partitionBy = partBy)
-      // PQ sidecar: the reassignment moved cluster ids, so the codes
-      // table rewrites from its own snapshot under the same marker —
-      // lists and codes can never disagree about the quantizer
-      // generation (pq_code bytes themselves are cluster-independent)
-      if (fs.exists(new Path(codesSnap))) {
-        val cs = spark.read.parquet(codesSnap)
-        lake.writeBucketed(cs.repartition(numBuckets, col("cluster")),
-          pqCodesRef, "cluster", numBuckets,
-          partitionBy =
-            if (cs.columns.contains("seen_date")) Seq("seen_date") else Nil)
-        spark.catalog.refreshTable(qualified(pqCodesRef))
+      Seq(centsSnap -> centroidsRef, listsSnap -> listsRef,
+        codesSnap -> pqCodesRef, cbSnap -> pqCodebooksRef).foreach {
+        case (snap, ref) => if (fs.exists(new Path(snap)))
+          lake.rewriteBucketed(spark.read.parquet(snap), ref)
       }
-      // residual mode also snapshots RETRAINED codebooks (residuals are
-      // defined against the new centroids, so the old codebooks would
-      // model a stale distribution) — committed under the same marker
-      if (fs.exists(new Path(cbSnap))) {
-        lake.writeBucketed(spark.read.parquet(cbSnap), pqCodebooksRef,
-          "block", 1)
-        spark.catalog.refreshTable(qualified(pqCodebooksRef))
-      }
-      spark.catalog.refreshTable(qualified(centroidsRef))
-      spark.catalog.refreshTable(qualified(listsRef))
       fs.delete(snapRoot, true)
     }
 

@@ -27,9 +27,11 @@ import org.apache.spark.sql.functions._
   * per-batch anti-join never reshuffles the (large) state side — only
   * the day's batch moves. Appends go through `insertInto`, which
   * preserves the bucket spec per added file; [[Lake.compactBucketed]]
-  * folds the per-run files back down under the table's RunLock
-  * (NOT the path-level [[Lake.compact]], which would drop the bucket
-  * layout).
+  * folds the per-run files back down under the table's RunLock by
+  * writing the table's rows aside and swapping the directory in, so the
+  * catalog entry is never dropped and no gate reads a compaction as a
+  * first run (NOT the path-level [[Lake.compact]], which would drop the
+  * bucket layout).
   *
   * Single-writer discipline: commits assume the caller holds the
   * dataset's [[graft.state.RunLock]] (same contract as [[Lake]] writes).
@@ -607,23 +609,15 @@ class CorpusDedup(spark: SparkSession, lake: Lake, dataset: String,
 
   /** Fold per-run seen-set files back down, preserving the bucket
     * layout AND the dated tables' seen_date partition layer
-    * ([[Lake.compactBucketed]] reads it from the catalog) —
-    * maintenance tick, under the dataset's RunLock. ALL seven seen-set
-    * tables fold — including the verified gate's sigbands (added with
-    * the table: the earlier review-found gap, linesRef and the three
-    * dated tables missing, let line-scrub and TTL state accrete one
-    * bucketed file-set per commit forever). */
-  def compact(): Unit = {
-    Seq(
-      hashesRef -> "content_hash",
-      bandsRef -> "band_key",
-      linesRef -> "line_hash",
-      hashesDatedRef -> "content_hash",
-      bandsDatedRef -> "band_key",
-      sigBandsDatedRef -> "band_key",
-      linesDatedRef -> "line_hash"
-    ).foreach { case (ref, bucketCol) =>
-      if (tableExists(ref)) lake.compactBucketed(ref, bucketCol, numBuckets)
-    }
-  }
+    * ([[Lake.compactBucketed]] reads both from the catalog entry, which
+    * its write-aside-and-swap never drops) — maintenance tick, under the
+    * dataset's RunLock. ALL seven seen-set tables fold — including the
+    * verified gate's sigbands (added with the table: the earlier
+    * review-found gap, linesRef and the three dated tables missing, let
+    * line-scrub and TTL state accrete one bucketed file-set per commit
+    * forever). */
+  def compact(): Unit =
+    Seq(hashesRef, bandsRef, linesRef, hashesDatedRef, bandsDatedRef,
+      sigBandsDatedRef, linesDatedRef)
+      .foreach(ref => if (tableExists(ref)) lake.compactBucketed(ref))
 }

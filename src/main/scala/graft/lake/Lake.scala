@@ -1,7 +1,11 @@
 package graft.lake
 
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** The three-zone lake and its writers (SURVEY §1.1, §2.2 K1–K7).
   *
@@ -41,6 +45,13 @@ import org.apache.spark.sql.functions._
   * of a Spark dynamic overwrite) in the table root. Reads skip it; the
   * table's next [[compact]] removes it with the old root.
   *
+  * A whole-table rewrite ([[compact]] of a path table, [[rewriteBucketed]]
+  * and [[compactBucketed]] of a bucketed catalog table) writes the new
+  * files beside the table and swaps the directory in with two renames;
+  * the next rewrite heals a swap that a crash cut short. A bucketed
+  * table's catalog entry is never dropped by a rewrite, so no crash
+  * makes it read as absent.
+  *
   * Local-FS write rule: every path-addressed DataFrame write here goes
   * through `writer`, which selects [[NioLocalFileSystem]] for `file://`
   * paths, so a local lake sets file and directory permissions without
@@ -49,13 +60,15 @@ import org.apache.spark.sql.functions._
   * select it through the same options. The options are per write, not
   * process-wide, and other schemes ignore them. Not covered, and on no
   * benchmarked path:
-  *  - `writeBucketed`: `saveAsTable` stores writer options as the
-  *    catalog table's options, so a persistent metastore would hand a
-  *    graft class name to every later reader of the table;
+  *  - `writeBucketed` and `rewriteBucketed`: `saveAsTable` stores
+  *    writer options as the catalog table's options, so a persistent
+  *    metastore would hand a graft class name to every later reader of
+  *    the table;
   *  - `insertInto` appends (CorpusDedup, AnnIndex), which write with
   *    the catalog table's options;
-  *  - direct `fs.create` call sites (`RunLock`, `tickFor`, sidecars),
-  *    which use the session's cached stock filesystem.
+  *  - direct `fs.create` call sites (`RunLock`, `tickFor`, the
+  *    retrain commit marker), which use the session's cached stock
+  *    filesystem.
   */
 final case class TableRef(zone: String, dataset: String, table: String)
 
@@ -143,78 +156,152 @@ class Lake(spark: SparkSession, root: String) {
     * planning starts to cost more than scanning. File count is sized
     * from the optimizer's own byte statistics (no extra pass over the
     * data). A table cannot be overwritten from its own live scan, so the
-    * compacted copy lands in a sibling dir and is swapped in with
-    * checked renames; a writer that crashed between the renames is
-    * healed on the next call (the intact `.old` copy is restored before
-    * anything else happens). The old root is deleted whole, so hidden
-    * dirs that crashed writes left in it (staging dirs) go with it.
+    * compacted copy is written aside and swapped in ([[writeAside]]).
+    * The old root is deleted whole, so hidden dirs that crashed writes
+    * left in it (staging dirs) go with it.
     *
     * MUST run under the table's [[graft.state.RunLock]]: the scan
     * snapshots the file listing, so a concurrent append between listing
     * and swap would be silently dropped — compaction and capture share
     * the same single-writer key. Partition VALUES are preserved
-    * verbatim (type inference is disabled for the rewrite, so
-    * `hora=00` does not come back as `hora=0`), and the path's cached
-    * file index is refreshed after the swap. */
+    * verbatim: the rewrite reads with the discovered partition columns
+    * typed as strings, so `hora=00` does not come back as `hora=0`, and
+    * the session's settings are not touched. */
   def compact(ref: TableRef, partitionBy: Seq[String] = Nil,
-              targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(path(ref))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(path(ref) + ".compact")
-    val old = new Path(path(ref) + ".old")
-    // heal a predecessor that died between its two renames
-    if (!fs.exists(p) && fs.exists(old)) {
-      if (!fs.rename(old, p))
-        throw new java.io.IOException(s"compaction recovery $old -> $p failed")
-    }
-    val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val inferWas = spark.conf.get(inferKey, "true")
-    spark.conf.set(inferKey, "false") // keep dir names byte-identical
-    try {
-      val scan = read(ref)
+              targetFileBytes: Long = 128L * 1024 * 1024): Unit =
+    writeAside(ref) { side =>
+      val discovered = read(ref).queryExecution.analyzed.collectFirst {
+        case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+          l.relation.asInstanceOf[HadoopFsRelation]
+      }.get
+      val scan = FooterParquet.reader(spark)
+        .schema(StructType(discovered.dataSchema.fields ++
+          discovered.partitionSchema.fields.map(_.copy(dataType = StringType))))
+        .load(path(ref))
       val bytes = scan.queryExecution.optimizedPlan.stats.sizeInBytes
       val nFiles = (BigInt(1).max(
         (bytes + targetFileBytes - 1) / targetFileBytes)).toInt
       val compacted =
         if (partitionBy.isEmpty) scan.coalesce(nFiles)
         else aligned(scan, partitionBy) // one writer task (= file) per dir
-      if (fs.exists(tmp)) fs.delete(tmp, true)
       val w = writer(compacted).format("parquet").mode(SaveMode.Overwrite)
       (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-        .save(tmp.toString)
-    } finally spark.conf.set(inferKey, inferWas)
+        .save(side)
+    }
+
+  /** The one replace-a-table-dir protocol: heal what a crashed
+    * predecessor left, `write` the new contents into the side dir
+    * `<path>.compact`, then rename the live dir to `<path>.old`, the side
+    * dir in, and delete `.old`. Readers between the two renames see an
+    * empty table. States on entry:
+    *  - table dir missing, `.old` present: `.old` is renamed back;
+    *  - table dir and `.old` present, no side dir: the swap finished, so
+    *    `.old` is deleted;
+    *  - a side dir with no `.old`: a dead write, so it is deleted, with
+    *    a leftover [[rewriteBucketed]] catalog entry;
+    *  - all three present: a write recreated the table dir after a crash
+    *    between the renames, and `.old` holds the history. That throws
+    *    and deletes nothing. */
+  private def writeAside(ref: TableRef)(write: String => Unit): Unit = {
+    import org.apache.hadoop.fs.Path
+    val p = new Path(path(ref))
+    val side = new Path(path(ref) + ".compact")
+    val old = new Path(path(ref) + ".old")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p) && fs.exists(old) && fs.exists(side))
+      throw new IllegalStateException(s"table dir $p, its pre-swap copy $old " +
+        s"and the side dir $side all exist: a write recreated $p after a " +
+        s"crash between the swap's renames, so $old holds the history; " +
+        "nothing was deleted, merge them by hand")
+    if (!fs.exists(p) && fs.exists(old)) {
+      if (!fs.rename(old, p))
+        throw new java.io.IOException(s"swap recovery $old -> $p failed")
+      refresh(ref) // a read in the cut swap cached the empty listing
+    }
     if (fs.exists(old)) fs.delete(old, true)
+    spark.sql(s"DROP TABLE IF EXISTS ${asideName(ref)}")
+    if (fs.exists(side)) fs.delete(side, true)
+    write(side.toString)
     if (!fs.rename(p, old))
-      throw new java.io.IOException(s"compaction swap $p -> $old failed")
-    if (!fs.rename(tmp, p)) {
+      throw new java.io.IOException(s"swap $p -> $old failed")
+    if (!fs.rename(side, p)) {
       fs.rename(old, p) // best-effort restore
-      throw new java.io.IOException(s"compaction swap $tmp -> $p failed")
+      throw new java.io.IOException(s"swap $side -> $p failed")
     }
     fs.delete(old, true)
-    spark.catalog.refreshByPath(path(ref)) // drop stale cached file index
+    refresh(ref)
+  }
+
+  /** Drop the cached file listings of a table whose dir was swapped. */
+  private def refresh(ref: TableRef): Unit = {
+    spark.catalog.refreshByPath(path(ref))
+    if (spark.catalog.tableExists(qualified(ref))) spark.catalog.refreshTable(qualified(ref))
+  }
+
+  /** The catalog name [[rewriteBucketed]] writes its side dir under. */
+  private def asideName(ref: TableRef): String = qualified(ref) + "__compact"
+
+  /** A bucketed catalog table write through the stock writer:
+    * saveAsTable would persist writer options as table options in the
+    * metastore (see the class doc). Partition dirs sit ABOVE the bucket
+    * files: scans prune partitions first, and each surviving partition
+    * still joins bucket-colocated. */
+  private def saveBucketed(df: DataFrame, name: String, location: String,
+                           spec: BucketSpec, partitionBy: Seq[String]): Unit = {
+    val w = df.write.format("parquet").mode(SaveMode.Overwrite)
+    val b = (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+      .bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
+        spec.bucketColumnNames.tail: _*)
+    (if (spec.sortColumnNames.isEmpty) b
+     else b.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*))
+      .option("path", location)
+      .saveAsTable(name)
   }
 
   /** Bucketed catalog table write: rows are hash-clustered (and sorted)
     * by the join key at write time, so equi-joins and aggregations
     * between tables bucketed on the same key run WITHOUT a shuffle —
     * the co-location strategy for the lake's biggest recurring joins
-    * (fact↔fact on orderkey-like keys at 100 TB). */
+    * (fact↔fact on orderkey-like keys at 100 TB). Creates the table, or
+    * replaces it through `saveAsTable`'s drop-and-recreate: rewrite an
+    * existing table in its own layout with [[rewriteBucketed]]. */
   def writeBucketed(df: DataFrame, ref: TableRef, bucketCol: String,
                     numBuckets: Int, partitionBy: Seq[String] = Nil): Unit = {
-    val db = s"${ref.zone}_${ref.dataset}"
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-    // stock writer: saveAsTable would persist writer options as table
-    // options in the metastore (see the class doc)
-    val w = df.write.format("parquet")
-      .mode(SaveMode.Overwrite)
-    // partition dirs ABOVE the bucket files: scans prune partitions
-    // first, and each surviving partition still joins bucket-colocated
-    val p = if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w
-    p.bucketBy(numBuckets, bucketCol)
-      .sortBy(bucketCol)
-      .option("path", path(ref))
-      .saveAsTable(s"$db.${ref.table}")
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS ${ref.zone}_${ref.dataset}")
+    saveBucketed(df, qualified(ref), path(ref),
+      BucketSpec(numBuckets, Seq(bucketCol), Seq(bucketCol)), partitionBy)
+  }
+
+  /** Replace the rows of an existing bucketed catalog table with `df`,
+    * whose columns must equal the table's, in order, by name and type
+    * (nullability aside). The bucket
+    * spec, sort columns and partition columns come from the table's
+    * catalog entry. `df` is clustered on (partition columns, bucket
+    * columns), so each partition dir gets ~one file per bucket, and is
+    * written as the external table `<table>__compact` at
+    * `<path>.compact` (`df` is evaluated after the heal, so it may read
+    * the table's own dir); that entry is dropped (its files stay) and the
+    * dir is swapped in ([[writeAside]]). The live catalog entry is never
+    * dropped, so a crash at any point leaves the table registered, and
+    * the next rewrite of the table heals its dir. `df` must land the
+    * table's partitions (the catalog's partition list is kept). Same
+    * [[graft.state.RunLock]] single-writer contract as [[compact]]. */
+  def rewriteBucketed(df: => DataFrame, ref: TableRef): Unit = {
+    val meta = spark.sessionState.catalog.getTableMetadata(
+      TableIdentifier(ref.table, Some(s"${ref.zone}_${ref.dataset}")))
+    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
+      s"${qualified(ref)} is not bucketed"))
+    def columns(s: StructType) = s.fields.map(f => f.name -> f.dataType.catalogString).toSeq
+    writeAside(ref) { side =>
+      val rows = df
+      require(columns(rows.schema) == columns(meta.schema),
+        s"rewriteBucketed(${qualified(ref)}): columns ${columns(rows.schema)} " +
+          s"are not the table's ${columns(meta.schema)}")
+      saveBucketed(rows.repartition(spec.numBuckets,
+        (meta.partitionColumnNames ++ spec.bucketColumnNames).map(col): _*),
+        asideName(ref), side, spec, meta.partitionColumnNames)
+      spark.sql(s"DROP TABLE ${asideName(ref)}") // external: the files stay
+    }
   }
 
   /** Drop a dated table's `dateCol=…` partitions strictly older than
@@ -243,128 +330,21 @@ class Lake(spark: SparkSession, root: String) {
   }
 
   /** Small-files compaction for BUCKETED catalog tables (the seen-set /
-    * IVF-list state tables after many `insertInto` appends).
+    * IVF-list state tables after many `insertInto` appends): the
+    * table's own rows through [[rewriteBucketed]], so each bucket lands
+    * in ~one file per partition dir instead of one per historical
+    * append, and the catalog entry keeps its layout.
     *
     * [[compact]] must NOT be used here: its path-level rewrite drops the
     * bucket file layout while the catalog still declares a bucket spec,
     * and every later bucketed read fails on the un-bucketed file names.
-    * This variant snapshots the rows to a side path, then rewrites the
-    * table through the same bucketBy writer as [[writeBucketed]] —
-    * repartitioned ON the bucket column first, so each bucket lands in
-    * ~one file instead of one per historical append.
-    *
     * Same [[graft.state.RunLock]] single-writer contract as [[compact]].
-    * Crash safety: the snapshot is written BEFORE the table is touched;
-    * if a previous run died mid-rewrite, the surviving snapshot is
-    * replayed (heal-on-entry) before anything else happens. */
-  def compactBucketed(ref: TableRef, bucketCol: String,
-                      numBuckets: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val db = s"${ref.zone}_${ref.dataset}"
-    val name = s"$db.${ref.table}"
-    val snapPath = new Path(path(ref) + ".compactsrc")
-    val fs = snapPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // The partition layout sidecar, INSIDE the snapshot dir. The rewrite
-    // below goes through saveAsTable(Overwrite) = drop-then-recreate, so
-    // a crash mid-rewrite leaves a committed snapshot and NO catalog
-    // table — partition columns must be recoverable WITHOUT the catalog
-    // or the heal path wedges on NoSuchTableException before it can
-    // replay the snapshot it exists to replay (judge-found, r13–r14).
-    // Write order: snapshot parquet (commits _SUCCESS) → sidecar →
-    // rewrite. A crash between _SUCCESS and the sidecar leaves the
-    // table untouched, so the catalog fallback still answers.
-    val sidecar = new Path(snapPath, "_graft_partcols")
-
-    // PRESERVE the table's partition layer (review-found data-loss
-    // class): rewriting a seen_date-partitioned table without its
-    // partition columns recreates it unpartitioned, and the next
-    // dynamic-partition overwrite (appendDated's insertInto) would
-    // TRUNCATE it to one day's batch.
-    def catalogPartCols(): Seq[String] = spark.catalog.listColumns(name)
-      .collect().filter(_.isPartition).map(_.name).toSeq
-
-    // The counted "v1 <n>" header AND "end" terminator make a TORN
-    // sidecar (crash mid-write — zero bytes, or any persisted PREFIX of
-    // the content) distinguishable from a committed column list: a
-    // prefix either has fewer than n+2 lines or a truncated last line
-    // that is not "end", so torn reads as None — never as a
-    // shorter/blanker column list the heal would then rewrite with, the
-    // data-loss class the sidecar exists to prevent (review-found,
-    // twice). The COUNT is what disambiguates a partition column
-    // literally named "end": with a bare terminator, the torn prefix
-    // "v1\na\nend" of cols ["a","end","b"] parsed as a committed
-    // two-line list (advisor-found, r15); with the count, that prefix
-    // fails the n+2 length check. Torn ⇒ None ⇒ catalog fallback,
-    // which is sound: the sidecar commits before the table is touched,
-    // so a torn sidecar implies an intact table.
-    def writeSidecar(cols: Seq[String]): Unit = {
-      require(cols.forall(_.nonEmpty), "empty partition column name")
-      val out = fs.create(sidecar, true)
-      try out.write(((s"v1 ${cols.length}" +: cols) :+ "end").mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-
-    def readSidecar(): Option[Seq[String]] =
-      try {
-        val in = fs.open(sidecar)
-        val txt = try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-        val lines = txt.split("\n", -1).toSeq
-        lines.headOption match {
-          case Some(h) if h.startsWith("v1 ") =>
-            h.stripPrefix("v1 ").toIntOption
-              .filter(n => lines.length == n + 2 && lines.last == "end" &&
-                lines.slice(1, n + 1).forall(_.nonEmpty))
-              .map(n => lines.slice(1, n + 1))
-          case _ => None // torn — table untouched, catalog still answers
-        }
-      } catch { case _: java.io.FileNotFoundException => None }
-
-    def rewriteFrom(src: DataFrame, partCols: Seq[String]): Unit = {
-      // cluster on (partitions, bucket) so each partition dir folds to
-      // ~one file per bucket instead of one per historical append
-      val clustered = src.repartition(numBuckets,
-        (partCols :+ bucketCol).map(col): _*)
-      writeBucketed(clustered, ref, bucketCol, numBuckets,
-        partitionBy = partCols)
-      spark.catalog.refreshTable(name)
-      fs.delete(snapPath, true) // sidecar goes with the dir
-    }
-
-    def freshSnapshot(): Unit = {
-      val partCols = catalogPartCols()
-      writer(spark.table(name)).mode(SaveMode.Overwrite)
-        .parquet(snapPath.toString)
-      writeSidecar(partCols)
-      rewriteFrom(spark.read.parquet(snapPath.toString), partCols)
-    }
-
-    // Heal-on-entry comes FIRST — before any catalog read: the state a
-    // mid-rewrite crash leaves behind is (committed snapshot, missing
-    // table), and only the snapshot knows how to rebuild the table.
-    if (fs.exists(snapPath)) {
-      // Replay ONLY a committed snapshot (_SUCCESS marker): a predecessor
-      // that died between snapshot and rewrite left the marker and maybe a
-      // broken table — replay heals it. One that died WRITING the snapshot
-      // left no marker and an untouched table — trusting the partial dir
-      // would truncate the table to whichever tasks committed.
-      if (fs.exists(new Path(snapPath, "_SUCCESS"))) {
-        val partCols = readSidecar().getOrElse {
-          // the sidecar commits before the table is touched, so a snapshot
-          // without a readable one left the table intact: its catalog
-          // entry still answers, unless something dropped the table since
-          if (spark.catalog.tableExists(name)) catalogPartCols()
-          else throw new IllegalStateException(
-            s"compactBucketed($name): committed snapshot $snapPath has no " +
-              "readable partition-layout sidecar, so compaction never " +
-              "touched the table, yet the catalog table is gone: it was " +
-              "dropped outside compaction; recreate it from the snapshot " +
-              "manually (its partition columns are not recorded)")
-        }
-        rewriteFrom(spark.read.parquet(snapPath.toString), partCols)
-      } else { fs.delete(snapPath, true); freshSnapshot() }
-    } else freshSnapshot()
-  }
+    *
+    * The rows are read by path with the table's schema, not as the
+    * catalog table: over a bucketed scan Spark drops the clustering
+    * repartition as redundant, then un-buckets the scan (nothing above it
+    * needs the buckets), and every task writes every bucket. */
+  def compactBucketed(ref: TableRef): Unit =
+    rewriteBucketed(spark.read.schema(spark.table(qualified(ref)).schema)
+      .parquet(path(ref)), ref)
 }

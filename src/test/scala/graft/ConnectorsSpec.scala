@@ -959,6 +959,28 @@ class ConnectorsSpec extends SparkSpec {
     finally walk.close()
     assert(sites === Seq("src/main/scala/graft/ops/JobMeter.scala"))
   }
+
+  test("session settings change only at the known src/main sites") {
+    // a ratchet: a library call should leave the session's settings as it
+    // found them, so this list may shrink but must not grow
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val sites = try walk.iterator().asScala.toSeq.filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.map(_.trim)
+          .filter(l => "\\bconf\\.(un)?set\\(".r.findFirstIn(l).nonEmpty)
+          .map(p.getFileName.toString -> _)
+      }.sorted
+    finally walk.close()
+    assert(sites === Seq(
+      "AnnIndex.scala" -> // pinBucketedScan
+        """spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")""",
+      "AnnIndex.scala" -> // unpinBucketedScan
+        """spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")""",
+      "AnnIndex.scala" -> "finally spark.conf.set(modeKey, was)", // dynamicOverwrite
+      "AnnIndex.scala" -> """spark.conf.set(modeKey, "dynamic")""",
+      "Tables.scala" -> """spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")"""
+    ).sorted)
+  }
 }
 
 /** Stand-in for a production inter-frame decoder (ffmpeg/JavaCV behind

@@ -1291,7 +1291,7 @@ class LakeSpec extends SparkSpec {
     val rowsBefore = spark.table("state_bkc.t")
       .as[(Long, Int)].collect().toSet
 
-    lake.compactBucketed(ref, "k", 4)
+    lake.compactBucketed(ref)
     val after = spark.table("state_bkc.t")
     assert(after.as[(Long, Int)].collect().toSet === rowsBefore)
     // the lake's filesystem writer options stay out of the catalog
@@ -1311,152 +1311,105 @@ class LakeSpec extends SparkSpec {
         .findFirstMatchIn(plan).exists(_.group(1).toInt < 4), plan)
     } finally
       spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
-
-    // heal-on-entry: a leftover snapshot (predecessor died mid-rewrite)
-    // is replayed, not leaked
-    val snap = new org.apache.hadoop.fs.Path(lake.path(ref) + ".compactsrc")
-    val fs = snap.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.table("state_bkc.t").write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(snap.toString)
-    lake.compactBucketed(ref, "k", 4)
-    assert(!fs.exists(snap))
-    assert(spark.table("state_bkc.t").as[(Long, Int)].collect().toSet === rowsBefore)
-
-    // a PARTIAL snapshot (no _SUCCESS — writer died mid-snapshot) is
-    // discarded and re-taken, never replayed over the intact table
-    fs.mkdirs(snap)
-    val junk = fs.create(new org.apache.hadoop.fs.Path(snap, "part-junk.parquet"))
-    junk.write(Array[Byte](1, 2, 3)); junk.close()
-    lake.compactBucketed(ref, "k", 4)
-    assert(!fs.exists(snap))
-    assert(spark.table("state_bkc.t").as[(Long, Int)].collect().toSet === rowsBefore)
   }
 
-  test("compactBucketed heals a predecessor that died mid-rewrite " +
-    "(committed snapshot, table dropped by saveAsTable's overwrite)") {
+  test("bucketed rewrite heals the swap's crash states, live rows intact") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
     val lake = new Lake(spark, tmpDir("lakeheal"))
     val ref = TableRef("state", "bkh", "t")
-    val day1 = java.sql.Date.valueOf("2026-01-01")
-    val day2 = java.sql.Date.valueOf("2026-01-02")
-    def batch(lo: Long, n: Long, d: java.sql.Date) =
-      spark.range(lo, lo + n).select($"id",
-        ($"id" % 7).cast("int").as("k"), lit(d).as("seen_date"))
-    lake.writeBucketed(batch(0, 50, day1), ref, "k", 4,
+    def batch(lo: Long, n: Long, d: String) =
+      spark.range(lo, lo + n).select($"id", ($"id" % 7).cast("int").as("k"),
+        lit(java.sql.Date.valueOf(d)).as("seen_date"))
+    lake.writeBucketed(batch(0, 50, "2026-01-01"), ref, "k", 4,
       partitionBy = Seq("seen_date"))
-    batch(50, 50, day2).write.mode(org.apache.spark.sql.SaveMode.Append)
+    batch(50, 50, "2026-01-02").write.mode(org.apache.spark.sql.SaveMode.Append)
       .insertInto("state_bkh.t")
-    val rows = spark.table("state_bkh.t")
-      .as[(Long, Int, java.sql.Date)].collect().toSet
+    def rows() = spark.table("state_bkh.t").as[(Long, Int, java.sql.Date)].collect().toSet
+    def partitions() = spark.sql("SHOW PARTITIONS state_bkh.t").as[String].collect().toSeq
+    val (before, parts) = (rows(), partitions())
+    val p = new Path(lake.path(ref))
+    val side = new Path(lake.path(ref) + ".compact")
+    val old = new Path(lake.path(ref) + ".old")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def healed(): Unit = {
+      assert(rows() === before && partitions() === parts)
+      assert(!fs.exists(side) && !fs.exists(old))
+      assert(!spark.catalog.tableExists("state_bkh.t__compact"))
+    }
 
-    // the state a mid-rewrite crash leaves: a _SUCCESS-committed
-    // snapshot WITH the layout sidecar, and NO catalog table (the
-    // rewrite's saveAsTable(Overwrite) drops before it recreates)
-    val snap = new org.apache.hadoop.fs.Path(lake.path(ref) + ".compactsrc")
-    val fs = snap.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.table("state_bkh.t").write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(snap.toString)
-    val sc = fs.create(new org.apache.hadoop.fs.Path(snap, "_graft_partcols"), true)
-    sc.write("v1 1\nseen_date\nend".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    sc.close()
-    spark.sql("DROP TABLE state_bkh.t")
-    fs.delete(new org.apache.hadoop.fs.Path(lake.path(ref)), true)
+    // a dead side write: a partial side dir and its catalog entry (the
+    // crash came before the entry's drop) are deleted and the rewrite redone
+    batch(0, 10, "2026-01-01").write.bucketBy(4, "k").partitionBy("seen_date")
+      .option("path", side.toString).saveAsTable("state_bkh.t__compact")
+    lake.compactBucketed(ref)
+    healed()
 
-    // heal instead of NoSuchTableException (judge-found, carried r13-r14)
-    lake.compactBucketed(ref, "k", 4)
-    assert(!fs.exists(snap))
-    val healed = spark.table("state_bkh.t")
-    assert(healed.as[(Long, Int, java.sql.Date)].collect().toSet === rows)
-    // the partition layer came back from the sidecar, not the catalog
-    assert(spark.catalog.listColumns("state_bkh.t").collect()
-      .filter(_.isPartition).map(_.name).toSeq === Seq("seen_date"))
-    // and the bucket layout survived too
+    // the swap cut between its renames: the live dir sits at .old beside a
+    // complete side dir; the table stays registered and reads empty. The
+    // next rewrite's own catalog read must not see that cached empty listing
+    assert(FileUtil.copy(fs, p, fs, side, false, spark.sparkContext.hadoopConfiguration))
+    assert(fs.rename(p, old))
+    spark.catalog.refreshTable("state_bkh.t")
+    assert(spark.catalog.tableExists("state_bkh.t") && spark.table("state_bkh.t").count() === 0)
+    lake.rewriteBucketed(spark.table("state_bkh.t"), ref)
+    healed()
+
+    // a finished swap whose .old delete was cut: .old is deleted
+    assert(FileUtil.copy(fs, p, fs, old, false, spark.sparkContext.hadoopConfiguration))
+    lake.compactBucketed(ref)
+    healed()
+    // and the layout survived every rewrite
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     try {
-      val plan = healed.filter($"k" === 3).queryExecution.executedPlan.toString
-      assert("SelectedBucketsCount: (\\d+) out of 4".r
-        .findFirstMatchIn(plan).exists(_.group(1).toInt < 4), plan)
+      val plan = spark.table("state_bkh.t").filter($"k" === 3)
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("SelectedBucketsCount: 1 out of 4"), plan)
     } finally
       spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
+    spark.sql("DROP TABLE state_bkh.t")
+  }
 
-    // a TORN sidecar (zero bytes — crash between create and write) must
-    // NOT read as "no partition columns": the table is intact in that
-    // window, so the heal falls back to the catalog and keeps the
-    // partition layer (an unversioned sidecar would have rewritten the
-    // table unpartitioned — the data-loss class under dynamic overwrite)
-    spark.table("state_bkh.t").write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(snap.toString)
-    fs.create(new org.apache.hadoop.fs.Path(snap, "_graft_partcols"), true).close()
-    lake.compactBucketed(ref, "k", 4)
-    assert(!fs.exists(snap))
-    assert(spark.table("state_bkh.t")
-      .as[(Long, Int, java.sql.Date)].collect().toSet === rows)
-    assert(spark.catalog.listColumns("state_bkh.t").collect()
-      .filter(_.isPartition).map(_.name).toSeq === Seq("seen_date"))
-
-    // prefix-torn: the crash persisted the header but not the whole
-    // list (no "end" terminator) — a header-only check would read the
-    // truncation as a committed shorter/empty list; the terminator
-    // routes it to the catalog fallback like the zero-byte case
-    spark.table("state_bkh.t").write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(snap.toString)
-    val torn = fs.create(new org.apache.hadoop.fs.Path(snap, "_graft_partcols"), true)
-    torn.write("v1".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    torn.close()
-    lake.compactBucketed(ref, "k", 4)
-    assert(!fs.exists(snap))
-    assert(spark.table("state_bkh.t")
-      .as[(Long, Int, java.sql.Date)].collect().toSet === rows)
-    assert(spark.catalog.listColumns("state_bkh.t").collect()
-      .filter(_.isPartition).map(_.name).toSeq === Seq("seen_date"))
-
-    // the UNCOUNTED "v1" format is not a sidecar this writer emits: it
-    // reads as no sidecar. With the table present the catalog answers...
-    def uncountedSnapshot(): Unit = {
-      spark.table("state_bkh.t").write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(snap.toString)
-      val unc = fs.create(new org.apache.hadoop.fs.Path(snap, "_graft_partcols"), true)
-      unc.write("v1\nseen_date\nend".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      unc.close()
+  test("bucketed compaction, retrain and PQ re-enable never drop a live catalog entry") {
+    import graft.lake.{AnnIndex, CorpusDedup}
+    import org.apache.spark.sql.catalyst.catalog.{DropTableEvent, ExternalCatalogEvent, ExternalCatalogEventListener}
+    import scala.jdk.CollectionConverters._
+    val dropped = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new ExternalCatalogEventListener {
+      override def onEvent(e: ExternalCatalogEvent): Unit = e match {
+        case DropTableEvent(db, name) => dropped.add(s"$db.$name")
+        case _ =>
+      }
     }
-    uncountedSnapshot()
-    lake.compactBucketed(ref, "k", 4)
-    assert(!fs.exists(snap))
-    assert(spark.table("state_bkh.t")
-      .as[(Long, Int, java.sql.Date)].collect().toSet === rows)
-    assert(spark.catalog.listColumns("state_bkh.t").collect()
-      .filter(_.isPartition).map(_.name).toSeq === Seq("seen_date"))
-    // ...and with the table dropped outside compaction, the heal fails
-    // loudly and keeps the snapshot for a manual restore
-    uncountedSnapshot()
-    spark.sql("DROP TABLE state_bkh.t")
-    fs.delete(new org.apache.hadoop.fs.Path(lake.path(ref)), true)
-    val gone = intercept[IllegalStateException](lake.compactBucketed(ref, "k", 4))
-    assert(gone.getMessage.contains(snap.toString) &&
-      gone.getMessage.contains("dropped outside compaction"), gone.getMessage)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(snap, "_SUCCESS")))
-    lake.writeBucketed(spark.read.parquet(snap.toString), ref, "k", 4,
-      partitionBy = Seq("seen_date"))
-    fs.delete(snap, true)
-    assert(spark.table("state_bkh.t")
-      .as[(Long, Int, java.sql.Date)].collect().toSet === rows)
-
-    // advisor-found (r15) ambiguity: a torn prefix of a list whose
-    // MIDDLE column is literally named "end" — "v1 3\na\nend" from
-    // ["a","end","b"] — parsed as a committed 2-entry list under the
-    // bare-terminator format. The count makes it torn (3 declared,
-    // 1 listed): catalog fallback, partition layer preserved.
-    spark.table("state_bkh.t").write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(snap.toString)
-    val amb = fs.create(new org.apache.hadoop.fs.Path(snap, "_graft_partcols"), true)
-    amb.write("v1 3\na\nend".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    amb.close()
-    lake.compactBucketed(ref, "k", 4)
-    assert(!fs.exists(snap))
-    assert(spark.table("state_bkh.t")
-      .as[(Long, Int, java.sql.Date)].collect().toSet === rows)
-    assert(spark.catalog.listColumns("state_bkh.t").collect()
-      .filter(_.isPartition).map(_.name).toSeq === Seq("seen_date"))
-    spark.sql("DROP TABLE state_bkh.t")
+    val lake = new Lake(spark, tmpDir("ann_keep"))
+    val idx = new AnnIndex(spark, lake, "ann_keep", numBuckets = 4)
+    def vec(id: Long) = Array((id % 7).toDouble, (id % 5).toDouble, (id % 3).toDouble, 1.0)
+    def day(d: String) = java.sql.Date.valueOf(d)
+    idx.buildDated((0L until 40L).map(i => (i, vec(i))).toDF("id", "vec"),
+      "id", "vec", k = 3, day("2024-05-01"))
+    idx.enablePq(m = 2, ksub = 4, iters = 1, samplePct = 100)
+    idx.appendDated((100L until 120L).map(i => (i, vec(i))).toDF("id", "vec"),
+      "id", "vec", day("2024-05-02"))
+    val dd = new CorpusDedup(spark, lake, "ann_keep", numBuckets = 4)
+    dd.commitExact(Seq("a", "b").toDF("text"), "text")
+    dd.commitExact(Seq("c").toDF("text"), "text")
+    val live = Seq(idx.centroidsRef, idx.listsRef, idx.pqCodesRef,
+      idx.pqCodebooksRef, dd.hashesRef).map(r => s"${r.zone}_${r.dataset}.${r.table}")
+    val external = spark.sharedState.externalCatalog
+    external.addListener(listener)
+    try {
+      idx.compact()
+      dd.compact()
+      idx.retrain(k = 3, iters = 1, samplePct = 100)
+      idx.enablePq(m = 2, ksub = 4, iters = 1, samplePct = 100)
+    } finally external.removeListener(listener)
+    val drops = dropped.asScala.toSeq
+    assert(drops.nonEmpty && drops.forall(_.endsWith("__compact")), drops)
+    assert(live.forall(t => drops.contains(t + "__compact")), drops)
+    assert(spark.table("state_ann_keep.ivf_lists").count() === 60)
+    assert(spark.table("state_ann_keep.ivf_pq_codes").count() === 60)
+    assert(spark.table("state_ann_keep.seen_hashes").count() === 3)
+    idx.unpinBucketedScan()
+    spark.sql("DROP DATABASE state_ann_keep CASCADE")
   }
 
   test("bucketed tables join without a shuffle (co-located join)") {
@@ -1515,6 +1468,37 @@ class LakeSpec extends SparkSpec {
     assert(parquetFiles(lake.path(pref)) === 2)
     assert(lake.read(pref).count() === 20)
     assert(lake.read(pref).select($"part").distinct().count() === 2)
+
+    // partition values keep their dir names (`hora=00`, not `hora=0`),
+    // and the call leaves the session's settings as it found them
+    val href = TableRef("staging", "ds", "hticks")
+    Seq("00", "07").foreach(h => lake.append(Seq((1, h)).toDF("id", "hora"), href,
+      partitionBy = Seq("hora")))
+    val conf = spark.conf.getAll
+    lake.compact(href, partitionBy = Seq("hora"))
+    assert(spark.conf.getAll === conf)
+    assert(new java.io.File(lake.path(href)).list().filter(_.startsWith("hora=")).sorted
+      .toSeq === Seq("hora=00", "hora=07"))
+    assert(lake.read(href).count() === 2)
+  }
+
+  test("compaction refuses a cut swap the next append recreated: nothing deleted") {
+    import java.nio.file.{Files, Paths}
+    val lake = new Lake(spark, tmpDir("lake"))
+    val ref = TableRef("staging", "ds", "ticks")
+    (1 to 3).foreach(i => lake.append(Seq((i, s"d$i")).toDF("id", "data"), ref,
+      partitionBy = Seq("data")))
+    // a compaction that died between its renames: the history at .old,
+    // the compacted copy complete beside it; then a capture append
+    // recreates the table dir
+    val (p, side, old) = (lake.path(ref), lake.path(ref) + ".compact", lake.path(ref) + ".old")
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(p), new java.io.File(side))
+    Files.move(Paths.get(p), Paths.get(old))
+    lake.append(Seq((4, "d4")).toDF("id", "data"), ref, partitionBy = Seq("data"))
+    val e = intercept[IllegalStateException](lake.compact(ref, partitionBy = Seq("data")))
+    Seq(p, side, old).foreach(d => assert(e.getMessage.contains(d), e.getMessage))
+    def ids(dir: String) = spark.read.parquet(dir).select($"id").as[Int].collect().sorted.toSeq
+    assert(ids(old) === Seq(1, 2, 3) && ids(side) === Seq(1, 2, 3) && ids(p) === Seq(4))
   }
 
   test("compaction removes the staging dirs crashed writes left behind") {
