@@ -1,6 +1,6 @@
 package graft
 
-import graft.lake.FooterParquet
+import graft.lake.NanosAsLong
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -16,11 +16,12 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * `events.ts` is TIMESTAMP(MICROS) in every fixture scale and in
   * perfbench's generated tables. A writer that keeps nanoseconds stores
   * it as TIMESTAMP(NANOS), which Spark refuses to read natively; such a
-  * column is read as a nanosecond long (legacy flag) and integer-divided
-  * to microseconds — what DuckDB does when it truncates nanos.
+  * column is read as a nanosecond long (the legacy flag, on for the
+  * load's own relation: [[NanosAsLong]]) and integer-divided to
+  * microseconds — what DuckDB does when it truncates nanos.
   *
   * Schemas come from one footer read on the driver
-  * ([[FooterParquet]]), so a load runs no Spark job.
+  * ([[graft.lake.FooterParquet]]), so a load runs no Spark job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -31,8 +32,7 @@ object Tables {
   private val nanosCols = Map("events" -> Set("ts"))
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = FooterParquet.reader(spark).load(s"$dir/$name.parquet")
+    val df = spark.read.format(classOf[NanosAsLong].getName).load(s"$dir/$name.parquet")
     val nanos = nanosCols.getOrElse(name, Set.empty)
     val cols = df.schema.fields.map { f =>
       f.dataType match {

@@ -37,9 +37,10 @@ import org.apache.spark.sql.types.StringType
   *    between an overwrite's delete and rename leaves that partition
   *    absent until the write is replayed;
   *  - an unpartitioned write into a dir that does not exist yet
-  *    ([[intoNewDir]], for the state store's fresh `.tmp-<uuid>` dirs):
-  *    one `part-00000-<uuid>-c000<ext>` file, then `_SUCCESS`. The dir
-  *    is invisible to readers until its owner renames it in. */
+  *    ([[intoNewDir]], for the state store's writes into a fresh
+  *    `.tmp-<uuid>` side dir of [[DirSwap]]): one
+  *    `part-00000-<uuid>-c000<ext>` file, then `_SUCCESS`. The dir is
+  *    invisible to readers until the swap renames it in. */
 private[graft] object DriverWrite {
   /** Writes `df` under `root` on the driver when it is driver-held and
     * partitioned; returns false, having written nothing, for every other

@@ -8,6 +8,7 @@ import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrameReader, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetOptions, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Spark's parquet source with the schema read on the driver.
@@ -33,7 +34,7 @@ import org.apache.spark.sql.types.StructType
 class FooterParquet extends ParquetFileFormat {
   override def inferSchema(spark: SparkSession, options: Map[String, String],
                            files: Seq[FileStatus]): Option[StructType] = {
-    val sqlConf = spark.sessionState.conf
+    val sqlConf = getSqlConf(spark)
     if (new ParquetOptions(options, sqlConf).mergeSchema)
       super.inferSchema(spark, options, files)
     else {
@@ -57,4 +58,18 @@ object FooterParquet {
   /** `spark.read` of parquet through [[FooterParquet]]. */
   def reader(spark: SparkSession): DataFrameReader =
     spark.read.format(classOf[FooterParquet].getName)
+}
+
+/** [[FooterParquet]] with `spark.sql.legacy.parquet.nanosAsLong` on for
+  * its own relations only ([[graft.Tables.load]]): inference and the
+  * scan's reader take their conf from `getSqlConf`, so a TIMESTAMP(NANOS)
+  * column reads as a nanosecond long and the session is untouched.
+  * Spark's inference job (`mergeSchema`, an unreadable footer) still
+  * reads the session's conf. */
+class NanosAsLong extends FooterParquet {
+  override def getSqlConf(spark: SparkSession): SQLConf = {
+    val conf = super.getSqlConf(spark).clone()
+    conf.setConf(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, true)
+    conf
+  }
 }

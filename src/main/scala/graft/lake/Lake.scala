@@ -47,10 +47,11 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *
   * A whole-table rewrite ([[compact]] of a path table, [[rewriteBucketed]]
   * and [[compactBucketed]] of a bucketed catalog table) writes the new
-  * files beside the table and swaps the directory in with two renames;
-  * the next rewrite heals a swap that a crash cut short. A bucketed
-  * table's catalog entry is never dropped by a rewrite, so no crash
-  * makes it read as absent.
+  * files beside the table and swaps the directory in through
+  * [[DirSwap]], the one swap the state store's writes use too; the next
+  * rewrite heals a swap that a crash cut short. A bucketed table's
+  * catalog entry is never dropped by a rewrite, so no crash makes it
+  * read as absent.
   *
   * Local-FS write rule: every path-addressed DataFrame write here goes
   * through `writer`, which selects [[NioLocalFileSystem]] for `file://`
@@ -156,7 +157,7 @@ class Lake(spark: SparkSession, root: String) {
     * planning starts to cost more than scanning. File count is sized
     * from the optimizer's own byte statistics (no extra pass over the
     * data). A table cannot be overwritten from its own live scan, so the
-    * compacted copy is written aside and swapped in ([[writeAside]]).
+    * compacted copy is written aside and swapped in ([[DirSwap]]).
     * The old root is deleted whole, so hidden dirs that crashed writes
     * left in it (staging dirs) go with it.
     *
@@ -169,7 +170,7 @@ class Lake(spark: SparkSession, root: String) {
     * the session's settings are not touched. */
   def compact(ref: TableRef, partitionBy: Seq[String] = Nil,
               targetFileBytes: Long = 128L * 1024 * 1024): Unit =
-    writeAside(ref) { side =>
+    swapIn(ref) { side =>
       val discovered = read(ref).queryExecution.analyzed.collectFirst {
         case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
           l.relation.asInstanceOf[HadoopFsRelation]
@@ -189,46 +190,11 @@ class Lake(spark: SparkSession, root: String) {
         .save(side)
     }
 
-  /** The one replace-a-table-dir protocol: heal what a crashed
-    * predecessor left, `write` the new contents into the side dir
-    * `<path>.compact`, then rename the live dir to `<path>.old`, the side
-    * dir in, and delete `.old`. Readers between the two renames see an
-    * empty table. States on entry:
-    *  - table dir missing, `.old` present: `.old` is renamed back;
-    *  - table dir and `.old` present, no side dir: the swap finished, so
-    *    `.old` is deleted;
-    *  - a side dir with no `.old`: a dead write, so it is deleted, with
-    *    a leftover [[rewriteBucketed]] catalog entry;
-    *  - all three present: a write recreated the table dir after a crash
-    *    between the renames, and `.old` holds the history. That throws
-    *    and deletes nothing. */
-  private def writeAside(ref: TableRef)(write: String => Unit): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(path(ref))
-    val side = new Path(path(ref) + ".compact")
-    val old = new Path(path(ref) + ".old")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && fs.exists(old) && fs.exists(side))
-      throw new IllegalStateException(s"table dir $p, its pre-swap copy $old " +
-        s"and the side dir $side all exist: a write recreated $p after a " +
-        s"crash between the swap's renames, so $old holds the history; " +
-        "nothing was deleted, merge them by hand")
-    if (!fs.exists(p) && fs.exists(old)) {
-      if (!fs.rename(old, p))
-        throw new java.io.IOException(s"swap recovery $old -> $p failed")
-      refresh(ref) // a read in the cut swap cached the empty listing
-    }
-    if (fs.exists(old)) fs.delete(old, true)
-    spark.sql(s"DROP TABLE IF EXISTS ${asideName(ref)}")
-    if (fs.exists(side)) fs.delete(side, true)
-    write(side.toString)
-    if (!fs.rename(p, old))
-      throw new java.io.IOException(s"swap $p -> $old failed")
-    if (!fs.rename(side, p)) {
-      fs.rename(old, p) // best-effort restore
-      throw new java.io.IOException(s"swap $side -> $p failed")
-    }
-    fs.delete(old, true)
+  /** [[DirSwap]] of the table's dir, refreshing its listings after a heal
+    * (a read in the cut swap cached the empty listing) and the swap. */
+  private def swapIn(ref: TableRef)(write: String => Unit): Unit = {
+    if (DirSwap.heal(spark, path(ref))) refresh(ref)
+    DirSwap.replace(spark, path(ref))(write)
     refresh(ref)
   }
 
@@ -278,10 +244,10 @@ class Lake(spark: SparkSession, root: String) {
     * spec, sort columns and partition columns come from the table's
     * catalog entry. `df` is clustered on (partition columns, bucket
     * columns), so each partition dir gets ~one file per bucket, and is
-    * written as the external table `<table>__compact` at
-    * `<path>.compact` (`df` is evaluated after the heal, so it may read
-    * the table's own dir); that entry is dropped (its files stay) and the
-    * dir is swapped in ([[writeAside]]). The live catalog entry is never
+    * written as the external table `<table>__compact` at the swap's side
+    * dir (`df` is evaluated after the heal, so it may read the table's
+    * own dir); that entry is dropped (its files stay) and the dir is
+    * swapped in ([[DirSwap]]). The live catalog entry is never
     * dropped, so a crash at any point leaves the table registered, and
     * the next rewrite of the table heals its dir. `df` must land the
     * table's partitions (the catalog's partition list is kept). Same
@@ -292,7 +258,8 @@ class Lake(spark: SparkSession, root: String) {
     val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
       s"${qualified(ref)} is not bucketed"))
     def columns(s: StructType) = s.fields.map(f => f.name -> f.dataType.catalogString).toSeq
-    writeAside(ref) { side =>
+    swapIn(ref) { side =>
+      spark.sql(s"DROP TABLE IF EXISTS ${asideName(ref)}") // a dead rewrite's entry
       val rows = df
       require(columns(rows.schema) == columns(meta.schema),
         s"rewriteBucketed(${qualified(ref)}): columns ${columns(rows.schema)} " +

@@ -2,7 +2,7 @@ package graft.state
 
 import java.sql.Timestamp
 
-import graft.lake.{DriverRead, DriverWrite, FooterParquet, NioLocalFileSystem}
+import graft.lake.{DirSwap, DriverRead, DriverWrite, FooterParquet, NioLocalFileSystem}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -87,26 +87,6 @@ class StateStore(spark: SparkSession, root: String) {
   def writeTable(name: String, df: DataFrame): Unit =
     writeAtomic(df, tablePath(name))
 
-  /** Restore a crashed writer's intact `.old` copy BEFORE anything plans
-    * a read of `path`. This must run in [[readOrEmpty]] — not only in
-    * [[writeAtomic]] — because callers bind their merge frame to the read
-    * first (spark.read.parquet resolves the missing path eagerly into the
-    * empty fallback); a heal that runs later restores the file after the
-    * plan has already decided the state is empty. */
-  private def heal(path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new Path(path + ".old")
-    if (!fs.exists(p) && fs.exists(old)) {
-      // Two lock-free readers may race this rename; losing is fine as
-      // long as SOMEONE restored the live copy. (A reader racing a live
-      // writer's swap is handled by writeAtomic's bounded retry.)
-      if (!fs.rename(old, p) && !fs.exists(p))
-        throw new java.io.IOException(s"state recovery rename $old -> $p failed")
-    }
-  }
-
   private def readOrEmpty(path: String, schemaDdl: String): DataFrame =
     readIfPresent(path, schemaDdl)(FooterParquet.reader(spark).load(path))
 
@@ -122,7 +102,9 @@ class StateStore(spark: SparkSession, root: String) {
 
   private def readIfPresent(path: String, schemaDdl: String)(
       read: => DataFrame): DataFrame = {
-    heal(path)
+    // heal BEFORE the read binds: a merge frame planned over the empty
+    // fallback would stay empty after the write's own heal
+    DirSwap.heal(spark, path)
     // first-run is decided by PATH ABSENCE, never by swallowing read
     // errors (review-found regression class: a transient storage
     // failure misread as first-run makes the caller's merge+writeAtomic
@@ -138,73 +120,27 @@ class StateStore(spark: SparkSession, root: String) {
     else read
   }
 
-  /** Read-modify-write by swap: `df` (which may lazily READ `path`) is
-    * written into a fresh `path.tmp-<uuid>`, then swapped in with
-    * filesystem renames, so a path is never overwritten while a job is
-    * still reading it. A merged frame (entity watermarks, processed
-    * files) is written by Spark and never collects to the driver:
-    * millions of entities/files stay distributed end-to-end. A
-    * driver-held frame (a last-run row, a merged sketch, a local table)
-    * is written on the driver with no Spark job ([[DriverWrite]]), in the
-    * file layout of a Spark write, `_SUCCESS` last. Safe under the
-    * single-writer-per-pipeline discipline (the reference's
-    * skip_if_running guard, utils/utils.py:197-231); a reader racing the
-    * two renames is a first-run-style miss, not corruption, and a writer
-    * that crashes between them is healed on the next call — the intact
-    * `.old` copy is restored before the merge plans its read. A writer
-    * that dies before the swap leaves only its tmp dir, which no reader
-    * sees and the next write to the path sweeps. */
-  private def writeAtomic(df: DataFrame, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Unique tmp suffix per write: a fixed name would let a second writer
-    // on the same path delete this one's in-progress output mid-write.
-    // Orphans from crashed writers are swept here — safe because writers
-    // on one path are serialized by the per-key RunLock discipline.
-    val tmp = new Path(path + ".tmp-" + java.util.UUID.randomUUID())
-    val old = new Path(path + ".old")
-    // Belt-and-braces heal (the load-bearing one runs in readOrEmpty,
-    // before callers plan their merge read).
-    heal(path)
-    // globStatus treats * ? [ ] { } in the PATH part as patterns — a state
-    // key containing one would match unrelated paths (or throw). Escape
-    // them so only the literal path's tmp suffix stays a wildcard.
-    val globSafe = path.replaceAll("([*?\\[\\]{}\\\\])", "\\\\$1")
-    try Option(fs.globStatus(new Path(globSafe + ".tmp-*"))) // null when parent absent
-      .getOrElse(Array.empty).foreach(st => fs.delete(st.getPath, true))
-    catch { case _: java.io.IOException => () }
-    // A distributed frame's state rows are tiny (entity + timestamp): 4
-    // output files keep the table compact up to ~10^8 entities without a
-    // count-then-choose pass. A driver-held frame is one file.
-    if (!DriverWrite.intoNewDir(spark, df, tmp.toString))
-      df.coalesce(4).write.options(NioLocalFileSystem.writerOptions)
-        .mode(SaveMode.Overwrite).parquet(tmp.toString)
-    if (fs.exists(old)) fs.delete(old, true)
-    // Swap with bounded retry: a lock-free READER that catches us between
-    // the two renames can heal `.old` back into `path` (readOrEmpty's
-    // crash recovery) — the tmp->path rename then fails with path
-    // re-occupied by the pre-update copy. Re-swapping it away and
-    // retrying converges: each iteration leaves `old` holding the same
-    // pre-update state. HDFS-style rename returns false instead of
-    // throwing — a false must never be followed by deleting the
-    // surviving copy.
-    var attempts = 0
-    var swapped = false
-    while (!swapped) {
-      if (fs.exists(p) && !fs.rename(p, old))
-        throw new java.io.IOException(s"state swap rename $p -> $old failed")
-      if (fs.rename(tmp, p)) swapped = true
-      else {
-        attempts += 1
-        if (attempts >= 3 || !fs.exists(p)) {
-          if (fs.exists(old)) fs.rename(old, p) // best-effort restore
-          throw new java.io.IOException(s"state swap rename $tmp -> $p failed")
-        }
-      }
+  /** Read-modify-write by swap ([[DirSwap]], shared with the lake's
+    * table rewrites), so a path is never overwritten while a job is still
+    * reading it: `df` may lazily READ `path`. A merged frame (entity watermarks, processed files) is written by
+    * Spark and never collects to the driver: millions of entities/files
+    * stay distributed end-to-end. A driver-held frame (a last-run row, a
+    * merged sketch, a local table) is written on the driver with no Spark
+    * job ([[DriverWrite]]), in the file layout of a Spark write, `_SUCCESS`
+    * last. Safe under the single-writer-per-pipeline discipline (the
+    * reference's skip_if_running guard, utils/utils.py:197-231); a reader
+    * racing the two renames is a first-run-style miss, not corruption, and
+    * a writer that crashes between them is healed on the next read or
+    * write of the path. */
+  private def writeAtomic(df: DataFrame, path: String): Unit =
+    DirSwap.replace(spark, path) { side =>
+      // A distributed frame's state rows are tiny (entity + timestamp): 4
+      // output files keep the table compact up to ~10^8 entities without a
+      // count-then-choose pass. A driver-held frame is one file.
+      if (!DriverWrite.intoNewDir(spark, df, side))
+        df.coalesce(4).write.options(NioLocalFileSystem.writerOptions)
+          .mode(SaveMode.Overwrite).parquet(side)
     }
-    fs.delete(old, true)
-  }
 
   // ---- T6: last-run timestamp per table --------------------------------
   // Stored per key (like entity_watermarks/processed_files): pipelines

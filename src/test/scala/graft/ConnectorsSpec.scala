@@ -977,9 +977,25 @@ class ConnectorsSpec extends SparkSpec {
       "AnnIndex.scala" -> // unpinBucketedScan
         """spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")""",
       "AnnIndex.scala" -> "finally spark.conf.set(modeKey, was)", // dynamicOverwrite
-      "AnnIndex.scala" -> """spark.conf.set(modeKey, "dynamic")""",
-      "Tables.scala" -> """spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")"""
+      "AnnIndex.scala" -> """spark.conf.set(modeKey, "dynamic")"""
     ).sorted)
+  }
+
+  test("renames happen only at the known src/main sites") {
+    // a ratchet: replacing a directory is DirSwap's decision alone, so this
+    // list may shrink but must not grow
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val sites = try walk.iterator().asScala.toSeq.filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString ->
+        (java.nio.file.Files.readString(p).split("rename\\(", -1).length - 1))
+      .filter(_._2 > 0).sorted
+    finally walk.close()
+    assert(sites === Seq(
+      "Capture.scala" -> 2, // tickFor: FileContext rename, FileSystem fallback
+      "DailyIngest.scala" -> 1, // ensureVocab: temp file -> vocab file
+      "DirSwap.scala" -> 4, // the one directory swap and its heal
+      "DriverWrite.scala" -> 4, // staged files and dirs -> table dirs
+      "RunLock.scala" -> 2)) // stale-lock claim and its restore
   }
 }
 

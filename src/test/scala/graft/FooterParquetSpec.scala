@@ -81,7 +81,9 @@ class FooterParquetSpec extends SparkSpec {
     finally spark.conf.unset(key)
   }
 
-  test("Tables.load reads a TIMESTAMP(NANOS) events.ts as micros") {
+  /** A dir holding `events.parquet` whose `ts` is TIMESTAMP(NANOS), as
+    * a writer that keeps nanoseconds stores it. */
+  private def nanosEvents(): String = {
     import org.apache.hadoop.fs.Path
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
@@ -89,19 +91,37 @@ class FooterParquetSpec extends SparkSpec {
     val schema = MessageTypeParser.parseMessageType(
       "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,false)); }")
     val dir = tmpDir("fp_nanos")
-    val file = s"$dir/events.parquet"
-    val w = ExampleParquetWriter.builder(new Path(file)).withType(schema).build()
+    val w = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet"))
+      .withType(schema).build()
     val groups = new SimpleGroupFactory(schema)
     try Seq(1L -> 1704067200123456789L, 2L -> 1704067200000000999L).foreach {
       case (id, ns) => w.write(groups.newGroup().append("event_id", id).append("ts", ns))
     } finally w.close()
+    dir
+  }
 
+  private def micros(events: org.apache.spark.sql.DataFrame): Seq[Long] = {
+    assert(events.schema("ts").dataType === TimestampType)
+    events.orderBy("event_id").select(unix_micros(col("ts"))).collect().map(_.getLong(0)).toSeq
+  }
+
+  test("Tables.load reads a TIMESTAMP(NANOS) events.ts as micros") {
+    val dir = nanosEvents()
+    val file = s"$dir/events.parquet"
     // the footer path infers the stock reader's nanosecond long
     assert(stockSchema(file)("ts").dataType === LongType)
     assert(footerSchema(file) === stockSchema(file))
-    val events = Tables.load(spark, dir, "events")
-    assert(events.schema("ts").dataType === TimestampType)
-    assert(events.orderBy("event_id").select(unix_micros($"ts")).as[Long].collect().toSeq ===
-      Seq(1704067200123456L, 1704067200000000L))
+    assert(micros(Tables.load(spark, dir, "events")) === Seq(1704067200123456L, 1704067200000000L))
+  }
+
+  test("Tables.load leaves nanosAsLong off the session: a plain read still refuses NANOS") {
+    // a fresh session, since the shared one sets the flag for every test
+    val s = spark.newSession()
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val dir = nanosEvents()
+    assert(micros(Tables.load(s, dir, "events")) === Seq(1704067200123456L, 1704067200000000L))
+    val e = intercept[Exception](s.read.parquet(s"$dir/events.parquet").collect())
+    assert(e.getMessage.contains("PARQUET_TYPE_ILLEGAL"), e.getMessage)
+    assert(s.conf.get(key, "false") === "false")
   }
 }

@@ -1328,12 +1328,12 @@ class LakeSpec extends SparkSpec {
     def partitions() = spark.sql("SHOW PARTITIONS state_bkh.t").as[String].collect().toSeq
     val (before, parts) = (rows(), partitions())
     val p = new Path(lake.path(ref))
-    val side = new Path(lake.path(ref) + ".compact")
+    val side = new Path(lake.path(ref) + ".tmp-crashed")
     val old = new Path(lake.path(ref) + ".old")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def healed(): Unit = {
       assert(rows() === before && partitions() === parts)
-      assert(!fs.exists(side) && !fs.exists(old))
+      assert(fs.globStatus(new Path(lake.path(ref) + ".tmp-*")).isEmpty && !fs.exists(old))
       assert(!spark.catalog.tableExists("state_bkh.t__compact"))
     }
 
@@ -1480,25 +1480,6 @@ class LakeSpec extends SparkSpec {
     assert(new java.io.File(lake.path(href)).list().filter(_.startsWith("hora=")).sorted
       .toSeq === Seq("hora=00", "hora=07"))
     assert(lake.read(href).count() === 2)
-  }
-
-  test("compaction refuses a cut swap the next append recreated: nothing deleted") {
-    import java.nio.file.{Files, Paths}
-    val lake = new Lake(spark, tmpDir("lake"))
-    val ref = TableRef("staging", "ds", "ticks")
-    (1 to 3).foreach(i => lake.append(Seq((i, s"d$i")).toDF("id", "data"), ref,
-      partitionBy = Seq("data")))
-    // a compaction that died between its renames: the history at .old,
-    // the compacted copy complete beside it; then a capture append
-    // recreates the table dir
-    val (p, side, old) = (lake.path(ref), lake.path(ref) + ".compact", lake.path(ref) + ".old")
-    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(p), new java.io.File(side))
-    Files.move(Paths.get(p), Paths.get(old))
-    lake.append(Seq((4, "d4")).toDF("id", "data"), ref, partitionBy = Seq("data"))
-    val e = intercept[IllegalStateException](lake.compact(ref, partitionBy = Seq("data")))
-    Seq(p, side, old).foreach(d => assert(e.getMessage.contains(d), e.getMessage))
-    def ids(dir: String) = spark.read.parquet(dir).select($"id").as[Int].collect().sorted.toSeq
-    assert(ids(old) === Seq(1, 2, 3) && ids(side) === Seq(1, 2, 3) && ids(p) === Seq(4))
   }
 
   test("compaction removes the staging dirs crashed writes left behind") {

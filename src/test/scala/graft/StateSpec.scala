@@ -58,34 +58,6 @@ class StateSpec extends SparkSpec {
     assert(jobsDuring { st = new StateStore(spark, root) }.isEmpty)
   }
 
-  test("crash between swap renames: next reader heals .old BEFORE its merge reads") {
-    val dir = tmpDir("state")
-    val st = new StateStore(spark, dir)
-    val batch = Seq(
-      ("s1", Timestamp.valueOf("2024-01-01 10:00:00"), 1.0),
-      ("s2", Timestamp.valueOf("2024-01-02 11:00:00"), 2.0)).toDF("entity", "ts", "v")
-    st.advanceEntityWatermarks("k", batch, "entity", "ts")
-
-    // simulate a writer that died between `path -> path.old` and
-    // `tmp -> path`: the live copy is gone, only .old survives
-    val p = new org.apache.hadoop.fs.Path(s"$dir/entity_watermarks/k")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(p, new org.apache.hadoop.fs.Path(s"$dir/entity_watermarks/k.old")))
-
-    // a plain read heals and sees the prior state (not first-run empty)
-    assert(st.entityWatermarks("k").count() === 2)
-
-    // and crucially an UPDATE after the crash merges against the healed
-    // state — s2's watermark must survive a batch that only touches s1
-    assert(fs.rename(p, new org.apache.hadoop.fs.Path(s"$dir/entity_watermarks/k.old")))
-    st.advanceEntityWatermarks("k",
-      Seq(("s1", Timestamp.valueOf("2024-02-01 00:00:00"), 0.0))
-        .toDF("entity", "ts", "v"), "entity", "ts")
-    val wm = st.entityWatermarks("k").as[(String, Timestamp)].collect().toMap
-    assert(wm("s2") === Timestamp.valueOf("2024-01-02 11:00:00")) // not wiped
-    assert(wm("s1") === Timestamp.valueOf("2024-02-01 00:00:00"))
-  }
-
   test("driver-written state swaps: crash states read as before and replay once") {
     import org.apache.hadoop.fs.Path
     val dir = tmpDir("state")
@@ -166,7 +138,7 @@ class StateSpec extends SparkSpec {
       Set("ds.sel%5B%2A%5D.t%7B1%7D", "ds.sel1.t1", "ds.%E2%80%B9", "ds.%2039"))
   }
 
-  test("migration probe never steals a colliding key's live state") {
+  test("state key encoding is injective; raw-named dirs are never read or renamed") {
     // No probe renames state between paths any more, and the encoding is
     // injective, so keys whose encodings an older scheme could confuse
     // each keep their own live state.
