@@ -67,9 +67,12 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *    the table;
   *  - `insertInto` appends (CorpusDedup, AnnIndex), which write with
   *    the catalog table's options;
-  *  - direct `fs.create` call sites (`RunLock`, `tickFor`, the
-  *    retrain commit marker), which use the session's cached stock
-  *    filesystem.
+  *  - direct `fs.create` call sites (`RunLock`, `DailyIngest`'s
+  *    `ensureVocab`, the `StateStore` layout marker,
+  *    `QualityClassifier`'s weights file and the `AnnIndex` retrain
+  *    marker), which use the session's cached stock filesystem.
+  *    `DriverWrite`'s `_SUCCESS` create is a direct site too, but it
+  *    goes through the driver write's own filesystem, so it is covered.
   */
 final case class TableRef(zone: String, dataset: String, table: String)
 

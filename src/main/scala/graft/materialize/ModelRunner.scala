@@ -137,6 +137,7 @@ class ModelRunner(spark: SparkSession, lake: Lake, state: StateStore,
     * rj_smtr/tasks.py:71-140): advance the window in fixed steps until
     * caught up to `until`. */
   def backfill(model: Model, until: Timestamp, stepHours: Int): Int = {
+    require(stepHours > 0, s"stepHours must be positive, got $stepHours")
     var steps = 0
     var cur = state.lastRunOrMax(s"$dataset.${model.name}",
       lake.read(TableRef("prod", dataset, model.name)), "ts")

@@ -30,6 +30,8 @@ object Recapture {
   def plan(spark: SparkSession, logs: DataFrame, now: Timestamp,
            intervalMinutes: Int = 1, lookbackDays: Int = 1,
            maxRecaptures: Int = 90): Plan = {
+    require(intervalMinutes > 0, s"intervalMinutes must be positive, got $intervalMinutes")
+    require(lookbackDays >= 0, s"lookbackDays must not be negative, got $lookbackDays")
     val step = intervalMinutes * 60
     val startSec = (now.getTime / 1000 - lookbackDays * 86400L) / step * step
     val spine = startSec * 1000 to now.getTime by step * 1000L // epoch ms

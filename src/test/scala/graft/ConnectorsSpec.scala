@@ -991,7 +991,6 @@ class ConnectorsSpec extends SparkSpec {
       .filter(_._2 > 0).sorted
     finally walk.close()
     assert(sites === Seq(
-      "Capture.scala" -> 2, // tickFor: FileContext rename, FileSystem fallback
       "DailyIngest.scala" -> 1, // ensureVocab: temp file -> vocab file
       "DirSwap.scala" -> 4, // the one directory swap and its heal
       "DriverWrite.scala" -> 4, // staged files and dirs -> table dirs

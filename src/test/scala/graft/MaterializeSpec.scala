@@ -202,6 +202,43 @@ class MaterializeSpec extends SparkSpec {
     assert(out.isEmpty)
   }
 
+  test("recapture plan refuses a non-positive interval or a negative lookback") {
+    import graft.lake.CaptureLog
+    import graft.materialize.GateSource
+    import graft.streaming.Recapture
+    val lake = new Lake(spark, tmpDir("lake"))
+    val log = new CaptureLog(spark, lake)
+    val now = Timestamp.valueOf("2024-01-05 00:10:00")
+    log.append("ds", "gps", now, success = true)
+    val logs = log.read("ds", "gps")
+    def refused(param: String)(body: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](body)
+      assert(e.getMessage.contains(param), e.getMessage)
+    }
+    refused("intervalMinutes")(Recapture.plan(spark, logs, now, intervalMinutes = 0))
+    refused("intervalMinutes")(Recapture.plan(spark, logs, now, intervalMinutes = -1))
+    refused("lookbackDays")(Recapture.plan(spark, logs, now, lookbackDays = -1))
+    // a gate source reaches the plan through runGated
+    val runner = new ModelRunner(spark, lake, new StateStore(spark, tmpDir("state")), "ds")
+    refused("intervalMinutes")(runner.runGated(Model("gated", "SELECT 1 AS x"), now, log,
+      Seq(GateSource("ds", "gps", intervalMinutes = 0))))
+  }
+
+  test("backfill stepper refuses a non-positive step") {
+    val lake = new Lake(spark, tmpDir("lake"))
+    val state = new StateStore(spark, tmpDir("state"))
+    val runner = new ModelRunner(spark, lake, state, "ds")
+    state.setLastRun("ds.bf", Timestamp.valueOf("2024-01-01 00:00:00"))
+    for (step <- Seq(0, -2)) {
+      val e = intercept[IllegalArgumentException] {
+        runner.backfill(Model("bf", "SELECT 1 AS x"),
+          Timestamp.valueOf("2024-01-01 06:00:00"), stepHours = step)
+      }
+      assert(e.getMessage.contains("stepHours"), e.getMessage)
+    }
+    assert(state.lastRun("ds.bf") === Some(Timestamp.valueOf("2024-01-01 00:00:00")))
+  }
+
   test("model DAG runs dependencies first and detects cycles") {
     val order = scala.collection.mutable.ArrayBuffer[String]()
     val lake = new Lake(spark, tmpDir("lake")) {

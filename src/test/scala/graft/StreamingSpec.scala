@@ -519,93 +519,68 @@ class StreamingSpec extends SparkSpec {
     assert(lake.read(graft.lake.TableRef("raw", "ds", "gps")).count() === 4)
   }
 
-  test("tickFor is write-once, crash-atomic, and heals a corrupt tick file (T5)") {
-    val tmp = tmpDir("lake")
-    val lake = new graft.lake.Lake(spark, tmp)
-    val log = new CaptureLog(spark, lake)
-    val cap = new Capture(spark, lake, log,
+  test("captures stamped within one second keep each other's rows") {
+    val lake = new Lake(spark, tmpDir("lake"))
+    val cap = new Capture(spark, lake, new CaptureLog(spark, lake),
       CaptureConfig("ds", "gps", pk = Seq("id"), tsCol = "ts"))
-    // write-once: a replay of the same batchId reads the SAME tick back
-    val t1 = cap.tickFor(7L)
-    assert(cap.tickFor(7L) === t1)
+    def batch(ids: Long*) = ids.map(i =>
+      (i, Timestamp.valueOf("2024-01-05 00:02:10"), "v")).toDF("id", "ts", "v")
+    cap.processBatch(batch(1, 2), Timestamp.valueOf("2024-01-05 00:03:00.100"))
+    cap.processBatch(batch(3, 4), Timestamp.valueOf("2024-01-05 00:03:00.400"))
+    for (zone <- Seq("raw", "staging"))
+      assert(lake.read(TableRef(zone, "ds", "gps")).select("id").as[Long]
+        .collect().sorted.toSeq === Seq(1L, 2L, 3L, 4L), zone)
+  }
 
-    val dir = new org.apache.hadoop.fs.Path(
-      lake.path(graft.lake.TableRef("state", "ds", "gps_ticks")))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the commit is rename-based: no temp debris survives a completed call
-    assert(!fs.listStatus(dir).exists(_.getPath.getName.endsWith(".tmp")))
-
-    // host crash after an unsynced commit: the rename persisted but the
-    // temp's bytes did not, leaving an EMPTY file at the final path. Must
-    // be treated as ABSENT — healed and re-created — not thrown on (a
-    // read that threw NumberFormatException on ''.toLong would wedge
-    // replays forever).
-    fs.create(new org.apache.hadoop.fs.Path(dir, "8"), true).close()
-    val t2 = cap.tickFor(8L)
-    assert(cap.tickFor(8L) === t2) // healed file is now the committed tick
-
-    // unparseable NON-EMPTY garbage is NOT healed — no writer in the
-    // rename-commit protocol produces a torn committed tick, so it is
-    // external corruption and surfaces loudly (silently re-minting
-    // could replace a tick another attempt landed partitions under —
-    // the r13/r14 heal-race, closed by the zero-length-only rule)
-    val out = fs.create(new org.apache.hadoop.fs.Path(dir, "9"), true)
-    out.write("16917".take(3).getBytes); out.write("x".getBytes); out.close()
-    val loud = intercept[java.io.IOException] { cap.tickFor(9L) }
-    assert(loud.getMessage.contains("unparseable non-empty"), loud.getMessage)
-    // an operator removing the corrupt file un-wedges the batch
-    fs.delete(new org.apache.hadoop.fs.Path(dir, "9"), false)
-    val t3 = cap.tickFor(9L)
-    assert(cap.tickFor(9L) === t3)
-    // a PARTIAL NUMERIC PREFIX ("1694" of an epoch-millis string) must
-    // not be accepted as a committed ~1970 tick — the plausibility
-    // bound routes it to the same loud path as non-numeric garbage
-    val pfx = fs.create(new org.apache.hadoop.fs.Path(dir, "11"), true)
-    pfx.write("1694".getBytes); pfx.close()
-    intercept[java.io.IOException] { cap.tickFor(11L) }
-    fs.delete(new org.apache.hadoop.fs.Path(dir, "11"), false)
-    // and the healed/re-minted ticks are real timestamps
-    assert(t2.getTime > 0L && t3.getTime > 0L)
-
-    // single-winner: a tick that a racer already committed is READ, never
-    // replaced — the no-overwrite rename makes a late attempt the loser
-    val pre = fs.create(new org.apache.hadoop.fs.Path(dir, "12"), true)
-    pre.write("1700000000000".getBytes); pre.close()
-    assert(cap.tickFor(12L) === new java.sql.Timestamp(1700000000000L))
-    // ... and the commit primitive itself REFUSES an existing
-    // destination (the foundation of that single-winner property): a
-    // racer that loses the rename can only delete its temp and read
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      dir.toUri, spark.sparkContext.hadoopConfiguration)
-    val loser = new org.apache.hadoop.fs.Path(dir, ".12.loser.tmp")
-    fs.create(loser, true).close()
-    intercept[java.io.IOException] {
-      fc.rename(loser, new org.apache.hadoop.fs.Path(dir, "12"))
+  test("streaming capture replays an uncommitted batch under its logged stamp (T5)") {
+    import java.nio.file.{Files, Paths}
+    val lake = new Lake(spark, tmpDir("lake"))
+    val cap = new Capture(spark, lake, new CaptureLog(spark, lake),
+      CaptureConfig("ds", "replay", pk = Seq("id"), tsCol = "ts"))
+    val landing = tmpDir("landing")
+    val files = 4
+    for (f <- 0 until files)
+      (0 until 5).map(i => (f * 10L + i, Timestamp.valueOf("2024-01-05 00:02:10"), "v"))
+        .toDF("id", "ts", "v").coalesce(1).write.mode("append").parquet(landing)
+    val schema = spark.read.parquet(landing).schema
+    val checkpoint = tmpDir("ckpt")
+    def run(): Unit = {
+      val q = cap.start(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(landing),
+        checkpoint, Trigger.AvailableNow())
+      assert(q.awaitTermination(60000))
+      assert(q.exception.isEmpty, q.exception)
     }
-    assert(cap.tickFor(12L) === new java.sql.Timestamp(1700000000000L),
-      "a losing rename must leave the committed tick untouched")
-    fs.delete(loser, false)
+    def tickDirs(): Set[String] = {
+      val table = Paths.get(lake.path(TableRef("raw", "ds", "replay")))
+      val walk = Files.walk(table)
+      try walk.iterator().asScala.filter(_.getFileName.toString.startsWith("tick="))
+        .map(table.relativize(_).toString).toSet
+      finally walk.close()
+    }
+    val expected = (0 until files).flatMap(f => (0 until 5).map(f * 10L + _))
+    def assertOnce(): Unit =
+      for (zone <- Seq("raw", "staging"))
+        assert(lake.read(TableRef(zone, "ds", "replay")).select("id").as[Long]
+          .collect().sorted.toSeq === expected, zone)
 
-    // temps leaked by a crash between create and rename are swept on the
-    // next mint of the same batchId (age-guarded: only STALE temps go —
-    // a live concurrent attempt's fresh temp must survive the sweep)
-    val crashed = new org.apache.hadoop.fs.Path(dir, ".13.deadbeef-0000.tmp")
-    fs.create(crashed, true).close()
-    fs.setTimes(crashed, System.currentTimeMillis() - 600000L, -1L)
-    // a stale orphan of ANOTHER batchId sweeps too — its own batch
-    // committed long ago, so no same-batch mint will ever revisit it
-    val orphan = new org.apache.hadoop.fs.Path(dir, ".7.00000000-0000.tmp")
-    fs.create(orphan, true).close()
-    fs.setTimes(orphan, System.currentTimeMillis() - 600000L, -1L)
-    val live = new org.apache.hadoop.fs.Path(dir, ".13.cafebabe-0000.tmp")
-    fs.create(live, true).close() // fresh mtime = an in-flight racer
-    val t4 = cap.tickFor(13L)
-    assert(cap.tickFor(13L) === t4)
-    val tmps = fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.endsWith(".tmp")).toSet
-    assert(tmps === Set(".13.cafebabe-0000.tmp"),
-      s"stale temps (any batchId) must sweep, live temp must survive: $tmps")
-    fs.delete(live, false)
+    run()
+    assertOnce()
+    val ticks = tickDirs()
+    assert(ticks.size === files, ticks)
+    // the last batch landed but its commit never did: a restart replays it
+    val commits = Paths.get(checkpoint, "commits")
+    val listing = Files.list(commits)
+    val last = try listing.iterator().asScala.flatMap(_.getFileName.toString.toLongOption).max
+    finally listing.close()
+    assert(last === files - 1)
+    Files.delete(commits.resolve(last.toString))
+    Files.deleteIfExists(commits.resolve(s".$last.crc"))
+    run()
+    assertOnce()
+    assert(tickDirs() === ticks)
+    // the replay ran: it landed again and logged a second row for its stamp
+    assert(new CaptureLog(spark, lake).read("ds", "replay").count() === files + 1)
   }
 
   test("recapture backfill runs as ONE job and closes the gaps (T4/T5)") {
@@ -814,7 +789,7 @@ class StreamingSpec extends SparkSpec {
     // the landTick partition dirs of a zone, relative to its table root
     def tickDirs(lake: Lake, ref: TableRef): Seq[String] = {
       val table = Paths.get(lake.path(ref))
-      tree(table).filter(_.getFileName.toString == "tick=20240105000300")
+      tree(table).filter(_.getFileName.toString == "tick=20240105000300000")
         .map(table.relativize(_).toString)
     }
     // the uninterrupted run: the prior tick, then landTick
