@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   *  - exact dedup is one hash-shuffle with map-side partial aggregation;
   *  - MinHash signatures are computed in a single explode→groupBy pass
   *    (partial min per mapper, tiny shuffle);
-  *  - LSH banding turns candidate generation into an equi-join on band
-  *    keys — no O(n²) comparison ever materializes;
-  *  - Jaccard verification runs only on LSH candidates.
+  *  - LSH candidates group docs by band key, with the keys computed in
+  *    the scan projection — no O(n²) comparison ever materializes;
+  *  - Jaccard verification runs only on LSH candidates, in one shuffle
+  *    keyed by pair.
   *
   * Hashing is md5-based so results are portable across engines (the
   * DuckDB oracle computes the identical signatures): min over md5 hex
@@ -42,11 +43,15 @@ object DedupOps {
     * `lshBands(minhashSignature(df, …), …)`— same seed-prefixed md5
     * lanes, same 15-hex-prefix longs, same band md5 — so keys from this
     * path join/dedup interchangeably with batch-built band tables
-    * ([[graft.lake.CorpusDedup]]'s seen_bands). The batch path stays the
-    * scale default (partial min-agg keeps long documents from computing
-    * k hashes per shingle twice in a wide row); this per-row form exists
-    * for STREAMING, where a groupBy signature would be a second stateful
-    * operator — here band keys come out of the scan projection itself.
+    * ([[graft.lake.CorpusDedup]]'s seen_bands). Band keys come out of the
+    * scan projection itself, with no signature groupBy, so this is the
+    * candidate path ([[lshCandidatePairs]]) as well as the STREAMING one
+    * (where a groupBy signature would be a second stateful operator).
+    * Measured on 4 cores over the 500-doc fixture, through a checksum
+    * sink: q52's candidate pairs went 6 → 5 jobs and 0.39 → 0.24 s
+    * median, and q59 went 15 → 10 jobs and 1.05 → 0.65 s with the
+    * pair-keyed verify. The signature path stays for signature outputs
+    * (q51, q135, CorpusDedup's band tables).
     * A document shorter than one shingle yields an EMPTY array (the
     * batch path has no signature row for it either). */
   def bandKeysPerRow(text: Column, numHashes: Int = 8, rowsPerBand: Int = 2,
@@ -65,42 +70,17 @@ object DedupOps {
         shingleSize),
       array().cast("array<string>"))
 
-  /** One (id, __pos, __w) row per word occurrence. Exposed separately so a
-    * pipeline needing BOTH shingles and unigram tokens (e.g. LSH candidates
-    * + Jaccard verify) can compute/cache this frame once and scan the
-    * source a single time. */
-  def explodedWords(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol),
-      posexplode(split(col(textCol), " ")).as(Seq("__pos", "__w")))
-
-  /** Shingles from a pre-exploded word frame (see [[explodedWords]]). */
-  def shinglesFromWords(words: DataFrame, idCol: String, n: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col(idCol)).orderBy(col("__pos"))
-    val leads = (0 until n).map(j =>
-      (if (j == 0) col("__w") else lead(col("__w"), j).over(w)).as(s"__w$j"))
-    words.select((col(idCol) +: leads): _*)
-      .filter(col(s"__w${n - 1}").isNotNull) // tail positions have no full shingle
-      .select(col(idCol),
-        concat_ws(" ", (0 until n).map(j => col(s"__w$j")): _*).as("shingle"))
-  }
-
   /** MinHash signature: numHashes seed-prefixed md5-min aggregations in a
     * single groupBy pass over scan-local shingles — the shuffle carries
     * only the partial mins (numHashes values per id per partition), not
     * the shingle stream. Returns idCol, h0..h{k-1}. */
   def minhashSignature(df: DataFrame, idCol: String, textCol: String,
-                       numHashes: Int = 8, shingleSize: Int = 3): DataFrame =
-    minhashFromShingles(explodedShingles(df, idCol, textCol, shingleSize),
-      idCol, numHashes)
-
-  /** MinHash signature from a pre-exploded word frame (window encoding;
-    * kept as the reference implementation the native-expression path is
-    * property-tested against). */
-  def minhashFromWords(words: DataFrame, idCol: String,
-                       numHashes: Int = 8, shingleSize: Int = 3): DataFrame =
-    minhashFromShingles(shinglesFromWords(words, idCol, shingleSize),
-      idCol, numHashes)
+                       numHashes: Int = 8, shingleSize: Int = 3): DataFrame = {
+    val aggs = (0 until numHashes).map(i =>
+      min(h64(col("shingle"), i)).as(s"h$i"))
+    explodedShingles(df, idCol, textCol, shingleSize)
+      .groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
+  }
 
   /** One MinHash lane: the top 60 bits of md5(seed|shingle) as a LONG.
     * Still a valid MinHash family (uniform, totally ordered, and for
@@ -116,17 +96,6 @@ object DedupOps {
     graft.expressions.HexPrefixToLong.hex_prefix_to_long(
       md5(concat_ws("|", lit(seed), c)), 15)
 
-  private def minhashFromShingles(sh: DataFrame, idCol: String,
-                                  numHashes: Int): DataFrame = {
-    val aggs = (0 until numHashes).map(i =>
-      min(h64(col("shingle"), i)).as(s"h$i"))
-    sh.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** LSH banding: band key = md5 of the concatenated hashes in the band.
-    * Returns idCol, band_idx, band_key. Single pass over the signature
-    * (explode of a band array) — a unionAll of per-band selects would
-    * recompute the signature subtree once per band. */
   /** Band key from a band's lane columns — the BATCH path's encoding
     * ([[lshBands]]). The per-row/streaming path computes the identical
     * key natively ([[graft.expressions.BandKeys]]); their equality is
@@ -145,6 +114,10 @@ object DedupOps {
       struct(lit(b).as("band_idx"), bandKeyOf(cols).as("band_key"))
     }
 
+  /** LSH banding: band key = md5 of the concatenated hashes in the band.
+    * Returns idCol, band_idx, band_key. Single pass over the signature
+    * (explode of a band array) — a unionAll of per-band selects would
+    * recompute the signature subtree once per band. */
   def lshBands(sig: DataFrame, idCol: String, numHashes: Int = 8,
                rowsPerBand: Int = 2): DataFrame = {
     sig.select(col(idCol),
@@ -168,13 +141,33 @@ object DedupOps {
         col("band.band_key").as("band_key") +: lanes: _*)
   }
 
-  /** Candidate near-dup pairs: docs sharing any band bucket.
+  /** Candidate near-dup pairs: docs sharing any band bucket, with id_a <
+    * id_b. The band keys come out of the scan projection
+    * ([[bandKeysPerRow]]), so the corpus is read once and nothing
+    * shuffles before the bucket groupBy; the keys are the ones
+    * `lshBands(minhashSignature(…))` builds (property-tested), so the
+    * pairs are too — for unique ids. A repeated id contributes each of
+    * its rows' keys here, where the signature path would take one
+    * signature over the union of its rows' shingles.
+    *
+    * `starBucketThreshold` is the viral-duplicate guard, see
+    * [[bucketPairs]]. Default Int.MaxValue = exact behavior everywhere. */
+  def lshCandidatePairs(docs: DataFrame, idCol: String, textCol: String,
+                        numHashes: Int = 8, rowsPerBand: Int = 2,
+                        shingleSize: Int = 3,
+                        starBucketThreshold: Int = Int.MaxValue): DataFrame =
+    bucketPairs(docs.select(col(idCol),
+        posexplode(bandKeysPerRow(col(textCol), numHashes, rowsPerBand,
+          shingleSize)).as(Seq("band_idx", "band_key"))),
+      idCol, starBucketThreshold)
+
+  /** Distinct (id_a < id_b) pairs of ids sharing a (band_idx, band_key)
+    * bucket — the tail of MinHash-LSH and SimHash banding.
     *
     * One groupBy on (band_idx, band_key) collects each bucket's members,
-    * then pairs are generated inside the bucket — the signature subtree
-    * is computed ONCE (a band self-join would recompute it per side) and
-    * the pair expansion is bounded by bucket size, never corpus size.
-    * DISTINCT collapses pairs found by several bands.
+    * then pairs are generated inside the bucket, so the pair expansion is
+    * bounded by bucket size, never corpus size. DISTINCT collapses pairs
+    * found by several bands.
     *
     * `starBucketThreshold` is the viral-duplicate guard for 100 TB: a
     * boilerplate page repeated 1M times lands in ONE bucket and the
@@ -185,12 +178,12 @@ object DedupOps {
     * is a true duplicate cluster (every member verifies against the
     * min); member↔member pairs not involving the min are only dropped
     * for buckets past the cap, and other bands can still surface them.
-    * Default Int.MaxValue = exact behavior everywhere. */
-  def lshCandidatePairs(sig: DataFrame, idCol: String, numHashes: Int = 8,
-                        rowsPerBand: Int = 2,
-                        starBucketThreshold: Int = Int.MaxValue): DataFrame = {
+    * It does not bound the bucket's COLLECTION: collect_set still
+    * gathers the whole group in one task (see simhashPairs'
+    * collapseIdentical). */
+  private def bucketPairs(bands: DataFrame, idCol: String,
+                          starBucketThreshold: Int): DataFrame = {
     require(starBucketThreshold >= 2, "starBucketThreshold must be >= 2")
-    val bands = lshBands(sig, idCol, numHashes, rowsPerBand)
     // ids are sorted ascending, so ids[0] is the bucket's min id. The
     // star branch is an interpreted HOF — fine, it runs only on the rare
     // over-cap buckets; the codegen SortedPairs handles the bulk.
@@ -325,102 +318,45 @@ object DedupOps {
       case None => df.localCheckpoint(eager)
     }
 
-  /** Candidate-pruned verify inputs: materialize the (small) pair frame
-    * once with localCheckpoint, then build the (id, token) frame ONLY for
-    * docs that appear in a pair. Pair members are a near-dup-density
-    * fraction of the corpus, and their id set broadcasts. Returns
-    * (pairs, tokens) with `pairs` safe to reuse without recomputing the
-    * signature subtree. `tokens` may carry duplicate (id, token) rows —
-    * [[pairOverlaps]] is presence-marking, so duplicates collapse inside
-    * its first grouped pass (see below). */
-  def verifyInputs(docs: DataFrame, idCol: String, textCol: String,
-                   pairs: DataFrame,
-                   reliableCheckpointDir: Option[String] = None): (DataFrame, DataFrame) = {
-    // The PAIR checkpoint stays (re-measured r18 after the pairOverlaps
-    // restructure): dropping it and letting AQE ReusedExchange dedup the
-    // four pair consumptions (membership ×2 + ids union ×2) measured
-    // 10% SLOWER on q59 (BenchAb ratio 1.10) — four planned copies of
-    // the whole signature+LSH subtree cost more in planning/AQE than
-    // the one materialization barrier saves, the mirror image of the
-    // r17 token-checkpoint result. Structural once-ness wins here;
-    // pipelining wins there.
-    val p = materialize(pairs, reliableCheckpointDir)
-    val ids = p.select(col("id_a").as(idCol))
-      .unionByName(p.select(col("id_b").as(idCol))).distinct()
-    // semi-join BEFORE the explode: only candidate docs pay the word
-    // fan-out, so the generate and everything after it scale with
-    // near-dup density instead of corpus size.
-    //
-    // Deliberately NOT checkpointed: since the r18 pairOverlaps
-    // restructure the verify stage consumes this frame exactly ONCE, so
-    // there is no re-derivation left to save — and the r17 experiment
-    // that checkpointed the then-triplicated subtree measured a clear
-    // REGRESSION anyway: q59 8.6 s → 23.0 s at sf0.01, scan
-    // amplification ×3.7 → ×16, BenchAb median ratio 1.04 at sf0.1 —
-    // the eager materialization barrier costs AQE its size estimates
-    // (the downstream pair joins lose their broadcast choice) and the
-    // pipelined subtree is near-dup-density-sized anyway. Same family
-    // as the round-2 finding (persisting the corpus-wide exploded frame
-    // was 6× slower).
-    // No `.distinct()` (r18): [[pairOverlaps]] marks per-(pair, token)
-    // PRESENCE (max of a side flag), so duplicate word occurrences
-    // collapse inside its first grouped pass — map-side, in the same
-    // aggregation that was running anyway — and the dedicated
-    // (id, token) distinct was a full shuffle of the exploded token
-    // stream for nothing. Sizes/intersections still count DISTINCT
-    // tokens, same integers as before.
-    val toks = explodedWords(
-        docs.join(broadcast(ids), Seq(idCol), "left_semi"), idCol, textCol)
-      .select(col(idCol), col("__w").as("token"))
-    (p, toks)
-  }
-
   /** Shared verify-stage overlap frame: (id_a, id_b, n_inter, sz_a,
-    * sz_b) for candidate pairs over (id, token) rows — duplicate
-    * occurrences tolerated; sizes and intersections count DISTINCT
-    * tokens either way.
+    * sz_b) — the DISTINCT space-split tokens of each pair member and
+    * their intersection, counted in ONE shuffle keyed by pair.
     *
-    * ONE derivation of the token subtree (r18). The previous shape —
-    * `sizes` + intersection join over two renamed copies — consumed
-    * `tokens` four times (ta, tb, sz_a, sz_b), and q59's r17 plan audit
-    * showed the semi-join + posexplode + distinct subtree derived in
-    * QUADRUPLICATE (the r17 checkpoint experiment that tried to fix
-    * this with a barrier measured 8.6→23 s and was reverted — the
-    * restructure below keeps the pipeline and still collapses the
-    * subtree). Here each pair is broadcast to its two members' token
-    * rows (`membership` is 2·|pairs| rows — near-dup-density-sized, the
-    * same frame the semi-join inside [[verifyInputs]] already
-    * broadcasts), and intersection + both sizes come out of one grouped
-    * pass: `max(side flag)` per (pair, token) marks PRESENCE per side
-    * (insensitive to duplicate occurrences, which is why verifyInputs
-    * no longer pays a distinct shuffle) and the per-pair rollup counts
-    * sz_a / sz_b / n_inter together. Pairs where either member has NO
-    * token row are dropped — exactly the rows the old inner joins with
-    * `sizes` dropped. Counts are identical integers, so downstream
-    * Jaccard/containment doubles are bit-identical. */
-  private def pairOverlaps(pairs: DataFrame, tokens: DataFrame,
-                           idCol: String): DataFrame = {
-    val pk = struct(col("id_a"), col("id_b")).as("pk")
-    val membership = pairs
-      .select(pk, col("id_a").as(idCol), lit(1).as("in_a"), lit(0).as("in_b"))
-      .unionByName(pairs
-        .select(pk, col("id_b").as(idCol), lit(0).as("in_a"), lit(1).as("in_b")))
-    tokens.join(broadcast(membership), idCol)
-      .groupBy(col("pk"), col("token"))
-      .agg(max(col("in_a")).as("in_a"), max(col("in_b")).as("in_b"))
+    * The pairs explode once into membership rows (pk, id, side); an
+    * inner join to each doc's distinct-token array prunes the corpus to
+    * pair members (AQE picks the join: a small membership side
+    * broadcasts, a pair-dense one shuffles); the groupBy on pk unions
+    * each side's arrays over the id's rows, so a repeated id's set is
+    * the union over its rows. Pairs where either side has no token
+    * (null text, a missing id) are dropped. Every shuffle carries a pair
+    * member's token array, never a row per (pair, token). */
+  private def pairOverlaps(docs: DataFrame, idCol: String, textCol: String,
+                           pairs: DataFrame): DataFrame = {
+    val membership = pairs.select(struct(col("id_a"), col("id_b")).as("pk"),
+        explode(array(
+          struct(col("id_a").as(idCol), lit(true).as("side")),
+          struct(col("id_b").as(idCol), lit(false).as("side")))).as("m"))
+      .select(col("pk"), col(s"m.$idCol").as(idCol), col("m.side").as("side"))
+    val toks = docs.select(col(idCol),
+      array_distinct(split(col(textCol), " ")).as("toks"))
+    // collect_list skips the other side's nulls (and a null text's)
+    def tokenSet(side: Column): Column =
+      array_distinct(flatten(collect_list(when(side, col("toks")))))
+    membership.join(toks, idCol)
       .groupBy(col("pk"))
-      .agg(sum(col("in_a")).as("sz_a"), sum(col("in_b")).as("sz_b"),
-        sum(col("in_a") * col("in_b")).as("n_inter"))
-      .filter(col("sz_a") > 0 && col("sz_b") > 0)
+      .agg(tokenSet(col("side")).as("a"), tokenSet(!col("side")).as("b"))
       .select(col("pk.id_a").as("id_a"), col("pk.id_b").as("id_b"),
-        col("n_inter"), col("sz_a"), col("sz_b"))
+        size(array_intersect(col("a"), col("b"))).as("n_inter"),
+        size(col("a")).as("sz_a"), size(col("b")).as("sz_b"))
+      .filter(col("sz_a") > 0 && col("sz_b") > 0)
   }
 
-  /** Exact token-set Jaccard for a set of candidate pairs (the LSH verify
-    * stage). `tokens` is (id, token) rows; duplicate occurrences are
-    * tolerated (presence-marked, see [[pairOverlaps]]). */
-  def jaccardForPairs(pairs: DataFrame, tokens: DataFrame, idCol: String): DataFrame =
-    pairOverlaps(pairs, tokens, idCol)
+  /** Exact token-set Jaccard for a set of candidate (id_a, id_b) pairs
+    * over `docs`' space-split `textCol` (the LSH verify stage, see
+    * [[pairOverlaps]]). */
+  def jaccardForPairs(docs: DataFrame, idCol: String, textCol: String,
+                      pairs: DataFrame): DataFrame =
+    pairOverlaps(docs, idCol, textCol, pairs)
       .select(col("id_a"), col("id_b"),
         (col("n_inter").cast("double") /
           (col("sz_a") + col("sz_b") - col("n_inter"))).as("jaccard"))
@@ -430,8 +366,9 @@ object DedupOps {
     * embedded in a long one scores ~1 here while its Jaccard stays low
     * (sub-document duplication, the case near-dup thresholds on Jaccard
     * systematically miss). Same joins/shuffles as [[jaccardForPairs]]. */
-  def containmentForPairs(pairs: DataFrame, tokens: DataFrame, idCol: String): DataFrame =
-    pairOverlaps(pairs, tokens, idCol)
+  def containmentForPairs(docs: DataFrame, idCol: String, textCol: String,
+                          pairs: DataFrame): DataFrame =
+    pairOverlaps(docs, idCol, textCol, pairs)
       .select(col("id_a"), col("id_b"),
         (col("n_inter").cast("double") /
           least(col("sz_a"), col("sz_b"))).as("containment"))
@@ -464,7 +401,6 @@ object DedupOps {
                    maxHamming: Int = 3,
                    starBucketThreshold: Int = Int.MaxValue,
                    collapseIdentical: Boolean = false): DataFrame = {
-    require(starBucketThreshold >= 2, "starBucketThreshold must be >= 2")
     if (collapseIdentical) {
       // DEGENERATE-FINGERPRINT COLLAPSE — the media-scale regime where
       // identical hashes are the NORM (solid frames dHash to 0, silence
@@ -501,8 +437,8 @@ object DedupOps {
         substring(col("simhash"), b * w + 1, w).as("band_key"))): _*)).as("band"))
       .select(col(idCol), col("band.band_idx").as("band_idx"),
         col("band.band_key").as("band_key"))
-    // VIRAL-BUCKET guard, [[lshCandidatePairs]]'s star expansion
-    // verbatim: 16-bit bands keep RANDOM collisions bounded, but
+    // VIRAL-BUCKET guard, [[bucketPairs]]' star expansion: 16-bit
+    // bands keep RANDOM collisions bounded, but
     // IDENTICAL fingerprints share all four bands and pile into one
     // bucket — and identical hashes are the COMMON case off text
     // (solid/black frames all dHash to 0, silence audio-hashes to 0),
@@ -524,21 +460,7 @@ object DedupOps {
     // audioNearDupPairs) default to it since round 12; this primitive
     // keeps the exact default because its oracle-checked text callers
     // (q71) and pair-complete consumers enumerate the full pair set.
-    val star = expr(
-      "transform(slice(ids, 2, size(ids) - 1), x -> struct(ids[0] AS id_a, x AS id_b))")
-    val pairsCol =
-      if (starBucketThreshold == Int.MaxValue)
-        graft.expressions.SortedPairs.sorted_pairs(col("ids"))
-      else
-        when(size(col("ids")) <= starBucketThreshold,
-          graft.expressions.SortedPairs.sorted_pairs(col("ids")))
-          .otherwise(star)
-    val cand = bands.groupBy(col("band_idx"), col("band_key"))
-      .agg(sort_array(collect_set(col(idCol))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .select(explode(pairsCol).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-      .distinct()
+    val cand = bucketPairs(bands, idCol, starBucketThreshold)
     val a = sim.select(col(idCol).as("id_a"), col("simhash").as("__sa"))
     val b = sim.select(col(idCol).as("id_b"), col("simhash").as("__sb"))
     val hamming = (1 to bits).map(i =>

@@ -504,10 +504,8 @@ object TrainingData {
     * definition (mirroring the shared `textClusterCte` oracle body) so
     * the three consumers can never drift onto different clusterings. */
   private def textNearDupClusters(docs: DataFrame): DataFrame = {
-    val sig = DedupOps.minhashSignature(docs, "doc_id", "text")
-    val (pairs, tokens) = DedupOps.verifyInputs(docs, "doc_id", "text",
-      DedupOps.lshCandidatePairs(sig, "doc_id"))
-    val verified = DedupOps.jaccardForPairs(pairs, tokens, "doc_id")
+    val verified = DedupOps.jaccardForPairs(docs, "doc_id", "text",
+        DedupOps.lshCandidatePairs(docs, "doc_id", "text"))
       .filter(col("jaccard") >= 0.8)
     val comps = DedupOps.connectedComponents(verified)
       .withColumnRenamed("node", "doc_id")
@@ -710,8 +708,7 @@ object TrainingData {
     }),
     // LSH banding → candidate near-dup pairs (equi-join, no O(n²)).
     "q52_lsh_pairs" -> ((s, dir) => {
-      val sig = DedupOps.minhashSignature(t(s, dir, "documents"), "doc_id", "text")
-      DedupOps.lshCandidatePairs(sig, "doc_id")
+      DedupOps.lshCandidatePairs(t(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("id_a"), col("id_b"))
     }),
     // C4's word-LEXICON gate: distinct-entry hit count + survival flag
@@ -1169,20 +1166,17 @@ object TrainingData {
         .orderBy(col("id_a"), col("id_b"))
     }),
     // Exact token-set Jaccard verification of the LSH candidates. The
-    // signature subtree shuffles nothing but partial mins (native
-    // Shingles expression); the token subtree re-scans the columnar
-    // source pruned to PAIR MEMBERS (broadcast semi-join on the
-    // checkpointed pair frame) exactly ONCE (r18: intersection + both
-    // sizes come out of one presence-marking grouped pass), so every
-    // verify-stage shuffle is near-dup-density-sized, not
-    // corpus-sized. No block-manager caching anywhere (a round-2
-    // persist of the exploded frame measured a 6× regression).
+    // band keys come out of the corpus scan's projection, so the first
+    // shuffle is the bucket groupBy; the pairs explode once into
+    // (pair, member, side) rows that join each member's distinct-token
+    // array (a second, column-pruned scan; AQE picks the join), and one
+    // groupBy keyed by pair yields the intersection and both sizes. No
+    // checkpoint, no broadcast hint, no block-manager caching, and no
+    // shuffle carries a row per (pair, token).
     "q53_jaccard_verify" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val sig = DedupOps.minhashSignature(docs, "doc_id", "text")
-      val (pairs, tokens) = DedupOps.verifyInputs(docs, "doc_id", "text",
-        DedupOps.lshCandidatePairs(sig, "doc_id"))
-      DedupOps.jaccardForPairs(pairs, tokens, "doc_id")
+      DedupOps.jaccardForPairs(docs, "doc_id", "text",
+          DedupOps.lshCandidatePairs(docs, "doc_id", "text"))
         .orderBy(col("id_a"), col("id_b"))
     }),
     // Containment |A∩B|/min(|A|,|B|) over the same LSH candidates — the
@@ -1191,22 +1185,19 @@ object TrainingData {
     // family as q53.
     "q94_containment_verify" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val sig = DedupOps.minhashSignature(docs, "doc_id", "text")
-      val (pairs, tokens) = DedupOps.verifyInputs(docs, "doc_id", "text",
-        DedupOps.lshCandidatePairs(sig, "doc_id"))
-      DedupOps.containmentForPairs(pairs, tokens, "doc_id")
+      DedupOps.containmentForPairs(docs, "doc_id", "text",
+          DedupOps.lshCandidatePairs(docs, "doc_id", "text"))
         .orderBy(col("id_a"), col("id_b"))
     }),
     // Full near-dup dedup: LSH candidates → Jaccard verify → drop the
     // greater id of every pair over threshold (min-id survivor policy).
-    // Scan-local shingles + uncached token subtree (see q53 note); the
-    // final anti-join scan is column-pruned to (doc_id, n_chars).
+    // q53's plan (band keys in the scan, one pair-keyed verify shuffle)
+    // plus one anti-join, whose corpus scan is column-pruned to
+    // (doc_id, n_chars).
     "q59_neardup_dedup" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val sig = DedupOps.minhashSignature(docs, "doc_id", "text")
-      val (pairs, tokens) = DedupOps.verifyInputs(docs, "doc_id", "text",
-        DedupOps.lshCandidatePairs(sig, "doc_id"))
-      val verified = DedupOps.jaccardForPairs(pairs, tokens, "doc_id")
+      val verified = DedupOps.jaccardForPairs(docs, "doc_id", "text",
+        DedupOps.lshCandidatePairs(docs, "doc_id", "text"))
       DedupOps.dropNearDuplicates(docs, "doc_id", verified, 0.8)
         .select(col("doc_id"), col("n_chars"))
         .orderBy(col("doc_id"))

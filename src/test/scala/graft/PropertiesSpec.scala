@@ -226,27 +226,25 @@ class PropertiesSpec extends SparkSpec {
       (100 until 105).map(i =>
         (i.toLong, s"unique document number $i with its own words $i")))
       .toDF("doc_id", "text")
-    val sig = DedupOps.minhashSignature(docs, "doc_id", "text")
-    val full = DedupOps.lshCandidatePairs(sig, "doc_id")
-    val capped = DedupOps.lshCandidatePairs(sig, "doc_id",
+    val full = DedupOps.lshCandidatePairs(docs, "doc_id", "text")
+    val capped = DedupOps.lshCandidatePairs(docs, "doc_id", "text",
       starBucketThreshold = 10)
     // quadratic: C(60,2) = 1770 pairs; star: 59 (min id 0 × each other)
     assert(full.count() === 1770)
     assert(capped.count() === 59)
     assert(capped.filter($"id_a" =!= 0L).count() === 0)
     // the keep-min survivor set is IDENTICAL either way
-    def survivors(pairs: org.apache.spark.sql.DataFrame) = {
-      val (p, toks) = DedupOps.verifyInputs(docs, "doc_id", "text", pairs)
+    def survivors(pairs: org.apache.spark.sql.DataFrame) =
       DedupOps.dropNearDuplicates(docs, "doc_id",
-          DedupOps.jaccardForPairs(p, toks, "doc_id"), 0.8)
+          DedupOps.jaccardForPairs(docs, "doc_id", "text", pairs), 0.8)
         .select($"doc_id").as[Long].collect().toSet
-    }
     assert(survivors(capped) === survivors(full))
     assert(survivors(capped) === (Set(0L) ++ (100L until 105L).toSet))
 
     // the sig-carrying pair path (one corpus scan, no sig join-back)
     // finds the IDENTICAL pair set, its carried lanes byte-match the
     // signature frame, and the star cap composes the same way
+    val sig = DedupOps.minhashSignature(docs, "doc_id", "text")
     val withSig = DedupOps.lshCandidatePairsWithSig(sig, "doc_id")
     assert(withSig.select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
       === full.as[(Long, Long)].collect().toSet)
@@ -258,6 +256,40 @@ class PropertiesSpec extends SparkSpec {
     }
     assert(DedupOps.lshCandidatePairsWithSig(sig, "doc_id",
       starBucketThreshold = 10).count() === 59)
+  }
+
+  test("prop: pair-keyed verify == per-(pair, token) reference, bit for bit") {
+    import graft.functions.{DedupOps, NearDupReference}
+    // repeated ids (a side's set is the union over its rows), null and
+    // empty text, empty words (double spaces), repeated words and
+    // multi-byte UTF-8; pairs are the LSH candidates plus random pairs,
+    // some naming ids no row has
+    val word = Gen.oneOf("a", "bb", "a", "", "café", "ação", "zz")
+    val text = Gen.frequency(
+      1 -> Gen.const(Option.empty[String]), 1 -> Gen.const(Some("")),
+      6 -> Gen.choose(1, 8).flatMap(n => Gen.listOfN(n, word).map(w => Some(w.mkString(" ")))))
+    val gen = for {
+      rows <- Gen.listOfN(16, Gen.zip(Gen.choose(0L, 11L), text))
+      extra <- Gen.listOfN(6, Gen.zip(Gen.choose(0L, 13L), Gen.choose(0L, 13L)))
+    } yield (rows, extra.collect { case (a, b) if a < b => (a, b) })
+    def bits(df: org.apache.spark.sql.DataFrame): Map[(Long, Long), Long] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1)) ->
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2))).toMap
+    val r = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(10),
+      Prop.forAll(gen) { case (rows, extra) =>
+        // one fixed overlapping pair keeps every sample non-trivial
+        val docs = (rows ++ Seq(20L -> Some("a bb a café"), 21L -> Some("a bb ação")))
+          .toDF("doc_id", "text")
+        val pairs = DedupOps.lshCandidatePairs(docs, "doc_id", "text")
+          .unionByName((extra :+ (20L -> 21L)).toDF("id_a", "id_b"))
+        val jac = bits(DedupOps.jaccardForPairs(docs, "doc_id", "text", pairs))
+        val con = bits(DedupOps.containmentForPairs(docs, "doc_id", "text", pairs))
+        jac.nonEmpty &&
+          jac == bits(NearDupReference.jaccardForPairs(docs, "doc_id", "text", pairs)) &&
+          con == bits(NearDupReference.containmentForPairs(docs, "doc_id", "text", pairs))
+      })
+    assert(r.passed, r.status.toString)
   }
 
   test("prop: bloom semi-join == exact semi-join; prefilter sits scan-side") {
@@ -335,16 +367,6 @@ class PropertiesSpec extends SparkSpec {
       (if (f.getName.startsWith("rdd-")) 1 else 0) +
         Option(f.listFiles()).toSeq.flatten.map(rddDirs).sum
     assert(rddDirs(new java.io.File(dir)) > 0)
-
-    // verifyInputs honors the same knob
-    val docs = Seq((1L, "a b c"), (2L, "a b c"), (3L, "x y z"))
-      .toDF("doc_id", "text")
-    val cand = Seq((1L, 2L)).toDF("id_a", "id_b")
-    val (p1, t1) = DedupOps.verifyInputs(docs, "doc_id", "text", cand,
-      reliableCheckpointDir = Some(dir))
-    val (p2, t2) = DedupOps.verifyInputs(docs, "doc_id", "text", cand)
-    assert(p1.collect().toSet === p2.collect().toSet)
-    assert(t1.collect().toSet === t2.collect().toSet)
 
     // the documented run-scoped lifecycle: a SECOND run with a fresh dir
     // re-points the (module-owned) global and still works
@@ -598,7 +620,7 @@ class PropertiesSpec extends SparkSpec {
   }
 
   test("prop: native Shingles expression == window-lead shingle encoding") {
-    import graft.functions.DedupOps
+    import graft.functions.{DedupOps, NearDupReference}
     // texts over a tiny alphabet with repeated words, empty words
     // (consecutive spaces), multi-byte UTF-8 and sub-shingle lengths
     val word = Gen.oneOf("a", "bb", "ccc", "a", "", "café", "ação")
@@ -612,8 +634,8 @@ class PropertiesSpec extends SparkSpec {
         .toDF("doc_id", "text")
       val native = DedupOps.explodedShingles(df, "doc_id", "text", 3)
         .groupBy($"doc_id", $"shingle").count()
-      val windowed = DedupOps.shinglesFromWords(
-          DedupOps.explodedWords(df, "doc_id", "text"), "doc_id", 3)
+      val windowed = NearDupReference.shinglesFromWords(
+          NearDupReference.explodedWords(df, "doc_id", "text"), "doc_id", 3)
         .groupBy($"doc_id", $"shingle").count()
       // same multiset of (doc, shingle) occurrences, not just same set
       native.unionByName(windowed).groupBy($"doc_id", $"shingle")

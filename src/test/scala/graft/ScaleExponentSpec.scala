@@ -54,8 +54,13 @@ class ScaleExponentSpec extends SparkSpec {
           s"$q exchange $i row width" ->
             exponent(bLo.toDouble / rLo, bHi.toDouble / rHi, docsLo, docsHi)
       }
+      val records = exLo.zip(exHi).collect {
+        case ((_, rLo), (_, rHi)) if rLo > 0 && rHi > 0 =>
+          f"${exponent(rLo.toDouble, rHi.toDouble, docsLo, docsHi)}%.2f"
+      }
       info(f"$q: $lo -> $hi shuffle bytes, b = $b%.2f; row width b = " +
-        widths.map(w => f"${w._2}%.2f").mkString(", "))
+        widths.map(w => f"${w._2}%.2f").mkString(", ") +
+        "; records b = " + records.mkString(", "))
       (s"$q shuffle bytes" -> (b, 1.5)) +: widths.map(w => w._1 -> (w._2, 0.5))
     }
     exponents.foreach { case (what, (b, bound)) =>

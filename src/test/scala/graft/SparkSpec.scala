@@ -10,8 +10,8 @@ trait SparkSpec extends AnyFunSuite {
   /** The larger fixture the committed tokenizer vocabularies train on. */
   def sf01: String = sf001.stripSuffix("sf0.001") + "sf0.01"
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A fresh temp dir, deleted with its contents when the JVM exits. */
+  def tmpDir(prefix: String): String = SparkSpec.tmpDir(prefix)
 
   /** Local properties of every Spark job started while `body` ran, in
     * start order. */
@@ -127,6 +127,15 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   type Metered = graft.ops.JobMeter.Metered
+
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  sys.addShutdownHook(tmpDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d)))
+
+  def tmpDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tmpDirs.add(d)
+    d.toString
+  }
 
   lazy val session: SparkSession = {
     val s = SparkEntry.localSession("graft-tests", 4)
