@@ -658,7 +658,7 @@ class AnnIndex(spark: SparkSession, lake: Lake, dataset: String,
       Seq(centsSnap -> centroidsRef, listsSnap -> listsRef,
         codesSnap -> pqCodesRef, cbSnap -> pqCodebooksRef).foreach {
         case (snap, ref) => if (fs.exists(new Path(snap)))
-          lake.rewriteBucketed(spark.read.parquet(snap), ref)
+          lake.rewriteBucketed(FooterParquet.read(spark, snap), ref)
       }
       fs.delete(snapRoot, true)
     }
@@ -677,12 +677,12 @@ class AnnIndex(spark: SparkSession, lake: Lake, dataset: String,
     val cents = VectorOps.kmeansLloyd(train, "vec", k, iters)
       .withColumnRenamed("pos", "dim")
     cents.write.mode(SaveMode.Overwrite).parquet(centsSnap)
-    val newCents = loadCentroidArrays(spark.read.parquet(centsSnap))
+    val newCents = loadCentroidArrays(FooterParquet.read(spark, centsSnap))
     VectorOps.assignClusters(corpus, newCents, "vec")
       .select(col("cluster") +: carried: _*)
       .write.mode(SaveMode.Overwrite).parquet(listsSnap)
     if (pqEnabled) {
-      val snap = spark.read.parquet(listsSnap)
+      val snap = FooterParquet.read(spark, listsSnap)
       if (pqResidualMode) {
         // residuals changed with the quantizer: retrain the codebooks
         // on the reassigned sample, then re-encode everything — both

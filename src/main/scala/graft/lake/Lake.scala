@@ -3,7 +3,7 @@ package graft.lake
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 
@@ -36,9 +36,11 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * store's unpartitioned writes of driver-held frames (a last-run row, a
   * merged sketch) go through the same writer into a fresh dir.
   *
-  * Reads are Spark's. A collect of a small parquet read can run on the
-  * driver instead ([[DriverRead]]); the capture-cycle collect sites
-  * (the recapture plan, the state store's one-row reads) do.
+  * Reads are Spark's parquet relations over a dir listed on the driver
+  * ([[FooterParquet.read]]), so no read runs a listing job. A collect of
+  * a small parquet read can run on the driver instead ([[DriverRead]]);
+  * the capture-cycle collect sites (the recapture plan, the state
+  * store's one-row reads) do.
   *
   * A write that dies before its cleanup leaves its hidden staging dir
   * (`.graft-staging-<uuid>` of a driver write, `.spark-staging-<uuid>`
@@ -142,17 +144,17 @@ class Lake(spark: SparkSession, root: String) {
   }
 
   /** Schema-on-read scan of a lake table (partition discovery included).
-    * The schema comes from one footer read on the driver
-    * ([[FooterParquet]]), so resolving the read runs no Spark job.
+    * The dir is listed and the schema read from one footer on the driver
+    * ([[FooterParquet.read]]), so resolving the read runs no Spark job at
+    * any history length.
     * `mergeSchema = true` unions the schemas of all files (in a Spark
     * job), so a capture that started emitting a new column mid-history
     * reads as one table with nulls for the older files; when false the
     * option is NOT set, so a session-wide spark.sql.parquet.mergeSchema
     * still applies. */
-  def read(ref: TableRef, mergeSchema: Boolean = false): DataFrame = {
-    val r = FooterParquet.reader(spark)
-    (if (mergeSchema) r.option("mergeSchema", true) else r).load(path(ref))
-  }
+  def read(ref: TableRef, mergeSchema: Boolean = false): DataFrame =
+    FooterParquet.read(spark, path(ref),
+      if (mergeSchema) Map("mergeSchema" -> "true") else Map.empty)
 
   /** Small-file compaction: rewrite the table into ~`targetFileBytes`
     * files. Minute-cadence captures append one small file per tick per
@@ -162,7 +164,8 @@ class Lake(spark: SparkSession, root: String) {
     * data). A table cannot be overwritten from its own live scan, so the
     * compacted copy is written aside and swapped in ([[DirSwap]]).
     * The old root is deleted whole, so hidden dirs that crashed writes
-    * left in it (staging dirs) go with it.
+    * left in it (staging dirs) go with it. The dir is listed once: the
+    * string-typed scan reuses the discovery read's listing.
     *
     * MUST run under the table's [[graft.state.RunLock]]: the scan
     * snapshots the file listing, so a concurrent append between listing
@@ -175,13 +178,15 @@ class Lake(spark: SparkSession, root: String) {
               targetFileBytes: Long = 128L * 1024 * 1024): Unit =
     swapIn(ref) { side =>
       val discovered = read(ref).queryExecution.analyzed.collectFirst {
-        case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
-          l.relation.asInstanceOf[HadoopFsRelation]
+        case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs
       }.get
-      val scan = FooterParquet.reader(spark)
-        .schema(StructType(discovered.dataSchema.fields ++
-          discovered.partitionSchema.fields.map(_.copy(dataType = StringType))))
-        .load(path(ref))
+      // the same listing, read with the partition columns typed as strings
+      val scan = FooterParquet.read(spark, path(ref),
+        schema = Some(StructType(discovered.dataSchema.fields ++
+          discovered.partitionSchema.fields.map(_.copy(dataType = StringType)))),
+        leafFiles = Some(discovered.location match {
+          case index: PartitioningAwareFileIndex => index.allFiles()
+        }))
       val bytes = scan.queryExecution.optimizedPlan.stats.sizeInBytes
       val nFiles = (BigInt(1).max(
         (bytes + targetFileBytes - 1) / targetFileBytes)).toInt
@@ -315,6 +320,6 @@ class Lake(spark: SparkSession, root: String) {
     * repartition as redundant, then un-buckets the scan (nothing above it
     * needs the buckets), and every task writes every bucket. */
   def compactBucketed(ref: TableRef): Unit =
-    rewriteBucketed(spark.read.schema(spark.table(qualified(ref)).schema)
-      .parquet(path(ref)), ref)
+    rewriteBucketed(FooterParquet.read(spark, path(ref),
+      schema = Some(spark.table(qualified(ref)).schema)), ref)
 }

@@ -88,7 +88,7 @@ class StateStore(spark: SparkSession, root: String) {
     writeAtomic(df, tablePath(name))
 
   private def readOrEmpty(path: String, schemaDdl: String): DataFrame =
-    readIfPresent(path, schemaDdl)(FooterParquet.reader(spark).load(path))
+    readIfPresent(path, schemaDdl)(FooterParquet.read(spark, path))
 
   /** [[readOrEmpty]] for the kinds only this store writes (`last_run`
     * and the sketches), whose column types it fixes itself: reading with
@@ -98,7 +98,7 @@ class StateStore(spark: SparkSession, root: String) {
     * the driver ([[FooterParquet]]), which runs no Spark job either. */
   private def readOwned(path: String, schemaDdl: String): DataFrame =
     readIfPresent(path, schemaDdl)(
-      spark.read.schema(StructType.fromDDL(schemaDdl)).parquet(path))
+      FooterParquet.read(spark, path, schema = Some(StructType.fromDDL(schemaDdl))))
 
   private def readIfPresent(path: String, schemaDdl: String)(
       read: => DataFrame): DataFrame = {

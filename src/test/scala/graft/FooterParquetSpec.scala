@@ -4,13 +4,16 @@ import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import graft.lake.{CaptureLog, FooterParquet, Lake, TableRef}
+import graft.tools.ListingProbe.tickTree
+import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, LongType, TimestampType}
 
 class FooterParquetSpec extends SparkSpec {
   import spark.implicits._
 
-  private def footerSchema(path: String) = FooterParquet.reader(spark).load(path).schema
+  private def footerSchema(path: String) = FooterParquet.read(spark, path).schema
   private def stockSchema(path: String) = spark.read.parquet(path).schema
 
   test("driver-read schema equals Spark's: fixtures, multi-file dir, partitioned lake table") {
@@ -59,6 +62,101 @@ class FooterParquetSpec extends SparkSpec {
     val ref = TableRef("staging", "ds", "t")
     lake.append(Seq((1, "a"), (2, "b")).toDF("id", "part"), ref, partitionBy = Seq("part"))
     assert(jobsDuring(lake.read(ref)).isEmpty)
+  }
+
+  test("past Spark's 32-subdir listing threshold a lake read still runs no job") {
+    val lake = new Lake(spark, tmpDir("fp_threshold"))
+    val ticks = TableRef("staging", "ds", "ticks") // 40 tick= dirs under one hora=
+    tickTree(spark, lake.path(ticks), days = 1, hours = 1, minutes = 40)
+    val days = TableRef("prod", "ds", "days") // 40 data= dirs
+    tickTree(spark, lake.path(days), days = 40, hours = 1, minutes = 1)
+    Seq(ticks, days).foreach { ref =>
+      var read: DataFrame = null
+      assert(jobsDuring { read = lake.read(ref) }.isEmpty, ref)
+      assert(read.inputFiles.length === 40, ref)
+      assert(read.count() === 40, ref)
+    }
+  }
+
+  test("a source-day of minute captures (1,440 tick dirs) reads with no listing job") {
+    val lake = new Lake(spark, tmpDir("fp_day"))
+    val ref = TableRef("staging", "ds", "ticks")
+    tickTree(spark, lake.path(ref), days = 1)
+    var read: DataFrame = null
+    assert(jobsDuring { read = lake.read(ref) }.isEmpty)
+    assert(read.inputFiles.length === 1440)
+  }
+
+  private def relation(df: DataFrame): HadoopFsRelation =
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs
+    }.get
+
+  test("the driver-listed read equals spark.read.parquet on every lake layout") {
+    val base = tmpDir("fp_layouts")
+    val flat = s"$base/flat"
+    Seq((1, "a"), (2, "b")).toDF("id", "v").write.parquet(flat)
+    Seq((3, "c")).toDF("id", "v").write.mode("append").parquet(flat)
+    val lake = new Lake(spark, s"$base/lake")
+    val dated = TableRef("prod", "ds", "dated")
+    Seq("2024-01-04", "2024-01-05").foreach(d =>
+      lake.append(Seq((1, d), (2, d)).toDF("id", "data"), dated, partitionBy = Seq("data")))
+    val ticks = s"$base/ticks" // data/hora/tick, `hora=00` among the hours
+    tickTree(spark, ticks, days = 2, hours = 2, minutes = 3)
+    // parquet files where crashed writes leave them, plus `_SUCCESS` and
+    // `.crc` files: none of them is data
+    val hidden = s"$base/hidden"
+    tickTree(spark, hidden, days = 1, hours = 1, minutes = 2)
+    val part = Files.list(Paths.get(hidden, "data=2024-01-01", "hora=00")).findFirst().get
+      .resolve("part-00000.parquet")
+    Seq(".graft-staging-x/data=2024-01-09/hora=00/tick=1", ".spark-staging-x/data=2024-01-09",
+      "_temporary/0/task", "data=2024-01-01/hora=00/_temporary/0").foreach { d =>
+      Files.createDirectories(Paths.get(hidden, d))
+      Files.copy(part, Paths.get(hidden, d, "part-00009.parquet"))
+    }
+    Files.createFile(Paths.get(hidden, "_SUCCESS"))
+    Files.write(part.resolveSibling(".part-00007.parquet.crc"), Array[Byte](1, 2, 3))
+    Seq(flat, lake.path(dated), ticks, hidden).foreach { p =>
+      val (mine, stock) = (FooterParquet.read(spark, p), spark.read.parquet(p))
+      assert(mine.schema === stock.schema, p)
+      assert(relation(mine).partitionSchema === relation(stock).partitionSchema, p)
+      assert(mine.inputFiles.sorted.toSeq === stock.inputFiles.sorted.toSeq, p)
+      assert(mine.collect().map(_.toString).sorted.toSeq ===
+        stock.collect().map(_.toString).sorted.toSeq, p)
+    }
+    assert(FooterParquet.read(spark, hidden).inputFiles.length === 2)
+    assert(FooterParquet.read(spark, ticks).select("hora").distinct().count() === 2)
+  }
+
+  test("a missing path or a dir with no data file fails as spark.read.parquet does") {
+    val base = tmpDir("fp_errors")
+    def condition(read: => DataFrame): String = intercept[AnalysisException](read).getCondition
+    val missing = s"$base/missing"
+    assert(condition(FooterParquet.read(spark, missing)) === "PATH_NOT_FOUND")
+    assert(condition(spark.read.parquet(missing)) === "PATH_NOT_FOUND")
+    Files.createDirectories(Paths.get(base, "empty", "data=2024-01-01"))
+    Files.createFile(Paths.get(base, "empty", "_SUCCESS"))
+    val empty = s"$base/empty"
+    assert(condition(FooterParquet.read(spark, empty)) === "UNABLE_TO_INFER_SCHEMA")
+    assert(condition(spark.read.parquet(empty)) === "UNABLE_TO_INFER_SCHEMA")
+  }
+
+  test("refreshByPath re-lists a cached driver-listed read") {
+    val lake = new Lake(spark, tmpDir("fp_refresh"))
+    val ref = TableRef("staging", "ds", "t")
+    lake.append(Seq((1, "a")).toDF("id", "part"), ref, partitionBy = Seq("part"))
+    val cached = lake.read(ref).cache()
+    try {
+      assert(cached.count() === 1)
+      // another writer's append: a file copied in, no Spark write to refresh the cache
+      val a = Paths.get(lake.path(ref), "part=a")
+      val file = Files.list(a).filter(_.toString.endsWith(".parquet")).findFirst().get
+      Files.createDirectories(a.resolveSibling("part=b"))
+      Files.copy(file, a.resolveSibling("part=b").resolve(file.getFileName))
+      assert(cached.count() === 1)
+      spark.catalog.refreshByPath(lake.path(ref))
+      assert(cached.orderBy("part").as[(Int, String)].collect().toSeq === Seq((1, "a"), (1, "b")))
+    } finally cached.unpersist()
   }
 
   test("mergeSchema, as an option or a session conf, still merges every footer") {

@@ -1482,6 +1482,21 @@ class LakeSpec extends SparkSpec {
     assert(lake.read(href).count() === 2)
   }
 
+  test("compaction lists its table once: 40 tick dirs compact in as many jobs as 2") {
+    val lake = new Lake(spark, tmpDir("lake"))
+    def compactJobs(minutes: Int): Int = {
+      val ref = TableRef("staging", "ds", s"ticks$minutes")
+      graft.tools.ListingProbe.tickTree(spark, lake.path(ref), days = 1, hours = 1,
+        minutes = minutes)
+      val jobs = jobsDuring(lake.compact(ref, partitionBy = Seq("data", "hora", "tick"))).size
+      assert(lake.read(ref).count() === minutes)
+      assert(new java.io.File(lake.path(ref), "data=2024-01-01/hora=00").list().length ===
+        minutes)
+      jobs
+    }
+    assert(compactJobs(40) === compactJobs(2))
+  }
+
   test("compaction removes the staging dirs crashed writes left behind") {
     val lake = new Lake(spark, tmpDir("lake"))
     val ref = TableRef("staging", "ds", "ticks")
